@@ -41,19 +41,11 @@ def _verified_names() -> set[str]:
     return green
 
 
-# Front-of-queue rows within the never-verified group (entries already
-# driver-green are skipped automatically). Round 9: empty — r8 left no
-# backlog (every registry query carries a current green row), so the
-# never-verified group is exactly this round's registrations plus the
-# two perpetual rows-only approx_* rows.
-_BOOST = ()
-
-
 # Driver-green rows whose underlying code or oracle changed AFTER the
-# green row was recorded. They re-enter the verification queue right
-# behind the never-verified boost group so the driver refreshes their
-# evidence. Round 10's 13 names all re-greened in CORRECTNESS_r10 and
-# were dropped; repopulated with round 11's semantic/oracle rewrites:
+# green row was recorded. They re-enter the verification queue at the
+# front so the driver refreshes their evidence. Round 10's 13 names all
+# re-greened in CORRECTNESS_r10 and were dropped; repopulated with
+# round 11's semantic/oracle rewrites:
 _REVERIFY = (
     # ROUND-14 riders (optimization round 2) — value-neutral PLAN
     # rewrites to green rows, all re-gated identical against the
@@ -86,6 +78,24 @@ _REVERIFY = (
     # (f) skyline phase-1 collect: limit(cap+1).toPandas() doubles as
     # the cap probe (2 actions + persist -> 1 action):
     "skyline_3d_parts",
+    # (g) no state outlives a query: the IVF codebook, the recall
+    # ground truth and the DoReMi base histogram are derived inside
+    # every call (no driver memo caches), and the streaming runners
+    # read events.parquet in place (no temp-dir source copy). The
+    # doremi riders move up from _REVERIFY_TAIL; ann_recall_budget_curve
+    # and doremi_mixture_shift_report are already queued above:
+    "ann_ivf_topk",
+    "ann_lsh_recall_at_k",
+    "ann_multiprobe_recall",
+    "ann_ivf_recall",
+    "ann_hard_negatives",
+    "ivf_cell_balance_report",
+    "doremi_mixture_reweight",
+    "doremi_weighted_resample",
+    "doremi_resample_report",
+    "streaming_tumbling_runner",
+    "streaming_dedup_runner",
+    "streaming_stateful_totals_runner",
 )
 
 
@@ -94,45 +104,27 @@ _REVERIFY = (
 # They re-enter the queue BEHIND the never-verified group: fresh driver
 # evidence is desirable but must not displace a new registration's
 # FIRST row (the every-query-has-a-row invariant). Round-14 tail:
-# value-identical SHARED-KERNEL riders of the _REVERIFY rewrites above
+# value-identical SHARED-KERNEL rider of the _REVERIFY rewrites above
 # — the estimator expression moved into the minhash_estimate kernel
-# (same expressions, same inputs, bit-equal) and the other three
-# doremi queries read the rewritten doremi_weight_frames:
-_REVERIFY_TAIL = (
-    "minhash_jaccard_estimate",
-    "doremi_mixture_reweight",
-    "doremi_weighted_resample",
-    "doremi_resample_report",
-)
-
-
-_DEFER = ()
+# (same expressions, same inputs, bit-equal):
+_REVERIFY_TAIL = ("minhash_jaccard_estimate",)
 
 
 def _priority_order(names: list[str]) -> list[str]:
-    """Never-verified queries first (backlog rows boosted to the very
-    front, stale-evidence rows re-queued right behind them, this
-    round's new registrations after those, registration order
-    preserved otherwise) so the driver's per-round verification budget
-    lands on the queries that have waited longest for a current green
-    CORRECTNESS row."""
+    """Stale-evidence rows first, never-verified queries right behind
+    them (registration order preserved otherwise) so the driver's
+    per-round verification budget lands on the queries that have
+    waited longest for a current green CORRECTNESS row."""
     green = _verified_names()
-    unverified = [n for n in names if n not in green]
-    boosted = [n for n in _BOOST if n in unverified]
     reverify = [n for n in _REVERIFY if n in names]
     reverify_tail = [n for n in _REVERIFY_TAIL if n in names]
-    deferred = [n for n in unverified if n in _DEFER]
-    rest = [
-        n
-        for n in unverified
-        if n not in _BOOST and n not in _DEFER and n not in _REVERIFY
-    ]
+    rest = [n for n in names if n not in green and n not in _REVERIFY]
     tail = [
         n
         for n in names
         if n in green and n not in _REVERIFY and n not in _REVERIFY_TAIL
     ]
-    return boosted + reverify + rest + deferred + reverify_tail + tail
+    return reverify + rest + reverify_tail + tail
 
 
 def _utc(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:

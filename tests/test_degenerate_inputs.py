@@ -203,7 +203,7 @@ def test_near_dup_and_ivf_kernels_drop_null_embeddings(spark):
     ivf_assign likewise feeds matrix kernels, so a null vector must get
     no cell assignment rather than a nondeterministic one."""
     from velox_hadoop_spark.operators.dedup import cosine_near_dup_pairs
-    from velox_hadoop_spark.operators.similarity import ivf_assign
+    from velox_hadoop_spark.operators.similarity import ivf_assign, ivf_codebook
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, None), (2, [1.0, 0.01]), (3, [0.0, 1.0])],
@@ -216,7 +216,7 @@ def test_near_dup_and_ivf_kernels_drop_null_embeddings(spark):
     all_null = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
     assert cosine_near_dup_pairs(all_null, threshold=0.5).count() == 0
 
-    assigned = ivf_assign(emb, n_centroids=2)
+    assigned = ivf_assign(emb, ivf_codebook(emb, 2))
     assert {r.vec_id for r in assigned.collect()} == {0, 2, 3}
 
 
@@ -253,6 +253,7 @@ def test_cosine_kernels_drop_zero_norm_vectors(spark):
         embedding_norms_arrow,
         hyperplane_buckets,
         ivf_assign,
+        ivf_codebook,
         knn_numpy,
     )
 
@@ -265,7 +266,8 @@ def test_cosine_kernels_drop_zero_norm_vectors(spark):
     assert top and ids == {0, 3, 4}
     pairs = cosine_near_dup_pairs(emb, threshold=0.9).collect()
     assert pairs and {r.a_id for r in pairs} | {r.b_id for r in pairs} == {0, 3}
-    assert {r.vec_id for r in ivf_assign(emb, n_centroids=2).collect()} == {0, 3, 4}
+    assigned = ivf_assign(emb, ivf_codebook(emb, 2)).collect()
+    assert {r.vec_id for r in assigned} == {0, 3, 4}
     # buckets: zero vectors keep their (identical-in-both-engines)
     # all-ones bucket; only NULL and empty arrays drop
     assert {r.vec_id for r in hyperplane_buckets(emb).collect()} == {0, 1, 3, 4}
@@ -279,13 +281,13 @@ def test_ivf_assign_centroids_on_non_dense_ids(spark):
     """ivf_assign must pick the TRUE k lowest ids, not `vec_id < k`
     (which under-fills the codebook on any non-zero-based id space —
     the same bug fixed in kmeans)."""
-    from velox_hadoop_spark.operators.similarity import ivf_assign
+    from velox_hadoop_spark.operators.similarity import ivf_assign, ivf_codebook
 
     emb = spark.createDataFrame(
         [(1000, [1.0, 0.0]), (1001, [0.0, 1.0]), (1002, [1.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    rows = ivf_assign(emb, n_centroids=2).collect()
+    rows = ivf_assign(emb, ivf_codebook(emb, 2)).collect()
     assert {r.vec_id for r in rows} == {1000, 1001, 1002}
     assert {r.centroid_id for r in rows} <= {1000, 1001}
 

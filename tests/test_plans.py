@@ -588,6 +588,36 @@ def test_window_lint_all_sites_bounded():
     assert res.returncode == 0, res.stdout + res.stderr
 
 
+def test_no_module_level_mutable_state():
+    """Nothing outlives a query: the operator, streaming, source and
+    function modules hold no module-level dict, list or set (literal,
+    comprehension or constructor call). Such a global is where a
+    driver-local memo cache keyed on corpus state lives, and that
+    makes a query's cost depend on which queries ran before it in the
+    session. Constant tables are tuples or read-only MappingProxyType
+    views."""
+    import ast
+    import pathlib
+
+    mutable = (ast.Dict, ast.List, ast.Set, ast.DictComp, ast.ListComp, ast.SetComp)
+    ctors = {"dict", "list", "set", "defaultdict", "OrderedDict", "Counter", "deque"}
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "velox_hadoop_spark"
+    bad = []
+    for sub in ("operators", "streaming", "sources", "functions"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            for node in ast.parse(path.read_text()).body:
+                if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+                    continue
+                v = node.value
+                call = isinstance(v, ast.Call) and (
+                    getattr(v.func, "id", None) in ctors
+                    or getattr(v.func, "attr", None) in ctors
+                )
+                if isinstance(v, mutable) or call:
+                    bad.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+    assert not bad, "module-level mutable state: " + ", ".join(bad)
+
+
 def test_ts_nanos_probe_recurses_partitioned_layout(tmp_path):
     """ts_stored_as_nanos must find part files nested in key=value
     subdirectories (partitioned writes): a top-level-only listing

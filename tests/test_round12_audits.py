@@ -21,12 +21,17 @@ def _q(spark, name):
 
 
 def test_ivf_cell_balance_matches_python_recompute(spark):
-    from velox_hadoop_spark.operators.similarity import ivf_assign
+    from velox_hadoop_spark.operators.similarity import (
+        IVF_CENTROIDS,
+        ivf_assign,
+        ivf_codebook,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    book = ivf_codebook(emb, IVF_CENTROIDS)
     assign = {
         r.vec_id: r.centroid_id
-        for r in ivf_assign(emb).select("vec_id", "centroid_id").collect()
+        for r in ivf_assign(emb, book).select("vec_id", "centroid_id").collect()
     }
     total = len(assign)
     by_cell: dict = {}
@@ -182,7 +187,7 @@ def test_doremi_mixture_shift_matches_python_recompute(spark):
         doremi_weight_frames,
     )
 
-    base, wh = doremi_weight_frames(_docs(spark, SF), sf_dir=SF)
+    base, wh = doremi_weight_frames(_docs(spark, SF))
     w0s = {r.source: r.w0 for r in base.select("source", "w0").collect()}
     w2s = {r.source: r.w2 for r in wh[-1].collect()}
     w = {s: (w0s[s], w2s[s]) for s in w0s}

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.operators.graph import co_supply_capped_edges
+from tests.conftest import SF_DIR
 
 
 def _plan(df) -> str:
@@ -136,14 +137,14 @@ def test_dedup_runner_drain_is_single_batch(spark):
     once — the precondition that makes the registered n_rows = 1
     oracle sound."""
     from velox_hadoop_spark.streaming.events import (
-        _stream_source_dir,
         read_event_stream,
         run_available_now,
         stream_dedup,
     )
 
-    d = _stream_source_dir(spark, "/root/testdata/sf0.001")
-    stream = read_event_stream(spark, d, max_files_per_trigger=1_000_000)
+    stream = read_event_stream(
+        spark, f"{SF_DIR}/events.parquet", max_files_per_trigger=1_000_000
+    )
     q = run_available_now(stream_dedup(stream), "t12_dedup_single", "append")
     q.awaitTermination()
     fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
@@ -197,70 +198,3 @@ def test_dedup_keyset_contract_survives_multibatch_drain(spark, tmp_path):
     }
     assert sink_keys == batch_keys
     spark.catalog.dropTempView("t12_dedup_multi")
-
-
-def test_doremi_base_cache_cold_warm_parity(spark):
-    """The driver-local base-histogram cache must be value-invisible:
-    a cache-hit run (local-relation base) reproduces the cache-miss
-    run's weights bit-for-bit (the iteration arithmetic is shared —
-    _doremi_iterate — and base rows round-trip exactly)."""
-    from velox_hadoop_spark.operators.llmops9 import (
-        _DOREMI_BASE_CACHE,
-        _docs,
-        doremi_weight_frames,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = _docs(spark, sf)
-    _DOREMI_BASE_CACHE.clear()
-    _, wh_cold = doremi_weight_frames(docs, sf_dir=sf)
-    cold = {r.source: r.w2 for r in wh_cold[-1].collect()}
-    assert _DOREMI_BASE_CACHE, "cache not populated on miss"
-    _, wh_warm = doremi_weight_frames(docs, sf_dir=sf)
-    warm = {r.source: r.w2 for r in wh_warm[-1].collect()}
-    assert cold == warm and cold
-
-
-def test_ivf_codebook_cache_cold_warm_parity(spark):
-    """Same invisibility contract for the IVF codebook cache: cached
-    literal centroids give the identical assignment as a fresh
-    derivation (and as the sf_dir-less path)."""
-    from velox_hadoop_spark.operators.similarity import (
-        _IVF_CODEBOOK_CACHE,
-        ivf_assign,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    _IVF_CODEBOOK_CACHE.clear()
-    cold = {
-        (r.vec_id, r.centroid_id)
-        for r in ivf_assign(emb, sf_dir=sf).select("vec_id", "centroid_id").collect()
-    }
-    assert _IVF_CODEBOOK_CACHE, "cache not populated on miss"
-    warm = {
-        (r.vec_id, r.centroid_id)
-        for r in ivf_assign(emb, sf_dir=sf).select("vec_id", "centroid_id").collect()
-    }
-    uncached = {
-        (r.vec_id, r.centroid_id)
-        for r in ivf_assign(emb).select("vec_id", "centroid_id").collect()
-    }
-    assert cold == warm == uncached and cold
-
-
-def test_embeddings_fingerprint_tracks_content(tmp_path):
-    """A rebuilt embeddings file at the SAME path must change the
-    recall-ground-truth cache key (round-12 advice: the sweeps rewrite
-    corpora at fixed paths in-session)."""
-    import os
-
-    from velox_hadoop_spark.operators.similarity import _embeddings_fingerprint
-
-    f = tmp_path / "embeddings.parquet"
-    f.write_bytes(b"state-one")
-    fp1 = _embeddings_fingerprint(str(tmp_path))
-    f.write_bytes(b"state-two!")
-    os.utime(f, ns=(1, 1))  # decouple from mtime granularity
-    fp2 = _embeddings_fingerprint(str(tmp_path))
-    assert fp1 != fp2

@@ -81,11 +81,11 @@ def test_oracle_lint_no_hugeint_outputs():
 def test_priority_order_invariants():
     """Round-5+ driver-sample ordering contract:
 
-        boosted-unverified → _REVERIFY → unverified-rest → deferred →
-        green tail
+        _REVERIFY → unverified-rest → _REVERIFY_TAIL → green tail
 
-    Every _BOOST/_REVERIFY/_DEFER name must exist in the registry (typo
-    guard); no never-verified query may follow the start of the green
+    Every _REVERIFY/_REVERIFY_TAIL name must exist in the registry
+    (typo guard) and every query is listed exactly once; no
+    never-verified query may follow the start of the green
     tail (rows-only queries never earn a hash-green row, so they count
     as unverified and correctly stay ahead of the tail); _REVERIFY
     names — green rows whose kernel/oracle changed after the row was
@@ -94,9 +94,9 @@ def test_priority_order_invariants():
 
     names = list(entry.queries())
     registered = set(names)
-    assert set(entry._BOOST) <= registered
-    assert set(entry._DEFER) <= registered
+    assert len(names) == len(registered)
     assert set(entry._REVERIFY) <= registered
+    assert set(entry._REVERIFY_TAIL) <= registered
     green = entry._verified_names()
     tail_start = min(
         (
@@ -116,23 +116,23 @@ def test_priority_order_invariants():
 
 
 def test_priority_order_unit():
-    """_priority_order on a synthetic name list: boost order preserved
-    up front, reverify right behind, remaining unverified names keep
-    registration order, deferred names sit at the back of the
-    unverified group, green names (minus reverify) close the queue in
+    """_priority_order on a synthetic name list: reverify order
+    preserved up front, remaining unverified names keep registration
+    order, reverify-tail names follow the unverified group, green
+    names (minus both reverify groups) close the queue in
     registration order. Pure-function check, independent of round
     state."""
     import __spark_entry__ as entry
 
-    names = ["g1", "u1", "b1", "g2", "d1", "u2", "b2", "r1"]
-    green = {"g1", "g2", "r1"}
+    names = ["g1", "u1", "t1", "g2", "r2", "u2", "r1"]
+    green = {"g1", "g2", "r1", "r2", "t1"}
     orig_green = entry._verified_names
-    orig = entry._BOOST, entry._REVERIFY, entry._DEFER
+    orig = entry._REVERIFY, entry._REVERIFY_TAIL
     entry._verified_names = lambda: green
-    entry._BOOST, entry._REVERIFY, entry._DEFER = ("b2", "b1"), ("r1",), ("d1",)
+    entry._REVERIFY, entry._REVERIFY_TAIL = ("r1", "r2"), ("t1",)
     try:
         got = entry._priority_order(names)
     finally:
         entry._verified_names = orig_green
-        entry._BOOST, entry._REVERIFY, entry._DEFER = orig
-    assert got == ["b2", "b1", "r1", "u1", "u2", "d1", "g1", "g2"]
+        entry._REVERIFY, entry._REVERIFY_TAIL = orig
+    assert got == ["r1", "r2", "u1", "u2", "t1", "g1", "g2"]

@@ -389,6 +389,47 @@ def test_ts_nanos_probe_nested_schema_int96(tmp_path):
     assert ts_stored_as_nanos(pns)  # true TIMESTAMP(NANOS) annotation
 
 
+def test_runner_streams_bare_nanos_events_file(spark, tmp_path):
+    """A runner must stream a bare TIMESTAMP(NANOS) ``events.parquet``
+    with the same timestamps as catalog.read_table. The stream reads a
+    glob of the path, so the footer probe has to read the real path:
+    probing the glob string fails to open it and would take the µs
+    branch. Sub-µs nanos are set on every row so the in-plan ns → µs
+    truncation shows in the raw drain."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from velox_hadoop_spark.catalog import ts_stored_as_nanos
+    from velox_hadoop_spark.plans import registry
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet")
+    ns = pc.add(t["ts"].cast(pa.timestamp("ns")).cast(pa.int64()), 789)
+    t = t.set_column(
+        t.schema.get_field_index("ts"), "ts", ns.cast(pa.timestamp("ns"))
+    )
+    src = str(tmp_path / "events.parquet")
+    pq.write_table(t, src)
+    assert ts_stored_as_nanos(src)
+
+    batch = read_table(spark, str(tmp_path), "events")
+    q = run_available_now(
+        read_event_stream(spark, src).select("event_id", "ts"),
+        "nanos_bare_raw",
+        output_mode="append",
+    )
+    q.awaitTermination(120)
+    got = {(r.event_id, r.ts) for r in spark.table("nanos_bare_raw").collect()}
+    spark.catalog.dropTempView("nanos_bare_raw")
+    want = {(r.event_id, r.ts) for r in batch.select("event_id", "ts").collect()}
+    assert got == want and want
+
+    runner = registry.queries()["streaming_tumbling_runner"]
+    got = sorted(map(tuple, runner(spark, str(tmp_path)).collect()))
+    want = sorted(map(tuple, tumbling_agg(batch).collect()))
+    assert got == want and want
+
+
 def test_stateful_runner_multibatch_matches_batch(spark):
     """Force ONE FILE PER MICRO-BATCH so the state store genuinely
     merges across many batches, then check the end-of-stream state
@@ -487,41 +528,27 @@ def test_stateful_runner_all_null_value_user_reports_null_total(spark):
 
 
 def test_stream_source_dir_tracks_corpus_rewrites(spark, tmp_path):
-    """The content-fingerprinted stream-source copy must go STALE-PROOF
-    (round-11 review): rewriting the corpus at the SAME sf_dir path
-    (the sweeps do this every run) must mint a fresh copy, while an
-    unchanged corpus reuses the previous one."""
-    import pyspark.sql.functions as SF
+    """The runners stream ``events.parquet`` where it lies: rewriting
+    the corpus at the SAME sf_dir path (the sweeps do this every run)
+    must show up in the next runner call, and no copy of the source is
+    left behind in the temp dir."""
+    from velox_hadoop_spark.plans import registry
 
-    from velox_hadoop_spark.streaming.events import _stream_source_dir
-
+    runner = registry.queries()["streaming_dedup_runner"]
     sf_dir = str(tmp_path)
     ev = read_table(spark, SF_DIR, "events")
-    ev.limit(10).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
-    d1 = _stream_source_dir(spark, sf_dir)
-    n1 = spark.read.parquet(d1).count()
-    assert n1 == 10
-    # unchanged corpus -> same copy
-    assert _stream_source_dir(spark, sf_dir) == d1
-    # REWRITE the corpus at the same path -> new token, fresh copy
-    ev.limit(25).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
-    d2 = _stream_source_dir(spark, sf_dir)
-    assert d2 != d1
-    assert spark.read.parquet(d2).count() == 25
-    # the runners read the fresh data end-to-end
-    from velox_hadoop_spark.streaming.events import (
-        drain_to_memory_sink,
-        read_event_stream,
-        stream_dedup,
-    )
-
-    sink = drain_to_memory_sink(
-        spark, stream_dedup(read_event_stream(spark, d2)), "vhs_staletest_", "append"
-    )
-    want = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id", "event_type")
-        .distinct()
-        .count()
-    )
-    assert sink.select("user_id", "event_type").distinct().count() == want
+    tmp = tempfile.gettempdir()
+    before = {f for f in os.listdir(tmp) if f.startswith("vhs_stream_src_")}
+    for n in (10, 25):
+        ev.limit(n).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
+        want = {
+            (r.user_id, r.event_type)
+            for r in spark.read.parquet(f"{sf_dir}/events.parquet")
+            .select("user_id", "event_type")
+            .distinct()
+            .collect()
+        }
+        got = {(r.user_id, r.event_type) for r in runner(spark, sf_dir).collect()}
+        assert got == want and want
+    after = {f for f in os.listdir(tmp) if f.startswith("vhs_stream_src_")}
+    assert after == before

@@ -93,31 +93,6 @@ def ts_stored_as_nanos(path: str, column: str = "ts") -> bool:
     return True
 
 
-def content_fingerprint(path: str) -> str:
-    """Content fingerprint of a parquet file/dir (per-file size/mtime
-    over a recursive walk — the scheme ``streaming.events.
-    _stream_source_dir`` introduced): the shared key ingredient for
-    every driver-local session cache keyed on a corpus state
-    (recall ground truth, IVF codebook, DoReMi base histogram). The
-    empty/degenerate sweeps rewrite corpora at FIXED paths in-session,
-    so caching on the path alone would serve stale data for a rebuilt
-    file (round-12 advice)."""
-    import hashlib
-
-    parts = [path]
-    if os.path.isdir(path):
-        for root, dirs, files in os.walk(path):
-            dirs.sort()
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                rel = os.path.relpath(os.path.join(root, f), path)
-                parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one catalog table; normalizes storage quirks.
 

@@ -279,8 +279,10 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from velox_hadoop_spark.operators.similarity import (
         _RECALL_K,
+        IVF_CENTROIDS,
         ivf_assign,
         ivf_assign_probes,
+        ivf_codebook,
         recall_ground_truth,
         recall_query_sample,
         score_pairs_exact,
@@ -289,12 +291,13 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # md5-order prefix of the shared gate sample (see _CURVE_SAMPLE_N)
     sample = recall_query_sample(emb).limit(_CURVE_SAMPLE_N)
+    book = ivf_codebook(emb, IVF_CENTROIDS)
     qa = (
-        ivf_assign_probes(emb, nprobe=max(_PROBES), sf_dir=sf_dir)
+        ivf_assign_probes(emb, book, max(_PROBES))
         .join(sample.select("vec_id"), "vec_id", "left_semi")
         .select(F.col("vec_id").alias("query_id"), "centroid_id", "probe_rank")
     )
-    na = ivf_assign(emb, sf_dir=sf_dir).select(
+    na = ivf_assign(emb, book).select(
         F.col("vec_id").alias("neighbor_id"), "centroid_id"
     )
     # persist: the candidate frame feeds the exact scorer's input AND
@@ -305,12 +308,12 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", "probe_rank")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # The session-cached ground truth (recall_ground_truth) supplies the
-    # size probe, the (below-budget) normalized-corpus broadcast, AND
-    # the exact baseline as a local relation; the curve's narrower
-    # sample is a prefix of the shared gate sample (subset property of
+    # The shared ground truth (recall_ground_truth) supplies the size
+    # probe, the (below-budget) normalized-corpus broadcast, AND the
+    # exact baseline as a local relation; the curve's narrower sample
+    # is a prefix of the shared gate sample (subset property of
     # per-query top-k), carved out with one semi-join.
-    n, bc, gt_full, sample_ids = recall_ground_truth(spark, sf_dir, emb)
+    n, bc, gt_full, sample_ids = recall_ground_truth(spark, emb)
     curve_ids = spark.createDataFrame(
         [(i,) for i in sample_ids[:_CURVE_SAMPLE_N]], "query_id long"
     )

@@ -164,7 +164,7 @@ def q_doremi_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1:1 per occurrence), one per-source grouped sum; the iteration
     runs on the |sources|-row frame with scalar aggregates AQE
     broadcasts — no window, no driver loop."""
-    base, w_hist = doremi_weight_frames(_docs(spark, sf_dir), sf_dir=sf_dir)
+    base, w_hist = doremi_weight_frames(_docs(spark, sf_dir))
     out = base.select(
         "source",
         "n_tokens",
@@ -179,61 +179,19 @@ def q_doremi_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# Session cache for the DoReMi per-source base histogram (r11 verdict
-# follow-on #4: doremi_mixture_reweight / doremi_weighted_resample /
-# doremi_resample_report each re-ran the corpus-wide token pipeline;
-# everything AFTER `base` is |sources|-row arithmetic). Holds
-# DRIVER-LOCAL rows only — (source, n_tokens, lq, w0) × |sources|,
-# a mixture-domain count (dozens at any SF; the MAX_SOURCES guard
-# refuses to cache a pathological million-source corpus rather than
-# collect it). Keyed like recall_ground_truth / ivf_codebook on
-# (applicationId, sf_dir, documents content fingerprint).
-_DOREMI_BASE_CACHE: dict = {}
-_DOREMI_BASE_MAX_SOURCES = 10_000
-
-
-def doremi_weight_frames(docs: DataFrame, sf_dir: str | None = None):
+def doremi_weight_frames(docs: DataFrame):
     """The DoReMi pipeline as frames: returns (base, [w1f, w2f]) where
     base carries (source, n_tokens, lq, w0) and each wi frame the
     1e-9-grid post-iteration weight — the ONE home of the update rule,
     shared by the reweight report and the resample composite (both
     oracles mirror the same ``_DOREMI_CTES`` chain).
 
-    With ``sf_dir`` the |sources|-row base histogram is served from a
-    driver-local session cache (content-fingerprinted — see
-    ``catalog.content_fingerprint``): the corpus-wide token pipeline
-    runs once per (session, corpus state) and every later DoReMi query
-    or warm re-run replays base as a local relation. The iteration
-    arithmetic is identical either way — it only ever reads base.
-    PRECONDITION when passing ``sf_dir``: ``docs`` must be the
-    canonical documents table of that directory (the cache key covers
-    the file state, not the DataFrame — a filtered frame with sf_dir
-    set would be served the full corpus's histogram); derived-corpus
-    callers pass ``sf_dir=None``.
-
-    Cache lifetime: the persisted intermediates (token explode,
-    vocab counts, base) follow the dedup.py contract — a lazy-returning
+    Cache lifetime: the persisted intermediates (per-source token
+    counts, base) follow the dedup.py contract — a lazy-returning
     helper cannot unpersist before the caller consumes the result, so
     the CALLER owns the cache (bench and the driver gate clearCache
     per query)."""
-    import os
-
     from pyspark.storagelevel import StorageLevel
-
-    from velox_hadoop_spark.catalog import content_fingerprint
-
-    spark = docs.sparkSession
-    key = None
-    if sf_dir is not None:
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            content_fingerprint(os.path.join(sf_dir, "documents.parquet")),
-        )
-        hit = _DOREMI_BASE_CACHE.get(key)
-        if hit is not None:
-            rows, schema = hit
-            return _doremi_iterate(spark.createDataFrame(rows, schema))
 
     # ONE corpus-proportional shuffle (round 14, guide §2.3/§5): the
     # token explode pre-aggregates to per-(source, token) counts before
@@ -283,22 +241,7 @@ def doremi_weight_frames(docs: DataFrame, sf_dir: str | None = None):
             / F.lit(1e9)
         ).alias("w0"),
     ).persist()
-    if key is not None:
-        probe = base.limit(_DOREMI_BASE_MAX_SOURCES + 1).collect()
-        if len(probe) <= _DOREMI_BASE_MAX_SOURCES:
-            for stale in [
-                k for k in _DOREMI_BASE_CACHE if k[:2] == key[:2] and k != key
-            ]:
-                _DOREMI_BASE_CACHE.pop(stale)
-            _DOREMI_BASE_CACHE[key] = (probe, base.schema)
-    return _doremi_iterate(base)
-
-
-def _doremi_iterate(base: DataFrame):
-    """The |sources|-row DoReMi iteration arithmetic over a prepared
-    base histogram — split from the corpus pipeline so a cached base
-    (local relation) and a freshly-derived one run the IDENTICAL
-    crossJoin/fold sequence (bit-equal weights either way)."""
+    # the |sources|-row iteration arithmetic
     s = base.select(
         "source", "n_tokens", "lq", (F.col("lq") / F.lit(1e6)).alias("l"),
         F.col("w0").alias("w"),
@@ -760,7 +703,7 @@ def q_doremi_weighted_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from velox_hadoop_spark.functions.staged import staged_topk_per_group
 
     docs = _docs(spark, sf_dir)
-    _, w_hist = doremi_weight_frames(docs, sf_dir=sf_dir)
+    _, w_hist = doremi_weight_frames(docs)
     caps = w_hist[-1].select(
         "source",
         F.floor(
@@ -930,7 +873,7 @@ def q_doremi_resample_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles and re-rounds. Scale: everything after the shared token
     pass is |sources| rows; the doc counts are one grouped count."""
     docs = _docs(spark, sf_dir)
-    _, w_hist = doremi_weight_frames(docs, sf_dir=sf_dir)
+    _, w_hist = doremi_weight_frames(docs)
     caps = w_hist[-1].select(
         "source",
         F.floor(
@@ -1012,16 +955,14 @@ def q_doremi_mixture_shift_report(spark: SparkSession, sf_dir: str) -> DataFrame
     mass; L1 near 0 means the reweight was a no-op).
 
     Numeric discipline: weights arrive on the exact 1e-9 grid from the
-    shared ``doremi_weight_frames`` pipeline (cached base histogram —
-    this report costs |sources|-row arithmetic on a warm session);
-    ln() is pinned to the 1e-6 grid (the funcs2 _fix6 convention,
+    shared ``doremi_weight_frames`` pipeline; ln() is pinned to the 1e-6 grid (the funcs2 _fix6 convention,
     applied to log), every cross-source term is a BIGINT on the 1e-9
     grid, and the only doubles displayed are final ROUND-6 ratios
     (+0.0 pins the −0.0 class on the negated entropy sums). KL terms
     are defined over the shared support (w2 > 0 AND w0 > 0 — w0 > 0
     always holds for present sources); entropy terms use the x·ln x → 0
     limit at w = 0."""
-    base, w_hist = doremi_weight_frames(_docs(spark, sf_dir), sf_dir=sf_dir)
+    base, w_hist = doremi_weight_frames(_docs(spark, sf_dir))
     j = base.select("source", "w0").join(
         w_hist[-1].select("source", F.col(f"w{DOREMI_ITERS}").alias("w2")),
         "source",

@@ -33,7 +33,11 @@ from velox_hadoop_spark.operators.graph import (
     co_supply_capped_edges,
 )
 from velox_hadoop_spark.operators.graph2 import _EDGE_CTES
-from velox_hadoop_spark.operators.similarity import ivf_assign
+from velox_hadoop_spark.operators.similarity import (
+    IVF_CENTROIDS,
+    ivf_assign,
+    ivf_codebook,
+)
 from velox_hadoop_spark.plans.registry import register
 
 # Magnitude bound for the norm-profile 1e-6 grid: floor(x*1e6 + 0.5)
@@ -90,7 +94,7 @@ def q_ivf_cell_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     one |corpus|-row grouped count; share is a ratio of exact integers
     rounded at 6dp."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assign = ivf_assign(emb, n_centroids=8, sf_dir=sf_dir)
+    assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
     tot = assign.agg(F.count("*").alias("t"))
     return (
         assign.groupBy("centroid_id")

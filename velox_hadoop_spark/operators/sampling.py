@@ -20,6 +20,8 @@ standard "max k docs per domain" balancing pass.
 
 from __future__ import annotations
 
+from types import MappingProxyType
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -135,7 +137,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STRATA = {"en": 20, "de": 100, "fr": 100, "es": 100, "zh": 50}
+_STRATA = MappingProxyType({"en": 20, "de": 100, "fr": 100, "es": 100, "zh": 50})
 
 
 @register(

@@ -39,6 +39,10 @@ ANN_BUCKET_CAP = 512
 # still scores against its full cell.
 IVF_QUERY_SALTS = 8
 
+# IVF codebook size: the K lowest vec_ids are the centroids (the
+# oracles mirror this with ORDER BY vec_id LIMIT 8).
+IVF_CENTROIDS = 8
+
 # Corpora at or below this row count may be collected and broadcast as a
 # dense matrix (the fast single-dgemm path); larger corpora route through
 # the distributed blocked kernel — never a full-corpus driver collect.
@@ -436,20 +440,7 @@ def hyperplane_buckets(
     return emb.select("vec_id", bucket.cast("long").alias("bucket"))
 
 
-# Session cache for the deterministic IVF codebook (r11 verdict
-# follow-on #3: ann_ivf_topk / ann_ivf_recall / ann_hard_negatives /
-# ann_recall_budget_curve each re-derived the centroid subquery).
-# Holds DRIVER-LOCAL rows only — n_centroids × dims doubles, module
-# constants at every call site, never SF-proportional — keyed like
-# recall_ground_truth on (applicationId, sf_dir, corpus content
-# fingerprint, k) so a rebuilt embeddings file at the same path gets a
-# fresh codebook and superseded states evict.
-_IVF_CODEBOOK_CACHE: dict = {}
-
-
-def ivf_codebook(
-    emb: DataFrame, n_centroids: int, sf_dir: str | None = None
-) -> list:
+def ivf_codebook(emb: DataFrame, n_centroids: int) -> list:
     """The deterministic IVF codebook as driver-local rows:
     ``[(centroid_id, vector)]`` for the ``n_centroids`` lowest vec_ids.
 
@@ -459,26 +450,8 @@ def ivf_codebook(
     vec_id LIMIT k). At 100 TB you would train centroids offline and
     broadcast them identically — a codebook is driver-local by nature
     (K × dims doubles); collecting it here is the sanctioned
-    constant-bounded class, and caching it per (session, sf_dir,
-    content state) makes the whole IVF family derive it once.
-
-    PRECONDITION when passing ``sf_dir``: ``emb`` must be the CANONICAL
-    embeddings table of that directory (the cache key covers the file
-    state, not the DataFrame — a filtered/derived frame with sf_dir set
-    would be served the full corpus's codebook). Callers deriving from
-    a subset pass ``sf_dir=None`` for the uncached per-call path."""
-    spark = emb.sparkSession
-    key = None
-    if sf_dir is not None:
-        key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            _embeddings_fingerprint(sf_dir),
-            int(n_centroids),
-        )
-        hit = _IVF_CODEBOOK_CACHE.get(key)
-        if hit is not None:
-            return hit
+    constant-bounded class. A query derives it once and hands it to
+    every ``ivf_assign`` / ``ivf_assign_probes`` call it makes."""
     rows = (
         drop_degenerate_vectors(emb)
         .select("vec_id", to_double(F.col("embedding")).alias("v"))
@@ -486,16 +459,7 @@ def ivf_codebook(
         .limit(n_centroids)
         .collect()
     )
-    book = [(int(r.vec_id), list(r.v)) for r in rows]
-    if key is not None:
-        for stale in [
-            k
-            for k in _IVF_CODEBOOK_CACHE
-            if (k[0], k[1], k[3]) == (key[0], key[1], key[3]) and k[2] != key[2]
-        ]:
-            _IVF_CODEBOOK_CACHE.pop(stale)
-        _IVF_CODEBOOK_CACHE[key] = book
-    return book
+    return [(int(r.vec_id), list(r.v)) for r in rows]
 
 
 def _ivf_sorted_sims(book: list):
@@ -556,17 +520,14 @@ def _ivf_input(emb: DataFrame) -> DataFrame:
     )
 
 
-def ivf_assign(
-    emb: DataFrame, n_centroids: int = 8, sf_dir: str | None = None
-) -> DataFrame:
-    """IVF coarse quantizer: assign every vector to its nearest centroid.
+def ivf_assign(emb: DataFrame, book: list) -> DataFrame:
+    """IVF coarse quantizer: assign every vector to its nearest centroid
+    of ``book`` (from ``ivf_codebook``).
 
-    The codebook is driver-local (``ivf_codebook`` — cached per
-    session/corpus state when ``sf_dir`` is given), so assignment is a
-    NARROW per-row argmax over K literal centroid vectors: no
-    broadcast join, no window, no shuffle of the corpus at all. Same
-    scoring/tiebreak as always (see ``_ivf_sorted_sims``)."""
-    book = ivf_codebook(emb, n_centroids, sf_dir)
+    The codebook is driver-local, so assignment is a NARROW per-row
+    argmax over K literal centroid vectors: no broadcast join, no
+    window, no shuffle of the corpus at all. Same scoring/tiebreak as
+    always (see ``_ivf_sorted_sims``)."""
     e = _ivf_input(emb)
     if not book:
         return e.where(F.lit(False)).select(
@@ -578,21 +539,15 @@ def ivf_assign(
     )
 
 
-def ivf_assign_probes(
-    emb: DataFrame,
-    n_centroids: int = 8,
-    nprobe: int = 1,
-    sf_dir: str | None = None,
-) -> DataFrame:
+def ivf_assign_probes(emb: DataFrame, book: list, nprobe: int) -> DataFrame:
     """Multi-probe IVF query assignment: each vector's ``nprobe``
-    nearest centroids with their probe rank (1 = nearest). Same
-    literal-codebook scoring and tiebreak as ``ivf_assign`` — both are
-    thin cuts of ``_ivf_sorted_sims``; this one reverses the sorted
+    nearest centroids of ``book`` with their probe rank (1 = nearest).
+    Same literal-codebook scoring and tiebreak as ``ivf_assign`` — both
+    are thin cuts of ``_ivf_sorted_sims``; this one reverses the sorted
     tail (best first) and explodes it with its 1-based position.
     Probing p cells multiplies the candidate set ~p×: the
     recall-vs-cost budget curve (``ann_recall_budget_curve``) measures
     what that buys."""
-    book = ivf_codebook(emb, n_centroids, sf_dir)
     e = _ivf_input(emb)
     if not book:
         return e.where(F.lit(False)).select(
@@ -790,7 +745,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assign = ivf_assign(emb, n_centroids=8, sf_dir=sf_dir)
+    assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
 
     QUERY_BLOCK = 4096  # peak kernel memory = QUERY_BLOCK x |cell| doubles
 
@@ -1277,74 +1232,26 @@ def recall_query_sample(emb: DataFrame) -> DataFrame:
     ).limit(_RECALL_SAMPLE_N)
 
 
-# Session cache for the recall audits' shared brute-force ground truth
-# (round-11 VERDICT item 4: the four audits re-derived the exact top-k
-# independently — the single most expensive corner of the registry).
-# Keyed by (applicationId, sf_dir, corpus content fingerprint — see
-# _embeddings_fingerprint); holds DRIVER-LOCAL data only —
-# (corpus count, normalized-corpus broadcast handle, the exact-top id
-# pairs, the ordered sample ids) — so it survives the harness's
-# spark.catalog.clearCache() between queries/runs, unlike a persisted
-# DataFrame. Boundedness: the collected rows are ≤ _RECALL_SAMPLE_N ×
-# _RECALL_K id pairs + _RECALL_SAMPLE_N sample ids (module CONSTANTS —
-# ~3k tuples at ANY corpus size, the sanctioned bounded-collect class;
-# nothing SF-proportional is ever collected).
-_RECALL_GT_CACHE: dict = {}
-
-
-def _embeddings_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of ``{sf_dir}/embeddings.parquet`` (per-file
-    size/mtime over a recursive walk — the same scheme as
-    ``streaming.events._stream_source_dir``): the degenerate/empty
-    sweeps rewrite corpora at FIXED paths in-session, so a cache keyed
-    on the path alone would serve stale ground truth and a stale
-    normalized-corpus broadcast for the rebuilt file (round-12
-    advice)."""
-    import os
-
-    from velox_hadoop_spark.catalog import content_fingerprint
-
-    return content_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-
-
-def recall_ground_truth(spark: SparkSession, sf_dir: str, emb: DataFrame):
+def recall_ground_truth(spark: SparkSession, emb: DataFrame):
     """(n, bc, exact_top_local, sample_ids) for the shared recall-gate
-    sample — the exact dgemm baseline runs ONCE per (session, sf_dir,
-    corpus content state) and every later audit (and every later warm
-    re-run in the same session) replays it as a ~3k-row local
-    relation, which also turns the recall join into a broadcast
-    probe. The content fingerprint in the key invalidates the cache
-    when the embeddings file is rewritten at the same path; superseded
-    entries for the same (app, sf_dir) are evicted so a sweep that
-    rewrites the corpus repeatedly holds ONE ground truth + broadcast
-    at a time."""
-    fp = _embeddings_fingerprint(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    for stale in [
-        k for k in _RECALL_GT_CACHE if k[:2] == key[:2] and k[2] != fp
-    ]:
-        old = _RECALL_GT_CACHE.pop(stale)
-        if old[1] is not None:
-            old[1].unpersist()
-    hit = _RECALL_GT_CACHE.get(key)
-    if hit is None:
-        sample = recall_query_sample(emb)
-        n = emb.count()
-        bc = broadcast_normalized_corpus(emb) if n <= DRIVER_BROADCAST_ROWS else None
-        rows = [
-            (r.query_id, r.neighbor_id)
-            for r in knn_exact(
-                emb, _RECALL_K, queries=sample, n_query_blocks=1, n=n, bc=bc
-            )
-            .select("query_id", "neighbor_id")
-            .collect()
-        ]
-        ids = [r.vec_id for r in sample.select("vec_id").collect()]
-        _RECALL_GT_CACHE[key] = (n, bc, rows, ids)
-    n, bc, rows, ids = _RECALL_GT_CACHE[key]
-    exact_top = spark.createDataFrame(
-        rows, "query_id long, neighbor_id long"
-    )
+    sample: the exact dgemm baseline runs once per call and comes back
+    as a ~3k-row local relation, which also turns the recall join into
+    a broadcast probe. Bounded collect: ≤ _RECALL_SAMPLE_N × _RECALL_K
+    id pairs + _RECALL_SAMPLE_N sample ids (module CONSTANTS — nothing
+    SF-proportional is ever collected)."""
+    sample = recall_query_sample(emb)
+    n = emb.count()
+    bc = broadcast_normalized_corpus(emb) if n <= DRIVER_BROADCAST_ROWS else None
+    rows = [
+        (r.query_id, r.neighbor_id)
+        for r in knn_exact(
+            emb, _RECALL_K, queries=sample, n_query_blocks=1, n=n, bc=bc
+        )
+        .select("query_id", "neighbor_id")
+        .collect()
+    ]
+    ids = [r.vec_id for r in sample.select("vec_id").collect()]
+    exact_top = spark.createDataFrame(rows, "query_id long, neighbor_id long")
     return n, bc, exact_top, ids
 
 
@@ -1451,11 +1358,11 @@ def _recall_vs_exact(emb, cand, gt):
     floor-rounded at 6 dp.
 
     ``gt`` is the (n, bc, exact_top_local, _ids) tuple from
-    ``recall_ground_truth``: the exact baseline runs once per
-    (session, sf_dir) and arrives here as a ~3k-row LOCAL relation, so
-    the candidate re-rank shares the cached size probe and (below the
-    driver budget) the ONE normalized-corpus broadcast, and the recall
-    join is a broadcast probe. Past the broadcast budget the baseline
+    ``recall_ground_truth``: the exact baseline arrives here as a
+    ~3k-row LOCAL relation, so the candidate re-rank shares its size
+    probe and (below the driver budget) its ONE normalized-corpus
+    broadcast, and the recall join is a broadcast probe. Past the
+    broadcast budget the baseline
     streams the corpus through the cogroup un-replicated inside
     ``recall_ground_truth`` — NOTHING SF-proportional is ever broadcast
     or collected, so the audit stays exact at any scale."""
@@ -1567,9 +1474,7 @@ def q_ann_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nb = buckets.select(F.col("vec_id").alias("neighbor_id"), "bucket")
     cand = qb.join(nb, "bucket").where(F.col("neighbor_id") != F.col("query_id"))
-    return _recall_vs_exact(
-        emb, cand, recall_ground_truth(spark, sf_dir, emb)
-    )
+    return _recall_vs_exact(emb, cand, recall_ground_truth(spark, emb))
 
 
 _AMP_TABLES = 4        # OR-amplification: number of independent tables
@@ -1692,9 +1597,7 @@ def q_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _recall_vs_exact(
-        emb, cand, recall_ground_truth(spark, sf_dir, emb)
-    )
+    return _recall_vs_exact(emb, cand, recall_ground_truth(spark, emb))
 
 
 @register(
@@ -1766,7 +1669,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production ``ann_ivf_topk`` path uses."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     sample = recall_query_sample(emb)
-    assign = ivf_assign(emb, sf_dir=sf_dir)
+    assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
     qa = assign.join(sample.select("vec_id"), "vec_id", "left_semi").select(
         F.col("vec_id").alias("query_id"), "centroid_id"
     )
@@ -1776,9 +1679,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    return _recall_vs_exact(
-        emb, cand, recall_ground_truth(spark, sf_dir, emb)
-    )
+    return _recall_vs_exact(emb, cand, recall_ground_truth(spark, emb))
 
 
 _HARDNEG_K = 3
@@ -1842,7 +1743,7 @@ def q_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     sample = recall_query_sample(emb)
-    assign = ivf_assign(emb, sf_dir=sf_dir)
+    assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
     labels = emb.select("vec_id", "label")
     qa = (
         assign.join(sample.select("vec_id"), "vec_id", "left_semi")

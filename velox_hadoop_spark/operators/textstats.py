@@ -11,6 +11,8 @@ happens inside whole-stage codegen where the corpus streams through.
 
 from __future__ import annotations
 
+from types import MappingProxyType
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,16 +22,17 @@ from velox_hadoop_spark.plans.registry import register
 # Tiny per-language marker lexicons (function words). The heuristic is
 # the classic stopword-profile vote; lists are deliberately small and
 # hard-coded so the oracle replicates them exactly.
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": ["the", "a", "of", "and", "to"],
-    "de": ["der", "die", "das", "und", "ist"],
-    "es": ["el", "la", "los", "y", "es"],
-    "fr": ["le", "la", "les", "et", "est"],
-    "zh": ["de", "le", "shi", "he", "zai"],
-}
+LANG_MARKERS = MappingProxyType(
+    {
+        "en": ("the", "a", "of", "and", "to"),
+        "de": ("der", "die", "das", "und", "ist"),
+        "es": ("el", "la", "los", "y", "es"),
+        "fr": ("le", "la", "les", "et", "est"),
+        "zh": ("de", "le", "shi", "he", "zai"),
+    }
+)
 
 BPE_ISH = "[a-z]+|[0-9]|[^a-z0-9 ]"  # lowercase words, digits, punct singles
-_EN_STOP = LANG_MARKERS["en"]
 
 
 def _marker_count_expr(lang: str) -> str:

@@ -124,9 +124,12 @@ def read_event_stream(
     set only on the ns branch, where it must persist: every micro-
     batch re-reads files lazily for the stream's whole life, so
     restoring the conf here would break the scan at the first trigger.
-    (``path`` must be a directory — Spark's file-stream source rejects
-    a bare file — so point it at the folder holding the parquet
-    files.)
+    ``path`` is a parquet file or a directory of part files, streamed
+    where it lies: Spark's file-stream source rejects a bare file
+    (``basePath`` must be a directory), so the stream reads a glob
+    that matches only ``path`` itself (``…/events.parque[t]``). The
+    footer probe reads the real path — given the glob string it would
+    fail to open it and take the µs branch.
     """
     from velox_hadoop_spark.catalog import ts_stored_as_nanos
 
@@ -135,6 +138,7 @@ def read_event_stream(
             return reader.option("maxFilesPerTrigger", max_files_per_trigger)
         return reader
 
+    only_path = f"{path[:-1]}[{path[-1]}]"
     if ts_stored_as_nanos(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         long_ts = T.StructType(
@@ -143,9 +147,9 @@ def read_event_stream(
                 for f in EVENT_SCHEMA.fields
             ]
         )
-        raw = _opts(spark.readStream.schema(long_ts)).parquet(path)
+        raw = _opts(spark.readStream.schema(long_ts)).parquet(only_path)
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return _opts(spark.readStream.schema(EVENT_SCHEMA)).parquet(path)
+    return _opts(spark.readStream.schema(EVENT_SCHEMA)).parquet(only_path)
 
 
 def stream_tumbling_counts(
@@ -467,140 +471,6 @@ def q_funnel_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Spark's file-stream source rejects a bare file and the canonical
-    ``events.parquet`` is one — materialize a normalized copy into a
-    DETERMINISTIC temp directory keyed on the source's CONTENT
-    fingerprint (path + per-file size/mtime), written once and reused
-    by every runner, later re-invocation, AND later process: repeated
-    bench/driver runs converge on one copy per corpus state instead of
-    accumulating mkdtemp dirs (round-10 ADVICE). Keying on content, not
-    just the path, means a rebuilt corpus at the same path (the
-    degenerate/empty sweeps rewrite fixed paths every run) gets a fresh
-    copy — the round-11 review's staleness catch. Publication is
-    serialized by ``fcntl.flock`` on a persistent per-state lock file
-    + scratch-dir atomic os.rename: exactly one process writes per
-    corpus state, rivals wait on the lock (re-checking _SUCCESS while
-    they poll), and the PUBLICATION path never deletes a directory
-    that carries _SUCCESS (the GC below may still reap a published
-    dir, but only one superseded past the 8-dir LRU AND untouched for
-    an hour — the age-floor condition, not an absolute never-delete
-    rule). flock, not O_EXCL-create: the kernel releases the lock
-    when the holder dies — kill -9 mid-write cannot strand a stale
-    lock, so there is no unlink-based staleness-breaking path at all
-    (the round-12 second review pass showed every unlink scheme
-    reopens the dual-publisher TOCTOU it tries to close). The lock
-    FILE persists (bytes, reaped never — it is the identity rivals
-    flock on; unlinking it would let two processes lock different
-    inodes at the same path)."""
-    import fcntl
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    from velox_hadoop_spark.catalog import content_fingerprint
-
-    # RECURSIVE content fingerprint — the shared
-    # catalog.content_fingerprint helper (this function's round-11
-    # inline walk was its origin; one home now, round-12 review).
-    src = os.path.join(sf_dir, "events.parquet")
-    tok = content_fingerprint(src)
-    tmp = tempfile.gettempdir()
-    d = os.path.join(tmp, f"vhs_stream_src_{tok}")
-    success = os.path.join(d, "_SUCCESS")
-    lock = f"{d}.lock"
-    deadline = time.time() + 300
-    attempt = 0
-    while not os.path.isfile(success):
-        if time.time() > deadline:
-            raise RuntimeError(
-                f"could not publish stream source copy at {d} within 300s"
-            )
-        # mode 0o666 + read-only fallback: on a shared /tmp the lock
-        # file may be owned by ANOTHER user (it persists by design);
-        # flock works on a read-only descriptor, so EACCES on the
-        # read-write open degrades instead of crashing (round-12
-        # review pass 3)
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o666)
-        except PermissionError:
-            fd = os.open(lock, os.O_RDONLY)
-        try:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                # a live holder is publishing: poll — its _SUCCESS (or
-                # death, which auto-releases the flock) ends the wait
-                time.sleep(0.5)
-                continue
-            if os.path.isfile(success):
-                break  # rival finished between our check and the lock
-            if attempt >= 3:
-                raise RuntimeError(
-                    f"stream source publication at {d} failed "
-                    f"{attempt} times (rename target not clearable?)"
-                )
-            scratch = f"{d}.tmp.{os.getpid()}.{attempt}"
-            attempt += 1
-            try:
-                read_table(spark, sf_dir, "events").write.mode(
-                    "overwrite"
-                ).parquet(scratch)
-                # under the lock: only a BROKEN dir (no _SUCCESS) can
-                # sit at d — evicting it cannot delete a good copy
-                if os.path.isdir(d):
-                    shutil.rmtree(d, ignore_errors=True)
-                os.rename(scratch, d)
-            except OSError:
-                shutil.rmtree(scratch, ignore_errors=True)
-        finally:
-            os.close(fd)  # closes → kernel releases any flock held
-    # GC superseded corpus states so repeated sweep/bench runs do not
-    # re-accumulate one events copy per rewrite (the round-10 ADVICE
-    # this function exists to fix): keep the 8 most-recently-used
-    # published dirs (concurrent sf_dirs in one test session stay
-    # live), drop older ones and any orphaned rename scratch. An AGE
-    # FLOOR (only collect published dirs untouched for > 1 h) keeps a
-    # concurrent process that is actively streaming a 9th live corpus
-    # state safe (round-12 advice): every use refreshes mtime via
-    # os.utime below, and no availableNow drain runs for an hour.
-    try:
-        sibs = [
-            p
-            for f in os.listdir(tmp)
-            if f.startswith("vhs_stream_src_")
-            and os.path.isdir(p := os.path.join(tmp, f))
-            and p != d
-        ]
-        # orphaned rename scratches: only if old enough that no live
-        # writer can still own them
-        hour_ago_ns = (time.time() - 3600) * 1e9
-        stale = [
-            p
-            for p in sibs
-            if ".tmp." in os.path.basename(p)
-            and os.stat(p).st_mtime_ns < hour_ago_ns
-        ]
-        published = sorted(
-            (p for p in sibs if ".tmp." not in os.path.basename(p)),
-            key=lambda p: os.stat(p).st_mtime_ns,
-            reverse=True,
-        )
-        old_enough = [
-            p for p in published[7:] if os.stat(p).st_mtime_ns < hour_ago_ns
-        ]
-        for p in stale + old_enough:
-            shutil.rmtree(p, ignore_errors=True)
-    except OSError:
-        pass
-    try:
-        os.utime(d)  # LRU refresh; d is guaranteed published above
-    except OSError:
-        pass
-    return d
-
-
 def drain_to_memory_sink(
     spark: SparkSession, stream_df: DataFrame, prefix: str, output_mode: str
 ) -> DataFrame:
@@ -656,7 +526,7 @@ def q_streaming_tumbling_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow is Spark's sanctioned backfill/batch-drain trigger
     for it, so the registered shape is the production job, pointed at
     a finite source."""
-    stream = read_event_stream(spark, _stream_source_dir(spark, sf_dir))
+    stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     # stream_tumbling_counts == watermark + the SHARED exact-cents
     # tumbling_agg, so the runner and the batch query cannot drift
     return drain_to_memory_sink(
@@ -694,13 +564,13 @@ def q_streaming_dedup_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     source is not event-time-ordered, even a narrow key can straddle
     an eviction). Rather than weakening the oracle to a key-set check,
     the runner PINS the batching: ``maxFilesPerTrigger`` far above any
-    possible file count of the runner-owned source copy guarantees
+    possible file count of the events source guarantees
     availableNow drains in one micro-batch at any future source
     default (round-12 advice). tests/test_round12_parity.py asserts
     both the single-batch execution here and the key-set contract that
     survives a forced maxFilesPerTrigger=1 multi-batch drain."""
     stream = read_event_stream(
-        spark, _stream_source_dir(spark, sf_dir), max_files_per_trigger=1_000_000
+        spark, f"{sf_dir}/events.parquet", max_files_per_trigger=1_000_000
     )
     sink = drain_to_memory_sink(spark, stream_dedup(stream), "vhs_dedup_", "append")
     return sink.groupBy("user_id", "event_type").agg(

@@ -449,14 +449,13 @@ def q_streaming_stateful_totals_runner(spark, sf_dir):
     values are ALL NULL reports a NULL total like SQL sum (the nv
     state column carries that distinction through the sink)."""
     from velox_hadoop_spark.streaming.events import (
-        _stream_source_dir,
         drain_to_memory_sink,
         read_event_stream,
     )
 
-    stream = read_event_stream(
-        spark, _stream_source_dir(spark, sf_dir)
-    ).select("user_id", "ts", "value")
+    stream = read_event_stream(spark, f"{sf_dir}/events.parquet").select(
+        "user_id", "ts", "value"
+    )
     sink = drain_to_memory_sink(
         spark,
         stream_running_user_totals_cents(stream),

@@ -96,6 +96,19 @@ _REVERIFY = (
     "streaming_tumbling_runner",
     "streaming_dedup_runner",
     "streaming_stateful_totals_runner",
+    # (h) one way to read a table: these read events through a raw
+    # parquet scan, which rejected (or, with nanosAsLong left set by an
+    # earlier query, misread) a TIMESTAMP(NANOS) events.ts; they now
+    # read through catalog.read_table like every other query:
+    "asof_join_grouped_backward",
+    "asof_join_tolerance",
+    "grouped_locf_daily_fill",
+    "time_to_convert_percentiles",
+    "peak_hourly_rate_per_user",
+    "event_path_3grams",
+    "attribution_position_based",
+    "conversion_paths_top",
+    "parse_url_events",
 )
 
 

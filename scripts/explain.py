@@ -2,21 +2,56 @@
 """Dump the formatted physical plan of any registered query.
 
     python scripts/explain.py <query_name> [sf_dir] [mode]
+    python scripts/explain.py --fingerprints <sf_dir> <out.json>
 
 mode: formatted (default) | simple | extended | cost | codegen.
 The tool every plan claim in PLANS.md / README §scale came from —
 regenerate after changing an operator and diff the tree.
+
+``--fingerprints`` builds every registered query in registry order
+(``spark.catalog.clearCache()`` between queries) and writes
+``{name: sha256}`` of its formatted physical plan, with expression ids
+(``#123``) and plan ids normalized away. Two trees whose JSON files are
+equal built the same plans; diff the files to find the queries that
+moved. Queries with several COUNT(DISTINCT) groups can order the groups
+of their Expand differently from one JVM to the next, so run each side
+more than once before reading a difference as a plan change.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from velox_hadoop_spark.plans import registry  # noqa: E402
 from velox_hadoop_spark.session import get_spark  # noqa: E402
+
+# `#123` expression / subquery ids, `[plan_id=45]` exchange ids, and
+# `subquery#12`-style names: allocated from session-global counters, so
+# they depend on how many plans were built before this one.
+_PLAN_IDS = re.compile(r"#\d+|plan_id=\d+")
+
+
+def explain(spark, df, mode: str = "formatted") -> str:
+    je = df._jdf.queryExecution()
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
+    return je.explainString(jmode)
+
+
+def normalized_plans(spark, sf_dir: str) -> dict[str, str]:
+    """name -> formatted physical plan with session-counter ids removed,
+    every registered query in registry order."""
+    plans = {}
+    for name, fn in registry.queries().items():
+        spark.catalog.clearCache()
+        plans[name] = _PLAN_IDS.sub("#", explain(spark, fn(spark, sf_dir)))
+    spark.catalog.clearCache()
+    return plans
 
 
 def main() -> None:
@@ -26,14 +61,21 @@ def main() -> None:
         for n in names:
             print(" ", n)
         return
+    spark = get_spark(app_name="explain", cpus=8, shuffle_partitions=8)
+    if sys.argv[1] == "--fingerprints":
+        sf_dir, out = sys.argv[2], sys.argv[3]
+        prints = {
+            name: hashlib.sha256(plan.encode()).hexdigest()
+            for name, plan in normalized_plans(spark, sf_dir).items()
+        }
+        with open(out, "w") as fh:
+            json.dump(prints, fh, indent=1)
+        print(f"{len(prints)} fingerprints -> {out}")
+        return
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     mode = sys.argv[3] if len(sys.argv) > 3 else "formatted"
-    spark = get_spark(app_name="explain", cpus=8, shuffle_partitions=8)
-    df = registry.queries()[name](spark, sf_dir)
-    je = df._jdf.queryExecution()
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-    print(je.explainString(jmode))
+    print(explain(spark, registry.queries()[name](spark, sf_dir), mode))
 
 
 if __name__ == "__main__":

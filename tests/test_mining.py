@@ -57,9 +57,10 @@ def test_kcore_peel_enforces_prior_round_degrees(spark):
     post-round-3 degrees would encode a convergence property the
     operator doesn't promise and fail spuriously on corpora needing
     more rounds."""
-    from velox_hadoop_spark.operators.mining import _KCORE_K, _peel_once, _t
+    from velox_hadoop_spark.catalog import read_table
+    from velox_hadoop_spark.operators.mining import _KCORE_K, _peel_once
 
-    li = _t(spark, SF_DIR, "lineitem")
+    li = read_table(spark, SF_DIR, "lineitem")
     prev = li.select(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("part")
     ).distinct()

@@ -618,6 +618,37 @@ def test_no_module_level_mutable_state():
     assert not bad, "module-level mutable state: " + ", ".join(bad)
 
 
+def test_catalog_tables_read_only_through_read_table():
+    """One way to read a table: outside catalog.py, no package code
+    calls ``.read.parquet(...)`` on an f-string that interpolates
+    ``sf_dir``. Such a read skips read_table's events.ts
+    TIMESTAMP(NANOS) handling, so its result depends on whether an
+    earlier query set ``nanosAsLong`` for the session."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "velox_hadoop_spark"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "catalog.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            f = getattr(node, "func", None)
+            if not (
+                isinstance(f, ast.Attribute)
+                and f.attr == "parquet"
+                and getattr(f.value, "attr", None) == "read"
+            ):
+                continue
+            if any(
+                isinstance(arg, ast.JoinedStr)
+                and any(getattr(n, "id", None) == "sf_dir" for n in ast.walk(arg))
+                for arg in node.args
+            ):
+                bad.append(f"{path.relative_to(pkg.parent)}:{node.lineno}")
+    assert not bad, "catalog table read outside catalog.read_table: " + ", ".join(bad)
+
+
 def test_ts_nanos_probe_recurses_partitioned_layout(tmp_path):
     """ts_stored_as_nanos must find part files nested in key=value
     subdirectories (partitioned writes): a top-level-only listing

@@ -182,12 +182,10 @@ def test_doremi_mixture_shift_matches_python_recompute(spark):
     """Entropy/KL/L1 re-derived in pure Python from the (r11-recomputed)
     w0/w2 weights with the same integer-grid pins — the NEW logic here
     is everything after the weights."""
-    from velox_hadoop_spark.operators.llmops9 import (
-        _docs,
-        doremi_weight_frames,
-    )
+    from velox_hadoop_spark.catalog import read_table
+    from velox_hadoop_spark.operators.llmops9 import doremi_weight_frames
 
-    base, wh = doremi_weight_frames(_docs(spark, SF))
+    base, wh = doremi_weight_frames(read_table(spark, SF, "documents"))
     w0s = {r.source: r.w0 for r in base.select("source", "w0").collect()}
     w2s = {r.source: r.w2 for r in wh[-1].collect()}
     w = {s: (w0s[s], w2s[s]) for s in w0s}

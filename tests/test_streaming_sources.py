@@ -17,7 +17,7 @@ from velox_hadoop_spark.streaming.events import (
     stream_tumbling_counts,
     tumbling_agg,
 )
-from tests.conftest import SF_DIR, assert_parity
+from tests.conftest import SF_DIR, assert_parity, rows_to_multiset
 
 PARITY_QUERIES = [
     "events_tumbling_1h",
@@ -552,3 +552,63 @@ def test_stream_source_dir_tracks_corpus_rewrites(spark, tmp_path):
         assert got == want and want
     after = {f for f in os.listdir(tmp) if f.startswith("vhs_stream_src_")}
     assert after == before
+
+
+# Queries that read ``events``: each must see the same timestamps on a
+# TIMESTAMP(NANOS) copy of the corpus as on the µs original, whether or
+# not an earlier read left ``nanosAsLong`` set for the session.
+NANOS_EVENTS_QUERIES = [
+    "asof_join_grouped_backward",
+    "asof_join_tolerance",
+    "grouped_locf_daily_fill",
+    "time_to_convert_percentiles",
+    "peak_hourly_rate_per_user",
+    "event_path_3grams",
+    "attribution_position_based",
+    "conversion_paths_top",
+    "parse_url_events",
+]
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture(scope="module")
+def nanos_sf_dir(tmp_path_factory):
+    """Copy of the test corpus whose ``events.ts`` is a true parquet
+    TIMESTAMP(NANOS) column holding the same instants."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from velox_hadoop_spark.catalog import TABLES, ts_stored_as_nanos
+
+    d = tmp_path_factory.mktemp("sf_nanos")
+    for t in TABLES:
+        if t != "events":
+            shutil.copy(f"{SF_DIR}/{t}.parquet", d / f"{t}.parquet")
+    ev = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = ev.schema.get_field_index("ts")
+    ev = ev.set_column(i, "ts", ev["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(ev, d / "events.parquet", version="2.6")
+    assert ts_stored_as_nanos(str(d / "events.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("flag_set", [False, True], ids=["fresh", "flag_set"])
+@pytest.mark.parametrize("name", NANOS_EVENTS_QUERIES)
+def test_events_queries_on_nanos_source(spark, nanos_sf_dir, name, flag_set):
+    from velox_hadoop_spark.plans import registry
+
+    fn = registry.queries()[name]
+    spark.conf.unset(_NANOS_CONF)
+    want = fn(spark, SF_DIR)
+    want = rows_to_multiset(want.columns, want.collect())
+    if flag_set:
+        read_table(spark, nanos_sf_dir, "events")
+        assert spark.conf.get(_NANOS_CONF) == "true"
+    try:
+        got = fn(spark, nanos_sf_dir)
+        got = rows_to_multiset(got.columns, got.collect())
+    finally:
+        spark.conf.unset(_NANOS_CONF)
+    assert got == want and want[0]

@@ -19,8 +19,8 @@ Design stance (SURVEY.md §7):
 """
 
 from velox_hadoop_spark.session import get_spark, stop_spark
-from velox_hadoop_spark.catalog import Catalog, load_tables
+from velox_hadoop_spark.catalog import read_table, register_views
 
-__all__ = ["get_spark", "stop_spark", "Catalog", "load_tables"]
+__all__ = ["get_spark", "stop_spark", "read_table", "register_views"]
 
 __version__ = "0.1.0"

@@ -5,6 +5,12 @@ lines per mapper (reference: src/main/java/org/dicl/velox/benchmark/
 PreMapper.java:19-48 tags tables by `path.indexOf("action")`). Here a
 table is a named, schema-carrying DataFrame over self-describing
 parquet; provenance needs no path sniffing.
+
+:func:`read_table` is the only code in the package that turns
+``(sf_dir, table)`` into a DataFrame, so every query sees the same
+storage normalization (the ``events.ts`` TIMESTAMP(NANOS) read shape)
+no matter which queries ran earlier in the session.
+``tests/test_plans.py`` fails on any other ``sf_dir`` parquet read.
 """
 
 from __future__ import annotations
@@ -30,8 +36,6 @@ TABLES = (
 # bounded) to broadcast in joins. At 100 TB the fact tables (lineitem,
 # orders, events, documents) are the only ones that should ever shuffle.
 BROADCASTABLE = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def ts_stored_as_nanos(path: str, column: str = "ts") -> bool:
@@ -117,25 +121,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every catalog table from ``sf_dir`` as a DataFrame."""
-    return {name: read_table(spark, sf_dir, name) for name in TABLES}
-
-
-class Catalog:
-    """Named-table access with temp-view registration for spark.sql."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-        self._tables = load_tables(spark, sf_dir)
-
-    def table(self, name: str) -> DataFrame:
-        return self._tables[name]
-
-    def __getitem__(self, name: str) -> DataFrame:
-        return self._tables[name]
-
-    def register_views(self) -> None:
-        for name, df in self._tables.items():
-            df.createOrReplaceTempView(name)
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register every catalog table as a temp view for ``spark.sql``."""
+    for name in TABLES:
+        read_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -68,7 +69,7 @@ def collect_sorted_csv(df: DataFrame, key: str, value: str, out: str = "items") 
 )
 def q_collect_orderkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_list as deterministic csv per key (adjacency-list idiom)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_custkey")
         .agg(
@@ -112,7 +113,7 @@ def q_collect_orderkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary — the flagship wide aggregate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     qty = F.sum(F.col("l_quantity").cast("long").cast("decimal(38,0)"))
     base_c = F.sum(
@@ -172,9 +173,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: top-10 unshipped orders by revenue."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     cutoff = F.lit("1995-03-15 00:00:00").cast("timestamp")
     return (
         li.where(F.col("l_shipdate") > cutoff)
@@ -223,12 +224,12 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-style local-supplier volume per nation."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    supplier = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     joined = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
@@ -270,7 +271,7 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: tight-filter single-row aggregate (pushdown showcase)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -332,7 +333,7 @@ def q_stats_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact 128-bit integers (always ≥ 0, so no negative-residue guard)
     and ONE pinned double sequence in both engines. min/max are exact
     selections, not sums — they stay as-is."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     g = customer.withColumn("x", cents).groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
@@ -379,7 +380,7 @@ def q_stats_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup (subtotals + grand total) — beyond-reference."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"),
         F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -403,7 +404,7 @@ def q_rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_damped_rank_formula(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped float sum + post-aggregate damping expression (A5)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(F.col("l_suppkey").alias("node"))
         .agg((F.sum("l_quantity") / 10.0).alias("s"))
@@ -435,7 +436,7 @@ def q_histogram_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats — and one partial+final count agg. The same shape backs
     approximate quantile sketches and data-profiling passes.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
     )
@@ -481,7 +482,7 @@ def q_corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments; only moments merge at the shuffle)."""
     from velox_hadoop_spark.operators.stats2 import safe_corr
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     # safe_corr, not F.corr: Spark 4's ANSI corr THROWS DIVIDE_BY_ZERO
     # on a zero-variance group where DuckDB returns NULL (degenerate
     # sweep); the moment form's 1e-12 noise is absorbed by the 6 dp round
@@ -517,7 +518,7 @@ def q_ols_price_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the moment arithmetic well-conditioned; raw epoch-seconds x would
     lose the slope to catastrophic cancellation in doubles).
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     x = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date"))
     y = F.col("o_totalprice")
     return orders.groupBy("o_orderpriority").agg(
@@ -568,7 +569,7 @@ def q_conditional_agg_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax_order_extremes pattern — DuckDB's max_by takes no struct
     key).
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     key = F.struct(F.col("o_totalprice"), F.col("o_orderkey"))
     return orders.groupBy("o_orderstatus").agg(
         F.count_if(F.col("o_totalprice") > 200000).alias("n_big"),
@@ -615,7 +616,7 @@ def q_argmax_order_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     forwards one candidate per group), so shuffle volume is group
     cardinality, not row count.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_custkey").agg(
         F.expr("max_by(o_orderkey, struct(o_totalprice, o_orderkey))").alias("best_order"),
         F.expr("min_by(o_orderkey, struct(o_totalprice, o_orderkey))").alias("worst_order"),
@@ -655,7 +656,7 @@ def q_topk_parts_per_supplier_agg(spark: SparkSession, sf_dir: str) -> DataFrame
     a pre-aggregation guard (per-partition top-k before the final
     slice). Unlike the row_number window, nothing global sorts.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     sp = (
         li.groupBy(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .agg(F.sum("l_quantity").cast("double").alias("qty"))
@@ -714,7 +715,7 @@ def q_weighted_median_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     value, so the window input is value-cardinality-bounded) and a
     cumulative-sum window.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     # weights in EXACT integer cents and the half-total membership as
     # cw * 2 >= tw: the median pick is a discrete jump, so a cumulative
     # double sum within ulps of tw/2 would shift the answer to the next
@@ -773,7 +774,7 @@ def q_longest_order_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     every maximal streak with a single shuffle on the customer key.
     """
     days = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .select(
             F.col("o_custkey").alias("ck"),
             F.col("o_orderdate").cast("date").alias("d"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.vectors import to_double
 from velox_hadoop_spark.plans.registry import register
 
@@ -156,5 +157,5 @@ def _duck_kmeans_oracle(k: int, iters: int) -> str:
 def q_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two Lloyd's iterations of k=4 k-means over the embeddings table;
     final assignment with L2² distance."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return kmeans(emb)

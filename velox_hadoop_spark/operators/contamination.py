@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
 from velox_hadoop_spark.operators.dedup import shingle_set
 from velox_hadoop_spark.functions.pairs import id_pairs
@@ -77,7 +78,7 @@ def contamination_scan(
 def q_benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flag training docs sharing any 8-gram with the eval set (source
     src0 stands in for the benchmark corpus)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return contamination_scan(
         docs.where(F.col("source") != BENCH_SOURCE),
         docs.where(F.col("source") == BENCH_SOURCE),
@@ -151,7 +152,7 @@ def tfidf_top_terms(
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms for every document."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return tfidf_top_terms(docs)
 
 
@@ -251,7 +252,7 @@ def pack_sequences(
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack each source's documents into 256-token training sequences."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return pack_sequences(docs)
 
 
@@ -285,7 +286,7 @@ def q_cross_lang_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by shared-shingle count, and per-language set sizes are
     broadcast back onto the tiny pair frame.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # ONE groupBy replaces [distinct + self-join by shingle]: each
     # shingle's distinct language set is collected in-row (collect_set
     # dedups inside the aggregate — no upstream distinct() exchange),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.contamination import BENCH_SOURCE
 from velox_hadoop_spark.plans.registry import register
 
@@ -123,7 +124,7 @@ def q_decontam_13gram_hit_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores, not just the boolean. One broadcast membership probe over
     a single positioned-shingle pass; the grouped span aggregate runs
     only on hit rows (a tiny fraction of the corpus by construction)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return contamination_hits(docs).groupBy("doc_id").agg(
         F.count("*").alias("n_hits"),
         F.countDistinct("g").cast("long").alias("n_distinct_grams"),
@@ -178,7 +179,7 @@ def q_decontam_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     length); only hit rows ever reach the window. A plain-Python
     interval-merge recompute pins the island logic independently of
     the mirrored oracle."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     hits = contamination_hits(docs).select("doc_id", "n_tokens", "pos").distinct()
     w = Window.partitionBy("doc_id").orderBy("pos")
     ordered = hits.select(
@@ -244,7 +245,7 @@ def q_decontam_removal_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LEFT join from the corpus). The contaminated-id set is small by
     construction, so Catalyst's adaptive planner broadcasts it into
     the corpus-side join unhinted."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     contaminated = contamination_hits(docs).select("doc_id").distinct()
     train = docs.where(F.col("source") != BENCH_SOURCE)
     return (

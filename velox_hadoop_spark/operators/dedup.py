@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
 from velox_hadoop_spark.functions.lineage import release
 from velox_hadoop_spark.functions.pairs import id_pairs, upper_triangle_pairs
@@ -46,7 +47,7 @@ def _docs_par(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signature/shingle pipelines are per-row compute heavy; make sure
     # an under-partitioned scan doesn't serialize them (no-op at scale).
     return parallelize_if_narrow_input(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
     )
 
 SHINGLE_K = 5          # words per shingle
@@ -496,7 +497,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     tags=("dedup", "extension"),
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return exact_dedup_groups(docs, "doc_id", "text")
 
 
@@ -600,7 +601,7 @@ def q_contained_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     container, and a same-length sub-block pair (an exact dup) shares
     its block, so the main branch already owns it.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     blk = docs.select(
         "doc_id", "text", F.substring("text", 1, _CONTAIN_BLOCK_CHARS).alias("blk")
     )
@@ -969,7 +970,7 @@ def _duck_simhash_sql() -> str:
 )
 def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document 64-bit (60 used) SimHash signature."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # (plain read: simhash redistributes at the token-distinct shuffle, so
     # the heavy post-shuffle hashing is already parallel)
     return simhash64(docs, "doc_id", "text")
@@ -1082,7 +1083,7 @@ def cosine_near_dup_pairs(
 )
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate document pairs (cos ≥ 0.45)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return cosine_near_dup_pairs(emb, threshold=0.45)
 
 
@@ -1178,7 +1179,7 @@ def simhash_near_dup_pairs(
 )
 def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-pigeonhole SimHash near-dup pairs (hamming ≤ 3)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return simhash_near_dup_pairs(simhash64(docs, "doc_id", "text"), "doc_id")
 
 
@@ -1260,7 +1261,7 @@ def fuzzy_pairs_blocked(
 def q_fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-identical part names (edit distance ≤ 2) via blocked
     levenshtein — record-linkage / fuzzy-dedup surface."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     return fuzzy_pairs_blocked(part, "p_partkey", "p_name", max_edit=2)
 
 
@@ -1450,19 +1451,21 @@ _MH_EQ = " + ".join(
 )
 
 
-def minhash_estimate(cand: DataFrame, sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_estimate(cand: DataFrame, sig: DataFrame) -> DataFrame:
     """Signature-agreement estimate for a candidate frame: the fraction
-    of equal MinHash components per (id_a, id_b) pair. The ONE home of
+    of equal MinHash components per (id_a, id_b) pair. Contract: ``cand``
+    carries the pair as ``id_a``/``id_b`` and ``sig`` is keyed by
+    ``doc_id`` with one ``mh{s}`` column per seed. The ONE home of
     the estimator expression, shared by ``q_minhash_jaccard_estimate``
     and the calibration audit (``minhash_estimate_error_audit``) so the
     estimator a gate thresholds on and the estimator the audit scores
     can never drift — and so the audit can feed BOTH sides from one
     materialized signature/candidate chain instead of re-deriving it."""
     sa = sig.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"mh{s}").alias(f"a{s}") for s in range(MINHASH_SEEDS)]
+        F.col("doc_id").alias("id_a"), *[F.col(f"mh{s}").alias(f"a{s}") for s in range(MINHASH_SEEDS)]
     )
     sb = sig.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"mh{s}").alias(f"b{s}") for s in range(MINHASH_SEEDS)]
+        F.col("doc_id").alias("id_b"), *[F.col(f"mh{s}").alias(f"b{s}") for s in range(MINHASH_SEEDS)]
     )
     n_eq = sum(
         F.when(F.col(f"a{s}") == F.col(f"b{s}"), 1).otherwise(0)
@@ -1809,7 +1812,7 @@ def q_normalization_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ever sees plain spaces — no regex-engine divergence).
     Shape: map-only projection + one hash-agg; at 100 TB the digest
     (16 bytes) is what shuffles, never the text."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     h = F.md5(
         F.trim(
             F.regexp_replace(
@@ -1898,7 +1901,7 @@ def q_entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched records need no resolution."""
     from pyspark.sql import Window
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     pairs = fuzzy_pairs_blocked(part, "p_partkey", "p_name", max_edit=2)
     cc = connected_components(pairs)
     members = part.join(cc, part.p_partkey == cc.node, "inner").select(

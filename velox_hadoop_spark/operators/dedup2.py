@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
 from velox_hadoop_spark.operators.dedup import (
     MAX_KEY_DOC_FREQ,
@@ -43,10 +44,6 @@ EPOCH_SEEDS = ("ep0", "ep1", "ep2")
 QUOTA_PER_SOURCE = 10
 CLUSTER_AUDIT_CAP = 16  # members audited per cluster (smallest doc_ids)
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _decay_case_duck(age: str) -> str:
     arms = " ".join(
         f"WHEN {age} = {i} THEN {m}" for i, m in enumerate(DECAY_MILLE)
@@ -69,7 +66,7 @@ def _decay_col(age: F.Column) -> F.Column:
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) over ALL documents: the dedup_clusters
     LSH→CC assignment, singletons labeled by themselves."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signature_inline(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id")
     labels = connected_components(pairs)
@@ -180,7 +177,7 @@ def q_cross_snapshot_dedup_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap = F.expr(H.spark_bucket("doc_id", SNAP_SEED, N_SNAPSHOTS))
     weighted = (
         _cluster_labels(spark, sf_dir)
-        .join(_docs(spark, sf_dir).select("doc_id", "n_chars"), "doc_id")
+        .join(read_table(spark, sf_dir, "documents").select("doc_id", "n_chars"), "doc_id")
         .select("doc_id", "n_chars", "cluster_id", snap.alias("snapshot"))
         .withColumn("weight", F.col("n_chars") * _decay_col(F.col("snapshot")))
     )
@@ -252,7 +249,7 @@ def q_dedup_survivorship_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     single aggregate — no window, no self-join, no per-group row
     fetch."""
     norm = _cluster_labels(spark, sf_dir).join(
-        _docs(spark, sf_dir).select("doc_id", "n_chars", "source", "lang"),
+        read_table(spark, sf_dir, "documents").select("doc_id", "n_chars", "source", "lang"),
         "doc_id",
     )
     return (
@@ -354,7 +351,7 @@ def q_intra_cluster_jaccard_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     from velox_hadoop_spark.functions.pairs import id_pairs
     from velox_hadoop_spark.operators.dedup import drop_hot_keys
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signature_inline(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id")
     labels = connected_components(pairs).select(
@@ -468,7 +465,7 @@ def q_epoch_sample_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.expr(H.spark_bucket("doc_id", s)) < EPOCH_PCT).cast("int")
         for s in EPOCH_SEEDS
     ]
-    tagged = _docs(spark, sf_dir).select(
+    tagged = read_table(spark, sf_dir, "documents").select(
         e[0].alias("e0"), e[1].alias("e1"), e[2].alias("e2")
     )
     return tagged.agg(
@@ -521,7 +518,7 @@ def q_epoch_quota_exact_per_source(spark: SparkSession, sf_dir: str) -> DataFram
     the source key with a rank window per (epoch, source) — the
     standard bounded-cap balancing pass; epochs are a unioned literal
     dimension, not separate jobs."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     per_epoch = []
     for i, seed in enumerate(EPOCH_SEEDS[:2]):
         h = F.expr(H.spark_md5_int60(H.seeded("doc_id", seed)))
@@ -582,7 +579,7 @@ def q_tablesample_parity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (10% ⊆ 20% ⊆ 50%) — pinned by a conservation test — which gives
     consistent drill-down across sample sizes. One scan, one 1-row
     aggregate unpivoted to the 3-row report; no shuffle of the corpus."""
-    b = _docs(spark, sf_dir).select(
+    b = read_table(spark, sf_dir, "documents").select(
         "n_chars", F.expr(H.spark_bucket("doc_id", "split42")).alias("bkt")
     )
     agg = b.agg(
@@ -647,7 +644,7 @@ def q_dedup_cluster_source_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution / keeper decisions (and cross-source rates feed the
     mirror-site detection a crawl pipeline runs). One aggregate over
     the shared LSH→CC labels joined to the provenance columns."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signature_inline(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id")
     labels = connected_components(pairs).select(
@@ -691,7 +688,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold)."""
     from velox_hadoop_spark.operators.dedup import verify_candidate_jaccard
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signature_inline(docs, "doc_id", "text")
     cand = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id")
     verified = verify_candidate_jaccard(

@@ -19,11 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _fix6(c: Column) -> Column:
@@ -59,7 +56,7 @@ def q_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math-function breadth: roots, exp/logs, power, trig, sign,
     floor/ceil and negative-digit rounding, on a pushed-down 1/97
     key-sampled lineitem slice."""
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 97 == 0)
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 97 == 0)
     price, disc = F.col("l_extendedprice"), F.col("l_discount")
     return li.select(
         "l_orderkey",
@@ -106,7 +103,7 @@ def q_conditional_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ANSI equivalent). Divisors are 1, 2, or NULL, so every
     surviving quotient is an exact binary scaling — no rounding
     needed."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     status = F.col("o_orderstatus")
     return orders.select(
         "o_orderkey",
@@ -148,8 +145,6 @@ def q_timestamp_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and date reconstruction from extracted fields. The UTC session
     pin (driver contract) makes epoch and formatting identical to
     DuckDB's naive timestamps."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events").where(F.col("event_id") % 53 == 0)
     ts = F.col("ts")
     return ev.select(
@@ -181,7 +176,7 @@ def q_hash_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's dedup/checksum operators ride on — cross-engine equality
     here is what makes those oracles trustworthy), plus a keyed digest
     over a delimited concat and a truncated bucket prefix."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 7 == 0)
+    docs = read_table(spark, sf_dir, "documents").where(F.col("doc_id") % 7 == 0)
     return docs.select(
         "doc_id",
         F.md5("text").alias("text_md5"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.lineage import free_local_checkpoint, release
 from velox_hadoop_spark.functions.pairs import id_pairs
 from velox_hadoop_spark.functions.staged import staged_topk_per_group
@@ -262,7 +263,7 @@ def _pagerank_oracle(iters: int, damping: float = DAMPING) -> str:
 def _lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Raw (duplicated) edges; consumers dedup where it matters —
     # adjacency() via collect_set, pagerank() via its internal distinct.
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.select(
         F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst")
     )
@@ -678,7 +679,7 @@ def q_supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     clique as scale grows, where exact enumeration is Θ(V³); the
     deterministic truncation bounds the join at O(V·D²) at ANY scale
     while remaining exactly reproducible by the oracle)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     e = co_supply_capped_edges(
         li.select(F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("s"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -760,7 +761,7 @@ def q_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from velox_hadoop_spark.operators.dedup import drop_hot_keys
     from velox_hadoop_spark.operators.sort import top_k
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     # repartition by part ONCE (same single-exchange layout argument
     # as co_supply_capped_edges): the distinct, the guard pre-pass,
     # and the wedge collect all consume HashPartitioning(part); only
@@ -932,7 +933,7 @@ def q_bom_rollup_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE — integer keys and cents, so the fixpoint must match
     exactly. Forest height ≤ digits(max partkey): the pass count grows
     with log10 of the key range, not with SF."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     child = part.select(
         F.col("p_partkey").alias("child"),
         F.expr("p_partkey div 10").alias("pk"),
@@ -1137,7 +1138,7 @@ def q_connected_components_lss(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-part groups as ``connected_components_edges`` derives from
     its star edges, but the recursive-CTE oracle walks the chain — so
     the oracle checks the ALGORITHM on depth, not just the grouping."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     prev = F.lag("p_partkey").over(
         Window.partitionBy("p_brand", "p_size").orderBy("p_partkey")
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.graph import (
     TRIANGLE_ADJ_CAP,
     co_supply_capped_edges,
@@ -81,7 +82,7 @@ def q_degree_assortativity_suppliers(spark: SparkSession, sf_dir: str) -> DataFr
     single displayed double. The edge frame feeds two consumers
     (degrees, endpoint join) and is persisted — the r8 re-execution
     anti-pattern check."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     e = co_supply_capped_edges(
         li.select(F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("s"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -182,7 +183,7 @@ def q_clustering_coefficient_suppliers(spark: SparkSession, sf_dir: str) -> Data
 
     Scale: identical bounds to the triangle census — O(V·D²) wedges
     with D capped at {TRIANGLE_ADJ_CAP}, never Θ(V³)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     e = co_supply_capped_edges(
         li.select(F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("s"))
     ).persist(StorageLevel.MEMORY_AND_DISK)

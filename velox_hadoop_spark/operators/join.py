@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -130,8 +131,8 @@ def range_join(
 )
 def q_join_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's 1:N repartition join as a single df.join."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     return equi_join(
         orders, customer, on=orders.o_custkey == customer.c_custkey
     ).select("o_orderkey", "o_totalprice", "c_custkey", "c_name", "c_mktsegment")
@@ -150,9 +151,9 @@ def q_join_orders_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_broadcast_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dimension chain via broadcast joins — fact side never shuffles."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     joined = broadcast_lookup(
         broadcast_lookup(
             customer, nation, on=customer.c_nationkey == nation.n_nationkey
@@ -181,8 +182,8 @@ def q_broadcast_region_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "semi"),
 )
 def q_semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     return semi_join(
         customer, orders, on=customer.c_custkey == orders.o_custkey
     ).select("c_custkey", "c_name")
@@ -202,8 +203,8 @@ def q_semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_anti_join_no_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers who never placed an urgent order (left anti join)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     urgent = orders.where(F.col("o_orderpriority") == "1-URGENT")
     return anti_join(
         customer, urgent, on=customer.c_custkey == urgent.o_custkey
@@ -241,8 +242,6 @@ def q_anti_join_no_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For each purchase, the value of the user's most recent click at or
     before the purchase timestamp (clicks deduped per (user, ts) by max)."""
-    from velox_hadoop_spark.catalog import read_table
-
     events = read_table(spark, sf_dir, "events")
     purchases = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
@@ -277,8 +276,8 @@ def q_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_range_join_ship_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi+interval join: lineitems shipped within 30 days of order date."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     joined = range_join(
         orders,
         li,

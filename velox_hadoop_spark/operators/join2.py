@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -53,9 +54,7 @@ def override_join(
 )
 def q_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of two keyed aggregates (nulls on both sides)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    from velox_hadoop_spark.catalog import read_table
-
+    orders = read_table(spark, sf_dir, "orders")
     events = read_table(spark, sf_dir, "events")
     o = orders.groupBy((F.col("o_custkey") % 50).alias("key")).agg(
         F.count("*").alias("n_orders")
@@ -92,8 +91,8 @@ def q_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_override_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'override' mode: supplier-side balance wins where both exist."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    supplier = read_table(spark, sf_dir, "supplier")
     # sums of 2-dp data round exactly; round(avg) can straddle an engine-
     # dependent half-boundary
     l = customer.groupBy(F.col("c_nationkey").alias("key")).agg(
@@ -129,7 +128,7 @@ def q_override_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_min_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2-style correlated-min pattern: rows attaining the group min."""
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    supplier = read_table(spark, sf_dir, "supplier")
     # alias the derived side: same-lineage self-joins are ambiguous otherwise
     mins = supplier.groupBy(F.col("s_nationkey").alias("nk")).agg(
         F.min("s_acctbal").alias("min_bal")
@@ -158,7 +157,7 @@ def q_min_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE: all grouping-set combinations in one pass."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.cube("o_orderpriority", "o_orderstatus").agg(
         F.count("*").alias("n"),
         F.round(
@@ -186,7 +185,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_orders_by_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-part extraction breadth (dayofweek/year) + grouped agg."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy(
         F.dayofweek("o_orderdate").alias("dow"),
         F.year("o_orderdate").alias("yr"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 COMPACT_TARGET_ROWS = 100_000  # rows per output file / bin
@@ -82,5 +83,5 @@ def q_compaction_bin_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame
     cumulative window rides the MONTH domain (calendar-bounded — ~84
     rows at ANY SF), so the unpartitioned window is a constant-size
     final step, the same accepted class as the daily-spine kernels."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return compaction_plan(li)

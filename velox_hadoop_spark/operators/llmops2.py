@@ -17,12 +17,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.contamination import PACK_BUDGET
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _fix4(c: Column) -> Column:
@@ -67,7 +64,7 @@ def q_cross_shard_dedup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame
     and reports which families cross shard boundaries. One hash
     shuffle on the fingerprint; shard provenance rides along as a
     cheap distinct-count."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tagged = docs.select(
         "doc_id",
         (F.col("doc_id") % _N_SHARDS).alias("shard"),
@@ -133,7 +130,7 @@ def q_pack_overflow_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     to end; utilization is one integer-ratio division fixed to 4dp."""
     from velox_hadoop_spark.operators.contamination import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     seqs = pack_sequences(docs)  # source, seq_id, n_docs, n_tokens, ...
     return seqs.groupBy("source").agg(
         F.count("*").alias("n_seqs"),
@@ -197,7 +194,7 @@ def q_embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (label, pos), so no component list ever concentrates; the final
     per-label reduce is |labels| x dims rows. Drift is display-only
     (fixed to 4dp) — monitoring output, not a membership predicate."""
-    emb = _t(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
+    emb = read_table(spark, sf_dir, "embeddings").where(F.col("embedding").isNotNull())
     e = emb.select(
         "label", (F.col("vec_id") % 2).alias("snap"), "embedding"
     )
@@ -245,7 +242,7 @@ def q_regexp_extract_all_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample — the multi-match sibling of grep's single-capture
     extract. Pure per-row expressions (pattern uses only literal
     classes + \\b, identical in Java and RE2 dialects); no shuffle."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     hits = F.expr(r"regexp_extract_all(text, '\\b[a-z]*a[a-z]*\\b', 0)")
     m = docs.select("doc_id", hits.alias("hits"))
     return m.select(
@@ -282,7 +279,7 @@ def q_shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ratio > 1 = hot shard). The denominator is a broadcast 1-row
     scalar — the pattern every rebalance decision at 100 TB starts
     from. All integer sums; one fixed-4dp ratio."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     per_shard = docs.groupBy((F.col("doc_id") % 16).alias("shard")).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("sum_chars"),
@@ -334,7 +331,7 @@ def q_quality_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate unpivots to the 5-row funnel; retention uses
     try_divide (a stage count of 0 must yield NULL like the oracle,
     not an ANSI divide-by-zero abort)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     c1 = F.col("n_chars") >= 60
     c2 = c1 & F.col("lang").isin("en", "es", "de", "fr")
     c3 = c2 & (F.size(F.split(F.col("text"), r"\s+")) >= 12)

@@ -19,11 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -67,7 +64,7 @@ def q_connected_components_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified, not assumed, by the recursive-CTE oracle."""
     from velox_hadoop_spark.operators.dedup import connected_components
 
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     grp = part.select(
         "p_partkey",
         F.min("p_partkey")
@@ -288,7 +285,7 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_pairs_exact,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     # md5-order prefix of the shared gate sample (see _CURVE_SAMPLE_N)
     sample = recall_query_sample(emb).limit(_CURVE_SAMPLE_N)
     book = ivf_codebook(emb, IVF_CENTROIDS)
@@ -543,7 +540,7 @@ def q_dedup_keep_policy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one a curation owner compares. One digest shuffle; keeper
     selection is max_by/min_by inside the same aggregate (no window,
     no self-join)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     norm = docs.select(
         "doc_id",
         "n_chars",
@@ -605,7 +602,7 @@ def q_doc_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from velox_hadoop_spark.operators.sort import global_rank, ntile_from_rank
     from velox_hadoop_spark.operators.textstats import quality_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     q = quality_score(docs).select("doc_id", "quality")
     ranked = global_rank(q, ["quality", "doc_id"])
     n = docs.agg(F.count("*").alias("n_total"))
@@ -633,7 +630,7 @@ def q_lang_id_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     that turns 'accuracy 0.9' into WHICH languages leak into which."""
     from velox_hadoop_spark.operators.textstats import lang_id
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pred = lang_id(docs).select("doc_id", "pred_lang")
     return (
         pred.join(docs.select("doc_id", "lang"), "doc_id")
@@ -658,7 +655,7 @@ def q_auc_quality_en_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     divides once in double, rounded for display."""
     from velox_hadoop_spark.operators.textstats import quality_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     scored = quality_score(docs).select("doc_id", "quality").join(
         docs.select("doc_id", (F.col("lang") == "en").alias("is_pos")), "doc_id"
     )
@@ -734,8 +731,6 @@ def q_event_entropy_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(n) − Σc·ln(c)/n identity — two keyed aggregates, no per-row
     probability division (c·ln c sums over ≤|event types| terms per
     user, so double rounding at 6 dp is stable)."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     c = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
     u = c.groupBy("user_id").agg(
@@ -795,8 +790,8 @@ def q_gini_spend_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 around ~3.5e5 customers per nation (≈ sf60); the decimal
     accumulator is exact to any realistic SF, and the one double
     division happens on exact integers."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
     spend = (
         orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey", "o_custkey")
@@ -848,7 +843,7 @@ def q_benford_first_digit_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     string — integer-to-string is identical across engines, where a
     double-to-string cast is not (scientific notation, trailing
     digits). The data-quality smoke test for fabricated numerics."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     d = orders.where(F.col("o_totalprice") > 0).select(
         F.substring(
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"), 1, 1
@@ -903,7 +898,7 @@ def q_hapax_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in exactly one source, so max(source) IS its source — no
     join back through the token table). High hapax rate flags noisy /
     OCR-damaged sources; the standard text-corpus health metric."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
         F.explode(
@@ -969,7 +964,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses, so this audits the real split, not a simulation."""
     from velox_hadoop_spark.operators.sampling import assign_split
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     tagged = assign_split(docs, "doc_id", 80).select(
         "split",
         F.md5(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))).alias(
@@ -1030,7 +1025,7 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     convert the same exact integer to double once. Σfp stays int64
     (bounded by 10⁶·n — safe beyond 10¹² rows). One posexplode + one
     keyed aggregate, nothing collected."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     x = emb.where(F.col("embedding").isNotNull()).select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias("dim_i", "x")
     ).select(
@@ -1101,7 +1096,7 @@ def q_ks_statistic_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents ÷ 10⁶ buckets), an exclusive prefix over the bounded bucket
     list, then a bucket-keyed window — never a single-partition window
     over the full grid. The oracle states the plain global window."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     v = (
         orders.where(F.col("o_orderstatus").isin("O", "F"))
         .groupBy(F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.contamination import PACK_BUDGET
 from velox_hadoop_spark.operators.llmops2 import _DUCK_FIX4, _fix4
 from velox_hadoop_spark.plans.registry import attach_oracle, register
@@ -29,10 +30,6 @@ MIN_CHARS = 200  # quality gate, same constant as pipeline.py
 # (256) is — a production run would use (512, 1024, ..., 8192); the
 # report logic is threshold-agnostic.
 CTX_BUCKETS = (16, 32, 64, 128, 256)
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +55,7 @@ def q_decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from velox_hadoop_spark.operators.sort import global_rank, ntile_from_rank
     from velox_hadoop_spark.operators.textstats import quality_score
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     q = quality_score(docs).select("doc_id", "quality").join(
         docs.select("doc_id", (F.col("lang") == "en").alias("is_pos")), "doc_id"
     )
@@ -127,7 +124,7 @@ def q_token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter/split — same expressions as textstats.token_stats)."""
     from velox_hadoop_spark.operators.textstats import BPE_ISH
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.expr("filter(split(text, '\\\\s+'), t -> t <> '')")
     per = docs.select(
         "lang",
@@ -160,7 +157,7 @@ def q_context_window_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bucket is a value-domain CASE (no rank, no sort); the
     cumulative window runs over the ≤6-row bucket frame. The overflow
     row is the fraction the packer must chunk first."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     n_tok = F.size(F.expr("filter(split(text, '\\\\s+'), t -> t <> '')")).cast("long")
     bucket = F.lit(len(CTX_BUCKETS) + 1).cast("long")
     label = F.lit(f">{CTX_BUCKETS[-1]}")
@@ -208,7 +205,7 @@ def q_curation_pack_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Utilization is fix4 of (integer token sum / integer capacity)."""
     from velox_hadoop_spark.operators.contamination import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     quality = docs.where(F.col("n_chars") >= MIN_CHARS)
     keepers = quality.groupBy(F.md5("text").alias("h")).agg(
         F.min("doc_id").alias("doc_id")
@@ -257,7 +254,7 @@ def q_source_lang_mix_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ln n − Σ c·ln c / n over the per-(source,lang) counts): the inner
     aggregate is exact integers, the entropy is one rounded double
     expression. Two hash aggregates on bounded domains."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     c = docs.groupBy("source", "lang").agg(F.count("*").alias("c"))
     s = c.groupBy("source").agg(
         F.sum("c").alias("n_docs"),
@@ -317,7 +314,7 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index shape, vocabulary-bounded not corpus-bounded); the
     bucket is integer arithmetic on the id range (no rank/sort), and
     the cumulative window runs over the 10-row bucket frame."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.explode(

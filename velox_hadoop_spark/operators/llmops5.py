@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.textstats import LANG_MARKERS
 from velox_hadoop_spark.plans.registry import register
 
@@ -32,10 +33,6 @@ R_MIN_MWL, R_MAX_MWL = 3.0, 10.0
 R_MIN_DISTINCT_RATIO = 0.4
 R_MAX_TOP_WORD_FRAC = 0.2
 R_MIN_STOP_HITS = 2
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 @register(
@@ -93,7 +90,7 @@ def q_gopher_rule_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs one (doc, word) grouped count — keyed by doc_id, so the
     shuffle partitions by document and the max folds per doc (no
     global word table)."""
-    w = _docs(spark, sf_dir).select(
+    w = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.split("text", r"\s+").alias("w")
     ).where(F.size("w") > 0)
     topw = (
@@ -177,7 +174,7 @@ def q_cohens_kappa_lang_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 1-row aggregate of the four contingency cells; the degenerate
     case pe = 1 (both raters constant) emits nothing in both engines
     rather than dividing by zero."""
-    m = _docs(spark, sf_dir).select(
+    m = read_table(spark, sf_dir, "documents").select(
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("a"),
         F.when(
             F.expr(
@@ -255,7 +252,7 @@ def q_bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities by one equi-join on the bigram key. avg(log2) is
     display-rounded; both engines consume identical smoothed ratios
     of exact integers."""
-    w = _docs(spark, sf_dir).select(
+    w = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", r"\s+").alias("w")
     )
     bg = (
@@ -339,8 +336,8 @@ def q_embedding_doclen_correlation(spark: SparkSession, sf_dir: str) -> DataFram
     in decimal(38)/HUGEINT are exact at any corpus size — the final
     correlation is a fixed expression tree over identical integers.
     Zero-variance groups emit nothing (stats2.safe_corr convention)."""
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    emb = read_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"),
         F.floor(
             F.sqrt(
@@ -428,7 +425,7 @@ def q_ngram_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is vocabulary³-bounded. Conservation: Σ n_first_seen across
     buckets equals the distinct trigram count — pinned in
     tests/test_round8_parity.py."""
-    w = _docs(spark, sf_dir).select("doc_id", F.split("text", r"\s+").alias("w"))
+    w = read_table(spark, sf_dir, "documents").select("doc_id", F.split("text", r"\s+").alias("w"))
     sh = (
         w.where(F.size("w") >= 3)
         .select(

@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.hashing import (
     duck_md5_int60,
     seeded,
@@ -76,10 +77,6 @@ SEMDEDUP_TAU = 0.35
 # as TRIANGLE_ADJ_CAP / MAX_KEY_DOC_FREQ, mirrored in the oracle.
 # Production SemDeDup sizes K so cells stay ~CAP-sized anyway.
 SEMDEDUP_DOM_CAP = 64
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -204,7 +201,7 @@ def q_dsir_logratio_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the raw-pool LM, shared-vocabulary add-1 smoothing. Positive
     means target-like. Display-rounded; the resampler consumes the raw
     double."""
-    return dsir_logratio(_docs(spark, sf_dir)).select(
+    return dsir_logratio(read_table(spark, sf_dir, "documents")).select(
         "doc_id", "source", "n_bigrams", F.round("lr", 6).alias("avg_logratio")
     )
 
@@ -237,7 +234,7 @@ def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     importance weight. Selection ties are broken by doc_id; a parity
     test pins the selection-boundary key gap orders of magnitude above
     cross-engine libm/accumulation noise."""
-    scored = dsir_logratio(_docs(spark, sf_dir))
+    scored = dsir_logratio(read_table(spark, sf_dir, "documents"))
     u = (
         (F.expr(spark_md5_int60(seeded("doc_id", DSIR_SEED))) % DSIR_MOD + 1)
         / F.lit(float(DSIR_MOD + 1))
@@ -371,7 +368,7 @@ def q_semdedup_pruned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from its centroid (the paper's keeper). Each pruned row names its
     closest dominator. τ = 0.35 stands in for the production ~0.95
     (this corpus has no true embedding near-dups; see SEMDEDUP_TAU)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return semdedup_pruned(semdedup_members(emb), SEMDEDUP_TAU)
 
 
@@ -395,7 +392,7 @@ def q_semdedup_prune_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup per-cluster budget report: members, pruned, kept and
     the keep fraction — what the composite would feed a curation
     sign-off. The prune rule and τ match semdedup_pruned_docs."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     members = semdedup_members(emb)
     pruned = (
         semdedup_pruned(members, SEMDEDUP_TAU)

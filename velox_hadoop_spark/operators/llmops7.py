@@ -14,15 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.contamination2 import positioned_shingles
 from velox_hadoop_spark.operators.spanremoval import SPANREM_K
 from velox_hadoop_spark.plans.registry import register
 
 SAVINGS_THRESHOLDS = (2, 3, 5)  # min distinct docs for a gram to count
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -93,7 +90,7 @@ def q_repeated_span_savings_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     own cheap island merge over its df-filtered slice (the
     dedup_threshold_sweep discipline: never re-execute the expensive
     front end per threshold)."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sh = positioned_shingles(docs, SPANREM_K)
     gdf = (
         sh.groupBy("g")
@@ -198,7 +195,7 @@ def q_bigram_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     — an ordered fold is infeasible at this domain size and a
     free-order double sum is the r8 rounding-flip class. All counts
     are vocabulary-bounded aggregates."""
-    w = _docs(spark, sf_dir).select("doc_id", F.split("text", r"\s+").alias("w"))
+    w = read_table(spark, sf_dir, "documents").select("doc_id", F.split("text", r"\s+").alias("w"))
     bg = (
         w.where(F.size("w") >= 2)
         .select(

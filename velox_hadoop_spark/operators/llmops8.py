@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.hashing import duck_bucket, spark_bucket
 from velox_hadoop_spark.operators.dedup import (
     _docs_par,
@@ -43,14 +44,6 @@ PREFIX_WORDS = 16         # boilerplate prefix length (whitespace tokens)
 VOCAB_TOP = 16            # top-V vocabulary for the OOV rate
 COV_TOPK = 20             # covariance pairs reported
 COV_QSCALE = 1_000_000    # micro-unit quantization of embedding values
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -224,7 +217,7 @@ def q_prefix_boilerplate_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the prefix is a bounded-width key (16 tokens), so the
     groupBy state per key is constant and the aggregate is an ordinary
     partial+final hash aggregate — no text re-scan, no pair join."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), r"\s+")
     pre = docs.where(F.size(words) >= PREFIX_WORDS).select(
         "doc_id",
@@ -288,7 +281,7 @@ def q_oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break: count desc, token asc) and is BROADCAST to the
     (source, token) side — V is fixed by the tokenizer, never
     SF-proportional, so the broadcast is scale-safe."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.explode(F.split(F.col("text"), r"\s+")).alias("tok")
     ).where(F.col("tok") != "")
@@ -374,7 +367,7 @@ def q_embedding_covariance_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec-keyed self-join producing d(d−1)/2 grouped cells — the shuffle
     is dim²-bounded (2,016 cells at d=64) regardless of corpus row
     count, then a TakeOrdered top-k. Nothing driver-side."""
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     ex = emb.select(
         "vec_id", F.posexplode("embedding").alias("p", "v")
     ).select(
@@ -480,7 +473,7 @@ def q_split_label_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantized to integer micro-units before the cross-cell sum, so both
     engines sum exact BIGINTs over the domain-bounded grid (3 × labels)
     and the statistic has no free-order float accumulation."""
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     bucket = F.expr(spark_bucket("CAST(vec_id AS STRING)", SPLIT_SEED, 10))
     a = emb.select(
         "label",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.clustering import ITERS as KM_ITERS
 from velox_hadoop_spark.operators.clustering import K as KM_K
 from velox_hadoop_spark.operators.clustering import _duck_kmeans_ctes, kmeans
@@ -46,10 +47,6 @@ MAP_K = 10
 _AP_LCM = 2520       # lcm(1..10): precision@i terms become exact integers
 
 from velox_hadoop_spark.operators.funcs2 import _fix6  # noqa: E402  (the ONE home of the transcendental pin)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +161,7 @@ def q_doremi_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1:1 per occurrence), one per-source grouped sum; the iteration
     runs on the |sources|-row frame with scalar aggregates AQE
     broadcasts — no window, no driver loop."""
-    base, w_hist = doremi_weight_frames(_docs(spark, sf_dir))
+    base, w_hist = doremi_weight_frames(read_table(spark, sf_dir, "documents"))
     out = base.select(
         "source",
         "n_tokens",
@@ -366,7 +363,7 @@ def q_retrieval_map_mrr_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact there) and divided once at the end; RR is a single pinned
     division. No free-order double sum anywhere; queries with no
     same-label document are skipped like the nDCG kernel."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     labels = emb.select("vec_id", "label")
     scored = cosine_pairs(emb.where(F.col("vec_id") < NDCG_QUERIES), emb)
     ranked = (
@@ -450,7 +447,7 @@ def _silhouette_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's exact ROUND-6 formula — the ONE home the per-cluster QA
     means, the worst-member drill-down, AND the round-11 re-assignment
     suggestions (llmops10) all derive from."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     assigned, cents = kmeans(emb, return_centroids=True)
     v = emb.where(F.col("embedding").isNotNull()).select(
         "vec_id", to_double(F.col("embedding")).alias("e")
@@ -621,7 +618,7 @@ def q_compaction_bin_execution(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it onto the fact scan; the execution pass is one
     grouped count by bin — exactly the shuffle the real rewrite
     (write.partitionBy(bin)) would do."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     plan = compaction_plan(li).select("part_month", "n_rows", "bin_id")
     routed = li.select(
         F.trunc(F.col("l_shipdate").cast("date"), "month").alias("part_month")
@@ -702,7 +699,7 @@ def q_doremi_weighted_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan."""
     from velox_hadoop_spark.functions.staged import staged_topk_per_group
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     _, w_hist = doremi_weight_frames(docs)
     caps = w_hist[-1].select(
         "source",
@@ -872,7 +869,7 @@ def q_doremi_resample_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-pinned on the 1e-6 grid; the gap subtracts two 6-dp-pinned
     doubles and re-rounds. Scale: everything after the shared token
     pass is |sources| rows; the doc counts are one grouped count."""
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     _, w_hist = doremi_weight_frames(docs)
     caps = w_hist[-1].select(
         "source",
@@ -962,7 +959,7 @@ def q_doremi_mixture_shift_report(spark: SparkSession, sf_dir: str) -> DataFrame
     are defined over the shared support (w2 > 0 AND w0 > 0 — w0 > 0
     always holds for present sources); entropy terms use the x·ln x → 0
     limit at w = 0."""
-    base, w_hist = doremi_weight_frames(_docs(spark, sf_dir))
+    base, w_hist = doremi_weight_frames(read_table(spark, sf_dir, "documents"))
     j = base.select("source", "w0").join(
         w_hist[-1].select("source", F.col(f"w{DOREMI_ITERS}").alias("w2")),
         "source",

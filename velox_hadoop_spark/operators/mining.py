@@ -39,13 +39,6 @@ from velox_hadoop_spark.functions.pairs import id_pairs
 from velox_hadoop_spark.plans.registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # catalog.read_table (not a bare parquet read): it owns the
-    # events.ts nanos-normalization seam, so every mining query sees
-    # the same timestamp representation as the rest of the engine
-    return read_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Markov transition matrix over per-user event sequences
 # ---------------------------------------------------------------------------
@@ -82,7 +75,7 @@ def q_event_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the row-normalizing window both run on the tiny
     |event_type|²-bounded result.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select(
@@ -150,7 +143,7 @@ def q_part_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SF-proportional), so their equi-joins are left to Catalyst/AQE —
     broadcast when small, shuffled when not.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # ONE groupBy replaces [distinct + basket self-join]: each order's
     # distinct part set is collected in-row (collect_set dedups inside
     # the aggregate), and the order count, per-item counts, and co-order
@@ -235,7 +228,7 @@ def q_ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     `rev` is the same double in both engines at any SF."""
     from velox_hadoop_spark.operators.timeseries4 import trunc_ema_ordered
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0).alias("rev")
     )
@@ -308,7 +301,7 @@ def q_seasonal_weekday_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek is Sunday=1). The 7-row seasonal profile is broadcast
     back onto the calendar-bounded daily spine.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     # daily rev as an exact integer-cent sum (the ewma/HHI convention):
     # a ROUND(SUM(double)) rev at a 2-dp boundary could round apart
     # between engines and, because rev feeds the 2-sigma MEMBERSHIP
@@ -387,8 +380,8 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the tiling is deterministic and oracle-reproducible. The 1-row
     anchor date is broadcast via crossJoin.
     """
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
     anchor = orders.agg(F.max(F.col("o_orderdate").cast("date")).alias("maxd"))
     per_cust = (
         orders.join(
@@ -501,7 +494,7 @@ def q_kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonically, and the per-round joins are AQE-broadcastable once
     the core stops shrinking.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     edges = li.select(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("part")
     ).distinct()
@@ -557,7 +550,7 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     not re-mergeable across grains, so each grain aggregates from the
     fact table; both shuffles are keyed on (time-bucket, user) partials
     first, so volume is bounded by active-user cardinality)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     dau = ev.groupBy(
         F.date_trunc("month", "ts").cast("date").alias("month"),
         F.col("ts").cast("date").alias("day"),
@@ -602,7 +595,7 @@ def q_degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge aggregate → degree histogram → single-pass regression moments.
     The histogram is at most max-degree rows, so everything after the
     first aggregate is broadcast-sized at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     e = li.select(
         F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("s")
     ).distinct()
@@ -657,7 +650,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row as-of join; this shares ONE shuffle on user_id across
     every purchase).
     """
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
     w = (
@@ -737,7 +730,7 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort × age) grid. The prefix sum is order-deterministic in both
     engines, so the rounded running total is oracle-exact.
     """
-    om = _t(spark, sf_dir, "orders").select(
+    om = read_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("ck"),
         F.date_trunc("month", "o_orderdate").cast("date").alias("m"),
         # integer cents end-to-end: ROUND(SUM(double)) at a half-cent
@@ -816,7 +809,7 @@ def q_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner joins get cheaper per step and the final five-number report
     is a crossJoin of 1-row aggregates.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     v = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -903,7 +896,7 @@ def q_error_rate_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY window is safe at any scale because its input is
     calendar-bounded, not data-bounded.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
         F.count("*").alias("n_events"),
         F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
@@ -949,8 +942,8 @@ def q_discount_elasticity_by_brand(spark: SparkSession, sf_dir: str) -> DataFram
     so the strategy is left to Catalyst/AQE; the regression is a
     single-pass moment aggregate on the fact side.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
@@ -1006,8 +999,8 @@ def q_spend_quartile_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrade-path / churn-risk view built purely from ranking windows
     partitioned by segment (no global sort at any scale).
     """
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     split = F.lit(_MIGRATION_SPLIT).cast("date")
     spend = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
@@ -1078,8 +1071,8 @@ def q_order_fill_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partial-agg friendly), then exact percentiles run per priority
     class over the order-cardinality frame.
     """
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     fill = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy("o_orderkey", "o_orderpriority", "o_orderdate")
@@ -1149,9 +1142,9 @@ def q_supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rev→tot rejoin the share-based form needed — one aggregate per
     nation instead of an aggregate plus a broadcast-back join.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = read_table(spark, sf_dir, "nation")
     rev = (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy("s_nationkey", "l_suppkey")
@@ -1217,7 +1210,7 @@ def q_order_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     customer key (ties broken by orderkey), then a bounded histogram
     aggregate.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = orders.select(
         F.datediff(

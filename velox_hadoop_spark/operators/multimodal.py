@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 MEDIA_SCHEMA = T.StructType(
@@ -127,7 +128,7 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over an opaque binary column (documents.text cast
     to binary stands in for a media payload — byte-identical path)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
         F.col("doc_id").alias("media_id"),
@@ -233,7 +234,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-modality dispatch, and digesting all sit on the graded path
     rather than behind a rows-only check.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # ASCII + non-empty guard ON BOTH SIDES: the oracle mirrors the
     # byte-level fake decoder with codepoint arithmetic, which is only
     # an identity for single-byte text; and payload[0] needs bytes.
@@ -269,6 +270,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame digest column (payload-dependent, exercised in unit tests)
     is projected away here: the oracle grades the sampling semantics,
     not the stub's byte mixing."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     media = documents_as_media(docs)
     return sample_frames(media, every_k=30).select("media_id", "frame_idx")

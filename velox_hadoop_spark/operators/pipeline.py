@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.hashing import duck_md5_int60, seeded
 from velox_hadoop_spark.operators.sampling import SEED, deterministic_sample
 from velox_hadoop_spark.operators.textstats import CHUNK_TOKENS, _STRIDE, chunk_documents
@@ -88,5 +89,5 @@ def curate(docs: DataFrame) -> DataFrame:
 )
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full curation chain over documents, accounted per language."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return curate(docs)

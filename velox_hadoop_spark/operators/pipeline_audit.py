@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
 from velox_hadoop_spark.functions.vectors import to_double
 from velox_hadoop_spark.operators.dedup import (
@@ -93,7 +94,7 @@ def q_ivf_cell_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-local literal codebook, in-row argmax — no shuffle) plus
     one |corpus|-row grouped count; share is a ratio of exact integers
     rounded at 6dp."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
     tot = assign.agg(F.count("*").alias("t"))
     return (
@@ -175,7 +176,7 @@ def q_embedding_corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         | (F.abs(x) == F.lit(float("inf")).cast("double")),
     )
     dim = F.when(v.isNotNull(), F.size(v))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return emb.agg(
         F.count("*").alias("n_rows"),
         F.sum(F.when(v.isNull(), 1).otherwise(0)).alias("n_null"),
@@ -233,7 +234,7 @@ def q_hot_key_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle document-frequency cap (``dedup.MAX_KEY_DOC_FREQ``). Both
     are count pre-passes over the guards' OWN key derivations — hash
     aggregates with constant per-key state, never a grouped array."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     pc = (
         li.select(
             F.col("l_partkey").alias("part"), F.col("l_suppkey").alias("s")
@@ -348,7 +349,7 @@ def q_co_supply_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     two in both engines, so the bucket assignment is deterministic."""
     from pyspark.storagelevel import StorageLevel
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     # persisted: both unionAll branches read the full edge build (the
     # r8 re-execution anti-pattern check — graph2's deg computation
     # persists the identical two-consumer shape)
@@ -442,7 +443,7 @@ def q_embedding_norm_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     per the round-12 list-kernel rule."""
     from velox_hadoop_spark.functions.vectors import norm
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     v = F.col("embedding")
     nrm = F.when(
         v.isNotNull() & (F.size(v) > 0), norm(to_double(v))

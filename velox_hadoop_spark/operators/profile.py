@@ -28,6 +28,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 # (column, kind) — kind picks the engine-portable min/max string form:
@@ -101,7 +102,7 @@ def _profile_oracle(table: str, cols: tuple[tuple[str, str], ...]) -> str:
 )
 def q_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column statistics profile of the orders table."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return profile_columns(orders, _ORDERS_COLS)
 
 
@@ -166,7 +167,7 @@ def q_profile_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from velox_hadoop_spark.functions.hashing import seeded, spark_md5_int60
     from velox_hadoop_spark.operators.setops import SNAP_SEED
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     b = F.expr(spark_md5_int60(seeded("o_orderkey", SNAP_SEED))) % 100
     bucketed = orders.withColumn("b", b)
 
@@ -235,8 +236,8 @@ def q_constraint_violations_report(spark: SparkSession, sf_dir: str) -> DataFram
     n_violations), so the report is a fixed-height frame at any data
     scale.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
 
     def one(rule: str, frame: DataFrame, cond) -> DataFrame:
         return frame.agg(

@@ -26,11 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _tokens(docs: DataFrame, *extra: str) -> DataFrame:
@@ -88,7 +85,7 @@ def token_entropy(docs: DataFrame) -> DataFrame:
 )
 def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram entropy + type-token ratio per document."""
-    return token_entropy(_docs(spark, sf_dir))
+    return token_entropy(read_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -122,7 +119,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     never sees raw token occurrences. At 100 TB the same plan holds:
     the heavy frame is bounded by |sources| × |vocab|.
     """
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
     counts = (
         _tokens(docs, "source")
         .groupBy("source", "tok")
@@ -159,7 +156,7 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-distinct on the md5 digest (not the text) keeps shuffle rows
     at 32 hex chars regardless of document size.
     """
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     n_unique = F.countDistinct(F.md5("text"))
     return docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -210,7 +207,7 @@ def q_duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from velox_hadoop_spark.operators.dedup import shingle_set
 
-    sh = shingle_set(_docs(spark, sf_dir), "doc_id", "text")
+    sh = shingle_set(read_table(spark, sf_dir, "documents"), "doc_id", "text")
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("dfv"))
     dup = F.sum((F.col("dfv") >= 2).cast("long"))
     return (
@@ -267,8 +264,6 @@ def q_event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan is one pass of partial+final agg plus one broadcast-hash
     join at any scale.
     """
-    from velox_hadoop_spark.catalog import read_table
-
     events = read_table(spark, sf_dir, "events")
     # round-11 money completion: (mu, sd) from EXACT integer-cent
     # moments (Sx BIGINT, Sx2 decimal-38/HUGEINT, one pinned double
@@ -351,8 +346,6 @@ def q_mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile for ``approx_percentile`` — identical plan shape, and
     the sketch-tolerance pattern from the HLL/GK queries applies.
     """
-    from velox_hadoop_spark.catalog import read_table
-
     events = read_table(spark, sf_dir, "events")
     med = events.groupBy("event_type").agg(F.median("value").alias("med"))
     dev = events.join(F.broadcast(med), "event_type")
@@ -416,7 +409,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan in the query — feeds both the df counts and the capped
     # postings; without a materialization point each branch re-runs
     # the full-corpus tokenize + distinct (round-9 ADVICE)
-    toks = _tokens(_docs(spark, sf_dir)).distinct().persist(
+    toks = _tokens(read_table(spark, sf_dir, "documents")).distinct().persist(
         StorageLevel.MEMORY_AND_DISK
     )
     df = toks.groupBy("tok").agg(F.count("*").alias("df"))
@@ -508,7 +501,7 @@ def random_projection(emb: DataFrame) -> DataFrame:
 )
 def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-dim ±1 random projection of every embedding."""
-    return random_projection(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return random_projection(read_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -552,7 +545,7 @@ def q_unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     token count reaches the plan as a broadcast 1-row aggregate, not a
     driver constant.
     """
-    toks = _tokens(_docs(spark, sf_dir))
+    toks = _tokens(read_table(spark, sf_dir, "documents"))
     total = toks.agg(F.count("*").alias("total"))
     corpus = (
         toks.groupBy("tok")
@@ -630,7 +623,7 @@ def q_token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the self-join (the dedup hot-key pattern) — the synthetic
     corpus' 31-token vocabulary needs none.
     """
-    dt = _tokens(_docs(spark, sf_dir)).distinct()
+    dt = _tokens(read_table(spark, sf_dir, "documents")).distinct()
     nd = dt.agg(F.countDistinct("doc_id").alias("nd"))
     df_tok = dt.groupBy("tok").agg(F.count("*").alias("dfv"))
     a = dt.select("doc_id", F.col("tok").alias("tok_a"))
@@ -693,8 +686,6 @@ def q_winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     group, broadcast back onto the fact scan, clipped with a codegen
     CASE — the fact table is never shuffled.
     """
-    from velox_hadoop_spark.catalog import read_table
-
     events = read_table(spark, sf_dir, "events")
     cuts = events.groupBy("event_type").agg(
         F.expr("percentile(value, 0.05)").alias("lo"),
@@ -761,7 +752,7 @@ def q_chi2_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi2 says the two dimensions are associated — the categorical
     drift / feature-interaction screen.)
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     obs = (
         orders.groupBy(
             F.col("o_orderpriority").alias("p"), F.col("o_orderstatus").alias("s")
@@ -848,8 +839,6 @@ def q_welch_z_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row total broadcast, no second scan and no self-join, which is
     the trick that keeps one-vs-rest linear at any group count.
     """
-    from velox_hadoop_spark.catalog import read_table
-
     events = read_table(spark, sf_dir, "events")
     # round-11 money completion: exact integer-cent moments; z in
     # cents space (scale-invariant), pinned double sequence mirrored
@@ -931,7 +920,7 @@ def q_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter itself is then a scan-local predicate on the pruned
     (lang, n_chars) projection — no shuffle touches document text.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     bounds = docs.agg(
         F.expr("percentile(n_chars, 0.05)").alias("lo"),
         F.expr("percentile(n_chars, 0.95)").alias("hi"),

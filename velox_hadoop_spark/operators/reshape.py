@@ -18,11 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table, register_views
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 ORDER_STATUSES = ("F", "O", "P")
@@ -65,7 +62,7 @@ def pivot_status_counts(orders: DataFrame) -> DataFrame:
 )
 def q_pivot_orders_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order counts pivoted to one column per order status."""
-    return pivot_status_counts(_t(spark, sf_dir, "orders"))
+    return pivot_status_counts(read_table(spark, sf_dir, "orders"))
 
 
 def unpivot_measures(li: DataFrame) -> DataFrame:
@@ -94,7 +91,7 @@ def unpivot_measures(li: DataFrame) -> DataFrame:
 )
 def q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lineitem measures melted long (3 rows per input row, no shuffle)."""
-    return unpivot_measures(_t(spark, sf_dir, "lineitem"))
+    return unpivot_measures(read_table(spark, sf_dir, "lineitem"))
 
 
 # Identical SQL text runs in both engines (same pattern as
@@ -121,9 +118,7 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue at (flag, status), (flag), and grand-total grains in one
     pass — explicit GROUPING SETS (rollup/cube's general form), same
     SQL text as the DuckDB oracle."""
-    from velox_hadoop_spark.catalog import Catalog
-
-    Catalog(spark, sf_dir).register_views()
+    register_views(spark, sf_dir)
     return spark.sql(_GROUPING_SETS_SQL)
 
 
@@ -163,7 +158,5 @@ def q_time_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict reductions of the month grain, so at 100 TB you materialize
     the month grain and derive the rest (the incremental_agg_refresh
     pattern maintains it)."""
-    from velox_hadoop_spark.catalog import Catalog
-
-    Catalog(spark, sf_dir).register_views()
+    register_views(spark, sf_dir)
     return spark.sql(_TIME_ROLLUP_SQL)

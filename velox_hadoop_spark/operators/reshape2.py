@@ -14,11 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -36,7 +33,7 @@ def q_stack_part_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``unpivot_lineitem_measures``. stack() is a generator expression
     inside the projection: one scan, rows multiplied in codegen, no
     join or shuffle at all."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return part.selectExpr(
         "p_partkey",
         "stack(2, 'retailprice', p_retailprice,"
@@ -83,7 +80,7 @@ def q_percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     share tie rules. p in {.25, .5, .75} are exact binary fractions,
     so the >= boundary cannot wobble in either engine. Exact
     percentiles sort only within each group's partition."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("__pdc_lineitem")
     return spark.sql(
         """
@@ -128,7 +125,7 @@ def q_ntile_decile_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame
     total, so every derived statistic is deterministic."""
     from velox_hadoop_spark.operators.sort import global_rank
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
     )
@@ -184,8 +181,6 @@ def q_first_last_nth_event_values(spark: SparkSession, sf_dir: str) -> DataFrame
     per user. The window is keyed on user_id, so it shuffles once and
     never serializes through a single task. No sums — raw values — so
     no rounding seams."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -232,7 +227,7 @@ def q_mode_median_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mode is a two-level aggregate: the first groupBy collapses to
     |status x priority| rows, so the rank window runs on a frame
     bounded by the category product, never by data."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     freq = orders.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count("*").alias("c")
     )
@@ -268,7 +263,7 @@ def q_bitwise_flag_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     word per market segment. Bitwise aggregates are commutative and
     associative, so they combine map-side like any sum — one partial
     + final hash aggregate, no shuffle beyond the group keys."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     flag = (F.col("c_custkey") % 256).cast("int")
     return cust.groupBy("c_mktsegment").agg(
         F.bit_or(flag).cast("long").alias("flags_or"),
@@ -303,7 +298,7 @@ def q_window_range_between_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     share identical frames, so the result is deterministic without a
     tiebreaker. Keyed on o_custkey: one hash exchange. The banded sum
     rides integer cents so both engines agree to the cent."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_totalprice")

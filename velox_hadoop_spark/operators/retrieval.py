@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.sort import top_k
 from velox_hadoop_spark.plans.registry import register
 
@@ -131,7 +132,7 @@ def bm25_scores(
 )
 def q_bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents by BM25 for the query {spark, sort, hash}."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     scored = bm25_scores(docs)
     ranked = top_k(scored, TOP_DOCS, F.desc("score"), F.asc("doc_id"))
     return ranked.select("doc_id", F.round("score", 6).alias("bm25"))
@@ -219,8 +220,6 @@ def user_profile_cosine(
 def q_user_profile_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 most behaviorally similar user pairs (event-type count
     vectors, cosine)."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     sims = user_profile_cosine(ev)
     ranked = top_k(sims, TOP_PAIRS, F.desc("cos"), F.asc("user_a"), F.asc("user_b"))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.similarity import _DUCK_COS, cosine_pairs
 from velox_hadoop_spark.plans.registry import register
 
@@ -26,14 +27,6 @@ NDCG_K = 10
 NDCG_QUERIES = 10  # vec_id < 10, the ann_bruteforce_topk convention
 CONTAIN_T = 0.5  # containment threshold for the report
 ZIPF_TOP = 100
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +92,7 @@ def q_knn_label_ndcg_at_10(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (rel/log2(rank+1) terms are irrational; a free-order
     sum is the r8 rounding-flip class). Queries with no same-label
     document are skipped in both engines (ideal DCG is 0)."""
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     labels = emb.select("vec_id", "label")
     scored = cosine_pairs(emb.where(F.col("vec_id") < NDCG_QUERIES), emb)
     ranked = (
@@ -175,7 +168,7 @@ def _cand_with_shingles(spark: SparkSession, sf_dir: str):
         shingle_set,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signature_inline(docs, "doc_id", "text")
     cand = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id")
     sh_all = shingle_set(docs, "doc_id", "text")
@@ -337,7 +330,7 @@ def q_cross_source_neardup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
         verify_candidate_jaccard,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents")
     sig = minhash_signature_inline(docs, "doc_id", "text")
     cand = lsh_candidate_pairs(lsh_bands(sig, "doc_id"), "doc_id")
     sh = shingle_set(docs, "doc_id", "text")
@@ -407,7 +400,7 @@ def q_zipf_slope_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-correlation precedent) so the slope folds from exact
     integers and no free-order double sum exists; the zero-variance
     guard compares exact wide integers."""
-    tok = _docs(spark, sf_dir).select(
+    tok = read_table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", r"\s+")).alias("t")
     )
     cnt = tok.groupBy("t").agg(F.count("*").alias("c"))

@@ -25,6 +25,7 @@ from types import MappingProxyType
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.hashing import (
     duck_bucket,
     duck_md5_int60,
@@ -98,10 +99,6 @@ def capped_per_group(df: DataFrame, group: str, key: str, cap: int, seed: str = 
     ).drop("__ord")
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 @register(
     "sample_documents_10pct",
     oracle=f"""
@@ -113,7 +110,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """~10% hash-sample of documents — shuffle-free, engine-portable."""
-    return deterministic_sample(_docs(spark, sf_dir), "doc_id", 10).select(
+    return deterministic_sample(read_table(spark, sf_dir, "documents"), "doc_id", 10).select(
         "doc_id", "lang", "source"
     )
 
@@ -131,7 +128,7 @@ def q_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/20 hash split of the corpus, counted per side."""
     return (
-        assign_split(_docs(spark, sf_dir), "doc_id", 80)
+        assign_split(read_table(spark, sf_dir, "documents"), "doc_id", 80)
         .groupBy("split")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -154,7 +151,7 @@ _STRATA = MappingProxyType({"en": 20, "de": 100, "fr": 100, "es": 100, "zh": 50}
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-stratified sample: downsample dominant 'en' to 20%,
     'zh' to 50%, keep the tail languages whole."""
-    return stratified_sample(_docs(spark, sf_dir), "lang", "doc_id", _STRATA).select(
+    return stratified_sample(read_table(spark, sf_dir, "documents"), "lang", "doc_id", _STRATA).select(
         "doc_id", "lang"
     )
 
@@ -175,7 +172,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_capped_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Balance the corpus: at most 40 docs per source, hash-ordered."""
-    return capped_per_group(_docs(spark, sf_dir), "source", "doc_id", 40).select(
+    return capped_per_group(read_table(spark, sf_dir, "documents"), "source", "doc_id", 40).select(
         "doc_id", "source"
     )
 
@@ -239,7 +236,7 @@ def _ws_key_duck(key: str = "doc_id", weight: str = "n_chars", seed: str = WS_SE
 def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-weighted deterministic sample of 50 documents (longer
     docs proportionally more likely — the token-mass draw)."""
-    picked = weighted_sample(_docs(spark, sf_dir), "doc_id", "n_chars", WS_K)
+    picked = weighted_sample(read_table(spark, sf_dir, "documents"), "doc_id", "n_chars", WS_K)
     return picked.select(
         "doc_id", "source", "n_chars", F.round("sample_key", 6).alias("sample_key")
     )

@@ -22,11 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -60,7 +57,7 @@ def q_map_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     The map is bounded by the status domain (3 keys), so per-row map
     ops never grow with SF; the only shuffles are the two counts."""
     cell = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy(
             F.col("o_orderpriority").alias("priority"),
             F.col("o_orderstatus").alias("status"),
@@ -101,7 +98,7 @@ def q_str_to_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``str_to_map``, read both keys with ``element_at``, and aggregate —
     must equal the flat GROUP BY. The parse is per-row JVM expression
     work; one shuffle total."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     line = F.concat(
         F.lit("status="),
         F.col("o_orderstatus"),
@@ -140,7 +137,7 @@ def q_json_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated on the PARSED fields only — the codec identity the
     direct SQL verifies. Money rides as integer cents inside the JSON
     so the round-trip never touches float formatting."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     js = F.to_json(
         F.struct(
             F.col("o_orderkey").alias("k"),
@@ -180,7 +177,7 @@ def q_csv_line_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``sources/multisource.py`` (same malformed-row stance: a parse
     failure yields NULL fields, which the aggregate would surface as a
     phantom group — the identity check makes that visible)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     line = F.to_csv(
         F.struct(
             F.col("o_orderkey").alias("k"),
@@ -217,7 +214,7 @@ def q_parse_url_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated — the clickstream-log shape where the URL is the only
     carrier of structure. The uid comes back as a string; the
     round-trip sum proves the cast chain is lossless."""
-    e = _t(spark, sf_dir, "events").where(
+    e = read_table(spark, sf_dir, "events").where(
         F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
     )
     url = F.concat(

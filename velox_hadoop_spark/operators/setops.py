@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -53,8 +54,8 @@ def tagged_union(branches: list[tuple[str, DataFrame]], tag_col: str = "src") ->
 )
 def q_union_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source union with explicit provenance tags (S13/U1)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     u = tagged_union(
         [
             ("orders", orders.select(F.col("o_custkey").alias("key"))),
@@ -78,8 +79,8 @@ def q_union_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_intersect_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: big-ticket buyers who are BUILDING-segment customers."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     big = orders.where(F.col("o_totalprice") > 100000).select(
         F.col("o_custkey").alias("custkey")
     )
@@ -100,8 +101,8 @@ def q_intersect_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_except_small_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT: customers who never placed a big-ticket order."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     # subtract == EXCEPT (distinct) — not exceptAll, whose multiset
     # semantics would keep keys that merely appear more often on the left.
     return customer.select(F.col("c_custkey").alias("custkey")).subtract(
@@ -122,7 +123,7 @@ def q_except_small_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_distinct_order_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT over a computed column (month truncation)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderpriority",
         F.date_trunc("month", F.col("o_orderdate")).alias("order_month"),
@@ -227,7 +228,7 @@ def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, 10% churn in, 10% restated prices; the restatement is an exact double addition — a ROUND(x*1.1) would diverge between engines on decimal-tie doubles)."""
     from velox_hadoop_spark.functions.hashing import spark_bucket
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     b = F.expr(spark_bucket("o_orderkey", SNAP_SEED))
     bucketed = orders.withColumn("b", b)
     old = bucketed.where(F.col("b") < 90).select(
@@ -293,7 +294,7 @@ def q_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from velox_hadoop_spark.functions.hashing import spark_bucket
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     b = F.expr(spark_bucket("o_orderkey", SNAP_SEED))
     # money as exact integer cents: base + delta sums accumulate in a
     # DIFFERENT association order than the oracle's single-pass
@@ -388,7 +389,7 @@ def q_table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses the wire. Pure codegen (md5 + conv + bit_xor), bit-identical
     in the DuckDB oracle via the shared hashing convention
     (functions/hashing.py)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     canon_str = (
         "concat_ws('|', CAST(o_orderkey AS STRING), CAST(o_custkey AS STRING), "
         "o_orderstatus, CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS STRING), "
@@ -467,8 +468,8 @@ def q_null_skew_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition that sinks naive plans at scale simply does not exist.
     Result (revenue by segment, nulls bucketed as UNMATCHED) is
     verified against the oracle's ordinary left join."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     o = orders.select(
@@ -551,7 +552,7 @@ def q_merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot be violated by key collision). The Spark plan is the single-shuffle union +
     max_by form; the oracle is the textbook FULL OUTER JOIN MERGE —
     row-identical results prove the rewrite."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey",
         "o_orderstatus",
@@ -616,11 +617,9 @@ def q_cascade_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit touched (see partitioned-sink compaction), so erasure cost is
     audit cost plus targeted rewrites, never a full-table scan per
     table."""
-    from velox_hadoop_spark.catalog import read_table
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     # events MUST go through read_table: its ts column can be parquet
     # TIMESTAMP(NANOS), which a raw read only survives if some earlier
     # query leaked the nanosAsLong conf — an order-dependent failure
@@ -724,7 +723,7 @@ def q_cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch carries at most ONE change per key (the upstream log compaction
     contract), which both the max_by collapse and the join oracle
     assume."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey",
         "o_orderstatus",

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.vectors import cosine, round_half_away, to_double
 from velox_hadoop_spark.plans.registry import register
 
@@ -591,7 +592,7 @@ def ivf_assign_probes(emb: DataFrame, book: list, nprobe: int) -> DataFrame:
 )
 def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine top-5 neighbors for the first 10 vectors (brute force)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     scored = cosine_pairs(emb.where(F.col("vec_id") < 10), emb)
     return topk_per_query(scored, 5)
 
@@ -622,7 +623,7 @@ def q_knn_top1_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical strategy is size-guarded: broadcast single-dgemm below the
     driver budget, distributed block-matrix dgemm above it — exact
     either way (see ``knn_exact``)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return knn_exact(emb, k=1).drop("rnk")
 
 
@@ -682,7 +683,7 @@ def _duck_bucket_sql() -> str:
 )
 def q_embedding_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection bucket id per vector (ANN scale path)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return hyperplane_buckets(emb)
 
 
@@ -744,7 +745,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
 
     QUERY_BLOCK = 4096  # peak kernel memory = QUERY_BLOCK x |cell| doubles
@@ -865,7 +866,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedicated fixture test."""
     from velox_hadoop_spark.functions.staged import staged_topk_per_group
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     buckets = hyperplane_buckets(emb)
     qb = buckets.select(F.col("vec_id").alias("query_id"), "bucket")
     nb = staged_topk_per_group(
@@ -932,7 +933,7 @@ def label_centroids(emb: DataFrame) -> DataFrame:
 )
 def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean embedding per class label (embedding-space class profile)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return label_centroids(emb).select(
         "label", "pos", (F.round("c", 6) + F.lit(0.0)).alias("c")
     )
@@ -985,7 +986,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings, so a 64-dim sum stays far inside BIGINT."""
     from pyspark.sql import Window
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         "vec_id",
         "label",
@@ -1064,7 +1065,7 @@ def embedding_norms_arrow(emb: DataFrame) -> DataFrame:
 )
 def q_embedding_norms_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 norm per embedding via the Arrow RecordBatch boundary."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     return embedding_norms_arrow(emb)
 
 
@@ -1138,7 +1139,7 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     # empty arrays drop: a zero-column matrix crashes max(axis=1)
     return drop_null_vectors(emb).where(F.size("embedding") > 0).select(
         "vec_id", to_double(F.col("embedding")).alias("embedding")
@@ -1178,7 +1179,7 @@ def q_centroid_separation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     |labels| × dims rows: the dimension-aligned self-join and both norm
     joins are broadcast-sized at any corpus scale.
     """
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     cent = label_centroids(emb)
     norms = cent.groupBy("label").agg(F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("n"))
     a = cent.select(F.col("label").alias("label_a"), "pos", F.col("c").alias("ca"))
@@ -1464,7 +1465,7 @@ def q_ann_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. The standard fix is OR-amplification across tables
     (``ann_multiprobe_recall``), which trades candidate volume for
     recall."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     sample = recall_query_sample(emb)
     buckets = hyperplane_buckets(emb)
     qb = (
@@ -1576,7 +1577,7 @@ def q_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (in-row bucket computation, per-(table, bucket) equi-join); the
     union adds a branch per table over the same cached bucket frame,
     and everything downstream is candidate-bounded."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     sample = recall_query_sample(emb)
     tbuckets = None
     for t in range(_AMP_TABLES):
@@ -1667,7 +1668,7 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     three gates are directly comparable and the index choice is a
     measured decision. Candidate generation is the same-cell equi-join
     the production ``ann_ivf_topk`` path uses."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     sample = recall_query_sample(emb)
     assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
     qa = assign.join(sample.select("vec_id"), "vec_id", "left_semi").select(
@@ -1741,7 +1742,7 @@ def q_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank is the guarded Arrow scorer. A NULL-label neighbor counts
     as a different label (IS DISTINCT FROM semantics in both
     engines)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_table(spark, sf_dir, "embeddings")
     sample = recall_query_sample(emb)
     assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
     labels = emb.select("vec_id", "label")

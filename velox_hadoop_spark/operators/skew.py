@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -88,8 +89,8 @@ def salted_agg(
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted fact-dim join — result identical to the plain join (the
     oracle IS the plain join), proving salting preserves semantics."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     joined = salted_join(
@@ -125,7 +126,7 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNSALTED aggregate, proving the rewrite preserves semantics
     exactly (sums re-associate; the 2-dp rounding happens once, at the
     end)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     out = salted_agg(li, "l_returnflag", "l_quantity", n_salts=8, salt_src="l_orderkey")
     return out.select(
         "l_returnflag", F.round(F.col("total"), 2).alias("total"), "n"
@@ -176,7 +177,7 @@ def q_key_skew_salting_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20; the totals row is a broadcast scalar."""
     from pyspark.storagelevel import StorageLevel
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     # persist: the grouped frame feeds both the scalar totals aggregate
     # and the crossJoin — without a materialization point the orders
     # groupBy shuffle runs twice (round-9 ADVICE)

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -159,7 +160,7 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parts on the (cheapest, largest) Pareto frontier — every part
     for which no other part is at-least-as-cheap AND at-least-as-large
     with one strict."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     sky = skyline_min_max(part, "p_retailprice", "p_size")
     return part.join(
         F.broadcast(sky), ["p_retailprice", "p_size"]
@@ -332,7 +333,7 @@ def q_skyline_3d_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot express — local frontiers union into a capped candidate
     set, globally re-checked against itself (oracle states the NOT
     EXISTS dominance definition directly)."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = read_table(spark, sf_dir, "part")
     with_len = part.withColumn("name_len", F.length("p_name").cast("long"))
     sky = skyline_multi(
         with_len, minimize=["p_retailprice"], maximize=["p_size", "name_len"]

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -150,7 +151,7 @@ def ntile_from_rank(rank: Column, n_total: Column, k: int) -> Column:
 )
 def q_sort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer sort + global rank (LeanSort semantics, parallel-correct)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     df = li.select(
         F.col("l_quantity").cast("int").alias("value"),
         "l_orderkey",
@@ -171,7 +172,7 @@ def q_sort_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 orders by price — TakeOrderedAndProject, no total sort."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return top_k(
         orders.select("o_orderkey", "o_custkey", "o_totalprice"),
         100,
@@ -191,7 +192,7 @@ def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sort_desc_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Descending float sort (PageRank step-3 ordering semantics)."""
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    sup = read_table(spark, sf_dir, "supplier")
     return sup.select("s_suppkey", "s_name", "s_acctbal").orderBy(
         F.desc("s_acctbal"), F.asc("s_suppkey")
     )
@@ -245,5 +246,5 @@ def q_zorder_key_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     here; the layout write reuses the range-partition machinery of the
     distributed sort operator).
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.select("o_orderkey", F.expr(_z_value_spark()).alias("zval"))

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.contamination2 import positioned_shingles
 from velox_hadoop_spark.plans.registry import register
 
@@ -200,7 +201,7 @@ def q_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by gram (partial+final), one co-partitioned join back, per-
     doc island windows, then a single JVM higher-order filter rebuilds
     the kept token stream (no Python, no per-row UDF)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     merged = merged_removal_spans(docs)
     stats = merged.groupBy("doc_id").agg(
         F.any_value("n_tokens").cast("long").alias("n_tokens"),
@@ -263,7 +264,7 @@ def q_repeated_span_removal_by_source(spark: SparkSession, sf_dir: str) -> DataF
     exact-substring dedup pass (every doc counts toward its source's
     token mass whether or not it was touched). Conservation is visible
     per row: kept_tokens + removed_tokens = total_tokens."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     per_doc = merged_removal_spans(docs).groupBy("doc_id").agg(
         F.sum(F.col("e") - F.col("s") + 1).alias("removed")
     )

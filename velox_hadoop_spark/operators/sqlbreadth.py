@@ -21,11 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _cents():
@@ -55,7 +52,7 @@ def q_grouping_id_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is engine-defined and would silently disagree across engines. One
     shuffle computes all four grouping sets (Spark expands them in a
     single Expand+HashAggregate, not four scans)."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("vhs_gsets_orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("vhs_gsets_orders")
     return spark.sql("""
         SELECT coalesce(o_orderpriority, 'ALL') AS priority,
                coalesce(o_orderstatus, 'ALL') AS status,
@@ -82,7 +79,7 @@ def q_group_by_all_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     modern-SQL convenience form, identical semantics in Spark ≥3.4 and
     DuckDB; compiles to the same partial+final hash aggregate as an
     explicit column list."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("vhs_gba_orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("vhs_gba_orders")
     return spark.sql("""
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
                sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_cents
@@ -105,7 +102,7 @@ def q_listagg_distinct_statuses(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort_array → array_join is the Spark spelling (set semantics, then
     an explicit deterministic order — LISTAGG without ORDER BY is
     nondeterministic in any engine and never registry-safe)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.array_join(F.sort_array(F.collect_set("o_orderstatus")), ",").alias(
             "statuses"
@@ -131,7 +128,7 @@ def q_count_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     N conditional counters (Spark spelling: count(when(cond, 1))).
     The FILTER form keeps DuckDB's counters BIGINT (count_if would be
     HUGEINT and hash-mismatch int64)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_total"),
         F.count(F.when(F.col("o_orderpriority") == "1-URGENT", 1)).alias("n_urgent"),
@@ -157,8 +154,8 @@ def q_count_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bool_agg_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bool_and / bool_or aggregates per nation (the EVERY/ANY forms)
     over a broadcast dimension join."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         cust.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
@@ -186,7 +183,7 @@ def q_cume_dist_percent_rank_prices(spark: SparkSession, sf_dir: str) -> DataFra
     windows. Both are value-based (ties share a value), so the output
     is deterministic without a tiebreak column; the window and nothing
     else shuffles the table, keyed on the partition column."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return orders.select(
         "o_orderkey",
@@ -218,8 +215,6 @@ def q_lag_lead_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the earliest purchase value seen so far per user). The 5% user
     slice bounds the output; (ts, event_id) is a total order so every
     offset function is deterministic."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events").where(F.col("user_id") % 20 == 0)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -267,7 +262,7 @@ def q_rows_vs_range_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     day number (RANGE includes ALL same-day rows, so it needs no
     tiebreak). Money rides integer cents; both windows share one
     shuffle on o_custkey."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     o = orders.select(
         "o_orderkey",
         "o_custkey",
@@ -306,7 +301,7 @@ def q_running_min_max_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure extrema (no double sums, so raw values are exact in both
     engines); the subtraction is a single deterministic double op,
     rounded for display only."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -339,7 +334,7 @@ def q_qualify_top3_balance_per_nation(spark: SparkSession, sf_dir: str) -> DataF
     nation. Spark has no QUALIFY keyword; the filter-on-window form is
     the identical plan (rank inside the window shuffle, filter above
     it — no second exchange)."""
-    supp = _t(spark, sf_dir, "supplier")
+    supp = read_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(F.desc("s_acctbal"), "s_suppkey")
     return (
         supp.select(
@@ -371,8 +366,8 @@ def q_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     never-ordered customers. Spark compiles the null-tainted form to a
     null-aware anti join (a distinct physical operator worth covering)
     and the clean form to a plain left-anti."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("vhs_nin_customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("vhs_nin_orders")
+    read_table(spark, sf_dir, "customer").createOrReplaceTempView("vhs_nin_customer")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("vhs_nin_orders")
     with_null = spark.sql("""
         SELECT count(*) AS n_with_null FROM vhs_nin_customer
         WHERE c_custkey NOT IN (SELECT o_custkey FROM vhs_nin_orders
@@ -404,7 +399,7 @@ def q_bag_set_ops_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min/difference of per-key multiplicities), the distinct forms
     collapse it — four counts in one row so the semantics contrast is
     the test."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     a = orders.where(F.col("o_orderstatus") == "O").select("o_custkey")
     b = orders.where(F.col("o_orderstatus") == "F").select("o_custkey")
     n_ia = a.intersectAll(b).agg(F.count("*").alias("n_intersect_all"))
@@ -436,7 +431,7 @@ def q_values_inline_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the fact table. Literal frames are trivially broadcast by the
     optimizer (no hint needed — the lint's point is hints on
     data-sized frames, and this one is compile-time constant)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     dim = spark.createDataFrame(
         [
             ("1-URGENT", 1),
@@ -479,7 +474,7 @@ def q_posexplode_outer_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows as a single (NULL, NULL) row — the left-lateral semantics a
     plain explode drops. Open orders get an empty array by
     construction so the preservation branch is exercised, not assumed."""
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 50 == 0)
+    orders = read_table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 50 == 0)
     o = orders.select(
         "o_orderkey",
         F.when(F.col("o_orderstatus") == "O", F.array().cast("array<string>"))
@@ -506,7 +501,7 @@ def q_sequence_aggregate_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded with aggregate() into the triangular sum — verified against
     the closed form per month group. Pure in-row array math (Spark:
     whole-stage codegen; no UDF)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     m = F.month("o_orderdate")
     tri = F.aggregate(
         F.sequence(F.lit(1), m),
@@ -535,7 +530,7 @@ def q_base64_hex_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-encoding functions: base64 of the UTF-8 name bytes, hex
     of the integer key (uppercased to one casing convention), and the
     decode(unbase64(...)) roundtrip proven equal in-engine."""
-    cust = _t(spark, sf_dir, "customer").where(F.col("c_custkey") <= 200)
+    cust = read_table(spark, sf_dir, "customer").where(F.col("c_custkey") <= 200)
     b64 = F.base64(F.col("c_name").cast("binary"))
     return cust.select(
         "c_custkey",
@@ -565,7 +560,7 @@ def q_string_pad_translate_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncate-when-longer behavior), translate, reverse, repeat, trim,
     and character-set ltrim — all engine built-ins with identical
     semantics, pinned by parity."""
-    part = _t(spark, sf_dir, "part").where(F.col("p_partkey") <= 200)
+    part = read_table(spark, sf_dir, "part").where(F.col("p_partkey") <= 200)
     return part.select(
         "p_partkey",
         F.lpad("p_name", 12, "*").alias("padded_l"),
@@ -614,7 +609,7 @@ def q_moment_stats_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     get higher moments: built-in skewness() definitions differ across
     engines, raw-moment arithmetic does not. The double math on top of
     the exact sums is the identical expression in both engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("long")
     s = li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
@@ -677,7 +672,7 @@ def q_calendar_dim_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect), left-joined to daily order counts, rolled to months:
     days in month vs days with orders vs order volume. The spine is
     calendar-bounded, so the explode and the join stay tiny at any SF."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     bounds = orders.agg(
         F.min(F.col("o_orderdate").cast("date")).alias("d0"),
         F.max(F.col("o_orderdate").cast("date")).alias("d1"),

@@ -21,19 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # route through the catalog: events.ts can arrive as parquet
-    # TIMESTAMP(NANOS), which read_table normalizes and a raw
-    # spark.read.parquet either rejects or (with the session-wide
-    # nanosAsLong legacy flag set by an earlier kernel) silently reads
-    # as a nanosecond LONG — every other events consumer already uses
-    # read_table (round-9 review find)
-    from velox_hadoop_spark.catalog import read_table
-
-    return read_table(spark, sf_dir, name)
 
 
 def _cents(col: str = "o_totalprice"):
@@ -69,7 +58,7 @@ def q_pivot_multi_agg_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-scan pitfall of `pivot(col)` without a value list), and
     empty cells are coalesced to the oracle's FILTER-count zeros."""
     piv = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderpriority").alias("priority"))
         .pivot("o_orderstatus", ["F", "O", "P"])
         .agg(F.count(F.lit(1)).alias("n"), F.sum(_cents()).alias("cents"))
@@ -114,7 +103,7 @@ def q_array_lambda_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM projection — the lambda surface SURVEY §2.8 maps to native
     Spark; no explode, no second shuffle. Quantities ride as BIGINT so
     the fold and gaps are exact in both engines."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     arrs = li.groupBy(F.col("l_orderkey").alias("orderkey")).agg(
         F.array_sort(F.collect_list(F.col("l_quantity").cast("long"))).alias("l")
     )
@@ -161,7 +150,7 @@ def q_hypothetical_rank_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = F.col("l_quantity").cast("long")
     below = F.count(F.when(q < 25, 1))
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n"),
@@ -195,7 +184,7 @@ def q_iso_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     year is derived as the calendar year of the week's THURSDAY
     (date − weekday + 3, weekday 0 = Monday) — the ISO-8601 definition
     itself, exact for every date. Pure projection + one hash agg."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     d = F.to_date("o_orderdate")
     thursday = F.date_add(F.date_sub(d, F.weekday(d)), 3)
     return (
@@ -234,7 +223,7 @@ def q_status_change_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     dates are pinned by orderkey so the lag is a total order in both
     engines. One shuffle on custkey serves window and aggregate."""
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    seq = _t(spark, sf_dir, "orders").select(
+    seq = read_table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderstatus",
         F.lag("o_orderstatus").over(w).alias("prev_status"),
@@ -274,7 +263,7 @@ def q_status_set_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders'. collect_set dedups inside the aggregate (one shuffle);
     the second aggregate groups the handful of signatures."""
     sig = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
             F.array_join(F.array_sort(F.collect_set("o_orderstatus")), ",").alias(
@@ -317,7 +306,7 @@ def q_null_safe_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join would silently drop it — the classic bug this operator
     exists to avoid. Both sides are pre-aggregated (≤ |event-type
     domain| rows), so the join is broadcast-sized by construction."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     k = F.nullif(F.col("event_type"), F.lit("view")).alias("k")
     a = ev.groupBy(k).agg(F.count("*").alias("n_all"))
     b = ev.where(F.col("value") > 50).groupBy(k).agg(F.count("*").alias("n_high"))
@@ -387,7 +376,7 @@ def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a tie group: under an (s, e)-only order, a same-timestamp
     row sorted ahead of its group's flag-1 row would join the previous
     island and overcount coverage."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     iv = ev.select(
         "user_id",
         "event_id",
@@ -484,7 +473,7 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates are pinned by event_id (the forward frame takes the
     smallest id, the backward frame the largest — stated in the oracle
     by the identical window order)."""
-    ev = _t(spark, sf_dir, "events").where(
+    ev = read_table(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
     u = ev.select(
@@ -575,8 +564,8 @@ def q_pareto_80_20_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     task — same accepted class as ntile_decile_customer_spend
     (SF-proportional per-key sort; at extreme SF this wants a
     range-partitioned prefix sum, documented not hidden)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
     spend = (
         o.join(c, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey", "o_custkey")
@@ -621,7 +610,7 @@ def q_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure projection + one hash agg onto a ≤ 168-cell grid — the
     map-side partial aggregate collapses each task to the grid size,
     so the shuffle is constant-width at any SF."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.select(
             (F.weekday("ts") + 1).cast("long").alias("dow"),
@@ -660,7 +649,7 @@ def q_qty_discount_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both axes are VALUE-domain grids (5 bands × ~11 discount points),
     not rank-based tiles, so there is no global sort anywhere: one
     hash aggregate onto a bounded grid."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.select(
             F.ceil(F.col("l_quantity") / 10.0).cast("long").alias("qty_band"),
@@ -702,7 +691,7 @@ def q_corr_matrix_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     display round (accepted class, same as spearman_rank_corr)."""
     from velox_hadoop_spark.operators.stats2 import safe_corr
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("double").alias("q"),
         F.col("l_extendedprice").cast("double").alias("p"),
         F.col("l_discount").cast("double").alias("d"),
@@ -760,7 +749,7 @@ def q_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-partition window over the calendar-bounded daily spine
     (~2.4k rows at any SF) — the documented accepted class."""
     daily = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.sum(_cents()).alias("cents"))
     )
@@ -827,7 +816,7 @@ def q_events_session_gap_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle on user_id."""
     from velox_hadoop_spark.streaming.events import session_agg
 
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     outs = []
     for gap in (15, 60):
         s = session_agg(ev, f"{gap} minutes")
@@ -885,7 +874,7 @@ def q_window_peer_avg_exclude_self(spark: SparkSession, sf_dir: str) -> DataFram
     algebraically: (group sum − own value) / (n − 1), NULL for a
     singleton group (no peers ≠ zero peers). Integer cents under the
     subtraction; one unordered window (no sort) on nationkey."""
-    b = _t(spark, sf_dir, "customer").select(
+    b = read_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
         F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),

@@ -16,14 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 ATTR_FIRST_W = 0.4  # position-based attribution: 40% first touch
 ATTR_LAST_W = 0.4   # 40% last touch, middles share the remaining 20%
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -54,7 +51,7 @@ def q_regexp_count_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     case where instr and regexp_instr provably coincide. Pure
     one-scan codegen'd expressions; avg over an empty match set is
     NULL in both engines (FILTER vs conditional aggregate)."""
-    m = _t(spark, sf_dir, "documents").select(
+    m = read_table(spark, sf_dir, "documents").select(
         "source",
         F.expr("regexp_count(text, '[aeiou][aeiou]+')").alias("n_vruns"),
         F.expr("regexp_instr(text, 'table')").alias("first_table_pos"),
@@ -95,7 +92,7 @@ def q_event_path_3grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed window (per-partition sort bounded by a user's
     journey), one |types|³-bounded aggregate."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = _t(spark, sf_dir, "events").select(
+    seq = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.lead("event_type", 1).over(w).alias("t2"),
         F.lead("event_type", 2).over(w).alias("t3"),
@@ -176,7 +173,7 @@ def q_attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold over the tiny k-ascending (k, m) list, so both engines
     execute the identical float-op sequence. One user-keyed window
     for positions, a converters semi-join, domain-bounded aggregates."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     touches = ev.where(F.col("event_type").isin("view", "click")).select(
         "user_id",
@@ -253,7 +250,7 @@ def q_yoy_quarter_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only display-rounded double, NULL for the first year in both
     engines. The ordered window runs over the quarter spine —
     calendar-bounded rows regardless of fact volume."""
-    q = _t(spark, sf_dir, "orders").groupBy(
+    q = read_table(spark, sf_dir, "orders").groupBy(
         F.year("o_orderdate").cast("long").alias("yr"),
         F.quarter("o_orderdate").cast("long").alias("qtr"),
     ).agg(
@@ -305,7 +302,7 @@ def q_weighted_quartiles_quantity(spark: SparkSession, sf_dir: str) -> DataFrame
     must equal weighted_median_quantity's answer — pinned by a
     cross-query test. Window input is the distinct-value frame
     (quantity domain ≤ 50 rows/flag), not the fact rows."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     wq = li.groupBy("l_returnflag", "l_quantity").agg(
         F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("w")
     )
@@ -367,10 +364,10 @@ def q_revenue_share_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical exact integers. Multiplicative consistency
     (share_in_region × region_share ≈ share_of_total) is pinned by a
     brute-force test."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region")
     rn = (
         o.join(c, o.o_custkey == c.c_custkey)
         .join(n, c.c_nationkey == n.n_nationkey)
@@ -429,7 +426,7 @@ def q_conversion_paths_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned user window; the share denominator is a broadcast scalar.
     Share conservation (Σ shares = 1) is pinned in tests."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     seq = ev.select(
         "event_type",
         F.lead("event_type", 1).over(w).alias("t2"),

@@ -10,13 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 WB_LO, WB_HI, WB_N = 0.0, 500000.0, 20  # bucket width 25000, exact in binary
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
 
 
 @register(
@@ -56,7 +53,7 @@ def q_try_arithmetic_null_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI ops would kill the stage. The oracle states the expected
     results with explicit guards (DuckDB's default arithmetic already
     widens, so the CASE encodes the int64 boundary Spark enforces)."""
-    c = _orders(spark, sf_dir).select(
+    c = read_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         (F.col("o_custkey") % 100).alias("den"),
         F.col("o_orderstatus").alias("st"),
@@ -104,7 +101,7 @@ def q_width_bucket_price_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     IDENTICAL IEEE computation — boundary prices land in the same
     bucket in both engines. One partial+final aggregate; the histogram
     is 22-row bounded at any scale."""
-    o = _orders(spark, sf_dir)
+    o = read_table(spark, sf_dir, "orders")
     return (
         o.select(
             F.width_bucket(

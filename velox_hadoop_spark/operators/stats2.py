@@ -30,11 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def safe_corr(x, y):
@@ -68,7 +65,7 @@ def _daily_rev_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by the order-date calendar (~7 years), not by SF, so a
     global ORDER BY day window over it is scale-safe."""
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
@@ -158,7 +155,7 @@ def q_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     value joins, no row-ordered window anywhere. Rank values are exact
     multiples of 0.5, so the only float aggregate is the final
     correlation, display-rounded at 6 dp in both engines."""
-    li = _t(spark, sf_dir, "lineitem").where(
+    li = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit(_SPEAR_LO).cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(_SPEAR_HI).cast("timestamp"))
     )
@@ -231,7 +228,7 @@ def q_anova_f_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     cents_d = cents.cast("double")
     g = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderpriority").alias("p"))
         .agg(
             F.count("*").alias("n"),
@@ -630,15 +627,15 @@ def q_theil_index_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so x > 0 and ln is always finite."""
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     spend = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .join(
-            _t(spark, sf_dir, "customer"),
+            read_table(spark, sf_dir, "customer"),
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("c_custkey", "c_nationkey")
         .agg(F.sum(cents).alias("cents"))
     )
-    nation = _t(spark, sf_dir, "nation").select(
+    nation = read_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("nation")
     )
     mu = F.avg("cents").over(Window.partitionBy("nation"))
@@ -714,7 +711,7 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     double, and it is NULL when either group is empty (σ_U = 0 —
     guarded: ANSI raises on the zero division where DuckDB yields
     NULL)."""
-    o = _t(spark, sf_dir, "orders").where(
+    o = read_table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
         & (F.col("o_orderdate") >= F.lit(_MW_LO).cast("timestamp"))
         & (F.col("o_orderdate") < F.lit(_MW_HI).cast("timestamp"))

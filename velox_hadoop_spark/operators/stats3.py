@@ -18,11 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -84,7 +81,7 @@ def q_kruskal_wallis_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the two final display-rounded ratios (guard: the all-ties
     corpus where the correction denominator hits zero emits nothing,
     both engines)."""
-    x = _orders(spark, sf_dir).select(
+    x = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v"),
     )
@@ -175,7 +172,7 @@ def q_jarque_bera_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     than guarded. The group-mean join is a 5-row broadcast; everything
     else is one conditional aggregate per group. Zero-variance groups
     emit nothing (m2 > 0 guard, both engines)."""
-    x = _orders(spark, sf_dir).select(
+    x = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v"),
     )
@@ -256,7 +253,7 @@ def q_brown_forsythe_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row cross join; the zero-within-variance and k<2 degenerate
     corpora emit nothing in both engines (the guard class the round-7
     degenerate sweep pinned)."""
-    x = _orders(spark, sf_dir).select(
+    x = read_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v"),
     )
@@ -350,7 +347,7 @@ def q_cramers_v_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     The margins are dimension-bounded (statuses × priorities), so the
     grid build is a broadcast cross join of two tiny aggregates;
     single-category corpora emit nothing in both engines."""
-    obs = _orders(spark, sf_dir).groupBy(
+    obs = read_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderstatus").alias("r"), F.col("o_orderpriority").alias("c")
     ).agg(F.count("*").alias("o"))
     rt = obs.groupBy("r").agg(F.sum("o").alias("rtot"))

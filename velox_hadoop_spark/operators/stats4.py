@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 _DAILY_ORACLE = """
@@ -31,12 +32,8 @@ _DAILY_ORACLE = """
 """
 
 
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _orders(spark, sf_dir).groupBy(
+    return read_table(spark, sf_dir, "orders").groupBy(
         F.to_date("o_orderdate").alias("d")
     ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
 
@@ -70,7 +67,7 @@ def q_chi2_gof_weekday_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression instead of a free-order sum of seven per-cell doubles.
     Emits nothing unless all 7 weekdays are populated (degenerate
     corpora skip the test in both engines)."""
-    wd = _orders(spark, sf_dir).groupBy(
+    wd = read_table(spark, sf_dir, "orders").groupBy(
         F.date_format("o_orderdate", "EEEE").alias("weekday")
     ).agg(F.count("*").alias("o"))
     agg = wd.agg(
@@ -393,7 +390,7 @@ def q_cohens_d_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula error both engines share, which is why the means are also
     displayed for a dimensional sanity check). Zero-pooled-variance and
     singleton groups emit nothing in both engines."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     g = (
         li.where(F.col("l_returnflag").isin("A", "R"))

@@ -20,11 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -43,8 +40,8 @@ def q_exists_suppliers_with_returns(spark: SparkSession, sf_dir: str) -> DataFra
     """EXISTS → left-semi join: suppliers with at least one returned
     line. The returnflag filter pushes into the lineitem scan; the semi
     join emits each supplier at most once with no dedup step."""
-    supp = _t(spark, sf_dir, "supplier")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    supp = read_table(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
     return supp.join(
         li, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi"
     ).select("s_suppkey", "s_name", "s_acctbal")
@@ -74,9 +71,9 @@ def q_not_exists_parts_never_ordered(spark: SparkSession, sf_dir: str) -> DataFr
     so keep-unmatched and drop-matched are both exercised. Only
     (l_partkey, l_quantity) are read from the fact side; the quantity
     predicate pushes to the scan below the anti join."""
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(F.col("l_quantity") >= 45)
         .select("l_partkey")
     )
@@ -100,8 +97,8 @@ def q_in_subquery_high_value_customers(spark: SparkSession, sf_dir: str) -> Data
     """IN (subquery) → left-semi join: customers who placed at least
     one order above 450k. The price predicate pushes to the orders
     scan; the semi join needs no distinct on the inner side."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_totalprice") > 450000)
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 450000)
     return cust.join(
         orders, F.col("c_custkey") == F.col("o_custkey"), "left_semi"
     ).select("c_custkey", "c_name", "c_acctbal")
@@ -130,7 +127,7 @@ def q_scalar_subquery_above_nation_avg(spark: SparkSession, sf_dir: str) -> Data
     money, so neither engine's double-summation order can flip a
     boundary row (repo rule: membership never rides raw double sums).
     """
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100).cast("long")
     nat = cust.groupBy(F.col("c_nationkey").alias("nk")).agg(
         F.sum(cents).alias("sum_cents"), F.count("*").alias("n")
@@ -163,8 +160,8 @@ def q_exists_double_correlation_orders(spark: SparkSession, sf_dir: str) -> Data
     semi joins, each with its predicate pushed into its own pruned
     lineitem scan. Both key on l_orderkey, so under one partitioning
     the second semi join reuses the first's shuffle layout."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     deep_discount = li.where(F.col("l_discount") > 0.09).select("l_orderkey")
     returned = li.where(F.col("l_returnflag") == "R").select(
         F.col("l_orderkey").alias("r_orderkey")
@@ -199,7 +196,7 @@ def q_lateral_top2_orders_per_customer(spark: SparkSession, sf_dir: str) -> Data
     distributed form of the oracle's per-customer LIMIT 2."""
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -240,10 +237,10 @@ def q_in_subquery_nested_two_level(spark: SparkSession, sf_dir: str) -> DataFram
     The PROMO part set is SF-proportional, so it carries NO broadcast
     hint — AQE promotes it to broadcast at small SF and falls back to
     a shuffled semi join when it outgrows the budget at 100 TB."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    promo = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select("p_partkey")
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    promo = read_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select("p_partkey")
     promo_orders = li.join(
         promo, F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     ).select("l_orderkey")
@@ -297,8 +294,8 @@ def q_dangling_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FILTERED parent (non-negative balances) to exercise a violated
     relationship — the healthy keys all report 0, which the audit must
     prove, not assume."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
 
     def dangling(
         child: DataFrame,
@@ -315,9 +312,9 @@ def q_dangling_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return n.select(F.lit(label).alias("relationship"), "n_dangling")
 
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    cust = _t(spark, sf_dir, "customer")
+    part = read_table(spark, sf_dir, "part")
+    supp = read_table(spark, sf_dir, "supplier")
+    cust = read_table(spark, sf_dir, "customer")
     checks = [
         dangling(li, "l_orderkey", orders, "o_orderkey", "lineitem.l_orderkey->orders"),
         dangling(li, "l_partkey", part, "p_partkey", "lineitem.l_partkey->part"),

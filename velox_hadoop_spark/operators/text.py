@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 WS = r"\s+"
@@ -105,7 +106,7 @@ _GREP_PATTERN = "s[a-z]+"  # words/suffixes starting with 's' (char-class only: 
     tags=("text", "reference:WordCount.java:38-68"),
 )
 def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return wordcount(docs, "text")
 
 
@@ -123,7 +124,7 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "reference:AggregateWordCount.java:47-88"),
 )
 def q_aggregate_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return grouped_wordcount(docs, "source", "text")
 
 
@@ -145,7 +146,7 @@ def q_pandas_udf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from velox_hadoop_spark.functions.udfs import normalize_text as norm
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     # one UDF evaluation per row: deriving the length from the aliased
     # column (second projection) halves the Arrow boundary traffic vs
     # invoking the UDF again inside length()
@@ -171,7 +172,7 @@ def q_pandas_udf_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "reference:Grep.java:62-100"),
 )
 def q_grep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return grep(docs, "text", _GREP_PATTERN)
 
 
@@ -199,7 +200,7 @@ _GREP_GROUP_PATTERN = "([a-z]+)er"
 def q_grep_capture_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grep with GROUP extraction: per-match capture group 1 is counted
     instead of the whole match (reference RegexMapper GROUP config)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return grep(docs, "text", _GREP_GROUP_PATTERN, group=1)
 
 
@@ -219,7 +220,7 @@ def q_udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp(avg(ln)) builtin identity in the oracle."""
     from velox_hadoop_spark.functions.udfs import geomean
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(geomean("l_extendedprice"), 4).alias("geomean_price")
     )
@@ -270,7 +271,7 @@ def q_udtf_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, ws[i] + " " + ws[i + 1]
 
     spark.udtf.register("word_bigrams_udtf", WordBigrams)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("udtf_docs_v")
     return spark.sql(
         """

@@ -16,6 +16,7 @@ from types import MappingProxyType
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
 from velox_hadoop_spark.plans.registry import register
 
@@ -200,7 +201,7 @@ def fingerprint(df: DataFrame) -> DataFrame:
     tags=("textstats", "extension"),
 )
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return token_stats(docs)
 
 
@@ -259,7 +260,7 @@ def duck_quality_select() -> str:
     tags=("textstats", "quality", "extension"),
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return quality_score(docs)
 
 
@@ -289,7 +290,7 @@ def _duck_lang_sql() -> str:
     tags=("textstats", "langid", "extension"),
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return lang_id(docs)
 
 
@@ -306,7 +307,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("textstats", "fingerprint", "extension"),
 )
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return fingerprint(docs)
 
 
@@ -388,7 +389,7 @@ def chunk_documents(
 )
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping CHUNK_TOKENS-token chunks (stride _STRIDE) per doc."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return chunk_documents(docs)
 
 
@@ -426,7 +427,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 )
 def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Email/long-number redaction over the corpus."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return redact_pii(docs).select("doc_id", "redacted_text", "was_redacted")
 
 
@@ -492,7 +493,7 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 )
 def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-bigram and top-bigram fractions per document."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     return repetition_stats(docs)
 
 
@@ -512,7 +513,7 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source temperature-sampling weights (n^0.5 normalized)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     per_src = docs.groupBy("source").agg(F.count("*").alias("n_docs"))
     z = per_src.agg(F.sum(F.pow("n_docs", F.lit(0.5))).alias("z"))
     return per_src.crossJoin(F.broadcast(z)).select(
@@ -558,7 +559,7 @@ def q_charclass_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     Char-class counts are length-difference expressions (length minus
     length after stripping the class) — pure codegen, no explode, no
     per-char processing; the group-by shuffles 4 integers per doc."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     n_chars = F.length("text")
     def strip_len(pat: str):
         return F.length("text") - F.length(F.regexp_replace(F.col("text"), pat, ""))

@@ -11,11 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -47,7 +44,7 @@ def q_resample_weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     both key on the week, so the table shuffles once on wk and the
     full-frame window never crosses partitions. Raw price values only
     — no sums, no rounding seams."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     wk = F.date_trunc("week", F.col("o_orderdate").cast("date")).cast("date")
     w = (
         Window.partitionBy("wk")
@@ -93,8 +90,6 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval joins is confined to a key). Time arithmetic rides
     integer microseconds (unix_micros / epoch_us), so the strict
     boundary cannot wobble in double."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     # ts may arrive as TIMESTAMP_NTZ (parquet ns sources): unix_micros
     # requires an instant, and the driver contract pins the session to
@@ -147,8 +142,6 @@ def q_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded running COUNT(DISTINCT) into two keyed aggregates plus
     a prefix sum over |days| rows (the only single-partition step is
     bounded by the calendar, not the data)."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("d")

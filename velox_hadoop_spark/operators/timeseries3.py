@@ -11,16 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 _OVERLAP_US = 300_000_000  # 5 minutes in microseconds (shared with
 # interval_overlap_pairs — the banded variant must answer identically)
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from velox_hadoop_spark.catalog import read_table
-
-    return read_table(spark, sf_dir, "events")
 
 
 @register(
@@ -50,7 +45,7 @@ def q_interval_overlap_pairs_banded(spark: SparkSession, sf_dir: str) -> DataFra
     bounded by events-per-(user, 5-minute bucket), not events-per-user.
     The oracle is the plain interval join: the banding is a physical
     optimization and must not change the answer."""
-    iv = _events(spark, sf_dir).select(
+    iv = read_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"),
@@ -125,7 +120,7 @@ def q_time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS t_last; a max(t_us) here would stop one interval short and
     inflate the average). Single-event users (no interval, zero-width
     step function) are excluded by contract."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     iv = ev.select(
         "user_id",
@@ -179,7 +174,7 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the key, linear in rows, no correlated lookup per row. Purchase
     rows are pre-deduped per (user, ts) by max value, pinning the
     same-(key, ts) tie exactly as the backward kernel does."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     views = ev.where(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -260,7 +255,7 @@ def q_watermark_late_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale — and folded with the within-bucket running max (window
     keyed on bucket — partition-parallel). The oracle states the
     plain global window; the staged plan must answer identically."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     bucket = (F.col("event_id") / 1_000_000).cast("long")
     base = ev.select(
@@ -343,7 +338,7 @@ def q_session_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id) — the repo's documented sessionization tiebreak: a
     ts-only ROWS frame would make session membership of same-timestamp
     events partition-order-dependent."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
     marks = ev.select(
@@ -406,7 +401,7 @@ def q_data_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 60-minute SLA verdict. The global max is a 1-row broadcast
     scalar; per-type stats are one grouped aggregate — the monitoring
     query every ingestion pipeline runs."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(
         F.max("ts").alias("latest_ts"), F.count("*").alias("n_events")
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.join import asof_join
 from velox_hadoop_spark.plans.registry import register
 
@@ -32,14 +33,6 @@ MACD_SIGNAL = 2.0 / 10.0
 MACD_HORIZON = 60  # days; residual tail weight (1-a)^60 < 0.5% for all three
 
 ASOF_TOLERANCE_S = 600  # tolerance-bounded as-of: 10 minutes
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +73,7 @@ def q_asof_join_grouped_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     (independent formulation, not a mirror of the fill window). Views
     on the same (user, day, ts) are pre-collapsed by max value, the
     kernel's documented tie rule."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
@@ -144,7 +137,7 @@ def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — no second join, no correlated lookup. The oracle is the
     independent correlated-subquery formulation with the window bound
     in the WHERE clause."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -248,7 +241,7 @@ def q_grouped_locf_daily_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine (a few thousand rows per group even at decades of days).
     Leading days before a group's first observation are dropped (no
     value to carry), exactly as the oracle's IS NOT NULL does."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     # round-11 money completion: the daily mean folds exact integer
     # cents (free-order-safe), one pinned double divide chain mirrored
     # in the oracle
@@ -413,7 +406,7 @@ def q_macd_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME ordered sequential fold (see trunc_ema_ordered /
     _duck_trunc_ema) — bit-identical doubles end to end, so the 4dp
     rounding is pure display, not a parity crutch."""
-    daily = _orders(spark, sf_dir).groupBy(
+    daily = read_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(
         (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0).alias("rev")
@@ -486,7 +479,7 @@ def q_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, after a single grouped aggregate over the fact table.
     A plain-Python brute-force recompute pins the formula
     independently of the mirrored oracle."""
-    daily = _orders(spark, sf_dir).groupBy(
+    daily = read_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"),
@@ -574,7 +567,7 @@ def q_brown_double_smoothing_daily(spark: SparkSession, sf_dir: str) -> DataFram
     free-order SUM flipped this query's second pass on a 4dp rounding
     boundary at sf0.01, which is why the kernel exists). Brute-force
     recompute in tests/test_round8_parity.py."""
-    daily = _orders(spark, sf_dir).groupBy(
+    daily = read_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(
         (F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0).alias("rev")
@@ -637,7 +630,7 @@ def q_local_extrema_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor never qualify in either engine (NULL comparisons are
     not-true). One calendar-bounded ordered window over the day
     spine."""
-    daily = _orders(spark, sf_dir).groupBy(
+    daily = read_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c")
@@ -708,7 +701,7 @@ def q_time_to_convert_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame
     lookup (the first-purchase-after-view is a groupBy over the
     range-joined pairs, which AQE keeps a broadcast of the small
     first-view side)."""
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     fv = (
         ev.where(F.col("event_type") == "view")
         .groupBy("user_id")
@@ -799,7 +792,7 @@ def q_rolling_ols_slope_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
     EMA kernel handles does not arise). One calendar-bounded range
     window over the day spine; single-day windows emit nothing (zero
     x-variance guard, both engines)."""
-    daily = _orders(spark, sf_dir).groupBy(
+    daily = read_table(spark, sf_dir, "orders").groupBy(
         F.col("o_orderdate").cast("date").alias("d")
     ).agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 ZSCORE_WINDOW_D = 30  # trailing window (days), current day excluded
@@ -34,12 +35,8 @@ _DAILY_ORACLE = """
 """
 
 
-def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/orders.parquet")
-
-
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _orders(spark, sf_dir).groupBy(
+    return read_table(spark, sf_dir, "orders").groupBy(
         F.to_date("o_orderdate").alias("d")
     ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
 
@@ -70,7 +67,7 @@ def q_vwap_weekly_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ 2⁵³, so their sum is order-independent and exact), making the
     displayed ratio a deterministic double in both engines. One
     partial+final aggregate keyed by the calendar week."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.date_trunc("week", F.col("l_shipdate")).cast("date").alias("week_start")
     ).agg(
@@ -311,8 +308,8 @@ def q_open_order_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar spine — never a day × open-order join, which is the
     quadratic trap at scale. Final backlog is 0 by construction (every
     order with lineitems eventually ships), pinned in tests."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = _orders(spark, sf_dir)
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
     closes = li.groupBy("l_orderkey").agg(
         F.max(F.to_date("l_shipdate")).alias("cd")
     )
@@ -379,7 +376,7 @@ def q_peak_hourly_rate_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     range window is keyed per user (bounded by one user's activity) on
     integer epoch seconds; counts are exact, so the whole row is
     integer-deterministic. One shuffle on user_id."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_table(spark, sf_dir, "events")
     e = ev.select(
         "user_id", F.unix_timestamp(F.col("ts").cast("timestamp")).alias("es")
     )

@@ -26,11 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -59,8 +56,8 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once and reused for both sides (persist would be overkill
     at this size; Spark reuses the exchange under AQE).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem")
+    supp = read_table(spark, sf_dir, "supplier")
     # revenue as an EXACT integer (1e-4 units): the winner is chosen by
     # an equality against max(revenue), so a rounded order-dependent
     # double sum at a half-cent boundary could crown different
@@ -113,8 +110,8 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed over ALL lineitems of the part (matching the
     correlation, which does not repeat the brand predicate).
     """
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     per_part_avg = li.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
         (0.5 * F.avg("l_quantity")).alias("half_avg_qty")
     )
@@ -159,9 +156,9 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier. The part-name filter broadcasts; the only wide shuffle is
     the (suppkey, partkey) aggregation of the date-pruned fact slice.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
+    supp = read_table(spark, sf_dir, "supplier")
     red = part.where(F.col("p_name").like("%red%")).select("p_partkey")
     bulk = (
         li.where(
@@ -210,9 +207,9 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier is the only late one (n_late = 1). This replaces two
     correlated scans of lineitem with one extra shuffle on l_orderkey.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
+    li = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    supp = read_table(spark, sf_dir, "supplier")
     f_orders = orders.where(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -31,8 +32,8 @@ from velox_hadoop_spark.plans.registry import register
 )
 def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 analog: orders (in 1996) having a late-shipping item."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     o94 = orders.where(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
@@ -72,10 +73,10 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 analog: top-20 customers by returned-item revenue."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         li.where(F.col("l_returnflag") == "R")
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -117,8 +118,8 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 analog: conditional counts (CASE-in-SUM) per group."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.where(
@@ -160,8 +161,8 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 analog: promo revenue share (ratio of conditional sums
     over the exact 1e4 revenue grid)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     rev4 = F.round(
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 10000
     ).cast("long")
@@ -201,7 +202,7 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark `percentile` ≡ DuckDB
     `quantile_cont`)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.expr("percentile(l_quantity, 0.25)"), 4).alias("q25"),
         F.round(F.expr("percentile(l_quantity, 0.5)"), 4).alias("q50"),
@@ -225,7 +226,7 @@ def q_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ranking_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile / percent_rank / cume_dist / first_value in one window."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return customer.select(
         "c_nationkey",
@@ -259,7 +260,7 @@ def q_ranking_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function breadth: case, pad, reverse, edit distance, find."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     return customer.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -297,7 +298,7 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The sorted array makes the fold-sum's addition order identical in
     both engines, so the double compares exactly."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     per_order = li.groupBy("l_orderkey").agg(
         F.sort_array(F.collect_list("l_quantity")).alias("qs")
     )
@@ -361,8 +362,8 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounds audit of the HLL++ distinct-part sketch: per supplier
     nation, the exact distinct count (oracle-verified) and a boolean
     asserting the sketch estimate landed within the 10% contract."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
+    supp = read_table(spark, sf_dir, "supplier")
     return (
         li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_nationkey")
@@ -431,7 +432,7 @@ def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounds audit of the GK percentile sketch: per return flag, the
     exact p50/p95/p99 (oracle-verified) and booleans asserting each
     sketch estimate landed within 1% of exact."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     apcts = F.expr(
         "approx_percentile(l_extendedprice, array(0.5, 0.95, 0.99), 10000)"
     )
@@ -485,7 +486,7 @@ def q_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and Sunday=0 day-of-week normalization (Spark's dayofweek is
     Sunday=1). All JVM codegen'd expressions on a pushed-down
     one-month scan."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     d = F.col("o_orderdate").cast("date")
     return orders.where(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1995-02-01")
@@ -529,7 +530,7 @@ def q_regression_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     regr_* family after rounding."""
     from velox_hadoop_spark.operators.stats2 import safe_corr
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.round(F.regr_slope("l_extendedprice", "l_quantity"), 4).alias("slope"),

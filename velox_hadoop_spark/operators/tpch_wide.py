@@ -25,11 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table, register_views
 from velox_hadoop_spark.plans.registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 @register(
@@ -54,9 +51,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 analog: shipping volume between a nation pair, per year."""
-    li, orders = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
-    supp, cust = _t(spark, sf_dir, "supplier"), _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li, orders = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "orders")
+    supp, cust = read_table(spark, sf_dir, "supplier"), read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
     n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
     joined = (
@@ -105,9 +102,9 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 analog: profit per supplier nation per year for PROMO parts
     (supply cost modeled as 40% of retail price — no partsupp table)."""
-    li, part = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    supp, orders = _t(spark, sf_dir, "supplier"), _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
+    li, part = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "part")
+    supp, orders = read_table(spark, sf_dir, "supplier"), read_table(spark, sf_dir, "orders")
+    nation = read_table(spark, sf_dir, "nation")
     joined = (
         li.join(part.where(F.col("p_type") == "PROMO"), F.col("l_partkey") == F.col("p_partkey"))
         .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -151,7 +148,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11 analog: parts whose NATION_3-supplied value exceeds 0.2% of
     the total (share-of-total via broadcast scalar, no driver collect)."""
-    li, supp = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "supplier")
+    li, supp = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "supplier")
     # value as an EXACT integer (1e-4 units) and the 0.2%-of-total
     # membership as v_int * 500 > total_int — pure integer arithmetic
     # in both engines, so the HAVING-style cut cannot flip with double
@@ -193,7 +190,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 analog: distribution of per-customer order counts, zero-order
     customers included via the left outer join."""
-    cust, orders = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
+    cust, orders = read_table(spark, sf_dir, "customer"), read_table(spark, sf_dir, "orders")
     per_cust = (
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -219,7 +216,7 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 analog: distinct supplier count per (brand, type, size) with
     NOT-style exclusions (supplier-part pairs derived from lineitem)."""
-    li, part = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
+    li, part = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "part")
     p = part.where(
         (F.col("p_brand") != "Brand#5")
         & (F.col("p_type") != "PROMO")
@@ -251,8 +248,8 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 analog: top large-volume orders (grouped HAVING threshold,
     join back to orders/customer, total-price top-100)."""
-    li, orders = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li, orders = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
@@ -292,7 +289,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated Brand#1..Brand#25 domain so every arm matches rows (the
     classic Brand#34 literal would leave the third arm dead and its
     pushdown behavior untested)."""
-    li, part = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
+    li, part = read_table(spark, sf_dir, "lineitem"), read_table(spark, sf_dir, "part")
     j = li.join(part, F.col("l_partkey") == F.col("p_partkey"))
     arm = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
@@ -346,7 +343,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22 analog: above-average-balance customers with no recent orders,
     grouped by a derived country code (scalar avg via broadcast,
     no-orders via left_anti)."""
-    cust, orders = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
+    cust, orders = read_table(spark, sf_dir, "customer"), read_table(spark, sf_dir, "orders")
     bal_c = F.round(F.col("c_acctbal") * 100).cast("long")
     avg_bal = cust.where(F.col("c_acctbal") > 0.0).agg(
         F.sum(bal_c).cast("decimal(38,0)").alias("s_c"),
@@ -406,9 +403,7 @@ def q_sql_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL text through spark.sql over registered catalog views — the
     identical string is the DuckDB oracle, so this also pins the SQL
     dialect subset the engine promises to be portable."""
-    from velox_hadoop_spark.catalog import Catalog
-
-    Catalog(spark, sf_dir).register_views()
+    register_views(spark, sf_dir)
     return spark.sql(_Q8_SQL)
 
 
@@ -446,11 +441,11 @@ def q_nation_trade_flow_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality is the square of the nation count regardless of fact
     volume.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    nation = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    nation = read_table(spark, sf_dir, "nation")
     sn = nation.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -542,10 +537,10 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange-free. No cartesian. Top-100 compiles to
     TakeOrderedAndProject.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    nation, region = _t(spark, sf_dir, "nation"), _t(spark, sf_dir, "region")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
+    supp = read_table(spark, sf_dir, "supplier")
+    nation, region = read_table(spark, sf_dir, "nation"), read_table(spark, sf_dir, "region")
 
     ps = li.select("l_partkey", "l_suppkey").distinct()
     p_f = part.where(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -58,7 +59,7 @@ def running_total(df: DataFrame, key: str, order: list[str], value: str, out: st
 def q_window_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer order timeline: running total, lag/lead, 3-row moving
     average, sequence number — one shuffle on o_custkey serves all four."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     w_ord = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_ma3 = w_ord.rowsBetween(-2, Window.currentRow)
@@ -106,7 +107,7 @@ def q_window_rank_in_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned rank/dense_rank + deviation from partition mean
     (the mean deviation rides exact integer cents — see the oracle
     comment)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     w_all = Window.partitionBy("c_nationkey")
     bal_c = F.round(F.col("c_acctbal") * 100).cast("long")
@@ -146,7 +147,7 @@ def q_window_trailing_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
     days, not 30 ROWS), identical to the oracle's INTERVAL frame
     including duplicate-date handling (range frames include peers).
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy(F.col("o_orderdate").cast("timestamp").cast("long"))
@@ -201,8 +202,6 @@ def latest_per_key(df: DataFrame, key: str, order: str, tiebreak: str) -> DataFr
 def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each user's most recent event (ties broken by event_id) — the
     one-aggregate CDC compaction, not a row_number window."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", F.round("value", 2).alias("value")
     )
@@ -234,8 +233,6 @@ def q_event_gaps_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     next-event predicate — the offset-window surface. One shuffle on
     user_id serves both window functions AND the final aggregate
     (subset-distribution reuse)."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = ev.select(
@@ -282,8 +279,6 @@ def q_event_gaps_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Account-balance quartile boundaries per market segment (ntile
     surface; deterministic tiling via the custkey tiebreak)."""
-    from velox_hadoop_spark.catalog import read_table
-
     cust = read_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     tiled = cust.select(
@@ -323,8 +318,6 @@ def q_customer_balance_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day distinct active users per active day."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events")
     du = ev.select(
         F.date_trunc("day", F.col("ts")).cast("date").alias("d"), "user_id"
@@ -376,8 +369,6 @@ def scd2_history(
 def q_scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Versioned user-state history: every event opens a validity
     interval closed by the user's next event."""
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", F.col("event_type").alias("state")
     )
@@ -402,8 +393,6 @@ def q_supplier_balance_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     percent_rank + cume_dist (the distribution-window surface) and a
     top-decile flag derived in-plan. One shuffle on the nation key
     serves all three expressions."""
-    from velox_hadoop_spark.catalog import read_table
-
     sup = read_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
     cume = F.cume_dist().over(w)
@@ -441,8 +430,6 @@ def q_bitmap_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx sketches (HLL) give up exactness for. Oracle: plain
     COUNT(DISTINCT).
     """
-    from velox_hadoop_spark.catalog import read_table
-
     ev = read_table(spark, sf_dir, "events").select(
         F.col("ts").cast("date").cast("string").alias("day"), "user_id"
     )
@@ -486,7 +473,7 @@ def q_monthly_revenue_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB a month's double sum has ulp > a cent and is order-
     dependent), so the delta is an exact integer subtraction and only
     the display divides to dollars."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     monthly = (
         orders.groupBy(
             F.year(F.col("o_orderdate").cast("date")).alias("y"),
@@ -543,8 +530,6 @@ def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ten-thousandths and the shares use the engine-identical floor
     rounding, so no boundary tie can flip a digit.
     """
-    from velox_hadoop_spark.catalog import read_table
-
     li = read_table(spark, sf_dir, "lineitem")
     supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = read_table(spark, sf_dir, "nation")

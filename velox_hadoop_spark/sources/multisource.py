@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.operators.setops import _snap_bucket_duck
 from velox_hadoop_spark.functions.money import sum_money_cents
 from velox_hadoop_spark.plans.registry import register
@@ -68,7 +69,7 @@ def q_tsv_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import tempfile
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -117,7 +118,7 @@ def q_jsonl_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import tempfile
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -166,7 +167,7 @@ def q_orc_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import tempfile
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -240,7 +241,7 @@ def q_partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import tempfile
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
     # per-QUERY sink dir: sharing one path with the DPP query would let
@@ -286,7 +287,7 @@ def q_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from velox_hadoop_spark.functions.hashing import spark_md5_int60, seeded
     from velox_hadoop_spark.operators.setops import SNAP_SEED
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = read_table(spark, sf_dir, "orders")
     b = F.expr(spark_md5_int60(seeded("o_orderkey", SNAP_SEED))) % 100
     bucketed = orders.withColumn("b", b)
     legacy = bucketed.where(F.col("b") < 90).select("o_orderkey", "o_totalprice")
@@ -321,7 +322,7 @@ def q_dynamic_partition_prune_join(spark: SparkSession, sf_dir: str) -> DataFram
     import hashlib
     import tempfile
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -334,7 +335,7 @@ def q_dynamic_partition_prune_join(spark: SparkSession, sf_dir: str) -> DataFram
     # pruning-has-benefit check — a bare 2-row LocalRelation is folded
     # before DPP runs and no pruning subquery gets injected.
     dim = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        read_table(spark, sf_dir, "orders")
         .select("o_orderpriority")
         .where(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         .distinct()
@@ -372,7 +373,7 @@ def q_federated_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import tempfile
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]

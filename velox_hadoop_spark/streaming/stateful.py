@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions.vectors import round_half_away
 from velox_hadoop_spark.plans.registry import register
 
@@ -123,8 +124,6 @@ def _register():
     )
     def q_stateful_totals_batch_twin(spark, sf_dir):
         """Final state of the custom stateful operator, batch form."""
-        from velox_hadoop_spark.catalog import read_table
-
         ev = read_table(spark, sf_dir, "events").select("user_id", "value")
         return batch_user_totals(ev)
 
@@ -310,8 +309,6 @@ def _register_sessions():
     )
     def q_stateful_sessions_batch_twin(spark, sf_dir):
         """Final per-user session summary from the shared kernel."""
-        from velox_hadoop_spark.catalog import read_table
-
         ev = read_table(spark, sf_dir, "events").select(
             "user_id", "event_id", "ts", "value"
         )

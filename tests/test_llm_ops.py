@@ -379,33 +379,43 @@ def test_lsh_band_cap_drops_hot_bucket(spark):
     assert lsh_candidate_pairs(bands, "doc_id", max_bucket=12).count() == 12 * 11 // 2
 
 
-def test_connected_components_distributed_matches_unionfind(spark):
-    """driver_threshold=0 forces the label-propagation branch; both
-    regimes must produce identical (node, lbl) labelings."""
-    from velox_hadoop_spark.operators.dedup import connected_components
+def test_connected_components_distributed_matches_unionfind(spark, monkeypatch):
+    """CC_DRIVER_PAIRS = 0 forces the distributed branch; both regimes
+    must produce identical (node, lbl) labelings, including on a
+    60-node chain (deeper than any fixed pass budget of per-pass label
+    propagation) and a self-pair, which both regimes ignore."""
+    from velox_hadoop_spark.operators import graph
+    from velox_hadoop_spark.operators.graph import connected_components
 
-    # two components {1,2,3,4} and {10,11}, plus a chain 20-21-22
-    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)]
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    # two components {1,2,3,4} and {10,11}, a chain 20-21-22, a
+    # 60-node chain 100..159, and a self-pair on a node no other pair
+    # touches
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (30, 30)]
+    edges += [(i, i + 1) for i in range(100, 159)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     uf = {tuple(r) for r in connected_components(pairs).collect()}
-    lp = {
-        tuple(r)
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
-    assert lp == uf
-    assert {(1, 1), (4, 1), (11, 10), (22, 20)} <= lp
+    monkeypatch.setattr(graph, "CC_DRIVER_PAIRS", 0)
+    dist = {tuple(r) for r in connected_components(pairs).collect()}
+    assert dist == uf
+    assert {(1, 1), (4, 1), (11, 10), (22, 20), (159, 100)} <= dist
+    assert not any(n == 30 for n, _ in dist)
+    assert len(dist) == 4 + 2 + 3 + 60
 
 
-def test_connected_components_raises_without_fixed_point(spark):
+def test_connected_components_raises_without_fixed_point(spark, monkeypatch):
     import pytest as _pytest
 
-    from velox_hadoop_spark.operators.dedup import connected_components
+    from velox_hadoop_spark.operators import graph
+    from velox_hadoop_spark.operators.graph import connected_components
 
-    # a 6-node chain needs ~3 min-label passes; 1 pass cannot converge
+    # the distributed loop stops only after a pass pair leaves the edge
+    # set unchanged, so one pass pair can never prove a fixed point
     chain = [(i, i + 1) for i in range(6)]
     pairs = spark.createDataFrame(chain, ["id_a", "id_b"])
+    monkeypatch.setattr(graph, "CC_DRIVER_PAIRS", 0)
+    monkeypatch.setattr(graph, "CC_MAX_PASSES", 1)
     with _pytest.raises(RuntimeError, match="no fixed point"):
-        connected_components(pairs, driver_threshold=0, max_iters=1)
+        connected_components(pairs)
 
 
 @pytest.mark.parametrize(

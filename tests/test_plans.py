@@ -649,6 +649,54 @@ def test_catalog_tables_read_only_through_read_table():
     assert not bad, "catalog table read outside catalog.read_table: " + ", ".join(bad)
 
 
+def test_no_unset_kernel_options():
+    """Only the options a caller sets: every defaulted parameter of a
+    module-level function in the package is passed, by keyword or by
+    position, by some call in the package, the tests, the scripts, the
+    benchmark or the driver entry points. Calls are matched by function
+    name. A default nobody overrides is a constant dressed as an
+    option: it widens every signature and hides which values the
+    plans actually run with."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "velox_hadoop_spark"
+    sources = [
+        p
+        for d in ("velox_hadoop_spark", "tests", "scripts", "perfbench")
+        for p in sorted((root / d).rglob("*.py"))
+    ] + [root / "bench.py", root / "__spark_entry__.py"]
+    n_positional: dict[str, int] = {}
+    keywords: dict[str, set[str]] = {}
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            if name is None:
+                continue
+            n = sum(not isinstance(a, ast.Starred) for a in node.args)
+            n_positional[name] = max(n_positional.get(name, 0), n)
+            keywords.setdefault(name, set()).update(k.arg for k in node.keywords)
+    unset = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            defaulted = [(i, p.arg) for i, p in enumerate(pos)][len(pos) - len(a.defaults):]
+            defaulted += [
+                (None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            for i, arg in defaulted:
+                by_position = i is not None and i < n_positional.get(fn.name, 0)
+                if not by_position and arg not in keywords.get(fn.name, ()):
+                    unset.append(f"{path.relative_to(root)}:{fn.lineno} {fn.name}:{arg}")
+    assert not unset, f"{len(unset)} defaulted parameters no caller sets: " + ", ".join(unset)
+
+
 def test_ts_nanos_probe_recurses_partitioned_layout(tmp_path):
     """ts_stored_as_nanos must find part files nested in key=value
     subdirectories (partitioned writes): a top-level-only listing

@@ -447,18 +447,20 @@ def test_intra_cluster_jaccard_brute_force(spark):
 
 
 def test_lss_equals_union_find_on_lsh_graph(spark):
-    """connected_components_lss and dedup.connected_components (driver
-    union-find / label propagation) must assign IDENTICAL labels on the
-    real LSH candidate-pair graph — two independent algorithms, one
-    truth. This is the cross-implementation check the recursive-CTE
-    oracle can't give (it mirrors only one edge derivation)."""
+    """connected_components_lss and connected_components' driver
+    union-find regime must assign IDENTICAL labels on the real LSH
+    candidate-pair graph — two independent algorithms, one truth. This
+    is the cross-implementation check the recursive-CTE oracle can't
+    give (it mirrors only one edge derivation)."""
     from velox_hadoop_spark.operators.dedup import (
-        connected_components,
         lsh_bands,
         lsh_candidate_pairs,
         minhash_signature_inline,
     )
-    from velox_hadoop_spark.operators.graph import connected_components_lss
+    from velox_hadoop_spark.operators.graph import (
+        connected_components,
+        connected_components_lss,
+    )
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     sig = minhash_signature_inline(docs, "doc_id", "text")

@@ -79,29 +79,31 @@ def test_cume_dist_bounds_and_top_decile(spark):
 
 
 def test_skyline_multi_matches_bruteforce(spark):
-    """The rewritten d>=3 kernel (single bounded-collect phase 1 +
-    sort-based O(n·k) global frontier scan) must match an O(n²)
-    dominance scan on adversarial data: small value domains (many
-    partial ties), mixed minimize/maximize directions, several
-    partitions."""
+    """The d>=3 kernel (sort-based frontier scan in both the per-batch
+    local phase and the global phase) must match an O(n²) dominance
+    scan on adversarial data: small value domains (many partial ties),
+    mixed minimize/maximize directions, several partitions. The second
+    input streams in 64-row Arrow batches, so the running frontier
+    carries across batches, and is anti-correlated: 1,161 frontier
+    points with c + d - b = 190 at a = 0, plus a dominated twin
+    (1, 0, c, d) of each b = 0 point. The twins sort after the whole
+    frontier, two 512-row blocks after their only dominators, so the
+    scan must carry its frontier across blocks."""
     from velox_hadoop_spark.operators.skyline import skyline_multi
 
-    rows = [
+    mixed = [
         (i % 7, (i * 3) % 11, (i * 5) % 13, (i * i) % 17)
         for i in range(500)
     ]
-    df = spark.createDataFrame(
-        rows, "a int, b int, c int, d int"
-    ).repartition(9)
-    got = {
-        tuple(r)
-        for r in skyline_multi(
-            df, minimize=["a", "b"], maximize=["c", "d"]
-        ).collect()
-    }
-    pts = set(rows)
+    front = [
+        (0, b, c, 190 + b - c)
+        for b in range(6)
+        for c in range(200)
+        if 190 + b - c < 200
+    ]
+    anti = front + [(1, 0, c, d) for _, b, c, d in front if b == 0]
 
-    def dominated(p):
+    def dominated(p, pts):
         a, b, c, d = p
         return any(
             (a2 <= a and b2 <= b and c2 >= c and d2 >= d)
@@ -109,5 +111,23 @@ def test_skyline_multi_matches_bruteforce(spark):
             for (a2, b2, c2, d2) in pts
         )
 
-    want = {p for p in pts if not dominated(p)}
-    assert got == want
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    for rows, batch in ((mixed, saved), (anti, "64")):
+        pts = set(rows)
+        want = {p for p in pts if not dominated(p, pts)}
+        df = spark.createDataFrame(
+            rows, "a int, b int, c int, d int"
+        ).repartition(9 if rows is mixed else 2)
+        spark.conf.set(key, batch)
+        try:
+            got = {
+                tuple(r)
+                for r in skyline_multi(
+                    df, minimize=["a", "b"], maximize=["c", "d"]
+                ).collect()
+            }
+        finally:
+            spark.conf.set(key, saved)
+        assert got == want
+    assert len(want) == len(front)

@@ -38,8 +38,8 @@ TABLES = (
 BROADCASTABLE = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
-def ts_stored_as_nanos(path: str, column: str = "ts") -> bool:
-    """True when the parquet source stores ``column`` as TIMESTAMP(NANOS).
+def ts_stored_as_nanos(path: str) -> bool:
+    """True when the parquet source stores ``ts`` as TIMESTAMP(NANOS).
 
     Probes the parquet footer with pyarrow — no Spark conf required —
     so callers can decide the read shape WITHOUT mutating session
@@ -73,7 +73,7 @@ def ts_stored_as_nanos(path: str, column: str = "ts") -> bool:
             return False
     try:
         pf = pq.ParquetFile(target)
-        field = pf.schema_arrow.field(column)
+        field = pf.schema_arrow.field("ts")
     except (OSError, KeyError):
         return False
     if getattr(field.type, "unit", None) != "ns":
@@ -88,7 +88,7 @@ def ts_stored_as_nanos(path: str, column: str = "ts") -> bool:
     try:
         for i in range(len(pf.schema)):
             leaf = pf.schema.column(i)
-            if leaf.name == column and leaf.path == column:
+            if leaf.name == "ts" and leaf.path == "ts":
                 if leaf.physical_type == "INT96":
                     return False
                 break

@@ -56,15 +56,6 @@ def duck_bucket(key: str, seed: int | str, n: int = 100) -> str:
 # Word k-gram shingling (whitespace tokens, k-word windows, space-joined).
 # Guarded so docs shorter than k words yield an empty shingle set.
 
-def spark_shingles(text_col: str, k: int) -> str:
-    """Spark SQL fragment: array<string> of word k-gram shingles."""
-    return (
-        f"CASE WHEN size(split({text_col}, '\\\\s+')) < {k} THEN array() "
-        f"ELSE transform(sequence(1, size(split({text_col}, '\\\\s+')) - {k - 1}), "
-        f"i -> concat_ws(' ', slice(split({text_col}, '\\\\s+'), i, {k}))) END"
-    )
-
-
 def spark_shingles_from_words(words_col: str, k: int) -> str:
     """Shingles from a pre-split words-array column.
 

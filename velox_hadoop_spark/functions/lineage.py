@@ -6,7 +6,7 @@ touches that RDD, so a loop that checkpoints every few passes leaks one
 O(|V|)-row block per checkpoint until driver GC collects the frame.
 The RDD is reachable through the checkpointed plan's LogicalRDD node;
 ``release`` frees both layers so superseded iteration frames actually
-leave executor memory (PageRank / BFS / label-propagation loops).
+leave executor memory (PageRank / BFS / large-star/small-star loops).
 
 Freeing a superseded checkpoint removes the recompute anchor for any
 NEWER cached-but-evicted partition that lineage-traces through it.

@@ -1,14 +1,12 @@
-"""The repo money rule as ONE pair of expressions.
+"""The repo money rule as one Spark expression.
 
 Every registered money total folds EXACT integer cents: the per-row
 cent quantization is lossless on 2-dp money columns, the BIGINT sum is
 associative in ANY accumulation order — Spark partial aggregation,
 DuckDB scan order, a streaming state-store merge — and SQL-sum NULL
 semantics ride through (the sum of zero non-null rows is NULL). The
-round-10 review found the rule copy-pasted six times and three query
-families not yet converted; this module is the single home both
-engines' forms interpolate from, so a future change to the
-quantization cannot silently desynchronize a subset of oracles.
+DuckDB oracles spell the same fold inline as
+``ROUND(CAST(sum(CAST(round(x * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2)``.
 """
 
 from __future__ import annotations
@@ -22,10 +20,3 @@ def sum_money_cents(col: str) -> Column:
     cents = F.round(F.col(col) * 100).cast("long")
     return F.round(F.sum(cents).cast("double") / 100.0, 2)
 
-
-def duck_sum_money_cents(col: str) -> str:
-    """The DuckDB mirror of ``sum_money_cents`` (SQL fragment)."""
-    return (
-        f"ROUND(CAST(sum(CAST(round({col} * 100) AS BIGINT)) AS DOUBLE)"
-        " / 100.0, 2)"
-    )

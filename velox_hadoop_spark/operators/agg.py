@@ -30,25 +30,16 @@ from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
-def grouped_sum(df: DataFrame, keys: list[str], value: str, out: str = "total") -> DataFrame:
-    return df.groupBy(*keys).agg(F.sum(value).alias(out))
-
-
 def sorted_csv_agg(value) -> "F.Column":
     """Aggregate expression: group values as a deterministic
     comma-joined string (reference Step1Reducer semantics, made
     order-stable; the repo-standard hashable form for collected
     lists). Single source for the expression so the registered queries
-    and the frame-level helper below cannot drift."""
+    cannot drift."""
     return F.array_join(
         F.transform(F.array_sort(F.collect_list(value)), lambda x: x.cast("string")),
         ",",
     )
-
-
-def collect_sorted_csv(df: DataFrame, key: str, value: str, out: str = "items") -> DataFrame:
-    """Frame-level convenience over ``sorted_csv_agg``."""
-    return df.groupBy(key).agg(sorted_csv_agg(value).alias(out))
 
 
 # ---------------------------------------------------------------------------

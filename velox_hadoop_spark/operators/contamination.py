@@ -40,20 +40,17 @@ PACK_BUDGET = 256       # tokens per packed training sequence
 def contamination_scan(
     train: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = DECONTAM_K,
 ) -> DataFrame:
     """Per-training-doc count of distinct benchmark k-grams it contains.
 
     Only contaminated docs (≥ 1 hit) are emitted. The benchmark shingle
     set is deduped and broadcast — the training corpus never shuffles.
     """
-    bench_sh = shingle_set(benchmark, id_col, text_col, k).select("shingle").distinct()
-    train_sh = shingle_set(train, id_col, text_col, k)
+    bench_sh = shingle_set(benchmark, "doc_id", "text", DECONTAM_K).select("shingle").distinct()
+    train_sh = shingle_set(train, "doc_id", "text", DECONTAM_K)
     return (
         train_sh.join(F.broadcast(bench_sh), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_hit_ngrams"))
     )
 
@@ -87,8 +84,6 @@ def q_benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def tfidf_top_terms(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_k: int = 3,
 ) -> DataFrame:
     """Top-k TF-IDF terms per document (ties by term asc).
@@ -101,22 +96,22 @@ def tfidf_top_terms(
     1-row N aggregate keeps a forced broadcast.
     """
     tokens = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("term")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), r"\s+")).alias("term")
     ).where(F.col("term") != "")
-    tf = tokens.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    tf = tokens.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     # N as a broadcast 1-row aggregate (scalar-subquery shape) — the
     # plan stays fully lazy, no driver action at construction time.
-    n_docs = docs.agg(F.countDistinct(id_col).cast("double").alias("n_docs"))
-    df_ = tokens.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
+    n_docs = docs.agg(F.countDistinct("doc_id").cast("double").alias("n_docs"))
+    df_ = tokens.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     idf = df_.crossJoin(F.broadcast(n_docs)).select(
         "term", F.log(F.col("n_docs") / F.col("df")).alias("idf")
     )
     scored = tf.join(idf, "term").select(
-        F.col(id_col),
+        F.col("doc_id"),
         "term",
         F.round(F.col("tf") * F.col("idf"), 6).alias("tfidf"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
         .where(F.col("rnk") <= top_k)
@@ -159,20 +154,17 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pack_sequences(
     docs: DataFrame,
     budget: int = PACK_BUDGET,
-    part_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Deterministic offset packing of docs into training sequences.
 
-    Within each ``part_col`` partition, docs in ``id_col`` order are
+    Within each ``source`` partition, docs in ``doc_id`` order are
     laid out by cumulative whitespace-token count; a doc belongs to
     sequence floor(start_offset / budget). Emits one row per packed
     sequence. Oversized docs (> budget tokens) simply span their own
     sequence — real pipelines chunk those first (see
     textstats.chunk_documents).
 
-    Scale shape: ``part_col`` ("source") has O(1) cardinality, so a
+    Scale shape: ``source`` has O(1) cardinality, so a
     single cumulative window partitioned by it funnels a whole source
     through one task at data scale. The prefix sum is therefore STAGED
     (the ``watermark_late_accounting`` pattern): (1) per-(source,
@@ -185,41 +177,41 @@ def pack_sequences(
     bit-identical to the single-window form the oracles state.
     """
     toks = docs.select(
-        F.col(part_col),
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), r"\s+")).cast("long").alias("n_tok"),
+        F.col("source"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), r"\s+")).cast("long").alias("n_tok"),
     )
     # integer DIV, not double division: no float detour, exact at any
     # id magnitude (doc ids are non-negative by contract, so DIV's
     # truncation and floor agree) — round-10 ADVICE
-    base = toks.withColumn("__bkt", F.expr(f"{id_col} DIV 1000000"))
-    bsum = base.groupBy(part_col, "__bkt").agg(F.sum("n_tok").alias("__bsum"))
+    base = toks.withColumn("__bkt", F.expr("doc_id DIV 1000000"))
+    bsum = base.groupBy("source", "__bkt").agg(F.sum("n_tok").alias("__bsum"))
     wb = (
-        Window.partitionBy(part_col)
+        Window.partitionBy("source")
         .orderBy("__bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prior = bsum.select(
-        part_col, "__bkt", F.sum("__bsum").over(wb).alias("__prior")
+        "source", "__bkt", F.sum("__bsum").over(wb).alias("__prior")
     )
     wi = (
-        Window.partitionBy(part_col, "__bkt")
-        .orderBy(id_col)
+        Window.partitionBy("source", "__bkt")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     laid = (
-        base.join(prior, [part_col, "__bkt"])
+        base.join(prior, ["source", "__bkt"])
         .withColumn(
             "cum",
             F.sum("n_tok").over(wi) + F.coalesce(F.col("__prior"), F.lit(0)),
         )
         .withColumn("seq_id", F.floor((F.col("cum") - F.col("n_tok")) / budget))
     )
-    return laid.groupBy(part_col, "seq_id").agg(
+    return laid.groupBy("source", "seq_id").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tok").alias("n_tokens"),
-        F.min(id_col).alias("first_doc"),
-        F.max(id_col).alias("last_doc"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )
 
 

@@ -57,7 +57,7 @@ def positioned_shingles(docs: DataFrame, k: int = DECONTAM13_K) -> DataFrame:
     )
 
 
-def _duck_positioned_shingles(k: int = DECONTAM13_K) -> str:
+def _duck_positioned_shingles() -> str:
     return f"""
         w AS (
             SELECT doc_id, source,
@@ -66,9 +66,9 @@ def _duck_positioned_shingles(k: int = DECONTAM13_K) -> str:
         ),
         sh AS (
             SELECT doc_id, source, len(w) AS n_tokens, i AS pos,
-                   array_to_string(w[i:i+{k - 1}], ' ') AS g
-            FROM w CROSS JOIN UNNEST(generate_series(1, len(w) - {k - 1})) AS t(i)
-            WHERE len(w) >= {k}
+                   array_to_string(w[i:i+{DECONTAM13_K - 1}], ' ') AS g
+            FROM w CROSS JOIN UNNEST(generate_series(1, len(w) - {DECONTAM13_K - 1})) AS t(i)
+            WHERE len(w) >= {DECONTAM13_K}
         ),
         bench AS (
             SELECT DISTINCT g FROM sh WHERE source = '{BENCH_SOURCE}'
@@ -81,13 +81,13 @@ def _duck_positioned_shingles(k: int = DECONTAM13_K) -> str:
     """
 
 
-def contamination_hits(docs: DataFrame, k: int = DECONTAM13_K) -> DataFrame:
+def contamination_hits(docs: DataFrame) -> DataFrame:
     """Positioned benchmark k-gram hits in the training split:
     (doc_id, n_tokens, pos, g). The deduped benchmark gram set is
     broadcast (eval sets are small by definition — thousands of docs
     against a 100 TB train corpus); the train side never shuffles for
     the membership probe."""
-    sh = positioned_shingles(docs, k)
+    sh = positioned_shingles(docs, DECONTAM13_K)
     bench = (
         sh.where(F.col("source") == BENCH_SOURCE).select("g").distinct()
     )

@@ -26,8 +26,8 @@ multi-branch intermediates (capped shingle/bucket tables) and cannot
 unpersist them before the caller consumes the result — the CALLER owns
 the cache (the bench harness clears it per query; compose-and-collect
 callers should clearCache or unpersist when done). Operators that
-materialize internally (connected_components, the PageRank/BFS loops)
-release their own frames before returning.
+materialize internally (graph.connected_components, the PageRank/BFS
+loops) release their own frames before returning.
 """
 
 from __future__ import annotations
@@ -37,8 +37,8 @@ from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.functions import hashing as H
-from velox_hadoop_spark.functions.lineage import release
 from velox_hadoop_spark.functions.pairs import id_pairs, upper_triangle_pairs
+from velox_hadoop_spark.operators.graph import connected_components
 from velox_hadoop_spark.plans.registry import register
 from velox_hadoop_spark.session import parallelize_if_narrow_input
 
@@ -98,7 +98,7 @@ def shingle_set(df: DataFrame, id_col: str, text_col: str, k: int = SHINGLE_K) -
     )
 
 
-def minhash_signature(shingles: DataFrame, id_col: str, n_seeds: int = MINHASH_SEEDS) -> DataFrame:
+def minhash_signature(shingles: DataFrame, id_col: str) -> DataFrame:
     """Per-doc MinHash signature: for each seed, min seeded-MD5 over shingles.
 
     Min over lexicographic MD5 strings is a valid min-wise hash family
@@ -106,7 +106,7 @@ def minhash_signature(shingles: DataFrame, id_col: str, n_seeds: int = MINHASH_S
     """
     aggs = [
         F.min(F.expr(H.spark_md5(H.seeded("shingle", s)))).alias(f"mh{s}")
-        for s in range(n_seeds)
+        for s in range(MINHASH_SEEDS)
     ]
     return shingles.groupBy(id_col).agg(*aggs)
 
@@ -115,8 +115,6 @@ def minhash_signature_inline(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_seeds: int = MINHASH_SEEDS,
-    k: int = SHINGLE_K,
 ) -> DataFrame:
     """MinHash signature computed entirely in-row: ``array_min`` over a
     ``transform`` of the shingle array — the shuffle-free form.
@@ -127,10 +125,10 @@ def minhash_signature_inline(
     the exploded form shuffles (id, shingle) twice (distinct + groupBy).
     At 100 TB that is the difference between a map-only pass and two
     all-to-all shuffles of the shingle multiset (~10× the corpus size).
-    Docs with fewer than ``k`` words have no shingles and are dropped,
+    Docs with fewer than ``SHINGLE_K`` words have no shingles and are dropped,
     matching the exploded/oracle behavior.
 
-    Hash-cost note: this computes ``n_seeds`` seeded MD5s per shingle
+    Hash-cost note: this computes ``MINHASH_SEEDS`` seeded MD5s per shingle
     because MD5 is the one hash both engines evaluate bit-identically
     (the verifiability contract). At 100 TB you'd switch to the
     classic one-base-hash + per-seed affine mix
@@ -139,9 +137,9 @@ def minhash_signature_inline(
     cross-engine-checkable form wins at every verification scale.
     """
     words = df.select(F.col(id_col), F.split(F.col(text_col), r"\s+").alias("words"))
-    shing = words.where(F.size("words") >= k).select(
+    shing = words.where(F.size("words") >= SHINGLE_K).select(
         F.col(id_col),
-        F.expr(H.spark_shingles_from_words("words", k)).alias("shingles"),
+        F.expr(H.spark_shingles_from_words("words", SHINGLE_K)).alias("shingles"),
     )
     return shing.select(
         F.col(id_col),
@@ -149,12 +147,12 @@ def minhash_signature_inline(
             F.expr(f"array_min(transform(shingles, x -> md5(concat('{s}|', x))))").alias(
                 f"mh{s}"
             )
-            for s in range(n_seeds)
+            for s in range(MINHASH_SEEDS)
         ],
     )
 
 
-def lsh_bands(sig: DataFrame, id_col: str, bands: int = LSH_BANDS, r: int = _R) -> DataFrame:
+def lsh_bands(sig: DataFrame, id_col: str) -> DataFrame:
     """Signature → (id, band_id, band_key) rows; equal band_key ⇒ candidate.
 
     One posexplode over an array of band keys — a single pass over the
@@ -162,8 +160,8 @@ def lsh_bands(sig: DataFrame, id_col: str, bands: int = LSH_BANDS, r: int = _R) 
     upstream signature pipeline once per band.)
     """
     keys = [
-        F.concat_ws("|", *[F.col(f"mh{b * r + j}") for j in range(r)])
-        for b in range(bands)
+        F.concat_ws("|", *[F.col(f"mh{b * _R + j}") for j in range(_R)])
+        for b in range(LSH_BANDS)
     ]
     return sig.select(
         F.col(id_col), F.posexplode(F.array(*keys)).alias("band_id", "band_key")
@@ -221,8 +219,7 @@ def drop_hot_keys(
     corpus-sized spillable materialization — or that holds several
     such caches at once — passes ``persist_input=False`` for the
     2x-recompute form, which is the same rows through the same plan
-    minus the InMemoryRelation (each public pair generator forwards
-    this as ``persist_guard_input``).
+    minus the InMemoryRelation.
     """
     # NULL keys drop ENTIRELY (the round-11 review's catch, second
     # pass): the oracles mirror the cap as [cool = GROUP BY key HAVING
@@ -254,7 +251,6 @@ def lsh_candidate_pairs(
     id_col: str,
     max_bucket: int = MAX_KEY_DOC_FREQ,
     extra_group_cols: tuple[str, ...] = (),
-    persist_guard_input: bool = True,
 ) -> DataFrame:
     """Distinct id pairs (a < b) sharing at least one band bucket.
 
@@ -280,7 +276,7 @@ def lsh_candidate_pairs(
     extras = list(extra_group_cols)
     keys = [*extras, "band_id", "band_key"]
     grouped = (
-        drop_hot_keys(bands_df, keys, max_bucket, persist_guard_input)
+        drop_hot_keys(bands_df, keys, max_bucket)
         .groupBy(*keys)
         .agg(F.collect_list(id_col).alias("ids"))
         .where(F.size("ids") >= 2)
@@ -298,7 +294,6 @@ def jaccard_pairs(
     shingles: DataFrame,
     id_col: str,
     max_doc_freq: int = MAX_KEY_DOC_FREQ,
-    persist_guard_input: bool = True,
 ) -> DataFrame:
     """n-gram Jaccard for every pair sharing ≥ 1 (non-boilerplate) shingle.
 
@@ -319,7 +314,7 @@ def jaccard_pairs(
     table, persisted because both branches read it.
     """
     grouped = (
-        drop_hot_keys(shingles, ["shingle"], max_doc_freq, persist_guard_input)
+        drop_hot_keys(shingles, ["shingle"], max_doc_freq)
         .groupBy("shingle")
         .agg(F.collect_list(id_col).alias("ids"))
         .select(F.sort_array("ids").alias("ids"))
@@ -1090,39 +1085,34 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_near_dup_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    max_bucket: int = MAX_KEY_DOC_FREQ,
-    persist_guard_input: bool = True,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, banded pigeonhole.
+    """Near-dup pairs (hamming ≤ 3) by SimHash, banded pigeonhole.
 
-    The 60-bit signature splits into ``n_bands`` 15-bit bands; two
-    signatures within hamming ≤ n_bands − 1 MUST agree on at least one
-    whole band (pigeonhole), so candidates come from per-bucket pair
-    generation — never an all-pairs scan — then the exact popcount(xor)
-    filter keeps pairs within ``max_hamming``. Same guarded
+    The 60-bit signature splits into 4 15-bit bands; two signatures
+    within hamming ≤ 3 MUST agree on at least one whole band
+    (pigeonhole), so candidates come from per-bucket pair generation —
+    never an all-pairs scan — then the exact popcount(xor) filter
+    keeps pairs within hamming 3. Same guarded
     bucket-grouping shape as ``lsh_candidate_pairs``: ``drop_hot_keys``
     removes over-cap buckets (an all-zero band is this scheme's
     stop-phrase) BEFORE one groupBy of the band table into
     (id, simhash) arrays, then in-row upper-triangle pairs — the
     aggregation buffer is bounded by the cap (≤ 512 structs) at any
     key skew."""
-    width = 60 // n_bands
     bands = signatures.select(
         F.col(id_col),
         F.col("simhash"),
         F.posexplode(
             F.array(
                 *[
-                    F.expr(f"(simhash >> {b * width}) & {(1 << width) - 1}")
-                    for b in range(n_bands)
+                    F.expr(f"(simhash >> {b * 15}) & 32767")
+                    for b in range(4)
                 ]
             )
         ).alias("band_id", "band_key"),
     )
     grouped = (
-        drop_hot_keys(bands, ["band_id", "band_key"], max_bucket, persist_guard_input)
+        drop_hot_keys(bands, ["band_id", "band_key"], MAX_KEY_DOC_FREQ)
         .groupBy("band_id", "band_key")
         .agg(
             F.collect_list(
@@ -1144,7 +1134,7 @@ def simhash_near_dup_pairs(
         grouped.select(F.explode(pair_structs).alias("p"))
         .select("p.id_a", "p.id_b", "p.hamming")
         .distinct()
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= 3)
     )
 
 
@@ -1188,8 +1178,6 @@ def fuzzy_pairs_blocked(
     id_col: str,
     name_col: str,
     max_edit: int = 3,
-    max_block: int = MAX_KEY_DOC_FREQ,
-    persist_guard_input: bool = True,
 ) -> DataFrame:
     """Fuzzy record linkage: (a, b, edit distance ≤ max_edit) pairs,
     blocked so the quadratic levenshtein never runs all-pairs.
@@ -1212,7 +1200,7 @@ def fuzzy_pairs_blocked(
         F.element_at(F.split(F.col(name_col), r"\s+"), -1).alias("blk"),
     )
     grouped = (
-        drop_hot_keys(keyed, ["blk"], max_block, persist_guard_input)
+        drop_hot_keys(keyed, ["blk"], MAX_KEY_DOC_FREQ)
         .groupBy("blk")
         .agg(
             F.collect_list(
@@ -1265,123 +1253,6 @@ def q_fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_pairs_blocked(part, "p_partkey", "p_name", max_edit=2)
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
-    driver_threshold: int = 2_000_000,
-) -> DataFrame:
-    """Connected components over an undirected pair list → (node, lbl)
-    where lbl = min node id in the component.
-
-    Two regimes, picked by pair count:
-
-    * pairs ≤ ``driver_threshold``: union-find on the driver. After LSH
-      pruning the candidate-pair set is a small fraction of the corpus
-      (it is the whole point of the pruning), so even a 100 TB corpus
-      usually lands here — a few million pairs is tens of MB, and the
-      result returns as a DataFrame for the (distributed) join back to
-      the corpus.
-    * larger: iterative min-label propagation (the standard Spark CC
-      shape) — each pass joins labels to neighbors and takes the min;
-      label space only shrinks, so the fixed point is exact. One scalar
-      per pass leaves the executors; lineage is cut every 3 passes.
-      Pass count is bounded by graph diameter, and near-dup graphs are
-      shallow (clusters are near-cliques).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    pairs = pairs.select(F.col(id_a).alias("id_a"), F.col(id_b).alias("id_b")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    id_a, id_b = "id_a", "id_b"
-    # Regime probe and data fetch in ONE action: pull at most
-    # threshold+1 rows — if we got them all, union-find on the driver;
-    # if the limit truncated, fall through to label propagation. (A
-    # separate count() would re-run the pair pipeline a second time.)
-    probe = pairs.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
-        for a, b in probe:
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min id keeps the label deterministic
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        pairs.unpersist()
-        return pairs.sparkSession.createDataFrame(rows, "node long, lbl long")
-
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        edges.select(F.col("u").alias("node")).distinct().withColumn("lbl", F.col("node"))
-    )
-    prev_persisted = None
-    changed = -1
-    for i in range(max_iters):
-        neigh = (
-            edges.join(
-                labels.select(F.col("node").alias("v"), F.col("lbl").alias("vlbl")), "v"
-            )
-            .groupBy("u")
-            .agg(F.min("vlbl").alias("nlbl"))
-            .select(F.col("u").alias("node"), "nlbl")
-        )
-        new_labels = labels.join(neigh, "node", "left").select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
-        )
-        # Every few passes cut lineage with an eager checkpoint; in
-        # between, persist — the changed-count action below materializes
-        # the cache, so each pass runs exactly ONE job.
-        if (i + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        changed = (
-            new_labels.join(labels.select("node", F.col("lbl").alias("old_lbl")), "node")
-            .where(F.col("lbl") != F.col("old_lbl"))
-            .limit(1)
-            .count()
-        )
-        if prev_persisted is not None:
-            # release, not unpersist: every 3rd frame is a localCheckpoint
-            # whose RDD unpersist() alone leaks (functions/lineage.py)
-            release(prev_persisted)
-        prev_persisted = new_labels
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    pairs.unpersist()
-    if changed != 0:
-        # Exhausting the pass budget without a fixed point means labels
-        # are still moving — silently returning them would emit WRONG
-        # cluster ids (and wrong keeper flags downstream). Near-dup
-        # graphs are shallow, so hitting this means something structural
-        # (e.g. a chain-shaped adversarial graph); fail loudly.
-        raise RuntimeError(
-            f"connected_components: no fixed point after {max_iters} "
-            "label-propagation passes; raise max_iters"
-        )
-    return labels
-
-
 @register(
     "dedup_clusters",
     oracle=_duck_minhash_cte().replace("WITH sh AS", "WITH RECURSIVE sh AS", 1)
@@ -1424,7 +1295,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id of the cluster; singletons keep themselves).
 
     This is the full 100 TB dedup pipeline shape: shingle → signature →
-    band join → CC label propagation, all shuffle-bounded; the oracle is
+    band join → connected components, all shuffle-bounded; the oracle is
     the same fixed point via a recursive CTE."""
     docs = _docs_par(spark, sf_dir)
     sig = minhash_signature_inline(docs, "doc_id", "text")
@@ -1672,7 +1543,6 @@ def verify_candidate_jaccard(
     cand: DataFrame,
     shingles: DataFrame,
     id_col: str,
-    max_doc_freq: int = MAX_KEY_DOC_FREQ,
 ) -> DataFrame:
     """Exact n-gram Jaccard computed ONLY for candidate pairs.
 
@@ -1693,7 +1563,7 @@ def verify_candidate_jaccard(
     df_cap = (
         shingles.groupBy("shingle")
         .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= max_doc_freq)
+        .where(F.col("df") <= MAX_KEY_DOC_FREQ)
         .select("shingle")
     )
     # persist: the capped shingle table feeds three branches (sizes and

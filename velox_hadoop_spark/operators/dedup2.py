@@ -24,12 +24,12 @@ from velox_hadoop_spark.functions import hashing as H
 from velox_hadoop_spark.operators.dedup import (
     MAX_KEY_DOC_FREQ,
     SHINGLE_K,
-    connected_components,
     lsh_bands,
     lsh_candidate_pairs,
     minhash_signature_inline,
     shingle_set,
 )
+from velox_hadoop_spark.operators.graph import connected_components
 from velox_hadoop_spark.plans.registry import register
 
 N_SNAPSHOTS = 4

@@ -18,8 +18,8 @@ Re-expresses the reference's PageRank Spark-first:
     convergence (PageRank.java:86) — we always rank the CURRENT frame.
 
 Scale notes: each iteration is two shuffles (join on src, agg on dst).
-Lineage is cut with localCheckpoint — every ``checkpoint_every``
-iterations in fixed-count mode, every pass-pair in tol mode (deep plan
+Lineage is cut with localCheckpoint — every 5th iteration in
+fixed-count mode, every pass-pair in tol mode (deep plan
 trees cost superlinear driver-side re-analysis per action even when
 execution is fully cached) — otherwise the plan tree grows linearly
 and both planning and stage-retry cost explode. Edges are persisted
@@ -40,30 +40,34 @@ from velox_hadoop_spark.plans.registry import register
 
 DAMPING = 0.85
 
+# Connected components: pair lists up to CC_DRIVER_PAIRS run union-find
+# on the driver (tens of MB); larger ones run large-star/small-star,
+# which must reach its fixed point within CC_MAX_PASSES pass pairs.
+CC_DRIVER_PAIRS = 2_000_000
+CC_MAX_PASSES = 30
+
 # BFS frontier/visited broadcast budget: ~1M node ids ≈ tens of MB —
 # comfortably inside executor broadcast limits; beyond it the level
 # joins fall back to shuffle plans.
 BFS_BROADCAST_NODES = 1_000_000
 
 
-def adjacency(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def adjacency(edges: DataFrame) -> DataFrame:
     """Edge list → per-node sorted distinct-outlink array + initial rank 1.0.
 
     ``collect_set`` dedups inside the aggregate, so a raw (possibly
     duplicated) edge list needs only ONE shuffle — no upstream
     ``distinct()`` exchange."""
-    return edges.groupBy(src).agg(
-        F.array_sort(F.collect_set(dst)).alias("outlinks"),
+    return edges.groupBy("src").agg(
+        F.array_sort(F.collect_set("dst")).alias("outlinks"),
         F.lit(1.0).alias("rank"),
     )
 
 
 def pagerank(
     edges: DataFrame,
-    damping: float = DAMPING,
     max_iters: int = 20,
     tol: float | None = None,
-    checkpoint_every: int = 5,
     with_iters: bool = False,
 ) -> DataFrame:
     """PageRank over a (src, dst) edge DataFrame.
@@ -109,7 +113,6 @@ def pagerank(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    damp = float(damping)
 
     def _propagate(cur: DataFrame, keep_prev2: bool) -> DataFrame:
         """One lazy pass: (node, rank[, prev_rank]) → (node, rank,
@@ -138,7 +141,7 @@ def pagerank(
         out = [
             F.col("node"),
             (
-                F.lit(1.0 - damp) + F.lit(damp) * F.coalesce(F.col("s"), F.lit(0.0))
+                F.lit(1.0 - DAMPING) + F.lit(DAMPING) * F.coalesce(F.col("s"), F.lit(0.0))
             ).alias("rank"),
             F.col("prev_rank"),
         ]
@@ -156,8 +159,9 @@ def pagerank(
         for i in range(max_iters):
             new_ranks = _propagate(ranks, keep_prev2=False).select("node", "rank")
             iters_run = i + 1
-            if (i + 1) % checkpoint_every == 0:
-                # cut lineage: without this the plan doubles in depth per pass
+            if (i + 1) % 5 == 0:
+                # cut lineage every 5th pass: without this the plan
+                # doubles in depth per pass
                 new_ranks = new_ranks.localCheckpoint(eager=True)
                 # free the PREVIOUS checkpoint (the new eager one no
                 # longer lineage-depends on it); the final checkpoint is
@@ -189,8 +193,8 @@ def pagerank(
             # job dispatch per pair than an eager checkpoint + agg
             # (measured: steady-state 6.2s → 4.9-5.2s at sf0.1; fresh-
             # session min-of-3 ~5.4s, the gap being per-run JIT).
-            # Durability class is unchanged from the every-
-            # checkpoint_every cadence this replaces — see
+            # Durability class is unchanged from the every-5th-pass
+            # cadence this replaces — see
             # functions/lineage.py on the executor-loss trade-off.
             frame = frame.localCheckpoint(eager=False)
             if pair == 2:
@@ -231,7 +235,7 @@ def pagerank(
     return result
 
 
-def _pagerank_oracle(iters: int, damping: float = DAMPING) -> str:
+def _pagerank_oracle(iters: int) -> str:
     """Unrolled recursive-free SQL equivalent for DuckDB (fixed iters)."""
     parts = [
         "WITH edges AS (SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem)",
@@ -239,7 +243,7 @@ def _pagerank_oracle(iters: int, damping: float = DAMPING) -> str:
         "outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
         "r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM nodes)",
     ]
-    base = 1.0 - damping
+    base = 1.0 - DAMPING
     for i in range(1, iters + 1):
         parts.append(
             f"c{i} AS (SELECT e.dst AS node, sum(r.rank / d.deg) AS s "
@@ -247,7 +251,7 @@ def _pagerank_oracle(iters: int, damping: float = DAMPING) -> str:
             f"JOIN outdeg d ON e.src = d.src GROUP BY e.dst)"
         )
         parts.append(
-            f"r{i} AS (SELECT n.node, {base} + {damping} * coalesce(c.s, 0) AS rank "
+            f"r{i} AS (SELECT n.node, {base} + {DAMPING} * coalesce(c.s, 0) AS rank "
             f"FROM nodes n LEFT JOIN c{i} c ON n.node = c.node)"
         )
     ctes = parts[0] + ",\n" + ",\n".join(parts[1:])
@@ -469,7 +473,7 @@ def bfs_levels(
         # a frontier still alive after max_levels means levels beyond the
         # cap exist; silently returning a truncated level map would
         # desynchronize from any bounded-recursion oracle. Same fail-loud
-        # contract as connected_components.
+        # contract as connected_components_lss.
         raise RuntimeError(
             f"bfs_levels: frontier not drained after {max_levels} levels"
         )
@@ -533,7 +537,6 @@ def co_supply_capped_edges(
     membership: DataFrame,
     adj_cap: int = TRIANGLE_ADJ_CAP,
     part_cap: int = TRIANGLE_PART_CAP,
-    persist_guard_input: bool = True,
 ) -> DataFrame:
     """Oriented (s1 < s2) co-supply edges from a (part, s) membership
     frame, degree-bounded on both axes: parts with more than
@@ -576,10 +579,9 @@ def co_supply_capped_edges(
     fixture in tests/test_round12_parity.py). NULL parts now drop
     entirely — matching the oracles' ``JOIN pdeg ON part`` equi-join
     mirror, which never matches NULL (the old groupBy kept a NULL-part
-    group the oracle CTEs never had). ``persist_guard_input`` forwards
-    to the guard: the distinct membership frame has two readers (count
-    pre-pass + grouped collect), so it persists spillably by default;
-    pass False for the 2×-recompute form (see drop_hot_keys)."""
+    group the oracle CTEs never had). The guard persists the distinct
+    membership frame spillably, since it has two readers (count
+    pre-pass + grouped collect; see drop_hot_keys)."""
     from velox_hadoop_spark.operators.dedup import drop_hot_keys
 
     # ONE exchange for the whole part-side pipeline: HashPartitioning
@@ -596,9 +598,7 @@ def co_supply_capped_edges(
         .repartition("part")
         .dropDuplicates(["part", "s"])
     )
-    guarded = drop_hot_keys(
-        distinct_mem, ["part"], part_cap, persist_input=persist_guard_input
-    )
+    guarded = drop_hot_keys(distinct_mem, ["part"], part_cap)
     grouped = (
         guarded.groupBy("part")
         .agg(F.sort_array(F.collect_set("s")).alias("ids"))
@@ -968,12 +968,12 @@ def q_bom_rollup_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _canonical_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+def _canonical_edges(pairs: DataFrame) -> DataFrame:
     """Distinct undirected edges as (u, v) with u < v, self-loops dropped."""
     return (
         pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("u"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("u"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("v"),
         )
         .where(F.col("u") < F.col("v"))
         .distinct()
@@ -1038,22 +1038,16 @@ def _edge_sets_equal(a: DataFrame, b: DataFrame) -> bool:
     return a.exceptAll(b).union(b.exceptAll(a)).isEmpty()
 
 
-def connected_components_lss(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 30,
-) -> DataFrame:
-    """Connected components by large-star/small-star alternation — the
-    100 TB-canonical CC (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14): each pair-pass is two grouped
-    mins + two joins (NO per-node neighbor lists materialize, unlike
-    collect_list adjacency), converging in O(log² n) passes on any
-    topology — including long chains, where plain min-label
-    propagation needs diameter passes. Sits beside
-    ``dedup.connected_components`` (driver union-find / label
-    propagation) as the scale path; a cross-implementation test pins
-    the two equal on the LSH pair graph.
+def connected_components_lss(pairs: DataFrame) -> DataFrame:
+    """Connected components of an (id_a, id_b) pair list by
+    large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14) → (node, lbl) with
+    lbl = min node id of the component. Each pair-pass is two
+    single-exchange window mins (NO per-node neighbor lists
+    materialize, unlike collect_list adjacency), converging in
+    O(log² n) passes on any topology — including long chains, where
+    min-label propagation needs diameter passes. Self-pairs are
+    dropped with the other non-canonical edges.
 
     Termination is exact, not heuristic: a cheap (count, Σu, Σv)
     signature prefilters, and the loop only stops when a full
@@ -1061,12 +1055,11 @@ def connected_components_lss(
     paper's fixed point — components collapsed to stars rooted at
     their min id). Per-pass frames are localCheckpoint()ed and
     released, the repo's standard iterative-loop discipline (constant
-    plan depth, bounded executor memory). Returns (node, lbl) like
-    ``connected_components``."""
-    e = _canonical_edges(pairs, id_a, id_b).localCheckpoint()
+    plan depth, bounded executor memory)."""
+    e = _canonical_edges(pairs).localCheckpoint()
     prev_sig = None
     converged = False
-    for _ in range(max_iters):
+    for _ in range(CC_MAX_PASSES):
         # lazy checkpoint: the signature aggregate right below is the
         # pass's first action and materializes it — one fewer job per
         # pass than eager + agg (the pagerank tol-loop measurement)
@@ -1092,13 +1085,63 @@ def connected_components_lss(
     if not converged:
         release(e)
         raise RuntimeError(
-            f"connected_components_lss: no fixed point after {max_iters} "
-            "large/small-star pass pairs; raise max_iters"
+            f"connected_components: no fixed point after {CC_MAX_PASSES} "
+            "large/small-star pass pairs"
         )
     leaves = e.select(F.col("v").alias("node"), F.col("u").alias("lbl"))
     roots = e.select(F.col("u").alias("node"), F.col("u").alias("lbl")).distinct()
     out = leaves.union(roots).distinct()
     return out
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of an undirected (id_a, id_b) pair list →
+    (node, lbl) where lbl = min node id in the component. Self-pairs
+    are ignored, so a node whose only pair is (n, n) gets no row.
+
+    Two regimes, picked by pair count:
+
+    * pairs ≤ ``CC_DRIVER_PAIRS``: union-find on the driver. After LSH
+      pruning the candidate-pair set is a small fraction of the corpus
+      (it is the whole point of the pruning), so even a 100 TB corpus
+      usually lands here — a few million pairs is tens of MB, and the
+      result returns as a DataFrame for the (distributed) join back to
+      the corpus.
+    * larger: ``connected_components_lss``, the distributed path.
+    """
+    pairs = pairs.select("id_a", "id_b").persist(StorageLevel.MEMORY_AND_DISK)
+    # Regime probe and data fetch in ONE action: pull at most
+    # CC_DRIVER_PAIRS + 1 rows — if we got them all, union-find on the
+    # driver; if the limit truncated, fall through to LSS. (A separate
+    # count() would re-run the pair pipeline a second time.)
+    probe = pairs.limit(CC_DRIVER_PAIRS + 1).collect()
+    if len(probe) > CC_DRIVER_PAIRS:
+        try:
+            return connected_components_lss(pairs)
+        finally:
+            # LSS reads the pairs once, into its eager first checkpoint
+            pairs.unpersist()
+    pairs.unpersist()
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in probe:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min id keeps the label deterministic
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    rows = [(n, find(n)) for n in parent]
+    return pairs.sparkSession.createDataFrame(rows, "node long, lbl long")
 
 
 @register(

@@ -28,14 +28,14 @@ from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
-def equi_join(left: DataFrame, right: DataFrame, on, how: str = "inner") -> DataFrame:
+def equi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """Plain equi-join (reference J1's tagged-union dance collapses to this)."""
-    return left.join(right, on=on, how=how)
+    return left.join(right, on=on)
 
 
-def broadcast_lookup(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
+def broadcast_lookup(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
     """Map-side join: dim is replicated to every executor; fact stays put."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
+from velox_hadoop_spark.operators.graph import connected_components
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -56,14 +57,11 @@ from velox_hadoop_spark.plans.registry import register
 def q_connected_components_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components as a first-class query over a plain edge
     list (the dedup CC kernel — driver union-find under a bounded pair
-    probe, distributed min-label propagation above it — generalized
+    probe, distributed large-star/small-star above it — generalized
     away from the LSH pipeline). The edge list links every part to its
-    (brand, size) group hub (min partkey): star topology, so label
-    propagation converges in one pass at ANY scale (no chain-diameter
-    hazard), and the expected components are the multi-part groups —
-    verified, not assumed, by the recursive-CTE oracle."""
-    from velox_hadoop_spark.operators.dedup import connected_components
-
+    (brand, size) group hub (min partkey): star topology, and the
+    expected components are the multi-part groups — verified, not
+    assumed, by the recursive-CTE oracle."""
     part = read_table(spark, sf_dir, "part")
     grp = part.select(
         "p_partkey",

@@ -84,7 +84,7 @@ SEMDEDUP_DOM_CAP = 64
 # ---------------------------------------------------------------------------
 
 
-def dsir_logratio(docs: DataFrame, target_source: str = DSIR_TARGET) -> DataFrame:
+def dsir_logratio(docs: DataFrame) -> DataFrame:
     """Per-raw-doc average bigram log2-likelihood ratio target vs raw:
     (doc_id, source, n_bigrams, lr) with lr UNROUNDED (callers that
     display it round; the resampler consumes it raw).
@@ -111,13 +111,13 @@ def dsir_logratio(docs: DataFrame, target_source: str = DSIR_TARGET) -> DataFram
         .select("doc_id", "source", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
     tc = (
-        bg.where(F.col("source") == target_source)
+        bg.where(F.col("source") == DSIR_TARGET)
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("tc"))
     )
     tu = tc.groupBy("w1").agg(F.sum("tc").alias("tc1"))
     rc = (
-        bg.where(F.col("source") != target_source)
+        bg.where(F.col("source") != DSIR_TARGET)
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("rc"))
     )
@@ -131,7 +131,7 @@ def dsir_logratio(docs: DataFrame, target_source: str = DSIR_TARGET) -> DataFram
     )
     lr_ = F.log2((F.col("rc") + 1.0) / (F.col("rc1") + F.col("v")))
     return (
-        bg.where(F.col("source") != target_source)
+        bg.where(F.col("source") != DSIR_TARGET)
         .join(tc, ["w1", "w2"], "left")
         .join(tu, "w1", "left")
         .join(rc, ["w1", "w2"])
@@ -145,7 +145,7 @@ def dsir_logratio(docs: DataFrame, target_source: str = DSIR_TARGET) -> DataFram
     )
 
 
-def _duck_dsir_ctes(target_source: str = DSIR_TARGET) -> str:
+def _duck_dsir_ctes() -> str:
     return f"""
         w AS (
             SELECT doc_id, source, string_split_regex(text, '\\s+') AS w
@@ -157,10 +157,10 @@ def _duck_dsir_ctes(target_source: str = DSIR_TARGET) -> str:
             WHERE len(w) >= 2
         ),
         tc AS (SELECT w1, w2, count(*) AS tc FROM bg
-               WHERE source = '{target_source}' GROUP BY w1, w2),
+               WHERE source = '{DSIR_TARGET}' GROUP BY w1, w2),
         tu AS (SELECT w1, sum(tc) AS tc1 FROM tc GROUP BY w1),
         rc AS (SELECT w1, w2, count(*) AS rc FROM bg
-               WHERE source <> '{target_source}' GROUP BY w1, w2),
+               WHERE source <> '{DSIR_TARGET}' GROUP BY w1, w2),
         ru AS (SELECT w1, sum(rc) AS rc1 FROM rc GROUP BY w1),
         vocab AS (
             SELECT count(DISTINCT tok) AS v FROM (
@@ -179,7 +179,7 @@ def _duck_dsir_ctes(target_source: str = DSIR_TARGET) -> str:
             JOIN rc r ON b.w1 = r.w1 AND b.w2 = r.w2
             JOIN ru rr ON b.w1 = rr.w1
             CROSS JOIN vocab vv
-            WHERE b.source <> '{target_source}'
+            WHERE b.source <> '{DSIR_TARGET}'
             GROUP BY b.doc_id, b.source
         )
     """

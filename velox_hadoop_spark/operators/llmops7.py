@@ -27,14 +27,14 @@ SAVINGS_THRESHOLDS = (2, 3, 5)  # min distinct docs for a gram to count
 # ---------------------------------------------------------------------------
 
 
-def _duck_savings_branch(t: int, k: int = SPANREM_K) -> str:
+def _duck_savings_branch(t: int) -> str:
     """One threshold's island merge + rollup over the shared hit CTE."""
     return f"""
         SELECT CAST({t} AS BIGINT) AS min_docs,
                CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs_affected,
                CAST(coalesce(sum(e - s + 1), 0) AS BIGINT) AS removed_tokens
         FROM (
-            SELECT doc_id, island, min(pos) AS s, max(pos) + {k - 1} AS e
+            SELECT doc_id, island, min(pos) AS s, max(pos) + {SPANREM_K - 1} AS e
             FROM (
                 SELECT doc_id, pos,
                        sum(is_start) OVER (
@@ -44,7 +44,7 @@ def _duck_savings_branch(t: int, k: int = SPANREM_K) -> str:
                 FROM (
                     SELECT doc_id, pos,
                            CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                                         + {k}
+                                         + {SPANREM_K}
                                   OR lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
                                 THEN 1 ELSE 0 END AS is_start
                     FROM (SELECT DISTINCT doc_id, pos FROM hd WHERE df >= {t})

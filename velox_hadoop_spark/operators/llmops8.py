@@ -10,8 +10,8 @@ coverage number), and the top embedding dimension covariances (the
 redundancy check before PCA/quantization decisions).
 
 Scale notes: the split rides the same LSH→CC machinery as
-``dedup_clusters`` (band-bounded candidate generation, O(log n)
-label-propagation passes — never n² pairs); prefix grouping is one
+``dedup_clusters`` (band-bounded candidate generation, driver
+union-find or O(log² n) large/small-star passes — never n² pairs); prefix grouping is one
 hash-groupBy on a 16-token prefix; the OOV join broadcasts a top-V
 vocabulary (V fixed, never SF-proportional); the covariance reduction
 is dim²-bounded (4,096 cells at d=64) regardless of row count, with
@@ -32,11 +32,11 @@ from velox_hadoop_spark.operators.dedup import (
     _duck_minhash_cte,
     _BAND_KEYS,
     MAX_KEY_DOC_FREQ,
-    connected_components,
     lsh_bands,
     lsh_candidate_pairs,
     minhash_signature_inline,
 )
+from velox_hadoop_spark.operators.graph import connected_components
 from velox_hadoop_spark.plans.registry import register
 
 SPLIT_SEED = "split9"     # bucket seed for the cluster-aware split
@@ -132,8 +132,8 @@ def q_cluster_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumed: the audit is the regression alarm if anyone reintroduces
     a doc-keyed split upstream).
 
-    Scale: candidate pairs are LSH-band-bounded, CC is O(log n)
-    label-propagation passes, the split is a hash expression, and the
+    Scale: candidate pairs are LSH-band-bounded, CC is driver
+    union-find or O(log² n) large/small-star passes, the split is a hash expression, and the
     audit is one extra grouped aggregate over (cluster, split) —
     nothing here is quadratic in corpus size."""
     docs = _docs_par(spark, sf_dir)

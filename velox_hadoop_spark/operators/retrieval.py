@@ -47,11 +47,6 @@ TOP_PAIRS = 20
 
 def bm25_scores(
     docs: DataFrame,
-    query_terms: tuple[str, ...] = QUERY_TERMS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """Per-document BM25 score for a bag of query terms.
 
@@ -60,16 +55,16 @@ def bm25_scores(
     Returns (id, score) for every document containing >=1 query term.
     """
     tokens = docs.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("term")
+        F.col("doc_id"), F.explode(F.split(F.col("text"), r"\s+")).alias("term")
     ).where(F.col("term") != "")
-    dl = tokens.groupBy(id_col).agg(F.count("*").alias("dl"))
+    dl = tokens.groupBy("doc_id").agg(F.count("*").alias("dl"))
     # Collection stats: one row (N docs, mean doc length) — broadcast.
     stats = dl.agg(
         F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    qtok = tokens.where(F.col("term").isin(*query_terms))
-    qtf = qtok.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    df_ = qtok.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
+    qtok = tokens.where(F.col("term").isin(*QUERY_TERMS))
+    qtf = qtok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    df_ = qtok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     idf = df_.crossJoin(F.broadcast(stats.select("n_docs"))).select(
         "term",
         F.log(
@@ -77,19 +72,22 @@ def bm25_scores(
         ).alias("idf"),
     )
     per_term = (
-        qtf.join(dl, id_col)
+        qtf.join(dl, "doc_id")
         .crossJoin(F.broadcast(stats.select("avgdl")))
         .join(F.broadcast(idf), "term")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (
                 F.col("idf")
-                * (F.col("tf") * (k1 + 1.0))
-                / (F.col("tf") + k1 * ((1.0 - b) + b * F.col("dl") / F.col("avgdl")))
+                * (F.col("tf") * (BM25_K1 + 1.0))
+                / (
+                    F.col("tf")
+                    + BM25_K1 * ((1.0 - BM25_B) + BM25_B * F.col("dl") / F.col("avgdl"))
+                )
             ).alias("s"),
         )
     )
-    return per_term.groupBy(id_col).agg(F.sum("s").alias("score"))
+    return per_term.groupBy("doc_id").agg(F.sum("s").alias("score"))
 
 
 @register(
@@ -140,36 +138,33 @@ def q_bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def user_profile_cosine(
     events: DataFrame,
-    user_col: str = "user_id",
-    feature_col: str = "event_type",
-    active_cap: int = ACTIVE_CAP,
 ) -> DataFrame:
     """Cosine similarity between users' event-type count vectors.
 
     Profiles are sparse count vectors over the feature column; the dot
     product is an equi-join on the feature. The candidate set is the
-    ``active_cap`` most-active users (deterministic tiebreak on user
+    ``ACTIVE_CAP`` most-active users (deterministic tiebreak on user
     id), bounding the self-join fanout at cap^2 per feature.
     """
     active = top_k(
-        events.groupBy(user_col).agg(F.count("*").alias("n")),
-        active_cap,
+        events.groupBy("user_id").agg(F.count("*").alias("n")),
+        ACTIVE_CAP,
         F.desc("n"),
-        F.asc(user_col),
-    ).select(user_col)
+        F.asc("user_id"),
+    ).select("user_id")
     prof = (
-        events.join(F.broadcast(active), user_col)
-        .groupBy(user_col, feature_col)
+        events.join(F.broadcast(active), "user_id")
+        .groupBy("user_id", "event_type")
         .agg(F.count("*").alias("c"))
     )
-    nrm = prof.groupBy(user_col).agg(
+    nrm = prof.groupBy("user_id").agg(
         F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nv")
     )
     a = prof.select(
-        F.col(user_col).alias("user_a"), F.col(feature_col).alias("f"), F.col("c").alias("ca")
+        F.col("user_id").alias("user_a"), F.col("event_type").alias("f"), F.col("c").alias("ca")
     )
     b = prof.select(
-        F.col(user_col).alias("user_b"), F.col(feature_col).alias("f"), F.col("c").alias("cb")
+        F.col("user_id").alias("user_b"), F.col("event_type").alias("f"), F.col("c").alias("cb")
     )
     dots = (
         a.join(b, "f")
@@ -178,8 +173,8 @@ def user_profile_cosine(
         .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot"))
     )
     return (
-        dots.join(nrm.select(F.col(user_col).alias("user_a"), F.col("nv").alias("na")), "user_a")
-        .join(nrm.select(F.col(user_col).alias("user_b"), F.col("nv").alias("nb")), "user_b")
+        dots.join(nrm.select(F.col("user_id").alias("user_a"), F.col("nv").alias("na")), "user_a")
+        .join(nrm.select(F.col("user_id").alias("user_b"), F.col("nv").alias("nb")), "user_b")
         .select(
             "user_a",
             "user_b",

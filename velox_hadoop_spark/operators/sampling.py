@@ -38,37 +38,37 @@ from velox_hadoop_spark.plans.registry import register
 SEED = "split42"
 
 
-def _bucket_expr_spark(key: str, seed: str = SEED, n: int = 100) -> F.Column:
+def _bucket_expr_spark(key: str) -> F.Column:
     """0..n-1 bucket from the cross-engine hash (JVM-side, codegen)."""
-    return F.expr(spark_bucket(key, seed, n))
+    return F.expr(spark_bucket(key, SEED, 100))
 
 
-def _bucket_expr_duck(key: str, seed: str = SEED, n: int = 100) -> str:
-    return duck_bucket(key, seed, n)
+def _bucket_expr_duck(key: str) -> str:
+    return duck_bucket(key, SEED, 100)
 
 
-def deterministic_sample(df: DataFrame, key: str, pct: int, seed: str = SEED) -> DataFrame:
+def deterministic_sample(df: DataFrame, key: str, pct: int) -> DataFrame:
     """Keep ~pct% of rows, chosen by hash bucket of ``key``.
 
     Partitioning-independent and repeatable: the same row is kept in
     every run on every engine (unlike ``df.sample``)."""
-    return df.where(_bucket_expr_spark(key, seed) < pct)
+    return df.where(_bucket_expr_spark(key) < pct)
 
 
-def assign_split(df: DataFrame, key: str, train_pct: int = 80, seed: str = SEED) -> DataFrame:
+def assign_split(df: DataFrame, key: str, train_pct: int = 80) -> DataFrame:
     """Label each row train/test by hash bucket — a disjoint,
     exhaustive, reproducible split (the leakage-safe way to split a
     corpus: membership depends only on the key, never on row order)."""
     return df.withColumn(
         "split",
-        F.when(_bucket_expr_spark(key, seed) < train_pct, F.lit("train")).otherwise(
+        F.when(_bucket_expr_spark(key) < train_pct, F.lit("train")).otherwise(
             F.lit("test")
         ),
     )
 
 
 def stratified_sample(
-    df: DataFrame, strata: str, key: str, fractions: dict[str, int], seed: str = SEED
+    df: DataFrame, strata: str, key: str, fractions: dict[str, int]
 ) -> DataFrame:
     """Per-stratum sampling rates (percent per stratum value), e.g.
     downsample dominant languages while keeping the tail whole."""
@@ -76,10 +76,10 @@ def stratified_sample(
     pct_col = F.lit(0)
     for value, p in fractions.items():
         pct_col = F.when(F.col(strata) == value, p).otherwise(pct_col)
-    return df.where(_bucket_expr_spark(key, seed) < pct_col)
+    return df.where(_bucket_expr_spark(key) < pct_col)
 
 
-def capped_per_group(df: DataFrame, group: str, key: str, cap: int, seed: str = SEED) -> DataFrame:
+def capped_per_group(df: DataFrame, group: str, key: str, cap: int) -> DataFrame:
     """At most ``cap`` rows per group, chosen by hash order (determin-
     istic, unbiased within the group). The balancing pass that stops a
     single domain/language from dominating a training mix.
@@ -93,7 +93,7 @@ def capped_per_group(df: DataFrame, group: str, key: str, cap: int, seed: str = 
     (the per-partition top-cap always contains the global top-cap)."""
     from velox_hadoop_spark.functions.staged import staged_topk_per_group
 
-    order = F.expr(spark_md5_int60(seeded(key, seed)))
+    order = F.expr(spark_md5_int60(seeded(key, SEED)))
     return staged_topk_per_group(
         df.withColumn("__ord", order), [group], ["__ord", key], cap
     ).drop("__ord")
@@ -183,7 +183,7 @@ WS_K = 50
 
 
 def weighted_sample(
-    df: DataFrame, key: str, weight: str, k: int, seed: str = WS_SEED
+    df: DataFrame, key: str, weight: str, k: int
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement
     (Efraimidis–Spirakis A-ES): keep the k rows with the smallest
@@ -198,7 +198,7 @@ def weighted_sample(
     state, reproducible on any cluster layout.
     """
     u = (
-        (F.expr(spark_md5_int60(seeded(key, seed))) % WS_MOD + 1)
+        (F.expr(spark_md5_int60(seeded(key, WS_SEED))) % WS_MOD + 1)
         / F.lit(float(WS_MOD + 1))
     )
     # weight > 0 guard: A-ES gives a zero-weight row inclusion
@@ -215,10 +215,10 @@ def weighted_sample(
     return top_k(keyed, k, F.asc("sample_key"), F.asc(key))
 
 
-def _ws_key_duck(key: str = "doc_id", weight: str = "n_chars", seed: str = WS_SEED) -> str:
+def _ws_key_duck() -> str:
     return (
-        f"-ln((({duck_md5_int60(seeded(key, seed))}) % {WS_MOD} + 1)"
-        f" / {float(WS_MOD + 1)}) / {weight}"
+        f"-ln((({duck_md5_int60(seeded('doc_id', WS_SEED))}) % {WS_MOD} + 1)"
+        f" / {float(WS_MOD + 1)}) / n_chars"
     )
 
 

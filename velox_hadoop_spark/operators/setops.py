@@ -25,9 +25,9 @@ from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
-def tagged_union(branches: list[tuple[str, DataFrame]], tag_col: str = "src") -> DataFrame:
+def tagged_union(branches: list[tuple[str, DataFrame]]) -> DataFrame:
     """UNION ALL with an explicit provenance tag per branch."""
-    tagged = [df.withColumn(tag_col, F.lit(tag)) for tag, df in branches]
+    tagged = [df.withColumn("src", F.lit(tag)) for tag, df in branches]
     out = tagged[0]
     for df in tagged[1:]:
         out = out.unionByName(df)
@@ -657,7 +657,7 @@ def q_cascade_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_apply(
-    target: DataFrame, changes: DataFrame, key: str, cols: list[str], op_col: str = "op"
+    target: DataFrame, changes: DataFrame, key: str, cols: list[str]
 ) -> DataFrame:
     """Apply a full CDC changeset (I/U/D op codes) in ONE shuffle.
 
@@ -674,7 +674,7 @@ def cdc_apply(
         .withColumn("__pri", F.lit(0))
     )
     src = (
-        changes.select(key, *cols, F.col(op_col).alias("__op"))
+        changes.select(key, *cols, F.col("op").alias("__op"))
         .withColumn("__pri", F.lit(1))
     )
     merged = (

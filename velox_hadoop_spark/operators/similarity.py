@@ -29,6 +29,7 @@ from velox_hadoop_spark.functions.vectors import cosine, round_half_away, to_dou
 from velox_hadoop_spark.plans.registry import register
 
 N_PLANES = 8
+PLANE_DIMS = 64  # embedding width the hyperplane weights cover
 # Deterministic neighbor-side truncation for the fixed-bucket LSH topk:
 # per bucket, only the ANN_BUCKET_CAP lowest vec_ids serve as candidate
 # neighbors (mirrored in the oracle). Bounds candidate volume linearly
@@ -61,14 +62,14 @@ _DUCK_COS = (
 )
 
 
-def drop_null_vectors(df: DataFrame, col: str = "embedding") -> DataFrame:
+def drop_null_vectors(df: DataFrame) -> DataFrame:
     """SQL null semantics for the vector kernels: a NULL embedding joins
     no similarity computation. The SQL-expression kernels get this for
     free (a null cosine fails every threshold), but the numpy/Arrow
     matrix kernels would crash mid-batch on the inhomogeneous column —
     and a real corpus at scale always carries a few nulls — so every
     kernel that materializes embeddings into a matrix filters here."""
-    return df.where(F.col(col).isNotNull())
+    return df.where(F.col("embedding").isNotNull())
 
 
 # Oracle twin of drop_degenerate_vectors: NULL > 0 is NULL (filtered),
@@ -78,7 +79,7 @@ DUCK_FINITE_VECTOR = (
 )
 
 
-def drop_degenerate_vectors(df: DataFrame, col: str = "embedding") -> DataFrame:
+def drop_degenerate_vectors(df: DataFrame) -> DataFrame:
     """Cosine is undefined for NULL, empty, and all-zero embeddings —
     the COSINE kernels drop all three at entry. The zero case matters
     because the two engines disagree silently: normalizing a zero
@@ -88,9 +89,9 @@ def drop_degenerate_vectors(df: DataFrame, col: str = "embedding") -> DataFrame:
     Norm/quantize kernels keep zero vectors (a zero L2 is well-defined)
     and use ``drop_null_vectors`` only."""
     sq = F.aggregate(
-        to_double(F.col(col)), F.lit(0.0), lambda acc, x: acc + x * x
+        to_double(F.col("embedding")), F.lit(0.0), lambda acc, x: acc + x * x
     )
-    return df.where(F.col(col).isNotNull() & (sq > 0))
+    return df.where(F.col("embedding").isNotNull() & (sq > 0))
 
 
 def cosine_pairs(queries: DataFrame, corpus: DataFrame) -> DataFrame:
@@ -397,7 +398,7 @@ def _plane_weights(n_planes: int, dims: int, offset: int = 0) -> list[list[float
 
 
 def hyperplane_buckets(
-    emb: DataFrame, n_planes: int = N_PLANES, dims: int = 64, plane_offset: int = 0
+    emb: DataFrame, n_planes: int = N_PLANES, plane_offset: int = 0
 ) -> DataFrame:
     """Sign-random-projection LSH bucket per vector.
 
@@ -409,7 +410,7 @@ def hyperplane_buckets(
     shape — posexplode dims × cross-join planes — built 512 rows per
     vector and shuffled twice.)
     """
-    w = _plane_weights(n_planes, dims, plane_offset)
+    w = _plane_weights(n_planes, PLANE_DIMS, plane_offset)
     # null trips the width assert; an EMPTY array would bucket as
     # all-ones here while the oracle's UNNEST drops it — exclude both
     # (zero vectors stay: both engines bucket them identically)
@@ -422,8 +423,8 @@ def hyperplane_buckets(
     emb = emb.where(
         F.coalesce(
             F.assert_true(
-                F.size("embedding") <= F.lit(dims),
-                F.lit(f"embedding wider than hyperplane dims={dims}"),
+                F.size("embedding") <= F.lit(PLANE_DIMS),
+                F.lit(f"embedding wider than hyperplane dims={PLANE_DIMS}"),
             ).cast("boolean"),
             F.lit(True),
         )
@@ -627,7 +628,7 @@ def q_knn_top1_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_exact(emb, k=1).drop("rnk")
 
 
-def _duck_plane_fold(weights: list[float], col: str = "embedding") -> str:
+def _duck_plane_fold(weights: list[float]) -> str:
     """Literal left-to-right projection sum for one hyperplane — the
     exact double-precision fold order the Spark in-row ``F.aggregate``
     uses (0.0 + w0·x0 + w1·x1 + …, left-associative), so the two
@@ -643,8 +644,8 @@ def _duck_plane_fold(weights: list[float], col: str = "embedding") -> str:
     ``+ 0.0`` terms cannot change the fold value or the ``>= 0`` sign
     (±0.0 both satisfy it), so the guard is exact."""
     return "0.0 + " + " + ".join(
-        f"(CASE WHEN len({col}) >= {d + 1} "
-        f"THEN {'' if w > 0 else '-'}CAST({col}[{d + 1}] AS DOUBLE) "
+        f"(CASE WHEN len(embedding) >= {d + 1} "
+        f"THEN {'' if w > 0 else '-'}CAST(embedding[{d + 1}] AS DOUBLE) "
         "ELSE 0.0 END)"
         for d, w in enumerate(weights)
     )
@@ -657,7 +658,7 @@ def _duck_bucket_ctes() -> str:
     "plane|pos"), and each plane's projection is a literal ordered
     fold (``_duck_plane_fold``); assumes the corpus's fixed 64-dim
     embeddings (as ``quality._rp_oracle`` already does)."""
-    w = _plane_weights(N_PLANES, 64)
+    w = _plane_weights(N_PLANES, PLANE_DIMS)
     bits = " + ".join(
         f"(CASE WHEN ({_duck_plane_fold(w[p])}) >= 0 "
         f"THEN CAST(1 AS BIGINT) << {p} ELSE CAST(0 AS BIGINT) END)"
@@ -1491,7 +1492,7 @@ def _duck_multitable_cte(tables: int, planes: int, stride: int) -> str:
     branch per table."""
     branches = []
     for tbl in range(tables):
-        w = _plane_weights(planes, 64, offset=tbl * stride)
+        w = _plane_weights(planes, PLANE_DIMS, offset=tbl * stride)
         bits = " + ".join(
             f"(CASE WHEN ({_duck_plane_fold(w[j])}) >= 0 "
             f"THEN CAST(1 AS BIGINT) << {j} ELSE CAST(0 AS BIGINT) END)"

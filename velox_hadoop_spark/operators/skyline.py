@@ -174,20 +174,44 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CANDIDATE_CAP = 200_000  # max union-of-local-frontiers rows collected
 
 
-def _pareto_max_mask(m):
-    """Boolean keep-mask of Pareto-maximal rows of ``m`` (all-maximize
-    space). Chunked dominance test: peak memory is chunk x n x d bools,
-    never n²."""
+def _pareto_frontier(m):
+    """Row indices of the Pareto-maximal rows of ``m`` (all-maximize
+    space, distinct rows), in lexicographic-descending order.
+
+    Sorted lexicographically DESCENDING, any dominator of a point
+    precedes it (its first differing coordinate is strictly greater),
+    and by transitivity it suffices to test each point against the
+    CURRENT frontier plus the earlier rows of its own block — never
+    all-pairs. Blocked numpy: each 512-row block is masked against the
+    frontier matrix stacked on the block itself (a block point whose
+    in-block dominator was itself dominated is already gone —
+    transitivity again), so cost is ((k + 512) × 512 × d) per block
+    for a k-row frontier. The masks are built one dimension at a time
+    from 2-D comparisons: reducing a 3-D comparison over its short
+    trailing axis costs several times more, and how much depends on
+    the memory layout pandas hands over."""
     import numpy as np
 
-    n = m.shape[0]
-    keep = np.ones(n, dtype=bool)
-    for lo in range(0, n, 256):
-        blk = m[lo : lo + 256]
-        ge = (m[None, :, :] >= blk[:, None, :]).all(-1)
-        gt = (m[None, :, :] > blk[:, None, :]).any(-1)
-        keep[lo : lo + 256] = ~(ge & gt).any(1)
-    return keep
+    # lexsort's primary key is its LAST argument, so feed dims
+    # reversed; rows are distinct, so reversing the ascending order is
+    # exactly the descending order
+    order = np.lexsort(tuple(m[:, j] for j in range(m.shape[1] - 1, -1, -1)))[::-1]
+    ms = m[order]
+    keep = np.zeros(len(ms), dtype=bool)
+    front = np.empty((0, m.shape[1]))
+    for lo in range(0, len(ms), 512):
+        blk = ms[lo : lo + 512]
+        rivals = np.concatenate([front, blk])
+        ge = np.ones((len(rivals), len(blk)), dtype=bool)
+        gt = np.zeros_like(ge)
+        for j in range(m.shape[1]):
+            r, b = rivals[:, j, None], blk[None, :, j]
+            ge &= r >= b
+            gt |= r > b
+        alive = ~(ge & gt).any(0)
+        front = np.concatenate([front, blk[alive]])
+        keep[lo : lo + 512] = alive
+    return order[keep]
 
 
 def skyline_multi(
@@ -209,18 +233,9 @@ def skyline_multi(
          take-probe job.
       2. GLOBAL re-check — the union of local frontiers (bounded by a
          limit-probe at ``_CANDIDATE_CAP``, the dedup_clusters
-         precedent) is collected once and pruned by a sort-based
-         O(n·k) frontier scan (k = frontier size): sorted
-         lexicographically DESCENDING in all-maximize space, any
-         dominator of a point precedes it (its first differing
-         coordinate is strictly greater), and by transitivity it
-         suffices to test each point against the CURRENT frontier —
-         never all-pairs. Blocked numpy: each 512-row block is masked
-         against the frontier matrix, then intra-block via
-         ``_pareto_max_mask`` (a block point whose in-block dominator
-         was itself dominated is already gone — transitivity again).
-         Cost is (k × 512 × d) per block, bounded by the cap — not the
-         (n × 4096 × d) all-pairs slices of the previous version.
+         precedent) is collected once and pruned by the same
+         ``_pareto_frontier`` scan the local phase runs, O(n·k) for a
+         k-row frontier.
 
     Dominance compares in float64: exact for integer inputs below
     2^53 (the repo's money/size/length domains); unlike the 2-D
@@ -249,9 +264,9 @@ def skyline_multi(
             if front_m is not None:
                 m = np.concatenate([front_m, m])
                 pdf = pd.concat([front_raw, pdf[dims]], ignore_index=True)
-            keep = _pareto_max_mask(m)
-            front_m = m[keep]
-            front_raw = pdf[dims].iloc[keep].reset_index(drop=True)
+            idx = _pareto_frontier(m)
+            front_m = m[idx]
+            front_raw = pdf[dims].iloc[idx].reset_index(drop=True)
         if front_raw is not None:
             yield front_raw
 
@@ -262,7 +277,7 @@ def skyline_multi(
     # replaces the previous persist + take-probe + toPandas pair (one
     # fewer job and no cache materialization; phase 1 still executes
     # exactly once). Row ORDER from a limit is nondeterministic, which
-    # is fine: the lexsort below re-orders candidates totally (tuples
+    # is fine: _pareto_frontier re-orders candidates totally (tuples
     # are distinct), so the pruned SET is order-independent, and the
     # caller's join consumes it as an unordered relation.
     cand_pdf = cand.limit(_CANDIDATE_CAP + 1).toPandas()
@@ -273,29 +288,7 @@ def skyline_multi(
         )
     spark = df.sparkSession
     m = cand_pdf[dims].to_numpy(dtype="float64") * signs
-    # Lexicographic DESCENDING sort in all-maximize space: lexsort's
-    # primary key is its LAST argument, so feed dims reversed; tuples
-    # are distinct (coords.distinct()), so reversing the ascending
-    # order is exactly the descending order.
-    order = np.lexsort(tuple(m[:, j] for j in range(m.shape[1] - 1, -1, -1)))[::-1]
-    ms = m[order]
-    keep = np.zeros(len(ms), dtype=bool)
-    front = np.empty((0, m.shape[1]))
-    for lo in range(0, len(ms), 512):
-        blk = ms[lo : lo + 512]
-        if len(front):
-            ge = (front[:, None, :] >= blk[None, :, :]).all(-1)
-            gt = (front[:, None, :] > blk[None, :, :]).any(-1)
-            alive = ~(ge & gt).any(0)
-        else:
-            alive = np.ones(len(blk), dtype=bool)
-        if alive.any():
-            surv = blk[alive]
-            intra = _pareto_max_mask(surv)
-            alive[np.flatnonzero(alive)[~intra]] = False
-            front = np.concatenate([front, surv[intra]])
-        keep[lo : lo + 512] = alive
-    result = cand_pdf.iloc[order[keep]].reset_index(drop=True)
+    result = cand_pdf.iloc[_pareto_frontier(m)].reset_index(drop=True)
     return spark.createDataFrame(result, schema=cand.schema)
 
 

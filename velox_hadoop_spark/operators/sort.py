@@ -28,12 +28,6 @@ from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
-def total_sort(df: DataFrame, *cols, ascending: bool = True) -> DataFrame:
-    """Parallel total-order sort (range partitioning with sampled bounds)."""
-    ordering = [F.asc(c) if ascending else F.desc(c) for c in cols]
-    return df.orderBy(*ordering)
-
-
 def top_k(df: DataFrame, k: int, *order_exprs) -> DataFrame:
     """Top-k without a total sort — Spark plans TakeOrderedAndProject:
     each partition keeps a k-heap, the driver merges k*numPartitions rows."""

@@ -65,14 +65,14 @@ def repeated_gram_hits(docs: DataFrame, k: int = SPANREM_K) -> DataFrame:
     )
 
 
-def merged_removal_spans(docs: DataFrame, k: int = SPANREM_K) -> DataFrame:
+def merged_removal_spans(docs: DataFrame) -> DataFrame:
     """Maximal merged token spans (doc_id, n_tokens, s, e) to excise.
 
     Fixed-width covers merge under the closed-form island rule: sorted
-    by pos within a doc, a new island starts iff pos > prev + k (the
-    adjacency case pos = prev + k merges). Both windows run per doc_id
+    by pos within a doc, a new island starts iff pos > prev + SPANREM_K
+    (the adjacency case pos = prev + SPANREM_K merges). Both windows run per doc_id
     (bounded by doc length)."""
-    hits = repeated_gram_hits(docs, k)
+    hits = repeated_gram_hits(docs, SPANREM_K)
     w = Window.partitionBy("doc_id").orderBy("pos")
     ordered = hits.select(
         "doc_id",
@@ -85,7 +85,7 @@ def merged_removal_spans(docs: DataFrame, k: int = SPANREM_K) -> DataFrame:
             # run — and must share an island (round-9 review find; the
             # k−1 form split adjacent covers, contradicting the
             # maximal-merged-span contract and the Python reference)
-            | (F.col("pos") > F.lag("pos").over(w) + k),
+            | (F.col("pos") > F.lag("pos").over(w) + SPANREM_K),
             1,
         )
         .otherwise(0)
@@ -99,11 +99,11 @@ def merged_removal_spans(docs: DataFrame, k: int = SPANREM_K) -> DataFrame:
     )
     return islands.groupBy("doc_id", "n_tokens", "island").agg(
         F.min("pos").alias("s"),
-        (F.max("pos") + (k - 1)).alias("e"),
+        (F.max("pos") + (SPANREM_K - 1)).alias("e"),
     )
 
 
-def _duck_spanremoval_ctes(k: int = SPANREM_K) -> str:
+def _duck_spanremoval_ctes() -> str:
     """DuckDB CTE chain mirroring repeated_gram_hits + island merge,
     ending in ``merged(doc_id, n_tokens, island, s, e)`` plus the raw
     token stream ``tok(doc_id, i, tokn)`` for kept-text rebuilds."""
@@ -115,9 +115,9 @@ def _duck_spanremoval_ctes(k: int = SPANREM_K) -> str:
         ),
         sh AS (
             SELECT doc_id, len(w) AS n_tokens, i AS pos,
-                   array_to_string(w[i:i+{k - 1}], ' ') AS g
-            FROM w CROSS JOIN UNNEST(generate_series(1, len(w) - {k - 1})) AS t(i)
-            WHERE len(w) >= {k}
+                   array_to_string(w[i:i+{SPANREM_K - 1}], ' ') AS g
+            FROM w CROSS JOIN UNNEST(generate_series(1, len(w) - {SPANREM_K - 1})) AS t(i)
+            WHERE len(w) >= {SPANREM_K}
         ),
         rep AS (
             SELECT g FROM (
@@ -131,7 +131,7 @@ def _duck_spanremoval_ctes(k: int = SPANREM_K) -> str:
         ordered AS (
             SELECT doc_id, n_tokens, pos,
                    CASE WHEN pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos)
-                                 + {k}
+                                 + {SPANREM_K}
                           OR lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
                         THEN 1 ELSE 0 END AS is_start
             FROM hits
@@ -146,7 +146,7 @@ def _duck_spanremoval_ctes(k: int = SPANREM_K) -> str:
         ),
         merged AS (
             SELECT doc_id, n_tokens, island,
-                   min(pos) AS s, max(pos) + {k - 1} AS e
+                   min(pos) AS s, max(pos) + {SPANREM_K - 1} AS e
             FROM islands GROUP BY doc_id, n_tokens, island
         ),
         tok AS (

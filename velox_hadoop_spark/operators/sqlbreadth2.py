@@ -25,8 +25,8 @@ from velox_hadoop_spark.catalog import read_table
 from velox_hadoop_spark.plans.registry import register
 
 
-def _cents(col: str = "o_totalprice"):
-    return F.round(F.col(col) * 100).cast("long")
+def _cents():
+    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # ---------------------------------------------------------------------------

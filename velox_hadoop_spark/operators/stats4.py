@@ -20,23 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
+from velox_hadoop_spark.operators.timeseries5 import _DAILY_ORACLE, _daily
 from velox_hadoop_spark.plans.registry import register
-
-_DAILY_ORACLE = """
-    daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS d,
-               CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-                   AS rev_c
-        FROM orders GROUP BY 1
-    )
-"""
-
-
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return read_table(spark, sf_dir, "orders").groupBy(
-        F.to_date("o_orderdate").alias("d")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("rev_c"))
-
 
 # ---------------------------------------------------------------------------
 # Chi-squared goodness-of-fit: weekday uniformity of order arrivals

@@ -31,14 +31,14 @@ from velox_hadoop_spark.plans.registry import register
 WS = r"\s+"
 
 
-def tokenize(df: DataFrame, col: str = "text", pattern: str = WS) -> DataFrame:
+def tokenize(df: DataFrame, col: str = "text") -> DataFrame:
     """Line -> one row per token (reference: WordCount.java:44-51).
 
     Empty tokens (leading/trailing separators) are dropped, matching
     ``StringTokenizer`` semantics.
     """
     return (
-        df.select(F.explode(F.split(F.col(col), pattern)).alias("word"))
+        df.select(F.explode(F.split(F.col(col), WS)).alias("word"))
         .where(F.col("word") != "")
     )
 

@@ -322,8 +322,6 @@ _STRIDE = CHUNK_TOKENS - CHUNK_OVERLAP
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = CHUNK_TOKENS,
     overlap: int = CHUNK_OVERLAP,
     passthrough: list[str] | None = None,
@@ -349,10 +347,10 @@ def chunk_documents(
     assert stride > 0, "overlap must be smaller than chunk_tokens"
     extra = list(passthrough or [])
     words = df.select(
-        F.col(id_col), *extra, F.split(F.col(text_col), r"\s+").alias("w")
+        F.col("doc_id"), *extra, F.split(F.col("text"), r"\s+").alias("w")
     )
     return words.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *extra,
         F.posexplode(
             F.expr(
@@ -361,7 +359,7 @@ def chunk_documents(
             )
         ).alias("chunk_id", "chunk_text"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         *extra,
         "chunk_id",
         F.size(F.split(F.col("chunk_text"), r"\s+")).alias("n_tokens"),
@@ -397,17 +395,17 @@ _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 _DIGITS9_RE = "[0-9]{9,}"
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Mask email addresses and long digit runs — the regex-scrub shape
     of a PII pass (real deployments add NER models via mapInPandas;
     the plan shape is identical). Pure codegen regexp_replace."""
     cleaned = F.regexp_replace(
-        F.regexp_replace(F.col(text_col), _EMAIL_RE, "<EMAIL>"),
+        F.regexp_replace(F.col("text"), _EMAIL_RE, "<EMAIL>"),
         _DIGITS9_RE,
         "<NUM>",
     )
     return df.withColumn("redacted_text", cleaned).withColumn(
-        "was_redacted", F.col("redacted_text") != F.col(text_col)
+        "was_redacted", F.col("redacted_text") != F.col("text")
     )
 
 
@@ -431,7 +429,7 @@ def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return redact_pii(docs).select("doc_id", "redacted_text", "was_redacted")
 
 
-def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style intra-document repetition signals: fraction of
     tokens belonging to duplicate word-bigrams, and the share of the
     single most frequent bigram.
@@ -442,10 +440,10 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     looping/boilerplate generations that near-dup detection misses
     because the repetition is INSIDE one document."""
     words = df.select(
-        F.col(id_col), F.split(F.col(text_col), r"\s+").alias("w")
+        F.col("doc_id"), F.split(F.col("text"), r"\s+").alias("w")
     ).where(F.size("w") >= 2)
     bigrams = words.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("w").alias("n_tokens"),
         F.explode(
             F.expr(
@@ -453,10 +451,10 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
             )
         ).alias("bg"),
     )
-    per_bg = bigrams.groupBy(id_col, "n_tokens", "bg").agg(
+    per_bg = bigrams.groupBy("doc_id", "n_tokens", "bg").agg(
         F.count("*").alias("c")
     )
-    return per_bg.groupBy(id_col).agg(
+    return per_bg.groupBy("doc_id").agg(
         F.first("n_tokens").cast("long").alias("n_tokens"),
         F.round(
             (F.sum("c") - F.count("*")) / F.sum("c"), 6

@@ -110,7 +110,7 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 EPOCH = "2024-01-01"  # week-index origin (first event day in the corpus)
 
 
-def retention_cohorts(events: DataFrame, epoch: str = EPOCH) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Weekly cohort retention: users bucketed by first-activity week,
     counted in every later week they return.
 
@@ -124,7 +124,7 @@ def retention_cohorts(events: DataFrame, epoch: str = EPOCH) -> DataFrame:
     wk = events.select(
         "user_id",
         F.floor(
-            F.datediff(F.col("ts").cast("date"), F.lit(epoch).cast("date")) / 7
+            F.datediff(F.col("ts").cast("date"), F.lit(EPOCH).cast("date")) / 7
         ).cast("long").alias("w"),
     ).distinct()
     coh = wk.groupBy("user_id").agg(F.min("w").alias("cohort"))

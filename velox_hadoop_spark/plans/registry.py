@@ -86,7 +86,6 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a named query (and its DuckDB oracle) to the registry."""
 
@@ -95,7 +94,7 @@ def register(
             raise ValueError(f"duplicate query name: {name}")
         if oracle is not None and os.environ.get(_LINT_ENV) == "1":
             _validate_oracle(name, oracle)
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, tags=tags, doc=doc or (fn.__doc__ or ""))
+        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, tags=tags, doc=fn.__doc__ or "")
         return fn
 
     return deco

@@ -87,7 +87,7 @@ def get_spark(
     return spark
 
 
-def parallelize_if_narrow_input(df, min_partitions: int | None = None):
+def parallelize_if_narrow_input(df):
     """Round-robin repartition ONLY when the scan under-parallelizes.
 
     Compute-heavy narrow pipelines (MinHash, SimHash, fingerprinting,
@@ -107,9 +107,7 @@ def parallelize_if_narrow_input(df, min_partitions: int | None = None):
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
-    target = min_partitions or (
-        spark.sparkContext.defaultParallelism if spark is not None else 8
-    )
+    target = spark.sparkContext.defaultParallelism if spark is not None else 8
     # File count lower-bounds scan parallelism (a large file splits into
     # MORE partitions, a small one yields exactly one), so n_files >=
     # target guarantees enough tasks — a pure-catalyst probe, no

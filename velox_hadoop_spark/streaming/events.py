@@ -62,9 +62,9 @@ def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_agg(events: DataFrame, width: str = "10 minutes", slide: str = "5 minutes") -> DataFrame:
+def sliding_agg(events: DataFrame) -> DataFrame:
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"))
+        events.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count("*").alias("n"), _sum_value_cents().alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "n", "total_value")
     )
@@ -152,14 +152,12 @@ def read_event_stream(
     return _opts(spark.readStream.schema(EVENT_SCHEMA)).parquet(only_path)
 
 
-def stream_tumbling_counts(
-    stream: DataFrame, width: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    return tumbling_agg(stream.withWatermark("ts", watermark), width)
+def stream_tumbling_counts(stream: DataFrame) -> DataFrame:
+    return tumbling_agg(stream.withWatermark("ts", "2 hours"), "1 hour")
 
 
-def stream_dedup(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+def stream_dedup(stream: DataFrame) -> DataFrame:
+    return stream.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
 
@@ -367,9 +365,9 @@ def q_events_segment_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def click_to_purchase(clicks: DataFrame, purchases: DataFrame, horizon: str = "10 minutes") -> DataFrame:
+def click_to_purchase(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Event-to-event interval join: each click paired with the same
-    user's purchases within ``horizon`` after it.
+    user's purchases within 10 minutes after it.
 
     Works on batch frames directly; on streams, add ``withWatermark`` to
     BOTH sides (see test_stream_stream_join_matches_batch) and Spark
@@ -390,7 +388,7 @@ def click_to_purchase(clicks: DataFrame, purchases: DataFrame, horizon: str = "1
         p,
         (c["user_id"] == p["user_id"])
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 10 minutes")),
     ).select("click_id", "purchase_id", c["user_id"].alias("user_id"), "click_ts", "purchase_ts")
 
 

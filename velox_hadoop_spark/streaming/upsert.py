@@ -48,22 +48,17 @@ def _atomic_replace(spark: SparkSession, tmp_dir: str, final_dir: str) -> None:
         fs.delete(old, True)
 
 
-def merge_latest_batch(
-    batch_df: DataFrame,
-    state_dir: str,
-    key: str,
-    order: str,
-    tiebreak: str,
-) -> None:
-    """One MERGE step: fold a batch into the latest-per-key state table."""
+def merge_latest_batch(batch_df: DataFrame, state_dir: str) -> None:
+    """One MERGE step: fold a batch into the latest-per-user state
+    table (latest by ``ts``, ties broken by ``event_id``)."""
     spark = batch_df.sparkSession
-    fresh = latest_per_key(batch_df, key, order, tiebreak)
+    fresh = latest_per_key(batch_df, "user_id", "ts", "event_id")
     try:
         current = spark.read.parquet(state_dir)
         combined = current.unionByName(fresh)
     except AnalysisException:  # first batch: no state yet
         combined = fresh
-    merged = latest_per_key(combined, key, order, tiebreak)
+    merged = latest_per_key(combined, "user_id", "ts", "event_id")
     tmp_dir = state_dir.rstrip("/") + ".tmp"
     merged.write.mode("overwrite").parquet(tmp_dir)
     _atomic_replace(spark, tmp_dir, state_dir)
@@ -73,9 +68,6 @@ def stream_upsert_latest(
     events: DataFrame,
     state_dir: str,
     query_name: str,
-    key: str = "user_id",
-    order: str = "ts",
-    tiebreak: str = "event_id",
     checkpoint_dir: str | None = None,
 ):
     """Start a foreachBatch stream that upserts into ``state_dir``.
@@ -85,7 +77,7 @@ def stream_upsert_latest(
     """
     writer = (
         events.writeStream.foreachBatch(
-            lambda df, _id: merge_latest_batch(df, state_dir, key, order, tiebreak)
+            lambda df, _id: merge_latest_batch(df, state_dir)
         )
         .queryName(query_name)
         .trigger(availableNow=True)

@@ -11,11 +11,9 @@ regenerate after changing an operator and diff the tree.
 ``--fingerprints`` builds every registered query in registry order
 (``spark.catalog.clearCache()`` between queries) and writes
 ``{name: sha256}`` of its formatted physical plan, with expression ids
-(``#123``) and plan ids normalized away. Two trees whose JSON files are
-equal built the same plans; diff the files to find the queries that
-moved. Queries with several COUNT(DISTINCT) groups can order the groups
-of their Expand differently from one JVM to the next, so run each side
-more than once before reading a difference as a plan change.
+(``#123``), plan ids and RDD ids normalized away and the tokens of each
+line sorted (see :func:`canonical`). Two trees whose JSON files are equal
+built the same plans; diff the files to find the queries that moved.
 """
 
 from __future__ import annotations
@@ -31,10 +29,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from velox_hadoop_spark.plans import registry  # noqa: E402
 from velox_hadoop_spark.session import get_spark  # noqa: E402
 
-# `#123` expression / subquery ids, `[plan_id=45]` exchange ids, and
-# `subquery#12`-style names: allocated from session-global counters, so
-# they depend on how many plans were built before this one.
-_PLAN_IDS = re.compile(r"#\d+|plan_id=\d+")
+# `#123` expression / subquery ids, `[plan_id=45]` exchange ids,
+# `subquery#12`-style names and `MapPartitionsRDD[67]` RDD ids: allocated
+# from session-global counters, so they depend on how many plans were
+# built before this one.
+_PLAN_IDS = re.compile(r"#\d+|plan_id=\d+|(?<=RDD\[)\d+(?=\])")
+_TOKEN = re.compile(r"[^\s,()\[\]]+|[()\[\]]")
+
+
+def canonical(plan: str) -> str:
+    """``plan`` with the tokens of each line sorted.
+
+    Catalyst orders a query's COUNT(DISTINCT) groups by hash sets that
+    iterate differently from one JVM to the next, and that order moves
+    the Expand projections, the aggregate and exchange keys and the
+    grouping-id literal each group gets. Every such move stays inside
+    one line, so sorting each line's tokens makes the fingerprint
+    canonical under it; a plan change that only reorders the tokens of
+    one line is not seen."""
+    return "\n".join(" ".join(sorted(_TOKEN.findall(line))) for line in plan.splitlines())
 
 
 def explain(spark, df, mode: str = "formatted") -> str:
@@ -65,7 +78,7 @@ def main() -> None:
     if sys.argv[1] == "--fingerprints":
         sf_dir, out = sys.argv[2], sys.argv[3]
         prints = {
-            name: hashlib.sha256(plan.encode()).hexdigest()
+            name: hashlib.sha256(canonical(plan).encode()).hexdigest()
             for name, plan in normalized_plans(spark, sf_dir).items()
         }
         with open(out, "w") as fh:

@@ -57,15 +57,33 @@ def rows_to_multiset(cols, rows):
     ), [cols[i] for i in idx]
 
 
+# read_table sets this for TIMESTAMP(NANOS) sources only, and it must
+# stay set: the lazy scan reads the column as a long at every action.
+_NS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def session_state(spark) -> set[str]:
+    """Every temp view, user function and SQL conf the session holds."""
+    views = {f"view {r.viewName}" for r in spark.sql("SHOW VIEWS").collect()}
+    fns = {f"function {r.function}" for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+    confs = {f"conf {k}={v}" for k, v in spark.conf.getAll.items() if k != _NS_CONF}
+    return views | fns | confs
+
+
 def assert_parity(spark, duck, name: str, sf_dir: str = SF_DIR):
     """Run registry query `name` on Spark and its oracle on DuckDB; compare
-    row multiset with columns sorted by name (mirrors the driver gate)."""
+    row multiset with columns sorted by name (mirrors the driver gate).
+    The query must leave the session as it found it: no view, user
+    function or conf it adds, drops or changes outlives it."""
     from velox_hadoop_spark.plans import registry
 
     spec = registry.specs()[name]
+    before = session_state(spark)
     sdf = spec.fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
+    leaked = sorted(session_state(spark) ^ before)
+    assert not leaked, f"{name} left session state behind: {leaked}"
 
     assert spec.oracle is not None, f"{name} has no oracle"
     ddf = duck.sql(spec.oracle)

@@ -649,6 +649,38 @@ def test_catalog_tables_read_only_through_read_table():
     assert not bad, "catalog table read outside catalog.read_table: " + ", ".join(bad)
 
 
+def test_no_session_registration():
+    """No query registers anything in the session: no package code
+    creates a temp or global view, calls ``register_views`` or
+    registers a UDF or UDTF. SQL text takes its tables as DataFrame
+    arguments (``spark.sql("... {t} ...", t=df)``), which pyspark binds
+    to a private view for the one call; a UDTF is called on the
+    DataFrame (``lateralJoin``). A registered name outlives its query,
+    so the next query could read a stale table or function by it."""
+    import ast
+    import pathlib
+
+    views = {
+        "createOrReplaceTempView",
+        "createTempView",
+        "createGlobalTempView",
+        "createOrReplaceGlobalTempView",
+        "register_views",
+    }
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "velox_hadoop_spark"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            owner = getattr(getattr(f, "value", None), "attr", None)
+            if name in views or (name == "register" and owner in ("udf", "udtf")):
+                bad.append(f"{path.relative_to(pkg.parent)}:{node.lineno} {ast.unparse(f)}")
+    assert not bad, f"{len(bad)} session registrations: " + ", ".join(bad)
+
+
 def test_no_unset_kernel_options():
     """Only the options a caller sets: every defaulted parameter of a
     module-level function in the package is passed, by keyword or by

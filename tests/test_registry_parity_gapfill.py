@@ -37,6 +37,8 @@ GAPFILL = [
     "pack_overflow_stats",
     "shard_skew_report",
     "decontam_removal_by_source",
+    "connected_components_lss",
+    "dangling_fk_audit",
 ]
 
 

@@ -15,12 +15,12 @@ Design stance (SURVEY.md §7):
   * Shuffle-bounded by design: no driver-side collect in any operator;
     iterative algorithms (PageRank) persist + checkpoint inside the loop.
   * Small dimension tables are broadcast explicitly; skew-prone joins
-    rely on AQE (enabled by the session builder).
+    rely on AQE (a Spark default the session builder leaves on).
 """
 
 from velox_hadoop_spark.session import get_spark, stop_spark
-from velox_hadoop_spark.catalog import read_table, register_views
+from velox_hadoop_spark.catalog import read_table
 
-__all__ = ["get_spark", "stop_spark", "read_table", "register_views"]
+__all__ = ["get_spark", "stop_spark", "read_table"]
 
 __version__ = "0.1.0"

@@ -1,4 +1,4 @@
-"""Table catalog: sf-dir parquet -> named DataFrames / temp views.
+"""Table catalog: sf-dir parquet -> named DataFrames.
 
 The reference encodes table identity in file paths and re-parses text
 lines per mapper (reference: src/main/java/org/dicl/velox/benchmark/
@@ -121,7 +121,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every catalog table as a temp view for ``spark.sql``."""
-    for name in TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
+def bare_sql(sql: str) -> str:
+    """The DuckDB text of a ``spark.sql`` query whose tables are
+    ``{table}`` placeholders: each placeholder becomes the bare catalog
+    table name. Spark fills the same placeholders with ``read_table``
+    frames passed as keyword arguments, so one string serves both
+    engines and the session keeps no view."""
+    return sql.format(**{t: t for t in TABLES})

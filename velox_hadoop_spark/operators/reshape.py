@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from velox_hadoop_spark.catalog import read_table, register_views
+from velox_hadoop_spark.catalog import bare_sql, read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -94,7 +94,7 @@ def q_unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unpivot_measures(read_table(spark, sf_dir, "lineitem"))
 
 
-# Identical SQL text runs in both engines (same pattern as
+# One SQL text runs in both engines (same pattern as
 # tpch_wide._Q8_SQL): GROUPING SETS is computed by Spark as a single
 # Expand + hash aggregate, and NULL set-markers are folded to 'ALL'.
 _GROUPING_SETS_SQL = """
@@ -104,22 +104,21 @@ _GROUPING_SETS_SQL = """
                               * 10000) AS BIGINT)) AS DOUBLE)
                  / 10000.0, 2) AS revenue,
            count(*) AS n_items
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 """
 
 
 @register(
     "grouping_sets_revenue",
-    oracle=_GROUPING_SETS_SQL,
+    oracle=bare_sql(_GROUPING_SETS_SQL),
     tags=("reshape", "grouping-sets", "sql-interface", "extension"),
 )
 def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue at (flag, status), (flag), and grand-total grains in one
     pass — explicit GROUPING SETS (rollup/cube's general form), same
     SQL text as the DuckDB oracle."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GROUPING_SETS_SQL)
+    return spark.sql(_GROUPING_SETS_SQL, lineitem=read_table(spark, sf_dir, "lineitem"))
 
 
 # Same-text time-hierarchy rollup (year → quarter → month grains in one
@@ -131,7 +130,7 @@ _TIME_ROLLUP_SQL = """
                quarter(o_orderdate) AS q,
                month(o_orderdate) AS m,
                o_totalprice
-        FROM orders
+        FROM {orders}
     )
     SELECT CAST(COALESCE(y, -1) AS INTEGER) AS y,
            CAST(COALESCE(q, -1) AS INTEGER) AS q,
@@ -146,7 +145,7 @@ _TIME_ROLLUP_SQL = """
 
 @register(
     "time_rollup_revenue",
-    oracle=_TIME_ROLLUP_SQL,
+    oracle=bare_sql(_TIME_ROLLUP_SQL),
     tags=("reshape", "rollup", "time-hierarchy", "extension"),
 )
 def q_time_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,5 +157,4 @@ def q_time_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict reductions of the month grain, so at 100 TB you materialize
     the month grain and derive the rest (the incremental_agg_refresh
     pattern maintains it)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_TIME_ROLLUP_SQL)
+    return spark.sql(_TIME_ROLLUP_SQL, orders=read_table(spark, sf_dir, "orders"))

@@ -80,8 +80,6 @@ def q_percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     share tie rules. p in {.25, .5, .75} are exact binary fractions,
     so the >= boundary cannot wobble in either engine. Exact
     percentiles sort only within each group's partition."""
-    li = read_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("__pdc_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -91,8 +89,9 @@ def q_percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROUND(percentile_cont(0.25) WITHIN GROUP (ORDER BY l_quantity), 6) AS cont_25,
                ROUND(percentile_cont(0.50) WITHIN GROUP (ORDER BY l_quantity), 6) AS cont_50,
                ROUND(percentile_cont(0.75) WITHIN GROUP (ORDER BY l_quantity), 6) AS cont_75
-        FROM __pdc_lineitem GROUP BY l_returnflag
-        """
+        FROM {lineitem} GROUP BY l_returnflag
+        """,
+        lineitem=read_table(spark, sf_dir, "lineitem"),
     )
 
 

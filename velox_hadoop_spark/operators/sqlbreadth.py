@@ -52,17 +52,16 @@ def q_grouping_id_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is engine-defined and would silently disagree across engines. One
     shuffle computes all four grouping sets (Spark expands them in a
     single Expand+HashAggregate, not four scans)."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("vhs_gsets_orders")
     return spark.sql("""
         SELECT coalesce(o_orderpriority, 'ALL') AS priority,
                coalesce(o_orderstatus, 'ALL') AS status,
                CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS BIGINT) AS gid,
                count(*) AS n,
                sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_cents
-        FROM vhs_gsets_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus),
                                 (o_orderpriority, o_orderstatus), ())
-    """)
+    """, orders=read_table(spark, sf_dir, "orders"))
 
 
 @register(
@@ -79,12 +78,11 @@ def q_group_by_all_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     modern-SQL convenience form, identical semantics in Spark ≥3.4 and
     DuckDB; compiles to the same partial+final hash aggregate as an
     explicit column list."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("vhs_gba_orders")
     return spark.sql("""
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
                sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev_cents
-        FROM vhs_gba_orders GROUP BY ALL
-    """)
+        FROM {orders} GROUP BY ALL
+    """, orders=read_table(spark, sf_dir, "orders"))
 
 
 @register(
@@ -366,17 +364,17 @@ def q_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     never-ordered customers. Spark compiles the null-tainted form to a
     null-aware anti join (a distinct physical operator worth covering)
     and the clean form to a plain left-anti."""
-    read_table(spark, sf_dir, "customer").createOrReplaceTempView("vhs_nin_customer")
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("vhs_nin_orders")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
     with_null = spark.sql("""
-        SELECT count(*) AS n_with_null FROM vhs_nin_customer
-        WHERE c_custkey NOT IN (SELECT o_custkey FROM vhs_nin_orders
+        SELECT count(*) AS n_with_null FROM {customer}
+        WHERE c_custkey NOT IN (SELECT o_custkey FROM {orders}
                                 UNION ALL SELECT CAST(NULL AS BIGINT))
-    """)
+    """, customer=customer, orders=orders)
     clean = spark.sql("""
-        SELECT count(*) AS n_clean FROM vhs_nin_customer
-        WHERE c_custkey NOT IN (SELECT o_custkey FROM vhs_nin_orders)
-    """)
+        SELECT count(*) AS n_clean FROM {customer}
+        WHERE c_custkey NOT IN (SELECT o_custkey FROM {orders})
+    """, customer=customer, orders=orders)
     return with_null.crossJoin(F.broadcast(clean))
 
 

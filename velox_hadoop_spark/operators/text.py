@@ -250,8 +250,9 @@ def q_udtf_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and aggregated to per-document bigram counts.
 
     The UDTF is the row-at-a-time Python table-function boundary —
-    registered here to prove the full lateral-join plumbing (register →
-    LATERAL correlate → generate → aggregate). It is NOT the hot path
+    called here on the DataFrame to prove the full lateral-join
+    plumbing (outer-column correlate → generate → aggregate) without
+    registering a session function. It is NOT the hot path
     for this computation: the equivalent JVM form is the shingle
     pipeline in ``operators/dedup.py`` (array expr + explode, zero
     Python), which is what every production dedup query here uses.
@@ -270,15 +271,9 @@ def q_udtf_word_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(ws) - 1):
                 yield i, ws[i] + " " + ws[i + 1]
 
-    spark.udtf.register("word_bigrams_udtf", WordBigrams)
-    docs = read_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("udtf_docs_v")
-    return spark.sql(
-        """
-        SELECT d.doc_id,
-               count(*) AS n_bigrams,
-               count(DISTINCT t.bigram) AS n_distinct
-        FROM udtf_docs_v d, LATERAL word_bigrams_udtf(d.text) t
-        GROUP BY d.doc_id
-        """
+    docs = read_table(spark, sf_dir, "documents").alias("d")
+    return (
+        docs.lateralJoin(WordBigrams(F.col("d.text").outer()))
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_bigrams"), F.count_distinct("bigram").alias("n_distinct"))
     )

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from velox_hadoop_spark.catalog import read_table, register_views
+from velox_hadoop_spark.catalog import bare_sql, read_table
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -367,8 +367,8 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One SQL text, two engines: the query below is executed verbatim by
-# spark.sql() (over catalog temp views) AND as the DuckDB oracle —
+# One SQL text, two engines: the query below is executed by spark.sql()
+# (over read_table frames) AND, with bare table names, as the DuckDB oracle —
 # demonstrating that the engine exposes a full ANSI-SQL surface, not
 # just the DataFrame API.
 _Q8_SQL = """
@@ -384,10 +384,10 @@ _Q8_SQL = """
                CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000)
                     AS BIGINT) AS rev_fp,
                n.n_name AS nation
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n ON s.s_nationkey = n.n_nationkey
+        FROM {lineitem} l
+        JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+        JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+        JOIN {nation} n ON s.s_nationkey = n.n_nationkey
     ) AS t
     GROUP BY o_year
 """
@@ -395,16 +395,21 @@ _Q8_SQL = """
 
 @register(
     "sql_q8_market_share",
-    oracle=_Q8_SQL,
+    oracle=bare_sql(_Q8_SQL),
     tags=("sql-interface", "tpch", "extension"),
 )
 def q_sql_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 analog (one nation's revenue share per year) executed as raw
-    SQL text through spark.sql over registered catalog views — the
-    identical string is the DuckDB oracle, so this also pins the SQL
-    dialect subset the engine promises to be portable."""
-    register_views(spark, sf_dir)
-    return spark.sql(_Q8_SQL)
+    SQL text through spark.sql over read_table frames — the same string
+    with bare table names is the DuckDB oracle, so this also pins the
+    SQL dialect subset the engine promises to be portable."""
+    return spark.sql(
+        _Q8_SQL,
+        lineitem=read_table(spark, sf_dir, "lineitem"),
+        orders=read_table(spark, sf_dir, "orders"),
+        supplier=read_table(spark, sf_dir, "supplier"),
+        nation=read_table(spark, sf_dir, "nation"),
+    )
 
 
 @register(

@@ -4,12 +4,14 @@ Centralizes the tuning the reference scattered across its launcher
 (reference: src/main/java/org/dicl/velox/benchmark/VDFSLauncher.java:26-40
 injects buffer sizes and disables speculative execution via `-D` flags).
 Here the equivalent knobs are Spark SQL configs chosen for a
-many-executor deployment but testable on local[N]:
+many-executor deployment but testable on local[N]. Settings that
+restate a Spark 4.1 default are not repeated here:
 
-  * AQE on — runtime partition coalescing, skew-join splitting, and
-    dynamic join-strategy demotion replace the reference's ZooKeeper
-    "lean" work-stealing scheduler (LeanInputFormat.java:30-76) with
-    zero custom code.
+  * AQE (a Spark default: runtime partition coalescing, skew-join
+    splitting, dynamic join-strategy demotion) replaces the
+    reference's ZooKeeper "lean" work-stealing scheduler
+    (LeanInputFormat.java:30-76) with zero custom code; cached plans
+    may change their output partitioning so AQE sizes them too.
   * Arrow on — every Python boundary (pandas UDFs, toPandas) is
     columnar-batched, never row-at-a-time.
   * shuffle.partitions sized from the env (local runs) — on a real
@@ -43,11 +45,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-        # Adaptive execution: coalesce small shuffle partitions, split
-        # skewed ones, demote to broadcast when runtime stats allow.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let AQE size CACHED-plan output partitions too (off by default
         # only for consumers that depend on a cached frame's exact
         # partition count — nothing here does). Without it every
@@ -67,9 +64,8 @@ def get_spark(
         # Arrow for all Python<->JVM data movement.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Parquet scans: vectorized reader + aggregate pushdown into the
-        # scan node where possible (min/max/count on sorted columns).
-        .config("spark.sql.parquet.filterPushdown", "true")
+        # Parquet aggregate pushdown into the scan node where possible
+        # (min/max/count on sorted columns).
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # Keep timestamps deterministic regardless of host TZ.
         .config("spark.sql.session.timeZone", "UTC")

@@ -470,30 +470,20 @@ def q_funnel_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def drain_to_memory_sink(
-    spark: SparkSession, stream_df: DataFrame, prefix: str, output_mode: str
+    spark: SparkSession, stream_df: DataFrame, output_mode: str
 ) -> DataFrame:
-    """Start → drain (availableNow) → return the memory-sink table,
-    dropping any STALE sink temp view left by a previous invocation of
-    the same runner first: memory-sink tables live in driver memory
-    for the session's life, so without the drop a bench/driver sweep
-    that re-invokes a runner N times holds N sink copies (round-10
-    ADVICE). Re-invocation contract (round-12 advice): the drop
-    INVALIDATES any still-held DataFrame from a PRIOR invocation of
-    the same runner — ``spark.table(name)`` resolves lazily by view
-    name, so the uuid suffix only keeps the view names distinct (the
-    drop targets exactly our prefix-mates, nothing else); it does not
-    keep an old frame readable past the next invocation. Callers that
-    need a prior result across re-invocations must materialize it
-    (collect / write) before re-invoking."""
+    """Start → drain (availableNow) → return the memory-sink table.
+
+    The sink's view is dropped as soon as the returned frame holds it:
+    the frame keeps the sink's rows, and the session keeps no view."""
     import uuid
 
-    for tbl in spark.catalog.listTables():
-        if tbl.isTemporary and tbl.name.startswith(prefix):
-            spark.catalog.dropTempView(tbl.name)
-    name = f"{prefix}{uuid.uuid4().hex[:8]}"
+    name = f"vhs_sink_{uuid.uuid4().hex[:8]}"
     q = run_available_now(stream_df, name, output_mode=output_mode)
     q.awaitTermination()
-    return spark.table(name)
+    sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return sink
 
 
 @register(
@@ -527,9 +517,7 @@ def q_streaming_tumbling_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet")
     # stream_tumbling_counts == watermark + the SHARED exact-cents
     # tumbling_agg, so the runner and the batch query cannot drift
-    return drain_to_memory_sink(
-        spark, stream_tumbling_counts(stream), "vhs_tumbling_", "complete"
-    )
+    return drain_to_memory_sink(spark, stream_tumbling_counts(stream), "complete")
 
 
 @register(
@@ -570,7 +558,7 @@ def q_streaming_dedup_runner(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_event_stream(
         spark, f"{sf_dir}/events.parquet", max_files_per_trigger=1_000_000
     )
-    sink = drain_to_memory_sink(spark, stream_dedup(stream), "vhs_dedup_", "append")
+    sink = drain_to_memory_sink(spark, stream_dedup(stream), "append")
     return sink.groupBy("user_id", "event_type").agg(
         F.count("*").alias("n_rows")
     )

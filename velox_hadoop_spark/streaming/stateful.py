@@ -453,12 +453,7 @@ def q_streaming_stateful_totals_runner(spark, sf_dir):
     stream = read_event_stream(spark, f"{sf_dir}/events.parquet").select(
         "user_id", "ts", "value"
     )
-    sink = drain_to_memory_sink(
-        spark,
-        stream_running_user_totals_cents(stream),
-        "vhs_stateful_",
-        "update",
-    )
+    sink = drain_to_memory_sink(spark, stream_running_user_totals_cents(stream), "update")
     final = (
         sink.groupBy("user_id")
         .agg(

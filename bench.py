@@ -1,244 +1,177 @@
 #!/usr/bin/env python
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Time registered queries with perfbench's span and event-log code.
 
-Per-query timings go to BENCH_TIMINGS.json (and stderr progress lines);
-stdout's FINAL line is one SHORT JSON summary the driver can always
-parse even when it captures only the output tail:
-{"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
- "queries": {<10 slowest>}, "n_queries": N}.
+    python bench.py [--conf k=v ...] [name ...]
 
-Each query is forced end-to-end with the noop sink (full computation,
-no driver-side collect). One tiny warmup query amortizes JVM/codegen
-startup so per-query numbers reflect steady-state execution.
+Runs on local[$SPARK_GRAFT_CPUS] at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 corpus, ``SF_DIR``). With no names, one pass over the whole registry,
+on a fresh session every ``RECYCLE_EVERY`` queries. With names, three
+passes over just those, and each query reports its fastest pass.
+``--conf`` adds Spark confs to every session; each record keeps the
+confs it ran with, so an A/B of a conf is two runs that differ in them.
 
-Regression triage mode — ``bench.py --retime name [name ...]`` — runs
-only the named queries, warm, 3 runs each, and reports the MIN. The
-full sweep's wall clock swings up to ±30% with host load (4 of the 5
-queries the round-4 sweep flagged >1.3× re-timed flat), so the repo
-discipline is: never call a sweep delta a regression until the warm
-isolated min-of-3 confirms it.
+Each query runs through ``perfbench/worker.run_pass``: its plan build
+(the registered ``fn(spark, sf_dir)`` call) and its execution (a parquet
+write) are separate spans, each under its own Spark job group. The Spark
+event log is always on; ``perfbench/layers.attribute`` adds each span's
+jobs, stages, tasks, shuffle, spill, GC and Python bytes. The event log
+and the query outputs live in a temp dir removed when the run exits.
 
-``bench.py --retime --save [name ...]`` additionally MERGES the warm
-minimums into WARM_TIMINGS.json (keyed by query, with the run list for
-provenance). BENCH_TIMINGS.json stays strictly the one-pass sweep;
-WARM_TIMINGS.json is the isolated min-of-3 record a judge can diff
-warm-vs-warm across rounds. With no names, --save re-times the 15
-slowest sweep entries from BENCH_TIMINGS.json — but note that a
-MULTI-query session contaminates later entries (memory pressure +
-persisted state from earlier queries inflated ann_recall_budget_curve
-3.9 → 11.1s in round 7's batch run): the gold-standard number is one
-``--retime --save <name>`` invocation per query, each in a fresh
-process; use the batch mode only for a quick first pass.
+Every run appends one timestamped JSON record per query to
+BENCH_HISTORY.jsonl and never rewrites earlier lines. stdout's final
+line is a short summary:
+{"metric": "total_query_wall_sec", "value": <sum of build_s + exec_s>,
+ "unit": "sec", "sf": ..., "queries": {<10 slowest>}, "n_queries": N,
+ "failed": [<names>]}.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
+import signal
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+
+import layers  # noqa: E402
+from worker import run_pass  # noqa: E402
 
 from velox_hadoop_spark.plans import registry
 from velox_hadoop_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+HISTORY = os.path.join(ROOT, "BENCH_HISTORY.jsonl")
+# A session's age inflates its later queries' GC pauses (knn_top1_all
+# read 0.8 s fresh, 9-13 s after ~145 prior queries), so a sweep starts
+# a fresh session every this many queries.
+RECYCLE_EVERY = 100
+NAMED_PASSES = 3
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def _iso(t: float) -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(t)) + f".{int(t % 1 * 1000):03d}Z"
 
 
-def retime(names: list[str], runs: int = 3, save: bool = False) -> None:
-    """Warm isolated re-timing of the named queries: min of ``runs``."""
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    if save and not names:
-        try:
-            with open(os.path.join(repo_dir, "BENCH_TIMINGS.json")) as f:
-                sweep = json.load(f)["queries"]
-            names = [n for n, _ in sorted(sweep.items(), key=lambda kv: -kv[1])[:15]]
-        except (OSError, ValueError, KeyError):
-            sys.exit("--save with no names needs a readable BENCH_TIMINGS.json")
-    spark = get_spark(app_name="velox_hadoop_spark-retime")
-    _force(spark.read.parquet(f"{SF_DIR}/region.parquet"))
+def _segment(names: list[str], passes: int, conf: dict, work: str, seg: int) -> tuple[list, dict]:
+    """Run ``passes`` passes over ``names`` on one fresh session; return
+    its spans, with the event log's counters, and each failed query's
+    first error."""
+    eventlog = os.path.join(work, f"eventlog-{seg}")
+    os.makedirs(eventlog)
+    spark = get_spark(
+        app_name=f"velox_hadoop_spark-bench-{seg}",
+        extra_conf={
+            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": f"file://{eventlog}",
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            **conf,
+        },
+    )
+    spark.read.parquet(f"{SF_DIR}/region.parquet").count()  # warm-up
+    fns = registry.queries()
+    spans: list = []
+    failed: dict = {}
+    for p in range(passes):
+        for name in names:
+            load1 = os.getloadavg()[0]
+            n = len(spans)
+            for f in run_pass(spark, [name], fns, SF_DIR, os.path.join(work, "out"), spans, p):
+                failed.setdefault(name, f["error"])
+            for s in spans[n:]:
+                s["load1"] = load1
+            shutil.rmtree(os.path.join(work, "out", name), ignore_errors=True)
+            print(f"{name} pass {p}: " + " ".join(f"{s['phase']} {s['t1'] - s['t0']:.3f}s" for s in spans[n:]),
+                  file=sys.stderr)
+    spark.stop()  # flushes the event log
+    layers.attribute(spans, eventlog)
+    return spans, failed
+
+
+def _records(names: list[str], spans: list, failed: dict, common: dict) -> list[dict]:
+    """One record per query: its fastest pass that ran both spans."""
+    out = []
+    for name in names:
+        by_pass: dict = {}
+        for s in spans:
+            if s["query"] == name:
+                by_pass.setdefault(s["pass"], {})[s["phase"]] = s
+        done = [ph for ph in by_pass.values() if len(ph) == 2]
+        t0 = min((s["t0"] for ph in by_pass.values() for s in ph.values()), default=time.time())
+        rec = {"ts": _iso(t0), **common, "query": name}
+        if name in failed:
+            rec["error"] = failed[name]
+        if done:
+            best = min(done, key=lambda ph: sum(s["t1"] - s["t0"] for s in ph.values()))
+            rec.update(
+                load1=round(best["build"]["load1"], 2),
+                passes=len(by_pass),
+                build_s=round(best["build"]["t1"] - best["build"]["t0"], 4),
+                exec_s=round(best["exec"]["t1"] - best["exec"]["t0"], 4),
+                **{ph: {k: round(s[k], 4) for k in layers.COUNTERS} for ph, s in best.items()},
+            )
+        out.append(rec)
+    return out
+
+
+def main() -> int:
+    args = sys.argv[1:]
+    conf: dict[str, str] = {}
+    while args and args[0] == "--conf":
+        if len(args) < 2 or "=" not in args[1]:
+            sys.exit("usage: bench.py [--conf k=v ...] [name ...]")
+        k, v = args[1].split("=", 1)
+        conf[k] = v
+        args = args[2:]
     qs = registry.queries()
-    unknown = [n for n in names if n not in qs]
+    unknown = [n for n in args if n not in qs]
     if unknown:
         sys.exit(f"unknown queries: {', '.join(unknown)}")
-    # previous board values drive the load guard below (round-12
-    # verdict item 3: the committed board carried loaded-box outliers —
-    # knn_top1_all recorded 4.15 s where an idle box reads 0.87 s —
-    # which defeats the board's purpose as the regression arbiter)
-    path = os.path.join(repo_dir, "WARM_TIMINGS.json")
+    names = args or sorted(qs)
+    passes = NAMED_PASSES if args else 1
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    # Spark's Python workers import the registry's UDFs from the checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join([ROOT, os.environ.get("PYTHONPATH", "")]).rstrip(os.pathsep)
+    common = {"run": _iso(time.time()), "nproc": len(os.sched_getaffinity(0)), "sf": sf, "conf": conf}
+
+    # a terminated run still removes its temp dir
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    work = tempfile.mkdtemp(prefix="bench-")
+    records: list[dict] = []
     try:
-        with open(path) as f:
-            prev_record = json.load(f)
-        prev_board = (
-            prev_record.get("queries", {}) if prev_record.get("sf") == sf else {}
-        )
-    except (OSError, ValueError):
-        prev_record, prev_board = {}, {}
+        for seg, i in enumerate(range(0, len(names), RECYCLE_EVERY)):
+            chunk = names[i : i + RECYCLE_EVERY]
+            spans, failed = _segment(chunk, passes, conf, work, seg)
+            recs = _records(chunk, spans, failed, common)
+            with open(HISTORY, "a") as f:
+                f.writelines(json.dumps(r) + "\n" for r in recs)
+            records += recs
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
-    def _sample(name: str, n: int) -> list[float]:
-        s = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            _force(qs[name](spark, SF_DIR))
-            s.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        return s
-
-    out: dict[str, float] = {}
-    all_samples: dict[str, list[float]] = {}
-    flags: dict[str, dict] = {}
-    for name in names:
-        load1 = os.getloadavg()[0]
-        samples = _sample(name, runs)
-        prev = prev_board.get(name, {}).get("warm_min_sec")
-        # LOAD GUARD: a min >1.5x the previous board entry is retried
-        # once before it can land on the board — the sweep-jitter data
-        # says a loaded box inflates isolated runs this much with no
-        # code change. A min that survives the retry is recorded AND
-        # flagged, so a real regression still surfaces while a
-        # transient-load triple cannot silently become the new arbiter
-        # value.
-        if prev is not None and min(samples) > 1.5 * prev:
-            print(
-                f"{name}: min {min(samples):.3f}s > 1.5x board {prev}s "
-                f"(load1 {load1:.1f}) — retrying once",
-                file=sys.stderr,
-            )
-            samples += _sample(name, runs)
-        out[name] = round(min(samples), 3)
-        all_samples[name] = [round(s, 3) for s in samples]
-        flags[name] = {"load1": round(load1, 2)}
-        if prev is not None and out[name] > 1.5 * prev:
-            flags[name]["regressed_vs_prev"] = prev
-        print(f"{name}: min {out[name]}s of {all_samples[name]}", file=sys.stderr)
-    if save:
-        record = prev_record
-        # a record from a DIFFERENT scale factor is not comparable —
-        # start fresh rather than silently mixing regimes under one label
-        if record.get("sf") != sf or not isinstance(record.get("queries"), dict):
-            record = {
-                "note": "isolated warm min-of-N per query (bench.py --retime --save); BENCH_TIMINGS.json is the separate one-pass sweep",
-                "sf": sf,
-                "queries": {},
-            }
-        record["note_load_guard"] = (
-            "entries record the 1-min load average at measurement; a min "
-            ">1.5x the prior board value is re-sampled once and, if it "
-            "persists, carries regressed_vs_prev with the prior value"
-        )
-        for name in out:
-            record["queries"][name] = {
-                "warm_min_sec": out[name],
-                "runs": all_samples[name],
-                **flags[name],
-            }
-        with open(path, "w") as f:
-            json.dump(record, f, indent=1, sort_keys=True)
-    print(json.dumps({"metric": "warm_min_of_runs", "runs": runs, "unit": "sec", "queries": out}))
-
-
-def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--retime":
-        args = sys.argv[2:]
-        save = "--save" in args
-        names = [a for a in args if a != "--save"]
-        if not names and not save:
-            sys.exit("usage: bench.py --retime [--save] [name ...]")
-        retime(names, save=save)
-        return
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(app_name="velox_hadoop_spark-bench")
-
-    # warmup: JVM + codegen + parquet footer caches
-    _force(spark.read.parquet(f"{SF_DIR}/region.parquet"))
-
-    # Session recycle cadence: a single long-lived session accumulates
-    # stochastic GC exposure as the registry grows (round-7 anatomy:
-    # knn_top1_all read 0.8s fresh vs 9-13s after ~145 prior queries,
-    # its code untouched), which made cross-round one-pass sweep totals
-    # incomparable. A fresh session every ~100 queries (plus a warmup to
-    # re-pay JIT/footer caches outside any query's timing) keeps the
-    # one-pass record measuring the queries, not the session's age.
-    recycle_every = int(os.environ.get("SPARK_GRAFT_RECYCLE_EVERY", "100"))
-
-    timings: dict[str, float] = {}
-    for i, (name, fn) in enumerate(sorted(registry.queries().items())):
-        if recycle_every > 0 and i > 0 and i % recycle_every == 0:
-            spark.stop()
-            spark = get_spark(app_name=f"velox_hadoop_spark-bench-{i}")
-            _force(spark.read.parquet(f"{SF_DIR}/region.parquet"))
-        t0 = time.perf_counter()
-        _force(fn(spark, SF_DIR))
-        timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"{name}: {timings[name]}s", file=sys.stderr)
-        # queries own their persists for the duration of one run; the
-        # harness releases them so 100+ queries can't evict each other
-        spark.catalog.clearCache()
-
-    total = round(sum(timings.values()), 3)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(repo_dir, "BENCH_TIMINGS.json"), "w") as f:
-        json.dump({"sf": sf, "total_sec": total, "queries": timings}, f, indent=1, sort_keys=True)
-
-    # Sweep-outlier auto-retime: any entry reading >1.5x its last
-    # isolated warm min is session noise until proven otherwise — rerun
-    # each such query in its own FRESH process (the gold standard above;
-    # a shared multi-query session contaminates later entries) with
-    # --retime --save, so every outlier in the hand-off carries a warm
-    # record the judge can diff without re-running. Subprocess stdout is
-    # swallowed to stderr so this file's final stdout line stays the
-    # parseable sweep summary. Cap at 10 / disable with
-    # SPARK_GRAFT_AUTO_RETIME=0 to bound the post-sweep wall clock.
-    try:
-        with open(os.path.join(repo_dir, "WARM_TIMINGS.json")) as f:
-            warm = json.load(f)
-        warm_qs = warm.get("queries", {}) if warm.get("sf") == sf else {}
-    except (OSError, ValueError):
-        warm_qs = {}
-    outliers = sorted(
-        (n for n, t in timings.items()
-         if n in warm_qs and t > 1.5 * warm_qs[n]["warm_min_sec"] and t > 1.0),
-        key=lambda n: -timings[n],
-    )[:10]
-    if outliers and os.environ.get("SPARK_GRAFT_AUTO_RETIME", "1") != "0":
-        import subprocess
-
-        spark.stop()  # free the JVM before the fresh-process retimes
-        # settle: retimes launched the instant a 350-query sweep ends
-        # read 1.5-3x high (measured round 8: ann_ivf_recall 6.5 vs
-        # 2.1 isolated minutes later) — let page cache / GC / JVM
-        # teardown drain before measuring
-        time.sleep(30)
-        print(f"sweep outliers vs warm record (>1.5x, >1s): {outliers}", file=sys.stderr)
-        for n in outliers:
-            r = subprocess.run(
-                [sys.executable, os.path.join(repo_dir, "bench.py"), "--retime", "--save", n],
-                capture_output=True, text=True,
-            )
-            tail = (r.stdout.strip().splitlines() or [""])[-1]
-            print(f"auto-retime {n} (rc={r.returncode}): {tail}", file=sys.stderr)
-
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
+    timed = {r["query"]: round(r["build_s"] + r["exec_s"], 3) for r in records if "error" not in r}
     print(
         json.dumps(
             {
                 "metric": "total_query_wall_sec",
-                "value": total,
+                "value": round(sum(timed.values()), 3),
                 "unit": "sec",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "queries": slowest,
-                "n_queries": len(timings),
+                "queries": dict(sorted(timed.items(), key=lambda kv: -kv[1])[:10]),
+                "n_queries": len(timed),
+                "failed": sorted(r["query"] for r in records if "error" in r),
             }
         )
     )
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

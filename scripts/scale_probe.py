@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Scaling-curve probe: time representative registry queries at 1x and Kx
-the bench scale (sf0.1) and report the wall-clock ratio per query.
+the bench scale (sf0.1) with ``bench.py`` and report the ratio per query.
 
 Why this exists: the correctness gate proves the operators are RIGHT at
 small SF; this probe measures how their cost GROWS, which is the evidence
 behind the 100 TB claims — a query whose time scales super-linearly in
-rows on local[32] has a shuffle/fan-out problem that 1000 executors will
+rows on local[N] has a shuffle/fan-out problem that 1000 executors will
 not fix.
 
 The Kx corpus is an *isomorphic* blow-up, not a naive replication, so the
@@ -31,10 +31,13 @@ replica instead of degenerating into an all-duplicates corpus:
 Usage:
     python scripts/scale_probe.py [K] [query ...]
 
-Defaults: K=10 and a 12-query slice covering scans/aggs, shuffle join,
-global sort, text, dedup (MinHash-LSH + SimHash), ANN (IVF), text-quality,
-sessionization, and iterative graph. Prints one JSON line per scale and a
-final summary flagging any query whose time ratio exceeds 1.5 * K.
+Defaults: K=10 and the DEFAULT_QUERIES slice covering scans/aggs, shuffle
+join, global sort, text, dedup (MinHash-LSH + SimHash), ANN (IVF),
+text-quality, sessionization, and iterative graph. Each scale is one
+``bench.py <query ...>`` run (three passes, each query's fastest), so both
+land in BENCH_HISTORY.jsonl; the ratio is of their build_s + exec_s. Prints
+one line per query and a final JSON line flagging any query whose ratio
+exceeds 1.5 * K.
 """
 
 from __future__ import annotations
@@ -42,14 +45,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession, functions as F
 
-from velox_hadoop_spark.plans import registry
 from velox_hadoop_spark.session import get_spark
 
 BASE_SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -169,43 +172,38 @@ def build_scaled(spark: SparkSession, k: int) -> str:
     return out
 
 
-def time_queries(spark: SparkSession, sf_dir: str, names: list[str]) -> dict[str, float]:
-    """min-of-2 per query: the first run pays parquet page-cache misses
-    and any transient host contention (this box shows 2-5x swings on
-    cold reads), which would false-flag a linear operator as
-    super-linear. The min isolates the compute shape the probe is
-    actually auditing; queries own their persists, so the cache is
-    cleared between runs to keep run 2 honest."""
-    qs = registry.queries()
-    out: dict[str, float] = {}
-    for n in names:
-        best = float("inf")
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            qs[n](spark, sf_dir).count()
-            best = min(best, time.time() - t0)
-        out[n] = round(best, 3)
-    return out
+def bench(sf_dir: str, names: list[str]) -> dict[str, float]:
+    """build_s + exec_s per query from one ``bench.py`` run at ``sf_dir``,
+    read back from the records the run appended to BENCH_HISTORY.jsonl."""
+    history = os.path.join(ROOT, "BENCH_HISTORY.jsonl")
+    start = os.path.getsize(history) if os.path.exists(history) else 0
+    subprocess.run(
+        [sys.executable, os.path.join(ROOT, "bench.py"), *names],
+        env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir),
+        stdout=subprocess.DEVNULL,
+        check=True,
+    )
+    with open(history) as f:
+        f.seek(start)
+        recs = [json.loads(line) for line in f]
+    return {r["query"]: round(r["build_s"] + r["exec_s"], 3) for r in recs if "build_s" in r}
 
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     names = sys.argv[2:] or DEFAULT_QUERIES
-    spark = get_spark(app_name="scale_probe", cpus=32, shuffle_partitions=32)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
+    spark = get_spark(app_name="scale_probe")
     scaled_dir = build_scaled(spark, k)
-    # warm the JVM + code paths so x1 isn't charged JVM start
-    time_queries(spark, BASE_SF, names[:2])
+    spark.stop()
 
-    t1 = time_queries(spark, BASE_SF, names)
-    tk = time_queries(spark, scaled_dir, names)
-    print(json.dumps({"scale": 1, "sf_dir": BASE_SF, "queries": t1}))
-    print(json.dumps({"scale": k, "sf_dir": scaled_dir, "queries": tk}))
-
+    t1 = bench(BASE_SF, names)
+    tk = bench(scaled_dir, names)
     flagged = []
     for n in names:
+        if n not in t1 or n not in tk:
+            print(f"{n}: failed at x1 or x{k}")
+            flagged.append(n)
+            continue
         ratio = tk[n] / max(t1[n], 1e-9)
         status = "SUPER-LINEAR" if ratio > 1.5 * k and tk[n] > 2.0 else "ok"
         if status != "ok":

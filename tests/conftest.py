@@ -2,14 +2,14 @@
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Registration-time oracle lint: under pytest every @register() call
 # schema-probes its oracle against DuckDB, so an offending output shape
@@ -19,6 +19,7 @@ os.environ.setdefault("VHS_ORACLE_LINT", "1")
 
 from velox_hadoop_spark.session import get_spark  # noqa: E402
 from velox_hadoop_spark.catalog import TABLES  # noqa: E402
+from scripts.local_gate import _multiset, _type_mismatches  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -38,25 +39,6 @@ def duck():
     con.close()
 
 
-def _canon(v):
-    """Canonicalize a cell for order-insensitive comparison."""
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    return v
-
-
-def rows_to_multiset(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    # sort by repr: mixed None/str/num cells aren't directly comparable
-    return sorted(
-        (tuple(_canon(row[i]) for i in idx) for row in rows), key=repr
-    ), [cols[i] for i in idx]
-
-
 # read_table sets this for TIMESTAMP(NANOS) sources only, and it must
 # stay set: the lazy scan reads the column as a long at every action.
 _NS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -71,8 +53,9 @@ def session_state(spark) -> set[str]:
 
 
 def assert_parity(spark, duck, name: str, sf_dir: str = SF_DIR):
-    """Run registry query `name` on Spark and its oracle on DuckDB; compare
-    row multiset with columns sorted by name (mirrors the driver gate).
+    """Run registry query `name` on Spark and its oracle on DuckDB and
+    compare them as ``scripts/local_gate.py`` does: Arrow type classes,
+    column names, then the row multiset with columns sorted by name.
     The query must leave the session as it found it: no view, user
     function or conf it adds, drops or changes outlives it."""
     from velox_hadoop_spark.plans import registry
@@ -86,12 +69,14 @@ def assert_parity(spark, duck, name: str, sf_dir: str = SF_DIR):
     assert not leaked, f"{name} left session state behind: {leaked}"
 
     assert spec.oracle is not None, f"{name} has no oracle"
+    type_bad = _type_mismatches(sdf.dtypes, duck.sql(spec.oracle).arrow().schema)
+    assert not type_bad, f"{name}: type-class mismatch {type_bad}"
     ddf = duck.sql(spec.oracle)
     drows = ddf.fetchall()
     dcols = [d[0] for d in ddf.description]
 
-    s_set, s_cols = rows_to_multiset(scols, srows)
-    d_set, d_cols = rows_to_multiset(dcols, drows)
+    s_set, s_cols = _multiset(scols, srows)
+    d_set, d_cols = _multiset(dcols, drows)
     assert s_cols == d_cols, f"{name}: column mismatch spark={s_cols} duck={d_cols}"
     assert len(s_set) == len(d_set), f"{name}: row count spark={len(s_set)} duck={len(d_set)}"
     mismatches = [(a, b) for a, b in zip(s_set, d_set) if a != b]

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.plans import registry
-from tests.conftest import SF_DIR
+from tests.conftest import ROOT, SF_DIR
 
 
 def _formatted_plan(df) -> str:
@@ -561,7 +561,7 @@ def test_broadcast_lint_all_sites_bounded():
         [_sys.executable, "scripts/lint_plans.py"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert res.returncode == 0, res.stdout + res.stderr
@@ -582,7 +582,7 @@ def test_window_lint_all_sites_bounded():
         [_sys.executable, "scripts/lint_windows.py"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert res.returncode == 0, res.stdout + res.stderr

@@ -2,7 +2,7 @@
 
 import pytest
 
-from tests.conftest import assert_parity
+from tests.conftest import ROOT, assert_parity
 
 PARITY_QUERIES = [
     "minhash_jaccard_estimate",
@@ -72,7 +72,7 @@ def test_oracle_lint_no_hugeint_outputs():
         [_sys.executable, "scripts/lint_oracles.py"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=300,
     )
     assert res.returncode == 0, res.stdout + res.stderr

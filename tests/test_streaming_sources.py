@@ -17,7 +17,8 @@ from velox_hadoop_spark.streaming.events import (
     stream_tumbling_counts,
     tumbling_agg,
 )
-from tests.conftest import SF_DIR, assert_parity, rows_to_multiset
+from scripts.local_gate import _multiset
+from tests.conftest import SF_DIR, assert_parity
 
 PARITY_QUERIES = [
     "events_tumbling_1h",
@@ -109,6 +110,21 @@ def test_tsv_sink_writes_tabs(spark):
     assert files
     body = "".join(open(os.path.join(d, f)).read() for f in files)
     assert "1\ta" in body and "2\tb" in body
+
+
+def test_tsv_roundtrip_builds_do_not_share_a_sink(spark, duck):
+    """Each build of the TSV round trip writes its own sink: a second
+    build in the same session must not overwrite the files the first
+    build's frame still reads lazily."""
+    from velox_hadoop_spark.plans import registry
+
+    spec = registry.specs()["tsv_roundtrip_lineitem"]
+    first = spec.fn(spark, SF_DIR)
+    second = spec.fn(spark, SF_DIR)
+    oracle = duck.sql(spec.oracle)
+    want = _multiset([d[0] for d in oracle.description], oracle.fetchall())
+    for df in (first, second):
+        assert _multiset(df.columns, df.collect()) == want
 
 
 def test_streaming_parquet_sink_with_checkpoint(spark, event_stream_dir):
@@ -602,13 +618,13 @@ def test_events_queries_on_nanos_source(spark, nanos_sf_dir, name, flag_set):
     fn = registry.queries()[name]
     spark.conf.unset(_NANOS_CONF)
     want = fn(spark, SF_DIR)
-    want = rows_to_multiset(want.columns, want.collect())
+    want = _multiset(want.columns, want.collect())
     if flag_set:
         read_table(spark, nanos_sf_dir, "events")
         assert spark.conf.get(_NANOS_CONF) == "true"
     try:
         got = fn(spark, nanos_sf_dir)
-        got = rows_to_multiset(got.columns, got.collect())
+        got = _multiset(got.columns, got.collect())
     finally:
         spark.conf.unset(_NANOS_CONF)
     assert got == want and want[0]

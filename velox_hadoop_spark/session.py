@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def get_spark(

@@ -66,14 +66,17 @@ def q_tsv_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     the roundtripped data must equal the oracle's aggregate over the
     original table (Spark's CSV writer emits round-trippable doubles).
     """
-    import hashlib
     import tempfile
+
+    from pyspark import SparkFiles
 
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/velox_hadoop_spark_tsv_{tag}"
+    # the returned frame reads the sink lazily, so each call gets its own
+    # directory under the driver's scratch root, which Spark deletes when
+    # the session stops
+    path = tempfile.mkdtemp(prefix="tsv-", dir=SparkFiles.getRootDirectory())
     write_tsv(li, path)
     schema = T.StructType(
         [

@@ -11,8 +11,8 @@ regenerate after changing an operator and diff the tree.
 ``--fingerprints`` builds every registered query in registry order
 (``spark.catalog.clearCache()`` between queries) and writes
 ``{name: sha256}`` of its formatted physical plan, with expression ids
-(``#123``), plan ids and RDD ids normalized away and the tokens of each
-line sorted (see :func:`canonical`). Two trees whose JSON files are equal
+(``#123``), plan ids, RDD ids and lambda-variable numbers normalized
+away and the tokens of each line sorted (see :func:`canonical`). Two trees whose JSON files are equal
 built the same plans; diff the files to find the queries that moved.
 """
 
@@ -34,6 +34,10 @@ from velox_hadoop_spark.session import get_spark  # noqa: E402
 # from session-global counters, so they depend on how many plans were
 # built before this one.
 _PLAN_IDS = re.compile(r"#\d+|plan_id=\d+|(?<=RDD\[)\d+(?=\])")
+# PySpark names each lambda variable `<param>_<n>` from another
+# session-global counter, so every query built after one that makes
+# more or fewer lambdas would otherwise print different names.
+_LAMBDA_VAR = re.compile(r"(lambda \w+?_)\d+(?=#)")
 _TOKEN = re.compile(r"[^\s,()\[\]]+|[()\[\]]")
 
 
@@ -62,7 +66,8 @@ def normalized_plans(spark, sf_dir: str) -> dict[str, str]:
     plans = {}
     for name, fn in registry.queries().items():
         spark.catalog.clearCache()
-        plans[name] = _PLAN_IDS.sub("#", explain(spark, fn(spark, sf_dir)))
+        plan = _PLAN_IDS.sub("#", explain(spark, fn(spark, sf_dir)))
+        plans[name] = _LAMBDA_VAR.sub(r"\1", plan)
     spark.catalog.clearCache()
     return plans
 

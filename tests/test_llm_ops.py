@@ -246,6 +246,33 @@ def test_curation_pipeline_monotone(spark):
     assert 0 < n_docs < corpus
 
 
+def test_double_array_literal_is_bit_equal(spark):
+    """double_array's one-parse literal carries each Python float bit
+    for bit, including the values a decimal literal cannot spell
+    (-0.0, NaN, ±inf), and finite values type as F.array of F.lit
+    does."""
+    import math
+    import random
+    import struct
+
+    from velox_hadoop_spark.functions.vectors import double_array
+
+    rnd = random.Random(7)
+    xs = [rnd.uniform(-1, 1) for _ in range(64)]
+    xs += [struct.unpack("f", struct.pack("f", rnd.gauss(0, 1)))[0] for _ in range(64)]
+    xs += [1e-300, 5e-324, 1.7976931348623157e308, 1e20, 0.1, -0.0, 0.0]
+    xs += [math.nan, math.inf, -math.inf]
+    df = spark.range(1).select(double_array(xs).alias("a"))
+    got = df.first().a
+    bits = [struct.pack(">d", x) for x in xs]
+    assert [struct.pack(">d", g) for g in got] == bits
+    finite = xs[-5:-3]  # -0.0 and 0.0
+    assert (
+        spark.range(1).select(double_array(finite).alias("a")).schema
+        == spark.range(1).select(F.array(*[F.lit(x) for x in finite]).alias("a")).schema
+    )
+
+
 def test_knn_blocked_matches_broadcast(spark):
     """Force the distributed block-matrix regime (driver budget 0) and
     check it is bit-identical to the broadcast single-dgemm path."""
@@ -504,6 +531,78 @@ def test_amplified_recall_dominates_single_table(spark):
 
 def test_ivf_recall_parity(spark, duck):
     assert_parity(spark, duck, "ann_ivf_recall")
+
+
+RECALL_GATES = [
+    "ann_lsh_recall_at_k",
+    "ann_multiprobe_recall",
+    "ann_ivf_recall",
+    "ann_recall_budget_curve",
+]
+
+
+@pytest.mark.parametrize("name", RECALL_GATES)
+def test_recall_gate_distributed_parity(spark, duck, monkeypatch, name):
+    """DRIVER_BROADCAST_ROWS = 0 sends every recall gate down its
+    distributed path (blocked exact top-k, join re-rank), which must
+    still match the oracle the driver path matches."""
+    from velox_hadoop_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "DRIVER_BROADCAST_ROWS", 0)
+    assert_parity(spark, duck, name)
+
+
+@pytest.mark.parametrize("cap", [None, -1], ids=["driver", "distributed"])
+@pytest.mark.parametrize("corpus", ["empty", "all_zero"])
+@pytest.mark.parametrize("name", RECALL_GATES)
+def test_recall_gate_on_degenerate_corpus(spark, monkeypatch, tmp_path, name, corpus, cap):
+    """No vector survives the degenerate filter: every gate reports an
+    empty exact baseline with NULL recall, in both regimes. A cap of -1
+    is needed to force the distributed path here, as an empty collect
+    fits under a cap of 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from velox_hadoop_spark.operators import similarity
+    from velox_hadoop_spark.plans.registry import specs as _specs
+
+    n = 0 if corpus == "empty" else 5
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array([[0.0] * 64] * n, pa.list_(pa.float32())),
+                "label": pa.array([0] * n, pa.int32()),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    if cap is not None:
+        monkeypatch.setattr(similarity, "DRIVER_BROADCAST_ROWS", cap)
+    rows = _specs()[name].fn(spark, str(tmp_path)).collect()
+    assert len(rows) == (3 if name == "ann_recall_budget_curve" else 1)
+    for r in rows:
+        assert (r.n_queries, r.n_exact, r.n_hits, r.recall) == (0, 0, 0, None)
+
+
+def test_ivf_recall_jobs_below_cap(spark, tmp_path):
+    """Below the driver cap, ann_ivf_recall builds with at most 3 Spark
+    jobs (codebook collect, the one frame collect) and writes its
+    one-row local relation with 1."""
+    from tests.conftest import SF_DIR
+    from velox_hadoop_spark.plans.registry import specs as _specs
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("ivf-recall-build", "build")
+        df = _specs()["ann_ivf_recall"].fn(spark, SF_DIR)
+        sc.setJobGroup("ivf-recall-write", "write")
+        df.write.parquet(str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(tracker.getJobIdsForGroup("ivf-recall-build")) <= 3
+    assert len(tracker.getJobIdsForGroup("ivf-recall-write")) == 1
 
 
 def test_entity_resolution_parity(spark, duck):

@@ -127,6 +127,30 @@ def test_tsv_roundtrip_builds_do_not_share_a_sink(spark, duck):
         assert _multiset(df.columns, df.collect()) == want
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "jsonl_roundtrip_orders",
+        "orc_roundtrip_customer",
+        "partitioned_parquet_prune",
+        "dynamic_partition_prune_join",
+        "federated_format_union",
+    ],
+)
+def test_sink_roundtrip_builds_do_not_share_a_sink(spark, duck, name):
+    """The TSV contract above, for every other round-trip query: both
+    frames are collected only after the second build."""
+    from velox_hadoop_spark.plans import registry
+
+    spec = registry.specs()[name]
+    first = spec.fn(spark, SF_DIR)
+    second = spec.fn(spark, SF_DIR)
+    oracle = duck.sql(spec.oracle)
+    want = _multiset([d[0] for d in oracle.description], oracle.fetchall())
+    for df in (first, second):
+        assert _multiset(df.columns, df.collect()) == want
+
+
 def test_streaming_parquet_sink_with_checkpoint(spark, event_stream_dir):
     """File sink + checkpoint dir: the exactly-once production topology
     (memory sinks are test-only)."""

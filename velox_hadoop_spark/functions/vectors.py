@@ -32,6 +32,28 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def double_array(xs) -> Column:
+    """A literal ``array<double>`` of ``xs``, parsed by the JVM in ONE
+    call. ``F.array(*[F.lit(x) for x in xs])`` makes one Py4J round trip
+    per element, which for a 64-wide weight or centroid vector costs
+    more than the rest of the plan's construction. Each element is
+    written as its shortest round-trip ``repr`` with the ``D`` suffix,
+    so the parsed double is the Python float bit for bit. A decimal
+    literal cannot carry -0.0 (the parser folds it to 0.0), NaN or
+    ±inf: -0.0 is spelled as a negation, and NaN and ±inf as a string
+    cast, which types the array's elements as nullable."""
+    import math
+
+    def sql(x: float) -> str:
+        if not math.isfinite(x):
+            return f"CAST('{x!r}' AS DOUBLE)"
+        if x == 0.0 and math.copysign(1.0, x) < 0:
+            return "-(0.0D)"
+        return f"{x!r}D"
+
+    return F.expr("array(" + ", ".join(sql(float(x)) for x in xs) + ")")
+
+
 def round_half_away(x, decimals: int = 6):
     """Round half away from zero — the mode Spark ``F.round`` and DuckDB
     ``ROUND`` share. numpy's ``np.round`` / Python's ``round`` use

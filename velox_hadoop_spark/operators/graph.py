@@ -388,6 +388,7 @@ def bfs_levels(
     explodes to O(N) falls back to the exchange plan instead of OOMing
     executors.
     """
+    import pandas as pd
     from pyspark.sql import functions as F  # noqa: F811 (local clarity)
 
     e = edges.select("src", "dst")
@@ -400,7 +401,9 @@ def bfs_levels(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     visited = (
-        und.sparkSession.createDataFrame([(start, 0)], "node long, lvl int")
+        und.sparkSession.createDataFrame(
+            pd.DataFrame({"node": [start], "lvl": [0]}), "node long, lvl int"
+        )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     frontier = visited
@@ -1140,8 +1143,10 @@ def connected_components(pairs: DataFrame) -> DataFrame:
             # union by min id keeps the label deterministic
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    rows = [(n, find(n)) for n in parent]
-    return pairs.sparkSession.createDataFrame(rows, "node long, lbl long")
+    import pandas as pd
+
+    labels = pd.DataFrame({"node": list(parent), "lbl": [find(n) for n in parent]})
+    return pairs.sparkSession.createDataFrame(labels, "node long, lbl long")
 
 
 @register(

@@ -255,7 +255,12 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment (nprobe=1 cells), one 4-probe query assignment, ONE
     exact-cosine scoring of the widest candidate set (narrower budgets
     are probe_rank filters over it — candidates nest), one exact
-    baseline. Nothing SF-proportional is broadcast or collected.
+    baseline.
+
+    Below ``DRIVER_BROADCAST_ROWS`` the probe cells and vectors come
+    back in one collect and ``driver_recall`` scores all three arms on
+    the driver, one row per arm. Above it nothing SF-proportional is
+    broadcast or collected:
 
     Shape (round 14, guide §2.4): the three budget arms ride ONE
     exploded frame — each scored candidate fans out to exactly the
@@ -270,23 +275,45 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two consumers: the scorer and the probe_rank re-attach), so the
     ann family leans less on cached-plan partitioning (the r14
     cached-plan-flag A/B measured a 5-15% ann tax from exactly that)."""
+    import pandas as pd
     from pyspark.storagelevel import StorageLevel
 
     from velox_hadoop_spark.operators.similarity import (
         _RECALL_K,
+        DRIVER_BROADCAST_ROWS,
         IVF_CENTROIDS,
+        RECALL_SCHEMA,
+        _ivf_input,
+        driver_recall,
         ivf_assign,
         ivf_assign_probes,
         ivf_codebook,
+        ivf_probe_sims,
+        recall_frame_if_fits,
         recall_ground_truth,
         recall_query_sample,
         score_pairs_exact,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
+    book = ivf_codebook(emb, IVF_CENTROIDS)
+    # Below DRIVER_BROADCAST_ROWS: one collect of every vector's probe
+    # cells (the first is its nprobe=1 cell), scored on the driver. An
+    # empty codebook means no vector survives the degenerate filter.
+    cells = (
+        F.transform(ivf_probe_sims(book, max(_PROBES)), lambda c: c["cid"])
+        if book
+        else F.array().cast("array<int>")
+    )
+    pdf = recall_frame_if_fits(_ivf_input(emb).select("vec_id", "v", cells.alias("cells")))
+    if pdf is not None:
+        cells = pdf["cells"]
+        arms = [(cells.map(lambda c: c[:p]), cells.map(lambda c: c[:1])) for p in _PROBES]
+        out = driver_recall(pdf, _CURVE_SAMPLE_N, arms)
+        out.insert(0, "nprobe", list(_PROBES))
+        return spark.createDataFrame(out, "nprobe long, " + RECALL_SCHEMA)
     # md5-order prefix of the shared gate sample (see _CURVE_SAMPLE_N)
     sample = recall_query_sample(emb).limit(_CURVE_SAMPLE_N)
-    book = ivf_codebook(emb, IVF_CENTROIDS)
     qa = (
         ivf_assign_probes(emb, book, max(_PROBES))
         .join(sample.select("vec_id"), "vec_id", "left_semi")
@@ -304,16 +331,15 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # The shared ground truth (recall_ground_truth) supplies the size
-    # probe, the (below-budget) normalized-corpus broadcast, AND the
-    # exact baseline as a local relation; the curve's narrower sample
-    # is a prefix of the shared gate sample (subset property of
-    # per-query top-k), carved out with one semi-join.
-    n, bc, gt_full, sample_ids = recall_ground_truth(spark, emb)
-    curve_ids = spark.createDataFrame(
-        [(i,) for i in sample_ids[:_CURVE_SAMPLE_N]], "query_id long"
-    )
+    # probe and the exact baseline as a local relation; the curve's
+    # narrower sample is a prefix of the shared gate sample (subset
+    # property of per-query top-k), carved out with one semi-join.
+    n, gt_full = recall_ground_truth(spark, emb)
     scored = score_pairs_exact(
-        emb, cand.select("query_id", "neighbor_id"), n=n, bc=bc
+        emb,
+        cand.select("query_id", "neighbor_id"),
+        driver_broadcast_rows=DRIVER_BROADCAST_ROWS,
+        n=n,
     ).join(cand, ["query_id", "neighbor_id"])
     # Fan each candidate out to exactly the budgets that admit it
     # (probe_rank ≤ p) and rank all arms in ONE window — same rows per
@@ -335,7 +361,9 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rnk") <= _RECALL_K)
         .select("nprobe", "query_id", "neighbor_id")
     )
-    exact_top = gt_full.join(curve_ids, "query_id", "left_semi")
+    exact_top = gt_full.join(
+        sample.select(F.col("vec_id").alias("query_id")), "query_id", "left_semi"
+    )
     # both sides are unique on (query_id, neighbor_id) within an arm,
     # so this semi-joined grouped count equals the old per-arm
     # |exact_top ∩ top_p| counts
@@ -350,7 +378,7 @@ def q_ann_recall_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # literal arm frame keeps a zero-hit budget's row (a grouped count
     # alone would drop it where the old per-arm agg emitted 0)
-    probes = spark.createDataFrame([(int(p),) for p in _PROBES], "nprobe int")
+    probes = spark.createDataFrame(pd.DataFrame({"nprobe": list(_PROBES)}), "nprobe int")
     return (
         probes.join(hits, "nprobe", "left")
         .crossJoin(F.broadcast(stats))
@@ -446,6 +474,8 @@ def q_minhash_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     never three re-executions of the shingle→signature pipeline, and
     never a second copy of the bucket→pairs plan to drift from the one
     the 4×2 path actually runs."""
+    import pandas as pd
+
     from velox_hadoop_spark.operators.dedup import (
         _docs_par,
         lsh_candidate_pairs,
@@ -472,7 +502,13 @@ def q_minhash_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = lsh_candidate_pairs(exploded, "doc_id", extra_group_cols=("config",))
     counts = pairs.groupBy("config").agg(F.count("*").alias("n_candidate_pairs"))
     dim = spark.createDataFrame(
-        [(f"{b}x{r}", b, r) for b, r in _BAND_CONFIGS],
+        pd.DataFrame(
+            {
+                "config": [f"{b}x{r}" for b, r in _BAND_CONFIGS],
+                "bands": [b for b, _ in _BAND_CONFIGS],
+                "rows_per_band": [r for _, r in _BAND_CONFIGS],
+            }
+        ),
         "config string, bands long, rows_per_band long",
     )
     return dim.join(counts, "config", "left").select(

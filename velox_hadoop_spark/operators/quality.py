@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
+from velox_hadoop_spark.functions.vectors import double_array
 from velox_hadoop_spark.plans.registry import register
 
 
@@ -484,7 +485,7 @@ def random_projection(emb: DataFrame) -> DataFrame:
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     cols = []
     for p in range(_RP_PLANES):
-        wlit = F.array(*[F.lit(x) for x in w[p]])
+        wlit = double_array(w[p])
         proj = F.aggregate(
             F.zip_with(wlit, v, lambda a, b: a * b),
             F.lit(0.0),

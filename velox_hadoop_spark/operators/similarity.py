@@ -15,17 +15,26 @@ the top-k; ties broken by neighbor id.
 Scale notes: brute force is O(Q·N) — fine for a query batch against a
 broadcast candidate set; the LSH variant replaces the all-pairs join
 with per-bucket joins (bucket skew handled by AQE). The hyperplane
-weights are hash-derived constants, so every executor computes them
-locally — nothing is shipped.
+weights and the IVF codebook are literal arrays in the plan, so every
+executor computes buckets and cells locally — nothing is shipped.
+
+The ANN recall gates (LSH, amplified LSH, IVF, and the IVF budget
+curve) have two regimes, switched by ``DRIVER_BROADCAST_ROWS`` alone.
+Below it, the Spark kernels compute each vector's index keys, one
+collect brings keys and vectors to the driver, and one dgemm per
+sample chunk scores the exact and every approximate top-k
+(``driver_recall``); the result is a local relation. Above it, the
+exact baseline and the candidate re-rank stay distributed
+(``recall_ground_truth`` / ``_recall_vs_exact``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from velox_hadoop_spark.catalog import read_table
-from velox_hadoop_spark.functions.vectors import cosine, round_half_away, to_double
+from velox_hadoop_spark.functions.vectors import double_array, round_half_away, to_double
 from velox_hadoop_spark.plans.registry import register
 
 N_PLANES = 8
@@ -45,9 +54,10 @@ IVF_QUERY_SALTS = 8
 # oracles mirror this with ORDER BY vec_id LIMIT 8).
 IVF_CENTROIDS = 8
 
-# Corpora at or below this row count may be collected and broadcast as a
-# dense matrix (the fast single-dgemm path); larger corpora route through
-# the distributed blocked kernel — never a full-corpus driver collect.
+# Corpora at or below this row count may be collected to the driver as a
+# dense matrix (the broadcast single-dgemm kernels, the recall gates'
+# driver scoring); larger corpora route through the distributed blocked
+# kernels — never a full-corpus driver collect.
 DRIVER_BROADCAST_ROWS = 500_000
 BLOCK_ROWS = 250_000
 
@@ -144,7 +154,6 @@ def knn_numpy(
     corpus: DataFrame,
     k: int = 1,
     queries: DataFrame | None = None,
-    bc=None,
 ) -> DataFrame:
     """All-pairs cosine top-k via Arrow-batched numpy (BLAS matmul).
 
@@ -157,10 +166,6 @@ def knn_numpy(
     queries against the matrix with one dgemm. ~50× faster than
     per-row lambda evaluation of zip_with/aggregate, identical output
     (cosines rounded to 6 dp before ranking, ties by neighbor id).
-
-    ``bc`` accepts a prebuilt ``broadcast_normalized_corpus(corpus)``
-    handle so a caller scoring the same corpus twice (the recall gates:
-    exact baseline + candidate re-rank) collects and ships it once.
     """
     from collections.abc import Iterator
 
@@ -168,8 +173,7 @@ def knn_numpy(
     import pandas as pd
 
     queries = corpus if queries is None else queries
-    if bc is None:
-        bc = broadcast_normalized_corpus(corpus)
+    bc = broadcast_normalized_corpus(corpus)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c_ids, c_mat_n = bc.value
@@ -333,7 +337,6 @@ def knn_exact(
     queries: DataFrame | None = None,
     n_query_blocks: int | None = None,
     n: int | None = None,
-    bc=None,
 ) -> DataFrame:
     """Exact cosine top-k with a physical-strategy guard.
 
@@ -349,16 +352,15 @@ def knn_exact(
     broadcast-vs-blocked policy so the threshold can never drift
     between callers.
 
-    ``n``/``bc`` let a caller that already probed the corpus size (and,
-    below the budget, already built the normalized broadcast) share
-    both with this kernel instead of re-running the count/collect jobs.
+    ``n`` lets a caller that already probed the corpus size share it
+    with this kernel instead of re-running the count job.
     """
     import math
 
     if n is None:
         n = corpus.count()
     if n <= driver_broadcast_rows:
-        return knn_numpy(corpus, k, queries=queries, bc=bc)
+        return knn_numpy(corpus, k, queries=queries)
     return knn_blocked(
         corpus,
         k,
@@ -397,30 +399,20 @@ def _plane_weights(n_planes: int, dims: int, offset: int = 0) -> list[list[float
     ]
 
 
-def hyperplane_buckets(
-    emb: DataFrame, n_planes: int = N_PLANES, plane_offset: int = 0
-) -> DataFrame:
-    """Sign-random-projection LSH bucket per vector.
+def _lsh_input(emb: DataFrame) -> DataFrame:
+    """The rows ``hyperplane_bucket`` can bucket. A NULL embedding trips
+    the width assert; an EMPTY array would bucket as all-ones here while
+    the oracle's UNNEST drops it, so both are excluded (zero vectors
+    stay: both engines bucket them identically).
 
-    Plane weights w(p,d) ∈ {±1} derive from MD5 parity of "p|d" — a
-    deterministic constant baked into the plan as literal arrays, so
-    the bucket is pure per-row math: for each plane a zip_with dot
-    product, then Σₚ (proj ≥ 0) << p. Zero shuffles, zero joins — the
-    corpus streams through whole-stage codegen once. (The previous
-    shape — posexplode dims × cross-join planes — built 512 rows per
-    vector and shuffled twice.)
-    """
-    w = _plane_weights(n_planes, PLANE_DIMS, plane_offset)
-    # null trips the width assert; an EMPTY array would bucket as
-    # all-ones here while the oracle's UNNEST drops it — exclude both
-    # (zero vectors stay: both engines bucket them identically)
+    It also fails LOUDLY if the data is wider than the literal weight
+    vectors: zip_with null-pads past len(wlit), the null poisons the
+    projection sum, and every plane's when() would silently fall to
+    bucket bit 0 — all vectors in one bucket and a guaranteed oracle
+    mismatch. The assert_true rides in a WHERE clause (never pruned as
+    unused)."""
     emb = drop_null_vectors(emb).where(F.size("embedding") > 0)
-    # Fail LOUDLY if the data is wider than the literal weight vectors:
-    # zip_with null-pads past len(wlit), the null poisons the projection
-    # sum, and every plane's when() would silently fall to bucket bit 0
-    # — all vectors in one bucket and a guaranteed oracle mismatch. The
-    # assert_true rides in a WHERE clause (never pruned as unused).
-    emb = emb.where(
+    return emb.where(
         F.coalesce(
             F.assert_true(
                 F.size("embedding") <= F.lit(PLANE_DIMS),
@@ -429,17 +421,39 @@ def hyperplane_buckets(
             F.lit(True),
         )
     )
+
+
+def hyperplane_bucket(n_planes: int, plane_offset: int) -> Column:
+    """Sign-random-projection LSH bucket of the ``embedding`` column.
+
+    Plane weights w(p,d) ∈ {±1} derive from MD5 parity of "p|d" — a
+    deterministic constant baked into the plan as literal arrays, so
+    the bucket is pure per-row math: for each plane a zip_with dot
+    product, then Σₚ (proj ≥ 0) << p. Zero shuffles, zero joins — the
+    corpus streams through whole-stage codegen once. (The previous
+    shape — posexplode dims × cross-join planes — built 512 rows per
+    vector and shuffled twice.) Apply it to ``_lsh_input`` rows only."""
+    w = _plane_weights(n_planes, PLANE_DIMS, plane_offset)
     v = to_double(F.col("embedding"))
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
-        wlit = F.array(*[F.lit(x) for x in w[p]])
+        wlit = double_array(w[p])
         proj = F.aggregate(
             F.zip_with(F.slice(wlit, F.lit(1), F.size(F.col("embedding"))), v, lambda a, b: a * b),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
         bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return emb.select("vec_id", bucket.cast("long").alias("bucket"))
+    return bucket.cast("long")
+
+
+def hyperplane_buckets(
+    emb: DataFrame, n_planes: int = N_PLANES, plane_offset: int = 0
+) -> DataFrame:
+    """(vec_id, bucket) per bucketable vector (see ``hyperplane_bucket``)."""
+    return _lsh_input(emb).select(
+        "vec_id", hyperplane_bucket(n_planes, plane_offset).alias("bucket")
+    )
 
 
 def ivf_codebook(emb: DataFrame, n_centroids: int) -> list:
@@ -494,7 +508,7 @@ def _ivf_sorted_sims(book: list):
 
     structs = []
     for cid, vec in book:
-        cv = F.array(*[F.lit(float(x)) for x in vec])
+        cv = double_array(vec)
         acc = 0.0
         for x in vec:
             acc += float(x) * float(x)
@@ -541,6 +555,15 @@ def ivf_assign(emb: DataFrame, book: list) -> DataFrame:
     )
 
 
+def ivf_probe_sims(book: list, nprobe: int) -> Column:
+    """The ``nprobe`` best (sim, -centroid_id, centroid_id) structs of a
+    row, best first: the reversed tail of ``_ivf_sorted_sims``, so its
+    first element is ``ivf_assign``'s cell. ``book`` must be
+    non-empty."""
+    k = min(int(nprobe), len(book))
+    return F.reverse(F.slice(_ivf_sorted_sims(book), len(book) - k + 1, k))
+
+
 def ivf_assign_probes(emb: DataFrame, book: list, nprobe: int) -> DataFrame:
     """Multi-probe IVF query assignment: each vector's ``nprobe``
     nearest centroids of ``book`` with their probe rank (1 = nearest).
@@ -557,9 +580,9 @@ def ivf_assign_probes(emb: DataFrame, book: list, nprobe: int) -> DataFrame:
             F.lit(None).cast("long").alias("centroid_id"),
             F.lit(None).cast("int").alias("probe_rank"),
         )
-    k = min(int(nprobe), len(book))
-    top = F.reverse(F.slice(_ivf_sorted_sims(book), len(book) - k + 1, k))
-    return e.select("vec_id", F.posexplode(top).alias("pos", "c")).select(
+    return e.select(
+        "vec_id", F.posexplode(ivf_probe_sims(book, nprobe)).alias("pos", "c")
+    ).select(
         "vec_id",
         F.col("c.cid").cast("long").alias("centroid_id"),
         (F.col("pos") + 1).cast("int").alias("probe_rank"),
@@ -1234,27 +1257,119 @@ def recall_query_sample(emb: DataFrame) -> DataFrame:
     ).limit(_RECALL_SAMPLE_N)
 
 
+def recall_frame_if_fits(frame: DataFrame):
+    """The driver regime's one collect. ``frame`` is a gate's narrow
+    (vec_id, index keys, ``v`` = embedding as doubles) frame over the
+    degenerate-filtered corpus (the oracles' ``e`` CTE); it comes back
+    as pandas, with the md5 sample key ``qkey``, when it holds at most
+    ``DRIVER_BROADCAST_ROWS`` rows, else as None and the gate takes its
+    distributed path. ``limit(cap + 1)`` is the size probe
+    (``graph.connected_components``' shape), so the driver never holds
+    more than cap + 1 rows."""
+    pdf = (
+        frame.withColumn("qkey", F.md5(F.col("vec_id").cast("string")))
+        .limit(DRIVER_BROADCAST_ROWS + 1)
+        .toPandas()
+    )
+    return pdf if len(pdf) <= DRIVER_BROADCAST_ROWS else None
+
+
+def driver_recall(pdf, sample_n: int, arms: list):
+    """Recall@k of each approximate arm against the exact top-k, scored
+    on the driver from ``recall_frame_if_fits``'s frame: one pandas row
+    per arm of (n_queries, n_exact, n_hits, recall).
+
+    The sample is ``recall_query_sample``'s rule (md5 key, then vec_id,
+    first ``sample_n``). Each sample chunk is scored against the corpus
+    with ONE ``round_half_away(qn @ Mn.T, 6)`` dgemm, self-pairs masked,
+    so the exact and every approximate top-k see the same cosine for a
+    pair. An arm is a (query keys, neighbor keys) pair of columns, one
+    entry per ``pdf`` row: a key or an array of keys. A neighbor is a
+    candidate of a query when a query key equals the neighbor key in
+    the same position, a lone neighbor key meeting every query key:
+    same cell, same bucket in some table, or cell among the query's
+    probes.
+
+    Top-k order is (cos desc, neighbor_id asc) as in ``knn_numpy``:
+    cosines sit on a 1e-6 grid, so one integer per pair carries both
+    keys without ties, and ``argpartition`` selects each row's k best
+    exactly. Recall is the integer ratio floor-rounded at 6 dp, NULL on
+    an empty exact baseline like the oracles."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
+    n = len(order)
+    totals = np.zeros((len(arms), 3), dtype=np.int64)
+    if n:
+        ids = pdf["vec_id"].to_numpy()[order]
+        mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
+        mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+        def keys(col):  # one row of keys per vector, in vec_id order
+            a = np.asarray(col)
+            return (np.stack(a) if a.dtype == object else a).reshape(n, -1)[order]
+
+        keyed = [(keys(q), keys(c)) for q, c in arms]
+        qkey = pdf["qkey"].to_numpy()[order].astype(str)
+        sample = np.lexsort((ids, qkey))[:sample_n]
+        kk = min(_RECALL_K, n)
+        tiebreak = np.arange(n - 1, -1, -1)  # columns are in vec_id order
+        chunk = max(1, (1 << 22) // n)  # bounds each chunk's matrices
+
+        def top(key):
+            best = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
+            return best, np.take_along_axis(key, best, axis=1) >= 0
+
+        for lo in range(0, len(sample), chunk):
+            rows = sample[lo : lo + chunk]
+            cos = round_half_away(mat_n[rows] @ mat_n.T, 6)
+            key = (np.rint(cos * 1e6).astype(np.int64) + 1_000_001) * n + tiebreak
+            key[np.arange(len(rows)), rows] = -1
+            exact, exact_ok = top(key)
+            totals[:, 0] += exact_ok.any(axis=1).sum()
+            totals[:, 1] += exact_ok.sum()
+            for a, (q, c) in enumerate(keyed):
+                cand = (q[rows][:, None, :] == c[None, :, :]).any(axis=2)
+                approx, approx_ok = top(np.where(cand, key, -1))
+                same = exact[:, :, None] == approx[:, None, :]
+                totals[a, 2] += (same & exact_ok[:, :, None] & approx_ok[:, None, :]).sum()
+    return pd.DataFrame(
+        {
+            "n_queries": totals[:, 0],
+            "n_exact": totals[:, 1],
+            "n_hits": totals[:, 2],
+            "recall": [
+                math.floor(h / e * 1e6 + 0.5) / 1e6 if e else None
+                for e, h in totals[:, 1:]
+            ],
+        }
+    )
+
+
+RECALL_SCHEMA = "n_queries long, n_exact long, n_hits long, recall double"
+
+
 def recall_ground_truth(spark: SparkSession, emb: DataFrame):
-    """(n, bc, exact_top_local, sample_ids) for the shared recall-gate
-    sample: the exact dgemm baseline runs once per call and comes back
-    as a ~3k-row local relation, which also turns the recall join into
-    a broadcast probe. Bounded collect: ≤ _RECALL_SAMPLE_N × _RECALL_K
-    id pairs + _RECALL_SAMPLE_N sample ids (module CONSTANTS — nothing
-    SF-proportional is ever collected)."""
-    sample = recall_query_sample(emb)
+    """(n, exact_top) for the shared recall-gate sample on the
+    distributed path (corpus above ``DRIVER_BROADCAST_ROWS``): the exact
+    baseline streams the corpus through the blocked cogroup
+    un-replicated, and its ≤ _RECALL_SAMPLE_N × _RECALL_K id pairs (a
+    bound fixed by module constants, never SF-proportional) come back
+    as an Arrow local relation, whose known size lets the recall join
+    in ``_recall_vs_exact`` broadcast it."""
     n = emb.count()
-    bc = broadcast_normalized_corpus(emb) if n <= DRIVER_BROADCAST_ROWS else None
-    rows = [
-        (r.query_id, r.neighbor_id)
-        for r in knn_exact(
-            emb, _RECALL_K, queries=sample, n_query_blocks=1, n=n, bc=bc
-        )
-        .select("query_id", "neighbor_id")
-        .collect()
-    ]
-    ids = [r.vec_id for r in sample.select("vec_id").collect()]
-    exact_top = spark.createDataFrame(rows, "query_id long, neighbor_id long")
-    return n, bc, exact_top, ids
+    top = knn_exact(
+        emb,
+        _RECALL_K,
+        driver_broadcast_rows=DRIVER_BROADCAST_ROWS,
+        queries=recall_query_sample(emb),
+        n_query_blocks=1,
+        n=n,
+    ).select("query_id", "neighbor_id")
+    return n, spark.createDataFrame(top.toPandas(), "query_id long, neighbor_id long")
 
 
 def _score_candidates(emb, cand):
@@ -1294,7 +1409,6 @@ def score_pairs_exact(
     cand: DataFrame,
     driver_broadcast_rows: int = DRIVER_BROADCAST_ROWS,
     n: int | None = None,
-    bc=None,
 ) -> DataFrame:
     """Exact cosine for a bounded (query_id, neighbor_id) candidate
     frame, with the same physical-strategy guard as ``knn_exact``.
@@ -1310,8 +1424,7 @@ def score_pairs_exact(
     side is degenerate (NULL/empty/zero vector) drop in BOTH regimes,
     matching the oracle's finite-vector CTE.
 
-    ``n``/``bc`` share a caller's size probe / broadcast handle, as in
-    ``knn_exact``."""
+    ``n`` shares a caller's size probe, as in ``knn_exact``."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -1321,8 +1434,7 @@ def score_pairs_exact(
         n = corpus.count()
     if n > driver_broadcast_rows:
         return _score_candidates(corpus, cand)
-    if bc is None:
-        bc = broadcast_normalized_corpus(corpus)
+    bc = broadcast_normalized_corpus(corpus)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat_n = bc.value
@@ -1355,22 +1467,20 @@ def score_pairs_exact(
 
 def _recall_vs_exact(emb, cand, gt):
     """(n_queries, n_exact, n_hits, recall) of an approximate
-    candidate-pair frame against the exact sample top-k — the shared
-    tail of every recall gate. Recall is a ratio of integer counts,
+    candidate-pair frame against the exact sample top-k — the
+    distributed tail of every recall gate, for corpora above
+    ``DRIVER_BROADCAST_ROWS``. Recall is a ratio of integer counts,
     floor-rounded at 6 dp.
 
-    ``gt`` is the (n, bc, exact_top_local, _ids) tuple from
-    ``recall_ground_truth``: the exact baseline arrives here as a
-    ~3k-row LOCAL relation, so the candidate re-rank shares its size
-    probe and (below the driver budget) its ONE normalized-corpus
-    broadcast, and the recall join is a broadcast probe. Past the
-    broadcast budget the baseline
-    streams the corpus through the cogroup un-replicated inside
-    ``recall_ground_truth`` — NOTHING SF-proportional is ever broadcast
-    or collected, so the audit stays exact at any scale."""
-    n, bc, exact_top, _ids = gt
+    ``gt`` is the (n, exact_top) pair from ``recall_ground_truth``: the
+    candidate re-rank shares its size probe, and the exact baseline is
+    a ~3k-row local relation, so the recall semi-join broadcasts it.
+    Nothing SF-proportional is broadcast or collected, so the audit
+    stays exact at any scale."""
+    n, exact_top = gt
     approx_top = topk_per_query(
-        score_pairs_exact(emb, cand, n=n, bc=bc), _RECALL_K
+        score_pairs_exact(emb, cand, driver_broadcast_rows=DRIVER_BROADCAST_ROWS, n=n),
+        _RECALL_K,
     ).select("query_id", "neighbor_id")
     hits = exact_top.join(approx_top, ["query_id", "neighbor_id"], "left_semi")
     stats = exact_top.agg(
@@ -1394,7 +1504,6 @@ def _recall_vs_exact(emb, cand, gt):
             / F.lit(1e6),
         ).alias("recall"),
     )
-
 
 
 @register(
@@ -1465,8 +1574,24 @@ def q_ann_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall gate exists to expose before an index replaces the exact
     path. The standard fix is OR-amplification across tables
     (``ann_multiprobe_recall``), which trades candidate volume for
-    recall."""
+    recall.
+
+    Below ``DRIVER_BROADCAST_ROWS`` the buckets and vectors come back in
+    one collect and ``driver_recall`` scores the sample on the driver;
+    above it the plan below runs."""
     emb = read_table(spark, sf_dir, "embeddings")
+    pdf = recall_frame_if_fits(
+        _lsh_input(drop_degenerate_vectors(emb)).select(
+            "vec_id",
+            hyperplane_bucket(N_PLANES, 0).alias("bucket"),
+            to_double(F.col("embedding")).alias("v"),
+        )
+    )
+    if pdf is not None:
+        arms = [(pdf["bucket"], pdf["bucket"])]
+        return spark.createDataFrame(
+            driver_recall(pdf, _RECALL_SAMPLE_N, arms), RECALL_SCHEMA
+        )
     sample = recall_query_sample(emb)
     buckets = hyperplane_buckets(emb)
     qb = (
@@ -1576,9 +1701,27 @@ def q_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape per table is identical to the single-table scale path
     (in-row bucket computation, per-(table, bucket) equi-join); the
-    union adds a branch per table over the same cached bucket frame,
-    and everything downstream is candidate-bounded."""
+    union adds a branch per table over the same bucket frame, and
+    everything downstream is candidate-bounded. Below
+    ``DRIVER_BROADCAST_ROWS`` one collect carries every table's bucket
+    and ``driver_recall`` scores on the driver instead."""
     emb = read_table(spark, sf_dir, "embeddings")
+    names = [f"b{t}" for t in range(_AMP_TABLES)]
+    pdf = recall_frame_if_fits(
+        _lsh_input(drop_degenerate_vectors(emb)).select(
+            "vec_id",
+            *[
+                hyperplane_bucket(_AMP_PLANES, t * _AMP_STRIDE).alias(name)
+                for t, name in enumerate(names)
+            ],
+            to_double(F.col("embedding")).alias("v"),
+        )
+    )
+    if pdf is not None:
+        arms = [(pdf[names], pdf[names])]
+        return spark.createDataFrame(
+            driver_recall(pdf, _RECALL_SAMPLE_N, arms), RECALL_SCHEMA
+        )
     sample = recall_query_sample(emb)
     tbuckets = None
     for t in range(_AMP_TABLES):
@@ -1668,10 +1811,18 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH, IVF): same exact baseline, same integer-ratio recall, so the
     three gates are directly comparable and the index choice is a
     measured decision. Candidate generation is the same-cell equi-join
-    the production ``ann_ivf_topk`` path uses."""
+    the production ``ann_ivf_topk`` path uses. Below
+    ``DRIVER_BROADCAST_ROWS`` the cell assignment comes back in one
+    collect and ``driver_recall`` scores on the driver."""
     emb = read_table(spark, sf_dir, "embeddings")
-    sample = recall_query_sample(emb)
     assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
+    pdf = recall_frame_if_fits(assign)
+    if pdf is not None:
+        arms = [(pdf["centroid_id"], pdf["centroid_id"])]
+        return spark.createDataFrame(
+            driver_recall(pdf, _RECALL_SAMPLE_N, arms), RECALL_SCHEMA
+        )
+    sample = recall_query_sample(emb)
     qa = assign.join(sample.select("vec_id"), "vec_id", "left_semi").select(
         F.col("vec_id").alias("query_id"), "centroid_id"
     )

@@ -429,15 +429,16 @@ def q_values_inline_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the fact table. Literal frames are trivially broadcast by the
     optimizer (no hint needed — the lint's point is hints on
     data-sized frames, and this one is compile-time constant)."""
+    import pandas as pd
+
     orders = read_table(spark, sf_dir, "orders")
     dim = spark.createDataFrame(
-        [
-            ("1-URGENT", 1),
-            ("2-HIGH", 2),
-            ("3-MEDIUM", 5),
-            ("4-NOT SPECIFIED", 10),
-            ("5-LOW", 30),
-        ],
+        pd.DataFrame(
+            {
+                "priority": ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"],
+                "sla_days": [1, 2, 5, 10, 30],
+            }
+        ),
         "priority string, sla_days int",
     )
     return (

@@ -43,6 +43,18 @@ def read_tsv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.option("sep", "\t").schema(schema).csv(path)
 
 
+def sink_dir(kind: str) -> str:
+    """A fresh directory for one build's round-trip sink. The returned
+    frame reads the sink lazily, so no two builds may share it; it lives
+    under the driver's scratch root, which Spark deletes when the
+    session stops."""
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    return tempfile.mkdtemp(prefix=f"{kind}-", dir=SparkFiles.getRootDirectory())
+
+
 # ---------------------------------------------------------------------------
 # Registered query — sink/source roundtrip (S11 + S9 semantics)
 # ---------------------------------------------------------------------------
@@ -66,17 +78,10 @@ def q_tsv_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     the roundtripped data must equal the oracle's aggregate over the
     original table (Spark's CSV writer emits round-trippable doubles).
     """
-    import tempfile
-
-    from pyspark import SparkFiles
-
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    # the returned frame reads the sink lazily, so each call gets its own
-    # directory under the driver's scratch root, which Spark deletes when
-    # the session stops
-    path = tempfile.mkdtemp(prefix="tsv-", dir=SparkFiles.getRootDirectory())
+    path = sink_dir("tsv")
     write_tsv(li, path)
     schema = T.StructType(
         [
@@ -118,14 +123,10 @@ def q_jsonl_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema, aggregate — the semi-structured sibling of the TSV
     roundtrip. Explicit schema on read avoids the inference scan
     (a full extra pass at 100 TB)."""
-    import hashlib
-    import tempfile
-
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/velox_hadoop_spark_jsonl_{tag}"
+    path = sink_dir("jsonl")
     write_jsonl(orders, path)
     schema = T.StructType(
         [
@@ -167,14 +168,10 @@ def q_orc_roundtrip_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC). ORC carries its own schema, so no schema-on-read is needed;
     the aggregate over the roundtripped data must equal the oracle's
     over the original parquet."""
-    import hashlib
-    import tempfile
-
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/velox_hadoop_spark_orc_{tag}"
+    path = sink_dir("orc")
     write_orc(cust, path)
     back = read_orc(spark, path)
     return back.groupBy("c_mktsegment").agg(
@@ -241,16 +238,10 @@ def q_partitioned_parquet_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between a pruned scan and a full scan IS the query
     budget. The aggregate must equal the oracle's over the original
     unpartitioned table."""
-    import hashlib
-    import tempfile
-
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    # per-QUERY sink dir: sharing one path with the DPP query would let
-    # a concurrent run's mode("overwrite") delete part-files mid-scan
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/velox_hadoop_spark_part_prune_{tag}"
+    path = sink_dir("part-prune")
     write_partitioned_parquet(orders, path, "o_orderpriority")
     # explicit schema: an EMPTY input writes a dir with no part files,
     # where schema inference fails — the known schema round-trips it
@@ -322,14 +313,10 @@ def q_dynamic_partition_prune_join(spark: SparkSession, sf_dir: str) -> DataFram
     expression in PartitionFilters) in tests/test_plans.py; the result
     must equal the oracle's static IN-filter over the unpartitioned
     table."""
-    import hashlib
-    import tempfile
-
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = f"{tempfile.gettempdir()}/velox_hadoop_spark_part_dpp_{tag}"
+    path = sink_dir("part-dpp")
     write_partitioned_parquet(orders, path, "o_orderpriority")
     # explicit schema: same empty-input round-trip contract as
     # partitioned_parquet_prune; partition discovery still prunes
@@ -373,17 +360,13 @@ def q_federated_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     current partition in parquet. The union is a no-shuffle
     concatenation; the aggregate's partial phase runs per scan leg.
     Result must equal the oracle over the single original table."""
-    import hashlib
-    import tempfile
-
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = f"{tempfile.gettempdir()}/velox_hadoop_spark_fed_{tag}"
+    base = sink_dir("fed")
     leg = F.col("o_orderkey") % 3
-    write_tsv(orders.where(leg == 1), f"{base}_tsv")
-    write_jsonl(orders.where(leg == 2), f"{base}_jsonl")
+    write_tsv(orders.where(leg == 1), f"{base}/tsv")
+    write_jsonl(orders.where(leg == 2), f"{base}/jsonl")
     schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -392,8 +375,8 @@ def q_federated_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     parquet_leg = orders.where(leg == 0)
-    tsv_leg = read_tsv(spark, f"{base}_tsv", schema)
-    jsonl_leg = read_jsonl(spark, f"{base}_jsonl", schema)
+    tsv_leg = read_tsv(spark, f"{base}/tsv", schema)
+    jsonl_leg = read_jsonl(spark, f"{base}/jsonl", schema)
     all_legs = parquet_leg.unionByName(tsv_leg).unionByName(jsonl_leg)
     return all_legs.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),

@@ -109,6 +109,14 @@ _REVERIFY = (
     "attribution_position_based",
     "conversion_paths_top",
     "parse_url_events",
+    # (i) one bounded cosine-tile kernel: the all-vectors top-1 and the
+    # near-dup pairs run through the block-matrix cogroup at every size
+    # (the broadcast-matrix kernels are deleted):
+    "knn_top1_all",
+    "embedding_near_dup",
+    # (j) the exact side counts distinct (nation, part) pairs and the
+    # sketch aggregates over them (HLL++ unchanged by repeats):
+    "approx_distinct_parts_per_supplier",
 )
 
 

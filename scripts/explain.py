@@ -11,9 +11,10 @@ regenerate after changing an operator and diff the tree.
 ``--fingerprints`` builds every registered query in registry order
 (``spark.catalog.clearCache()`` between queries) and writes
 ``{name: sha256}`` of its formatted physical plan, with expression ids
-(``#123``), plan ids, RDD ids and lambda-variable numbers normalized
-away and the tokens of each line sorted (see :func:`canonical`). Two trees whose JSON files are equal
-built the same plans; diff the files to find the queries that moved.
+(``#123``), plan ids, RDD ids, lambda-variable numbers and round-trip
+sink directories normalized away and the tokens of each line sorted
+(see :func:`canonical`). Two trees whose JSON files are equal built the
+same plans; diff the files to find the queries that moved.
 """
 
 from __future__ import annotations
@@ -38,6 +39,10 @@ _PLAN_IDS = re.compile(r"#\d+|plan_id=\d+|(?<=RDD\[)\d+(?=\])")
 # session-global counter, so every query built after one that makes
 # more or fewer lambdas would otherwise print different names.
 _LAMBDA_VAR = re.compile(r"(lambda \w+?_)\d+(?=#)")
+# A round-trip query writes its sink to a fresh ``<kind>-XXXXXXXX``
+# directory (``tempfile.mkdtemp``) under the session's SparkFiles root,
+# and its scan ``Location`` prints that path.
+_SINK_SUFFIX = r"/([\w-]+)-[a-z0-9_]{8}(?=[/\],\s]|$)"
 _TOKEN = re.compile(r"[^\s,()\[\]]+|[()\[\]]")
 
 
@@ -63,10 +68,14 @@ def explain(spark, df, mode: str = "formatted") -> str:
 def normalized_plans(spark, sf_dir: str) -> dict[str, str]:
     """name -> formatted physical plan with session-counter ids removed,
     every registered query in registry order."""
+    from pyspark import SparkFiles
+
+    sink = re.compile(re.escape(SparkFiles.getRootDirectory()) + _SINK_SUFFIX, re.M)
     plans = {}
     for name, fn in registry.queries().items():
         spark.catalog.clearCache()
         plan = _PLAN_IDS.sub("#", explain(spark, fn(spark, sf_dir)))
+        plan = sink.sub(r"<SparkFiles>/\1-XXXXXXXX", plan)
         plans[name] = _LAMBDA_VAR.sub(r"\1", plan)
     spark.catalog.clearCache()
     return plans

@@ -81,3 +81,42 @@ def assert_parity(spark, duck, name: str, sf_dir: str = SF_DIR):
     assert len(s_set) == len(d_set), f"{name}: row count spark={len(s_set)} duck={len(d_set)}"
     mismatches = [(a, b) for a, b in zip(s_set, d_set) if a != b]
     assert not mismatches, f"{name}: {len(mismatches)} differing rows; first: {mismatches[:3]}"
+
+
+def numpy_knn(vecs: dict, k: int, query_ids=None) -> set:
+    """Brute-force reference for the kNN kernels over ``{vec_id: vector}``
+    (no degenerate vectors): every (query, other vector) cosine of the
+    L2-normalized vectors, rounded half away from zero at 6 dp, ranked
+    by (cos desc, neighbor id asc), as {(query_id, neighbor_id, cos, rnk)}."""
+    import numpy as np
+
+    from velox_hadoop_spark.functions.vectors import round_half_away
+
+    unit = {i: np.asarray(v, dtype=np.float64) / np.linalg.norm(v) for i, v in vecs.items()}
+    out = set()
+    for q in unit if query_ids is None else query_ids:
+        scored = sorted(
+            (-float(round_half_away(unit[q] @ unit[n], 6)), n) for n in unit if n != q
+        )
+        out |= {(q, n, -c, r) for r, (c, n) in enumerate(scored[:k], start=1)}
+    return out
+
+
+def numpy_near_dup(vecs: dict, threshold: float) -> set:
+    """Brute-force reference for the near-dup kernels: {(a, b, cos)}
+    with a < b and the rounded cosine at or above ``threshold``."""
+    return {
+        (a, n, c)
+        for a, n, c, _ in numpy_knn(vecs, len(vecs))
+        if a < n and c >= threshold
+    }
+
+
+def cosine_vectors(emb) -> dict:
+    """{vec_id: embedding} of the rows the cosine kernels keep (non-null,
+    non-empty, non-zero embeddings)."""
+    return {
+        r.vec_id: list(r.embedding)
+        for r in emb.select("vec_id", "embedding").collect()
+        if r.embedding and any(r.embedding)
+    }

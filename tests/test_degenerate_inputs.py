@@ -6,7 +6,7 @@ Every public kernel must return a correctly-typed EMPTY result there —
 never raise — so composed pipelines (filter → dedup → knn → sample)
 degrade to empty output instead of crashing the job. The knn kernels'
 empty-corpus edge was a real crash found by this probe (AxisError from
-a 1-D empty matrix in ``broadcast_normalized_corpus``).
+a 1-D empty matrix in a since-deleted broadcast kNN kernel).
 """
 
 import pytest
@@ -60,12 +60,11 @@ def test_dedup_kernels_on_empty_docs(spark, empty_docs):
 
 def test_knn_kernels_on_empty_corpus(spark, empty_emb):
     """The regression this file exists for: an empty corpus must yield a
-    typed empty top-k frame from every kNN kernel (broadcast-dgemm,
-    block-matrix, and the size-guarded router), not an AxisError."""
-    from velox_hadoop_spark.operators.similarity import knn_blocked, knn_exact, knn_numpy
+    typed empty top-k frame from every kNN kernel (block-matrix, and
+    knn_exact, which sizes its blocks by a count), not an AxisError."""
+    from velox_hadoop_spark.operators.similarity import knn_blocked, knn_exact
 
     for df in (
-        knn_numpy(empty_emb, k=2),
         knn_blocked(empty_emb, k=2, n_blocks=2),
         knn_exact(empty_emb, 2),
     ):
@@ -76,10 +75,10 @@ def test_knn_kernels_on_empty_corpus(spark, empty_emb):
 def test_knn_kernels_on_single_row_corpus(spark):
     """One vector, k=2: the only candidate pair is the masked self-pair,
     so both kernels must emit zero rows (no phantom -inf rank)."""
-    from velox_hadoop_spark.operators.similarity import knn_blocked, knn_numpy
+    from velox_hadoop_spark.operators.similarity import knn_blocked, knn_exact
 
     one = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    assert knn_numpy(one, k=2).count() == 0
+    assert knn_exact(one, k=2).count() == 0
     assert knn_blocked(one, k=2, n_blocks=2).count() == 0
 
 
@@ -148,14 +147,14 @@ def test_vector_kernels_drop_null_embeddings(spark):
         embedding_norms_arrow,
         hyperplane_buckets,
         knn_blocked,
-        knn_numpy,
+        knn_exact,
     )
 
     emb = spark.createDataFrame(
         [(1, None), (2, [1.0, 0.0]), (3, [0.0, 1.0]), (4, [1.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    for out in (knn_numpy(emb, k=1), knn_blocked(emb, k=1, n_blocks=2)):
+    for out in (knn_exact(emb, k=1), knn_blocked(emb, k=1, n_blocks=2)):
         rows = out.collect()
         ids = {r.query_id for r in rows} | {r.neighbor_id for r in rows}
         assert len(rows) == 3 and 1 not in ids
@@ -197,9 +196,9 @@ def test_multimodal_null_payload_yields_null_features(spark):
 
 
 def test_near_dup_and_ivf_kernels_drop_null_embeddings(spark):
-    """The broadcast near-dup pair kernel streams the corpus through the
-    SAME matrix path as knn — both its sides must drop nulls (review
-    follow-up: the stream side was missed in the first hardening pass).
+    """The near-dup pair kernel scores the corpus through the SAME
+    matrix path as knn — both its sides must drop nulls (the query side
+    was once missed).
     ivf_assign likewise feeds matrix kernels, so a null vector must get
     no cell assignment rather than a nondeterministic one."""
     from velox_hadoop_spark.operators.dedup import cosine_near_dup_pairs
@@ -254,14 +253,14 @@ def test_cosine_kernels_drop_zero_norm_vectors(spark):
         hyperplane_buckets,
         ivf_assign,
         ivf_codebook,
-        knn_numpy,
+        knn_exact,
     )
 
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, []), (3, [1.0, 0.01]), (4, [0.0, 1.0])],
         "vec_id long, embedding array<double>",
     )
-    top = knn_numpy(emb, k=2).collect()
+    top = knn_exact(emb, k=2).collect()
     ids = {r.query_id for r in top} | {r.neighbor_id for r in top}
     assert top and ids == {0, 3, 4}
     pairs = cosine_near_dup_pairs(emb, threshold=0.9).collect()

@@ -14,7 +14,7 @@ from velox_hadoop_spark.operators.dedup import (
     simhash64,
 )
 from velox_hadoop_spark.operators.multimodal import extract_features, MEDIA_SCHEMA
-from tests.conftest import assert_parity
+from tests.conftest import assert_parity, cosine_vectors, numpy_knn, numpy_near_dup
 
 PARITY_QUERIES = [
     "dedup_exact",
@@ -273,44 +273,38 @@ def test_double_array_literal_is_bit_equal(spark):
     )
 
 
-def test_knn_blocked_matches_broadcast(spark):
-    """Force the distributed block-matrix regime (driver budget 0) and
-    check it is bit-identical to the broadcast single-dgemm path."""
-    from velox_hadoop_spark.operators.similarity import knn_exact, knn_numpy
+def test_knn_exact_matches_numpy_reference(spark, monkeypatch):
+    """BLOCK_ROWS = 16 splits the corpus into many blocks; the merged
+    tile top-k must equal the brute-force reference."""
+    from velox_hadoop_spark.operators import similarity
+    from velox_hadoop_spark.operators.similarity import knn_exact
 
     from tests.conftest import SF_DIR
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    fast = {tuple(r) for r in knn_numpy(emb, k=3).collect()}
-    blocked = {
-        tuple(r)
-        for r in knn_exact(emb, k=3, driver_broadcast_rows=0, block_rows=16).collect()
-    }
-    assert blocked == fast
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 16)
+    blocked = {tuple(r) for r in knn_exact(emb, k=3).collect()}
+    assert blocked == numpy_knn(cosine_vectors(emb), 3)
 
 
-def test_knn_blocked_query_frame_matches_broadcast(spark):
+def test_knn_blocked_query_frame_matches_numpy_reference(spark):
     """The recall gates' >500k exact baseline: knn_blocked with a small
-    query frame and n_query_blocks=1 must equal the broadcast-dgemm
-    path restricted to the same queries, and its plan must not
+    query frame and n_query_blocks=1 must equal the brute-force
+    reference restricted to the same queries, and its plan must not
     broadcast anything (the corpus streams through the cogroup
     un-replicated; the old fallback F.broadcast-ed an SF-proportional
     sample)."""
-    from velox_hadoop_spark.operators.similarity import (
-        knn_blocked,
-        knn_numpy,
-        recall_query_sample,
-    )
+    from velox_hadoop_spark.operators.similarity import knn_blocked, recall_query_sample
 
     from tests.conftest import SF_DIR
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     sample = recall_query_sample(emb).limit(40)
-    fast = {tuple(r) for r in knn_numpy(emb, k=3, queries=sample).collect()}
+    ref = numpy_knn(cosine_vectors(emb), 3, [r.vec_id for r in sample.select("vec_id").collect()])
     blocked_df = knn_blocked(emb, k=3, n_blocks=8, queries=sample, n_query_blocks=1)
     blocked = {tuple(r) for r in blocked_df.collect()}
-    assert len(fast) > 0
-    assert blocked == fast
+    assert len(ref) > 0
+    assert blocked == ref
     plan = blocked_df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -353,21 +347,88 @@ def test_score_pairs_exact_arrow_matches_join_path(spark):
     assert cos[(1, 2)] == 0.6 and cos[(1, 3)] == 0.0 and cos[(2, 3)] == 0.8
 
 
-def test_near_dup_blocked_matches_broadcast(spark):
+def test_near_dup_blocked_matches_numpy_reference(spark, monkeypatch):
+    """BLOCK_ROWS = 16 splits the corpus into many blocks; the union of
+    the tiles' upper triangles must equal the brute-force pairs."""
+    from velox_hadoop_spark.operators import similarity
     from velox_hadoop_spark.operators.dedup import cosine_near_dup_pairs
 
     from tests.conftest import SF_DIR
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    fast = {tuple(r) for r in cosine_near_dup_pairs(emb, 0.45).collect()}
-    blocked = {
-        tuple(r)
-        for r in cosine_near_dup_pairs(
-            emb, 0.45, driver_broadcast_rows=0, block_rows=16
-        ).collect()
-    }
-    assert len(fast) > 0
-    assert blocked == fast
+    ref = numpy_near_dup(cosine_vectors(emb), 0.45)
+    monkeypatch.setattr(similarity, "BLOCK_ROWS", 16)
+    blocked = {tuple(r) for r in cosine_near_dup_pairs(emb, 0.45).collect()}
+    assert len(ref) > 0
+    assert blocked == ref
+
+
+@pytest.mark.parametrize(
+    "name", ["knn_top1_all", "embedding_near_dup", "ann_ivf_topk", "ann_ivf_recall"]
+)
+def test_cosine_tile_callers_match_oracle_in_small_chunks(spark, duck, monkeypatch, name):
+    """TILE_ENTRIES = 64 leaves each cosine chunk one or two query rows,
+    so every caller of the tile kernel (the blocked top-k and pair
+    kernels, the IVF cell scorer, the driver recall scorer) runs many
+    chunks per tile; the results must still match the oracle."""
+    from velox_hadoop_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "TILE_ENTRIES", 64)
+    assert_parity(spark, duck, name)
+
+
+def test_cosine_tile_kernel_on_numpy_inputs():
+    """The tile kernel and its two reducers against a brute-force
+    reference: cosine ties whose rows fall in different chunks keep id
+    order, k at or above n returns every other vector, empty and 1-row
+    inputs give typed empty frames, and no chunk holds more than the
+    budget's entries (or one row, when a row alone is wider)."""
+    import numpy as np
+
+    from velox_hadoop_spark.operators.similarity import (
+        cosine_pairs_above,
+        cosine_tiles,
+        cosine_topk,
+        unit_rows,
+    )
+
+    rng = np.random.default_rng(5)
+    # 24 vectors, ids shuffled; 12 are copies of three directions, so
+    # each of those has tied neighbors in rows of every chunk
+    base = rng.integers(-3, 4, size=(12, 4)).astype(np.float64)
+    base[0] = 0.5
+    assert (np.abs(base).sum(axis=1) > 0).all()
+    dirs = np.array([[1.0, 0, 0, 0], [0, 2.0, 1.0, 0], [1.0, 1.0, 1.0, 1.0]])
+    vecs = np.vstack([base, np.repeat(dirs, 4, axis=0) * rng.integers(1, 4, size=(12, 1))])
+    ids = rng.permutation(np.arange(100, 124))
+    sids, mat = unit_rows(ids, list(vecs))
+    assert list(sids) == sorted(ids)
+    raw = dict(zip(ids.tolist(), vecs.tolist()))
+    for entries in (1, 30, 48, 1 << 22):
+        chunks = list(cosine_tiles(sids, mat, sids, mat, entries))
+        assert [lo for lo, _ in chunks] == list(np.cumsum([0] + [len(c) for _, c in chunks[:-1]]))
+        assert sum(len(c) for _, c in chunks) == len(sids)
+        assert all(c.size <= entries or len(c) == 1 for _, c in chunks)
+        for k in (1, 3, 23, 40):
+            got = cosine_topk(sids, mat, sids, mat, k, entries)
+            assert {tuple(r) for r in got.itertuples(index=False)} == numpy_knn(raw, k)
+        got = cosine_pairs_above(sids, mat, sids, mat, 0.5, entries)
+        assert {tuple(r) for r in got.itertuples(index=False)} == numpy_near_dup(raw, 0.5)
+    assert len(cosine_topk(sids, mat, sids, mat, 40, 30)) == 24 * 23
+
+    empty_ids, empty = unit_rows(np.empty(0, np.int64), [])
+    one_ids, one = unit_rows(np.array([7]), [np.array([1.0, 2.0])])
+    for (qi, q), (ni, n) in [
+        ((empty_ids, empty), (empty_ids, empty)),
+        ((empty_ids, empty), (sids, mat)),
+        ((sids, mat), (empty_ids, empty)),
+        ((one_ids, one), (one_ids, one)),
+    ]:
+        top = cosine_topk(qi, q, ni, n, 3, 64)
+        assert top.empty and list(top.columns) == ["query_id", "neighbor_id", "cos", "rnk"]
+        assert [str(t) for t in top.dtypes] == ["int64", "int64", "float64", "int64"]
+        pairs = cosine_pairs_above(qi, q, ni, n, -1.0, 64)
+        assert pairs.empty and list(pairs.columns) == ["a_id", "b_id", "cos"]
 
 
 def test_hot_key_cap_bounds_pair_fanout(spark):

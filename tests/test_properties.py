@@ -184,16 +184,18 @@ _vec4 = st.lists(st.integers(min_value=-3, max_value=3), min_size=4, max_size=4)
 @settings(**SETTINGS)
 def test_knn_blocked_query_frame_law(spark, vecs, nb, nq, k):
     """For ANY corpus and any block geometry, the distributed
-    block-matrix kernel restricted to a query frame must equal the
-    broadcast-dgemm kernel on the same queries — the law the recall
+    block-matrix kernel restricted to a query frame must equal a
+    brute-force numpy top-k on the same queries — the law the recall
     gates' >500k exact baseline rests on (every (q, n) pair lands in
-    exactly one tile, ties broken identically)."""
-    from velox_hadoop_spark.operators.similarity import knn_blocked, knn_numpy
+    exactly one tile, ties broken by neighbor id)."""
+    from velox_hadoop_spark.operators.similarity import knn_blocked
+
+    from tests.conftest import numpy_knn
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = emb.where(F.col("vec_id") % 2 == 0)
-    fast = {tuple(r) for r in knn_numpy(emb, k=k, queries=queries).collect()}
+    fast = numpy_knn(dict(rows), k, range(0, len(rows), 2))
     blocked = {
         tuple(r)
         for r in knn_blocked(

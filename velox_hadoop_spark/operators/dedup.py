@@ -971,91 +971,17 @@ def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash64(docs, "doc_id", "text")
 
 
-_BROADCAST_QUERY_BLOCK = 4096  # query rows sliced per task on the broadcast path
-
-
-def _near_dup_broadcast(corpus: DataFrame, threshold: float) -> DataFrame:
-    """Small-corpus near-dup kernel, ONE scan of the corpus total.
-
-    The degenerate-filtered, L2-normalized matrix is collected and
-    broadcast once (that collect IS the only corpus scan); pair
-    generation is then driven by ``spark.range`` over fixed-size query
-    blocks, each task slicing its query rows out of the broadcast
-    matrix itself. The earlier shape streamed the corpus a second time
-    as the query side — plus a third pass for its degenerate filter —
-    so the same scan ran three times per query (the round-4 1.5×
-    warm regression). Only ≥-threshold upper-triangle pairs are
-    emitted — output is |near-dup pairs|, never n².
-    """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from velox_hadoop_spark.functions.vectors import round_half_away
-    from velox_hadoop_spark.operators.similarity import broadcast_normalized_corpus
-
-    bc = broadcast_normalized_corpus(corpus)
-    m = bc.value[1].shape[0]  # driver-side: .value is the local object
-    n_chunks = -(-m // _BROADCAST_QUERY_BLOCK)  # 0 on an empty corpus
-
-    def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c_ids, c_n = bc.value
-        for pdf in batches:
-            for chunk in pdf["id"].tolist():
-                lo = chunk * _BROADCAST_QUERY_BLOCK
-                hi = min(lo + _BROADCAST_QUERY_BLOCK, c_n.shape[0])
-                cos = round_half_away(c_n[lo:hi] @ c_n.T, 6)
-                qids = c_ids[lo:hi]
-                # upper triangle only (a < b) + threshold
-                keep = (cos >= threshold) & (qids[:, None] < c_ids[None, :])
-                qi, ci = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "a_id": qids[qi],
-                        "b_id": c_ids[ci],
-                        "cos": cos[qi, ci],
-                    }
-                )
-
-    out_schema = "a_id long, b_id long, cos double"
-    return (
-        corpus.sparkSession.range(n_chunks)
-        .repartition(max(1, min(n_chunks, corpus.sparkSession.sparkContext.defaultParallelism)))
-        .mapInPandas(pairs, out_schema)
-    )
-
-
-def cosine_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    driver_broadcast_rows: int | None = None,
-    block_rows: int | None = None,
-) -> DataFrame:
+def cosine_near_dup_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b, cos) with a < b and
-    round(cos, 6) ≥ threshold — EXACT at any scale.
-
-    Physical strategy is size-guarded: corpora within the driver budget
-    take the broadcast single-dgemm path; larger corpora route through
-    the distributed block-matrix kernel
-    (``similarity.cosine_pairs_blocked``), so no input can OOM the
-    driver. The one count() is the plan-choice probe (parquet metadata,
-    not data), taken before any collect happens; it counts the RAW
-    corpus, which upper-bounds the degenerate-filtered row count the
-    broadcast actually holds, so the guard errs only toward the
-    distributed path and can never OOM the driver.
-    """
-    import math
-
+    round(cos, 6) ≥ threshold — EXACT at any scale, through the
+    block-matrix cogroup (``similarity.cosine_pairs_blocked``) with
+    ``n_blocks_for`` of the corpus row count. Nothing is collected or
+    broadcast, and each task's cosine block is bounded by
+    ``TILE_ENTRIES``; the output is |near-dup pairs|, never n²."""
     from velox_hadoop_spark.operators import similarity as S
 
-    budget = S.DRIVER_BROADCAST_ROWS if driver_broadcast_rows is None else driver_broadcast_rows
-    blk = S.BLOCK_ROWS if block_rows is None else block_rows
-    n = corpus.count()
-    if n <= budget:
-        return _near_dup_broadcast(corpus, threshold)
     return S.cosine_pairs_blocked(
-        corpus, threshold, n_blocks=max(2, math.ceil(n / blk))
+        corpus, threshold, n_blocks=S.n_blocks_for(corpus.count())
     )
 
 

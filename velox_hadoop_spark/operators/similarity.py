@@ -1,29 +1,37 @@
 """Similarity search over embedding columns. [extension]
 
-ANN over ``array<float>`` embeddings, pure DataFrame ops:
+Exact cosine scoring has one kernel, ``cosine_tiles``: id-sorted,
+L2-normalized query rows (``unit_rows``) against a neighbor matrix in
+row chunks of at most ``TILE_ENTRIES`` cosines, each chunk one
+``round_half_away(q @ nbr.T, 6)`` dgemm with the self-pairs masked. Two
+reducers consume the chunks: ``cosine_topk`` (top-k by cos desc,
+neighbor id asc, from one integer key per pair) and
+``cosine_pairs_above`` (the a < b, cos ≥ t upper triangle). Its callers:
 
-  * brute-force cosine top-k — the correctness baseline. Dot products
-    via ``zip_with``/``aggregate`` builtins (JVM codegen, no Python).
-  * random-hyperplane LSH buckets — the scale path: 8 sign-bits from
-    MD5-derived ±1 hyperplanes bucket the vectors; at 100 TB you join
-    within buckets (and their hamming-1 neighbors) instead of all-pairs.
+  * ``knn_blocked`` / ``knn_exact`` and ``cosine_pairs_blocked``: a
+    block-matrix cogroup whose tasks each score one tile, then a global
+    merge; exact at every corpus size, nothing collected or broadcast;
+  * ``ann_ivf_topk``'s ``cell_topk``: exact top-3 inside an IVF cell;
+  * ``driver_recall``: the recall gates' exact and approximate top-k.
+
+``cosine_pairs`` keeps the expression form (``zip_with``/``aggregate``
+builtins) for the small brute-force query, and ``score_pairs_exact``
+scores candidate pairs one row-wise dot each.
+
+Approximate indexes: random-hyperplane LSH buckets (sign bits of
+MD5-derived ±1 hyperplanes) and an IVF codebook of the lowest vec_ids.
+Both are literal arrays in the plan, so every executor computes buckets
+and cells locally; candidates are joined within a bucket or a cell.
 
 Determinism: cosines are rounded to 6 dp BEFORE ranking in both the
 Spark plan and the oracle, so float summation order can never reorder
 the top-k; ties broken by neighbor id.
 
-Scale notes: brute force is O(Q·N) — fine for a query batch against a
-broadcast candidate set; the LSH variant replaces the all-pairs join
-with per-bucket joins (bucket skew handled by AQE). The hyperplane
-weights and the IVF codebook are literal arrays in the plan, so every
-executor computes buckets and cells locally — nothing is shipped.
-
 The ANN recall gates (LSH, amplified LSH, IVF, and the IVF budget
 curve) have two regimes, switched by ``DRIVER_BROADCAST_ROWS`` alone.
 Below it, the Spark kernels compute each vector's index keys, one
-collect brings keys and vectors to the driver, and one dgemm per
-sample chunk scores the exact and every approximate top-k
-(``driver_recall``); the result is a local relation. Above it, the
+collect brings keys and vectors to the driver, and ``driver_recall``
+scores the sample there; the result is a local relation. Above it, the
 exact baseline and the candidate re-rank stay distributed
 (``recall_ground_truth`` / ``_recall_vs_exact``).
 """
@@ -55,11 +63,14 @@ IVF_QUERY_SALTS = 8
 IVF_CENTROIDS = 8
 
 # Corpora at or below this row count may be collected to the driver as a
-# dense matrix (the broadcast single-dgemm kernels, the recall gates'
-# driver scoring); larger corpora route through the distributed blocked
-# kernels — never a full-corpus driver collect.
+# dense matrix (the recall gates' driver scoring, the candidate re-rank
+# of ``score_pairs_exact``); larger ones stay distributed.
 DRIVER_BROADCAST_ROWS = 500_000
+# Vectors per block of the block-matrix cogroup (``n_blocks_for``).
 BLOCK_ROWS = 250_000
+# Cosines one scored block may hold: every dgemm scorer takes its query
+# rows in chunks of TILE_ENTRIES // |neighbors| rows (``cosine_tiles``).
+TILE_ENTRIES = 1 << 22
 
 # + 0.0 pins −0.0 → +0.0 on every rounded cosine/centroid output:
 # near-orthogonal pairs land in (−5e-7, 0) where DuckDB ROUND keeps the
@@ -134,79 +145,107 @@ def cosine_pairs(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     )
 
 
-def broadcast_normalized_corpus(corpus: DataFrame):
-    """Collect (vec_id, embedding) once, L2-normalize, and broadcast
-    (ids, mat_n) — the shared scaffold of every broadcast-dgemm kernel
-    (knn_numpy here, dedup._near_dup_broadcast). Only the normalized
-    matrix ships; the raw matrix is never broadcast."""
+def unit_rows(ids, vectors):
+    """``(ids, matrix)`` in id order with every row L2-normalized: the
+    input the cosine tiles take. ``vectors`` holds one equal-length
+    array per id; an empty input gives a (0, 0) matrix."""
     import numpy as np
 
-    pdf = drop_degenerate_vectors(corpus).select("vec_id", "embedding").toPandas()
-    ids = pdf["vec_id"].to_numpy()
-    mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    if mat.ndim == 1:  # empty corpus (filter-to-zero upstream): keep 2-D
-        mat = mat.reshape(0, 0)
-    mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    return corpus.sparkSession.sparkContext.broadcast((ids, mat_n))
+    ids = np.asarray(ids)
+    order = np.argsort(ids, kind="stable")
+    if not len(ids):
+        return ids, np.empty((0, 0))
+    mat = np.array(list(vectors), dtype=np.float64)[order]
+    return ids[order], mat / np.linalg.norm(mat, axis=1, keepdims=True)
 
 
-def knn_numpy(
-    corpus: DataFrame,
-    k: int = 1,
-    queries: DataFrame | None = None,
-) -> DataFrame:
-    """All-pairs cosine top-k via Arrow-batched numpy (BLAS matmul).
+def cosine_tiles(qids, q, nids, nbr, entries: int):
+    """Yield ``(lo, cos)`` per chunk of query rows: the chunk's cosines
+    against every neighbor, ``round_half_away(q[lo:hi] @ nbr.T, 6)``,
+    with each self-pair (query id = neighbor id) set to -inf. Both sides
+    come from ``unit_rows``, so the columns are in neighbor-id order. A
+    chunk holds at most ``entries`` cosines, and at least one row."""
+    import numpy as np
 
-    ``queries`` restricts the scored side to a query frame (defaults to
-    the whole corpus) — the sample-vs-corpus shape the recall gates use.
+    if not len(q) or not len(nbr):
+        return
+    step = max(1, entries // len(nbr))
+    for lo in range(0, len(q), step):
+        cos = round_half_away(q[lo : lo + step] @ nbr.T, 6)
+        cos[qids[lo : lo + step, None] == nids] = -np.inf
+        yield lo, cos
 
-    The corpus matrix is broadcast to every executor once (vectors are
-    the *small* side here — at 100 TB you LSH-bucket first, see
-    ``hyperplane_buckets``); each task scores its Arrow batch of
-    queries against the matrix with one dgemm. ~50× faster than
-    per-row lambda evaluation of zip_with/aggregate, identical output
-    (cosines rounded to 6 dp before ranking, ties by neighbor id).
-    """
-    from collections.abc import Iterator
 
+def rank_keys(cos):
+    """One int64 per tile entry that orders a row by (cos desc, neighbor
+    id asc), -1 on a masked self-pair. Cosines sit on the 1e-6 grid and
+    the columns are in id order, so grid step × width + reversed column
+    index is unique within a row."""
+    import numpy as np
+
+    n = cos.shape[1]
+    key = np.rint(np.maximum(cos, -1.0) * 1e6).astype(np.int64)
+    key += 1_000_001
+    key *= n
+    key += np.arange(n - 1, -1, -1)
+    key[np.isneginf(cos)] = -1
+    return key
+
+
+def top_keys(key, k: int):
+    """Column indices of each row's ``k`` largest keys, best first, and
+    the mask of those that are real pairs (key ≥ 0). ``argpartition``
+    picks them; only the picked are sorted."""
+    import numpy as np
+
+    kk = min(k, key.shape[1])
+    best = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
+    picked = np.take_along_axis(key, best, axis=1)
+    order = np.argsort(picked, axis=1)[:, ::-1]
+    best = np.take_along_axis(best, order, axis=1)
+    return best, np.take_along_axis(picked, order, axis=1) >= 0
+
+
+def _frame(schema: dict, chunks: list):
+    """A pandas frame of per-chunk column arrays, typed when empty too."""
     import numpy as np
     import pandas as pd
 
-    queries = corpus if queries is None else queries
-    bc = broadcast_normalized_corpus(corpus)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c_ids, c_mat_n = bc.value
-        order = np.argsort(c_ids)  # neighbor-id tiebreak: scan in id order
-        s_ids, s_n = c_ids[order], c_mat_n[order]
-        if s_n.shape[0] == 0:  # empty corpus: no pairs, typed-empty result
-            return
-        for pdf_q in batches:
-            q = np.array(pdf_q["embedding"].tolist(), dtype=np.float64)
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            cos = round_half_away(qn @ s_n.T, 6)
-            qids = pdf_q["vec_id"].to_numpy()
-            self_mask = qids[:, None] == s_ids[None, :]
-            cos[self_mask] = -np.inf
-            # stable sort on -cos keeps id-order among ties
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :k]
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, top.shape[1]),
-                    "neighbor_id": s_ids[top].ravel(),
-                    "cos": np.take_along_axis(cos, top, axis=1).ravel(),
-                    "rnk": np.tile(np.arange(1, top.shape[1] + 1), len(qids)),
-                }
-            )
-            # k >= corpus size would otherwise emit the masked self-pair
-            # (cos = -inf) as a phantom rank — same edge filter as
-            # knn_blocked, so the two kernels agree for every (k, N)
-            yield out[out["cos"] > -np.inf]
-
-    out_schema = "query_id long, neighbor_id long, cos double, rnk long"
-    return drop_degenerate_vectors(queries).select("vec_id", "embedding").mapInPandas(
-        score, out_schema
+    return pd.DataFrame(
+        {
+            name: np.concatenate([np.empty(0, dtype)] + [c[i] for c in chunks])
+            for i, (name, dtype) in enumerate(schema.items())
+        }
     )
+
+
+def cosine_topk(qids, q, nids, nbr, k: int, entries: int):
+    """Each query's top-``k`` neighbors by (cos desc, neighbor id asc)
+    as a pandas frame of (query_id, neighbor_id, cos, rnk), scored in
+    ``cosine_tiles``; a query with fewer than ``k`` other neighbors gets
+    fewer rows."""
+    import numpy as np
+
+    chunks = []
+    for lo, cos in cosine_tiles(qids, q, nids, nbr, entries):
+        best, ok = top_keys(rank_keys(cos), k)
+        rows, rnk = np.nonzero(ok)
+        picked = best[rows, rnk]
+        chunks.append((qids[lo + rows], nids[picked], cos[rows, picked], rnk + 1))
+    schema = {"query_id": np.int64, "neighbor_id": np.int64, "cos": np.float64, "rnk": np.int64}
+    return _frame(schema, chunks)
+
+
+def cosine_pairs_above(aids, a, bids, b, threshold: float, entries: int):
+    """Every pair with a_id < b_id and cos ≥ ``threshold`` as a pandas
+    frame of (a_id, b_id, cos), scored in ``cosine_tiles``."""
+    import numpy as np
+
+    chunks = []
+    for lo, cos in cosine_tiles(aids, a, bids, b, entries):
+        ai, bi = np.nonzero((cos >= threshold) & (aids[lo : lo + len(cos), None] < bids))
+        chunks.append((aids[lo + ai], bids[bi], cos[ai, bi]))
+    return _frame({"a_id": np.int64, "b_id": np.int64, "cos": np.float64}, chunks)
 
 
 def _block_cogroup(
@@ -243,14 +282,13 @@ def _block_cogroup(
     return q_rep.groupBy("qblk", "nblk").cogroup(n_rep.groupBy("qblk", "nblk"))
 
 
-def _mats(pdf):
-    import numpy as np
+def n_blocks_for(n: int) -> int:
+    """Blocks per side of the cogroup for an ``n``-row corpus: about
+    ``BLOCK_ROWS`` vectors a block, and at least two, so the tiles of
+    even a small corpus run as parallel tasks."""
+    import math
 
-    ids = pdf["vec_id"].to_numpy()
-    order = np.argsort(ids)  # id order ⇒ deterministic tie-break
-    ids = ids[order]
-    mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)[order]
-    return ids, mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    return max(2, math.ceil(n / BLOCK_ROWS))
 
 
 def knn_blocked(
@@ -260,39 +298,26 @@ def knn_blocked(
     queries: DataFrame | None = None,
     n_query_blocks: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k at cluster scale: per-block dgemm + tournament
-    merge. Each cogroup task scores one (query-block × neighbor-block)
-    tile with BLAS and emits its local top-k per query; the global
-    window then merges B candidate sets per query. A candidate in the
-    global top-k is necessarily in its tile's local top-k under the same
-    (cos desc, id asc) order, so the merge loses nothing.
+    """Exact cosine top-k, a bounded partition-local top-k and a global
+    merge: each cogroup task takes its (query-block × neighbor-block)
+    tile through ``cosine_topk`` and emits its local top-k per query;
+    the global window then merges the B candidate sets of a query. A
+    candidate in the global top-k is necessarily in its tile's local
+    top-k under the same (cos desc, id asc) order, so the merge loses
+    nothing. Output: (query_id, neighbor_id, cos, rnk).
 
     ``queries``/``n_query_blocks`` restrict the scored side to a query
     frame (see ``_block_cogroup``) — with ``n_query_blocks=1`` the
     corpus streams un-replicated and nothing is broadcast, so a
     fixed-size query sample stays exact at any corpus size."""
-    import numpy as np
     import pandas as pd
 
+    entries = TILE_ENTRIES  # read here, so the plan's tasks carry it
+
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "cos": "float64"}
-            )
-        qids, qn = _mats(left)
-        nids, nn = _mats(right)
-        cos = round_half_away(qn @ nn.T, 6)
-        cos[qids[:, None] == nids[None, :]] = -np.inf  # mask self-pairs
-        kk = min(k, cos.shape[1])
-        top = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-        out = pd.DataFrame(
-            {
-                "query_id": np.repeat(qids, kk),
-                "neighbor_id": nids[top].ravel(),
-                "cos": np.take_along_axis(cos, top, axis=1).ravel(),
-            }
-        )
-        return out[out["cos"] > -np.inf]
+        qids, q = unit_rows(left["vec_id"].to_numpy(), left["embedding"])
+        nids, nbr = unit_rows(right["vec_id"].to_numpy(), right["embedding"])
+        return cosine_topk(qids, q, nids, nbr, k, entries).drop(columns="rnk")
 
     local = _block_cogroup(corpus, n_blocks, queries, n_query_blocks).applyInPandas(
         score, "query_id long, neighbor_id long, cos double"
@@ -303,26 +328,19 @@ def knn_blocked(
 def cosine_pairs_blocked(
     corpus: DataFrame, threshold: float, n_blocks: int = 4
 ) -> DataFrame:
-    """Exact (a < b, cos ≥ threshold) near-dup pairs at cluster scale:
-    the same block-matrix cogroup, each tile emitting only its
-    above-threshold upper-triangle entries. Each unordered pair lands in
-    exactly one tile's upper triangle, so no dedup pass is needed."""
-    import numpy as np
+    """Exact (a < b, cos ≥ threshold) near-dup pairs: the same
+    block-matrix cogroup, each tile emitting only its above-threshold
+    upper-triangle entries (``cosine_pairs_above``). Each unordered
+    pair lands in exactly one tile's upper triangle, so no dedup pass
+    is needed."""
     import pandas as pd
 
+    entries = TILE_ENTRIES  # read here, so the plan's tasks carry it
+
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"a_id": [], "b_id": [], "cos": []}).astype(
-                {"a_id": "int64", "b_id": "int64", "cos": "float64"}
-            )
-        aids, an = _mats(left)
-        bids, bn = _mats(right)
-        cos = round_half_away(an @ bn.T, 6)
-        keep = (cos >= threshold) & (aids[:, None] < bids[None, :])
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"a_id": aids[ai], "b_id": bids[bi], "cos": cos[ai, bi]}
-        )
+        aids, a = unit_rows(left["vec_id"].to_numpy(), left["embedding"])
+        bids, b = unit_rows(right["vec_id"].to_numpy(), right["embedding"])
+        return cosine_pairs_above(aids, a, bids, b, threshold, entries)
 
     return _block_cogroup(corpus, n_blocks).applyInPandas(
         score, "a_id long, b_id long, cos double"
@@ -332,39 +350,24 @@ def cosine_pairs_blocked(
 def knn_exact(
     corpus: DataFrame,
     k: int = 1,
-    driver_broadcast_rows: int = DRIVER_BROADCAST_ROWS,
-    block_rows: int = BLOCK_ROWS,
     queries: DataFrame | None = None,
     n_query_blocks: int | None = None,
     n: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k with a physical-strategy guard.
-
-    Small corpora (≤ ``driver_broadcast_rows``) take the single-dgemm
-    broadcast path; anything larger routes through the distributed
-    blocked kernel, so no input size can OOM the driver. The one
-    row-count action here is the plan-choice probe (the same runtime-
-    statistics trick AQE uses) — it reads parquet metadata, not data.
+    """Exact cosine top-k at any corpus size: ``knn_blocked`` with
+    ``n_blocks_for(n)`` blocks. Nothing is collected or broadcast, and
+    every task's cosine block is bounded by ``TILE_ENTRIES``.
 
     ``queries``/``n_query_blocks`` restrict the scored side to a query
-    frame on BOTH regimes (the recall gates pass their fixed-count
-    sample with ``n_query_blocks=1``) — this is the single home of the
-    broadcast-vs-blocked policy so the threshold can never drift
-    between callers.
-
-    ``n`` lets a caller that already probed the corpus size share it
-    with this kernel instead of re-running the count job.
-    """
-    import math
-
+    frame (the recall gates pass their fixed-count sample with
+    ``n_query_blocks=1``). ``n`` lets a caller that already counted the
+    corpus share that count instead of re-running the count job."""
     if n is None:
         n = corpus.count()
-    if n <= driver_broadcast_rows:
-        return knn_numpy(corpus, k, queries=queries)
     return knn_blocked(
         corpus,
         k,
-        n_blocks=max(2, math.ceil(n / block_rows)),
+        n_blocks=n_blocks_for(n),
         queries=queries,
         n_query_blocks=n_query_blocks,
     )
@@ -642,11 +645,8 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "knn", "extension"),
 )
 def q_knn_top1_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest neighbor for every vector (embedding-cosine near-dup scan).
-
-    Physical strategy is size-guarded: broadcast single-dgemm below the
-    driver budget, distributed block-matrix dgemm above it — exact
-    either way (see ``knn_exact``)."""
+    """Nearest neighbor for every vector (embedding-cosine near-dup scan),
+    exact through the block-matrix cogroup (see ``knn_exact``)."""
     emb = read_table(spark, sf_dir, "embeddings")
     return knn_exact(emb, k=1).drop("rnk")
 
@@ -759,20 +759,17 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell (~N/K rows: the single-task hazard), so queries are salted
     into ``IVF_QUERY_SALTS`` slices per cell while the neighbor side is
     replicated per salt. Each task then scores |cell|/S queries against
-    the full cell with blocked dgemm: parallelism is K × S tasks, task
+    the full cell in ``cosine_tiles``: parallelism is K × S tasks, task
     memory is (1 + 1/S) × cell, and the result is EXACTLY the per-cell
     top-3 (the salt only partitions the query axis — every query still
     sees every cell member), so the oracle is unchanged. K (codebook
     size) and S are the two scale knobs; a real index trains K so cells
     fit a task and S soaks up what remains. Raising nprobe = unioning
     the next-nearest cells."""
-    import numpy as np
     import pandas as pd
 
     emb = read_table(spark, sf_dir, "embeddings")
     assign = ivf_assign(emb, ivf_codebook(emb, IVF_CENTROIDS))
-
-    QUERY_BLOCK = 4096  # peak kernel memory = QUERY_BLOCK x |cell| doubles
 
     qry = assign.withColumn(
         "__salt", F.pmod(F.hash("vec_id"), F.lit(IVF_QUERY_SALTS))
@@ -787,45 +784,15 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "__nsalt", F.explode(F.array(*[F.lit(i) for i in range(IVF_QUERY_SALTS)]))
     )
+    entries = TILE_ENTRIES  # read here, so the plan's tasks carry it
 
     def cell_topk(qpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
-        # qpdf: this (cell, salt)'s query slice; npdf: the FULL cell.
-        # Blocked dgemm: query rows stream in fixed blocks against the
-        # (|cell| x dims) matrix, so memory is bounded by
-        # QUERY_BLOCK x |cell| regardless of cell size.
-        n_rows = len(npdf)
-        k = min(3, n_rows - 1)
-        if len(qpdf) == 0 or k < 1:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "centroid_id": [], "cos": [], "rnk": []}
-            )
-        order = np.argsort(npdf["n_vec_id"].to_numpy())  # id-order ⇒ tie-break
-        nids = npdf["n_vec_id"].to_numpy()[order]
-        nmat = np.array(npdf["n_v"].tolist(), dtype=np.float64)[order]
-        nnrm = nmat / np.linalg.norm(nmat, axis=1, keepdims=True)
-        qids = qpdf["vec_id"].to_numpy()
-        qmat = np.array(qpdf["v"].tolist(), dtype=np.float64)
-        qnrm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        cid = int(npdf["n_centroid_id"].iloc[0])
-        outs = []
-        for lo in range(0, len(qpdf), QUERY_BLOCK):
-            hi = min(lo + QUERY_BLOCK, len(qpdf))
-            cos = round_half_away(qnrm[lo:hi] @ nnrm.T, 6)
-            # ids unique ⇒ a query's one self row masks out exactly
-            cos[nids[None, :] == qids[lo:hi, None]] = -np.inf
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :k]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids[lo:hi], k),
-                        "neighbor_id": nids[top].ravel(),
-                        "centroid_id": cid,
-                        "cos": np.take_along_axis(cos, top, axis=1).ravel(),
-                        "rnk": np.tile(np.arange(1, k + 1), hi - lo),
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+        # qpdf: this (cell, salt)'s query slice; npdf: the FULL cell
+        qids, q = unit_rows(qpdf["vec_id"].to_numpy(), qpdf["v"])
+        nids, cell = unit_rows(npdf["n_vec_id"].to_numpy(), npdf["n_v"])
+        top = cosine_topk(qids, q, nids, cell, 3, entries)
+        top["centroid_id"] = qpdf["centroid_id"].iloc[0] if len(top) else 0
+        return top
 
     out_schema = "query_id long, neighbor_id long, centroid_id long, cos double, rnk long"
     return (
@@ -1280,21 +1247,20 @@ def driver_recall(pdf, sample_n: int, arms: list):
     per arm of (n_queries, n_exact, n_hits, recall).
 
     The sample is ``recall_query_sample``'s rule (md5 key, then vec_id,
-    first ``sample_n``). Each sample chunk is scored against the corpus
-    with ONE ``round_half_away(qn @ Mn.T, 6)`` dgemm, self-pairs masked,
-    so the exact and every approximate top-k see the same cosine for a
-    pair. An arm is a (query keys, neighbor keys) pair of columns, one
+    first ``sample_n``). An arm is a (query keys, neighbor keys) pair of columns, one
     entry per ``pdf`` row: a key or an array of keys. A neighbor is a
     candidate of a query when a query key equals the neighbor key in
     the same position, a lone neighbor key meeting every query key:
     same cell, same bucket in some table, or cell among the query's
     probes.
 
-    Top-k order is (cos desc, neighbor_id asc) as in ``knn_numpy``:
-    cosines sit on a 1e-6 grid, so one integer per pair carries both
-    keys without ties, and ``argpartition`` selects each row's k best
-    exactly. Recall is the integer ratio floor-rounded at 6 dp, NULL on
-    an empty exact baseline like the oracles."""
+    The sample's rows go through ``cosine_tiles`` against the whole
+    corpus, and every top-k, exact or approximate, is ``top_keys`` on
+    the chunk's ``rank_keys`` (an arm's non-candidates set to -1): all
+    of them see the same cosine for a pair and order by (cos desc,
+    neighbor_id asc). Recall is the
+    integer ratio floor-rounded at 6 dp, NULL on an empty exact
+    baseline like the oracles."""
     import math
 
     import numpy as np
@@ -1304,9 +1270,7 @@ def driver_recall(pdf, sample_n: int, arms: list):
     n = len(order)
     totals = np.zeros((len(arms), 3), dtype=np.int64)
     if n:
-        ids = pdf["vec_id"].to_numpy()[order]
-        mat = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-        mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        ids, mat_n = unit_rows(pdf["vec_id"].to_numpy(), pdf["v"])
 
         def keys(col):  # one row of keys per vector, in vec_id order
             a = np.asarray(col)
@@ -1314,26 +1278,16 @@ def driver_recall(pdf, sample_n: int, arms: list):
 
         keyed = [(keys(q), keys(c)) for q, c in arms]
         qkey = pdf["qkey"].to_numpy()[order].astype(str)
-        sample = np.lexsort((ids, qkey))[:sample_n]
-        kk = min(_RECALL_K, n)
-        tiebreak = np.arange(n - 1, -1, -1)  # columns are in vec_id order
-        chunk = max(1, (1 << 22) // n)  # bounds each chunk's matrices
-
-        def top(key):
-            best = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
-            return best, np.take_along_axis(key, best, axis=1) >= 0
-
-        for lo in range(0, len(sample), chunk):
-            rows = sample[lo : lo + chunk]
-            cos = round_half_away(mat_n[rows] @ mat_n.T, 6)
-            key = (np.rint(cos * 1e6).astype(np.int64) + 1_000_001) * n + tiebreak
-            key[np.arange(len(rows)), rows] = -1
-            exact, exact_ok = top(key)
+        sample = np.sort(np.lexsort((ids, qkey))[:sample_n])
+        for lo, cos in cosine_tiles(ids[sample], mat_n[sample], ids, mat_n, TILE_ENTRIES):
+            rows = sample[lo : lo + len(cos)]
+            key = rank_keys(cos)
+            exact, exact_ok = top_keys(key, _RECALL_K)
             totals[:, 0] += exact_ok.any(axis=1).sum()
             totals[:, 1] += exact_ok.sum()
             for a, (q, c) in enumerate(keyed):
                 cand = (q[rows][:, None, :] == c[None, :, :]).any(axis=2)
-                approx, approx_ok = top(np.where(cand, key, -1))
+                approx, approx_ok = top_keys(np.where(cand, key, -1), _RECALL_K)
                 same = exact[:, :, None] == approx[:, None, :]
                 totals[a, 2] += (same & exact_ok[:, :, None] & approx_ok[:, None, :]).sum()
     return pd.DataFrame(
@@ -1364,7 +1318,6 @@ def recall_ground_truth(spark: SparkSession, emb: DataFrame):
     top = knn_exact(
         emb,
         _RECALL_K,
-        driver_broadcast_rows=DRIVER_BROADCAST_ROWS,
         queries=recall_query_sample(emb),
         n_query_blocks=1,
         n=n,
@@ -1411,7 +1364,7 @@ def score_pairs_exact(
     n: int | None = None,
 ) -> DataFrame:
     """Exact cosine for a bounded (query_id, neighbor_id) candidate
-    frame, with the same physical-strategy guard as ``knn_exact``.
+    frame, switched on the corpus size ``n`` like the recall gates.
 
     Below the driver budget the normalized corpus matrix is broadcast
     once and each Arrow batch of id pairs resolves both sides by binary
@@ -1424,7 +1377,7 @@ def score_pairs_exact(
     side is degenerate (NULL/empty/zero vector) drop in BOTH regimes,
     matching the oracle's finite-vector CTE.
 
-    ``n`` shares a caller's size probe, as in ``knn_exact``."""
+    ``n`` shares a caller's count, as in ``knn_exact``."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -1434,12 +1387,14 @@ def score_pairs_exact(
         n = corpus.count()
     if n > driver_broadcast_rows:
         return _score_candidates(corpus, cand)
-    bc = broadcast_normalized_corpus(corpus)
+    vecs = drop_degenerate_vectors(corpus).select("vec_id", "embedding").toPandas()
+    # only the normalized matrix ships; the raw one is never broadcast
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        unit_rows(vecs["vec_id"].to_numpy(), vecs["embedding"])
+    )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat_n = bc.value
-        order = np.argsort(ids)
-        sids, smat = ids[order], mat_n[order]
+        sids, smat = bc.value
         hi = len(sids)
         for pdf in batches:
             q = pdf["query_id"].to_numpy()
